@@ -1,12 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark harness — one JSON line on stdout.
+"""Benchmark harness — one short JSON line on stdout.
 
 Headline: end-to-end HTML->markdown extraction throughput (docs/sec) on
 the deterministic synthetic pages table sized to the scale factor, plus
-wall times of the engine's other headline operators on the driver's
-$SPARK_GRAFT_SF_DIR tables.
+wall times of the engine's other headline operators and of every gated
+query on the $SPARK_GRAFT_SF_DIR tables.  The last stdout line carries
+the headlines; the per-query wall times go to .data/bench_queries.json.
+``e2e_wall_sec`` is the wall time of the whole run; BENCH.md notes where
+its coverage changed, so older values are not comparable.
 
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+  SPARK_GRAFT_SF_DIR=<dir of the sf0.1 tables> python bench.py
+  (SPARK_GRAFT_CPUS sets local[N]; default: the CPUs this process may use)
   python bench.py --scaling          # same extraction job at N and 4N cores
                                      # -> prints both throughputs + efficiency
                                      # (the BASELINE.json two-cluster protocol)
@@ -23,9 +27,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+QUERY_TIMES = os.path.join(HERE, ".data", "bench_queries.json")
 
 
 def sf_of(sf_dir: str) -> float:
@@ -48,6 +56,18 @@ def run_extraction(spark, sf: float, salt_buckets: int) -> tuple[float, int]:
     row = out.agg(F.count(F.lit(1)).alias("n"),
                   F.sum("n_chars").alias("chars")).collect()[0]
     return time.time() - t0, int(row["n"])
+
+
+def force_all(df) -> None:
+    """Compute every output column: agg(max(xxhash64(all columns))).
+
+    A count(lit(1)) or a one-column aggregate lets Catalyst prune the
+    other projections.  Spark will not hash a map, so map-typed columns
+    are hashed through to_json."""
+    cols = [F.to_json(F.col("`%s`" % f.name))
+            if "map<" in f.dataType.simpleString() else F.col("`%s`" % f.name)
+            for f in df.schema.fields]
+    df.agg(F.max(F.xxhash64(*cols))).collect()
 
 
 def _steady(action) -> tuple[float, float]:
@@ -77,7 +97,9 @@ def _steady(action) -> tuple[float, float]:
     return round(cold, 3), round(best, 3)
 
 
-def bench_queries(spark, sf_dir: str, sf: float) -> dict[str, float]:
+def bench_queries(spark, sf_dir: str,
+                  sf: float) -> tuple[dict[str, float], dict[str, float]]:
+    """-> (production-kernel wall times, per-query wall times)."""
     import __spark_entry__ as entry
 
     times: dict[str, float] = {}
@@ -88,9 +110,8 @@ def bench_queries(spark, sf_dir: str, sf: float) -> dict[str, float]:
     # throughput, and a single shot in a noisy host window read up to
     # 4x its steady state across round-5 samples (2.3 s vs 8.9 s)
     run_extraction(spark, min(sf, 0.001), salt_buckets=4)
-    buckets = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    t1, n = run_extraction(spark, sf, salt_buckets=buckets)
-    t2, _ = run_extraction(spark, sf, salt_buckets=buckets)
+    t1, n = run_extraction(spark, sf, salt_buckets=CPUS)
+    t2, _ = run_extraction(spark, sf, salt_buckets=CPUS)
     times["extraction_e2e"] = round(min(t1, t2), 3)
     times["_extraction_docs"] = n
 
@@ -174,170 +195,16 @@ def bench_queries(spark, sf_dir: str, sf: float) -> dict[str, float]:
     fn(spark, sf_dir).agg(F.count(F.lit(1))).collect()
     times["curate_e2e"] = round(time.time() - t0, 3)
 
-    # round-5 retrieval/PQ ops: forced via a computed-column aggregate
-    # (count(lit(1)) would prune their projection bodies — the
-    # documented bench trap for lang_id/quality_scores)
-    q_bm = entry.queries()["bm25"]
-    _, times["bm25"] = _steady(
-        lambda: q_bm(spark, sf_dir).agg(F.sum("score")).collect())
-    q_hy = entry.queries()["hybrid_rrf"]
-    _, times["hybrid_rrf"] = _steady(
-        lambda: q_hy(spark, sf_dir).agg(F.sum("rrf")).collect())
-    q_pq = entry.queries()["pq_codes"]
-    _, times["pq_codes"] = _steady(
-        lambda: q_pq(spark, sf_dir).agg(
-            F.sum("code_0"), F.sum("code_3")).collect())
-    # round-5 continuation ops (same computed-column forcing)
-    q_hits = entry.queries()["hits_scores"]
-    _, times["hits_scores"] = _steady(
-        lambda: q_hits(spark, sf_dir).agg(F.sum("auth")).collect())
-    q_pmi = entry.queries()["pmi_collocations"]
-    _, times["pmi_collocations"] = _steady(
-        lambda: q_pmi(spark, sf_dir).agg(F.sum("pmi")).collect())
-    # continuation graph/url/embedding layer (computed-column forcing
-    # where count(lit(1)) could prune the body)
-    q_tr = entry.queries()["trustrank"]
-    _, times["trustrank"] = _steady(
-        lambda: q_tr(spark, sf_dir).agg(F.sum("rank")).collect())
-    q_lp = entry.queries()["label_prop"]
-    _, times["label_prop"] = _steady(
-        lambda: q_lp(spark, sf_dir).agg(F.count("label")).collect())
-    q_ut = entry.queries()["url_templates"]
-    _, times["url_templates"] = _steady(
-        lambda: q_ut(spark, sf_dir).agg(F.sum("n_urls")).collect())
-    q_eo = entry.queries()["embedding_outliers"]
-    _, times["embedding_outliers"] = _steady(
-        lambda: q_eo(spark, sf_dir).agg(F.sum("z")).collect())
-    q_cd = entry.queries()["cdc_chunks"]
-    _, times["cdc_chunks"] = _steady(
-        lambda: q_cd(spark, sf_dir).agg(F.sum("n_chunks")).collect())
-    q_cq = entry.queries()["community_quota"]
-    _, times["community_quota"] = _steady(
-        lambda: q_cq(spark, sf_dir).agg(F.sum("comm_rank")).collect())
-    q_sd = entry.queries()["snapshot_delta"]
-    _, times["snapshot_delta"] = _steady(
-        lambda: q_sd(spark, sf_dir).agg(F.sum("n_changed")).collect())
-    # resumed-session ops (computed-column forcing throughout)
-    for name, col in [("kcore", "core_degree"),
-                      ("triangles", "n_triangles"),
-                      ("kmv_vocab", "est_distinct"),
-                      ("cms_heavy", "cms_est"),
-                      ("kn_perplexity", "kn_ppl"),
-                      ("source_entropy", "entropy_bits"),
-                      ("chrf", "chrf"),
-                      ("wordpiece", "n_pieces"),
-                      ("assortativity", "assortativity"),
-                      ("passages", "n_words"),
-                      # batch-4 ops (computed-column forcing)
-                      ("rouge", "rouge1_f"),
-                      ("encoding_health", "n_replacement"),
-                      ("dehyphenate", "n_joins"),
-                      ("host_prefix", "prefix_len"),
-                      ("sampled_quantiles", "est_p90"),
-                      # batch-5 ops
-                      ("dup_ngrams", "dup5gram_char_frac"),
-                      ("source_drift", "jsd_bits"),
-                      # batch-6 ops (classifier eval, footer
-                      # boilerplate, feed parse, meta robots, leakage)
-                      ("auc_report", "auc"),
-                      ("calibration", "gap"),
-                      ("host_suffix", "suffix_len"),
-                      ("split_leakage", "jaccard"),
-                      ("retrieval_eval", "ndcg"),
-                      ("ks_drift", "d_stat"),
-                      ("skew", "gini"),
-                      ("delta_dedup", "jaccard"),
-                      ("robust_stats", "trimmed_mean"),
-                      ("zorder", "zkey"),
-                      # batch-7 ops (perceptual hashing, paired
-                      # significance, co-citation)
-                      ("image_near_dups", "hamming"),
-                      ("paired_bootstrap", "p_boot"),
-                      ("mcnemar", "statistic"),
-                      ("cohens_kappa", "kappa"),
-                      ("cocitation", "jaccard"),
-                      # batch-8 ops
-                      ("image_dup_clusters", "cluster_id"),
-                      ("luhn_cards", "n_luhn_valid"),
-                      ("host_burstiness", "z"),
-                      ("ngram_novelty", "novelty"),
-                      ("krippendorff", "alpha"),
-                      ("host_concentration", "hhi"),
-                      # batch-9: unigram-LM tokenizer, ANF
-                      ("unigram", "cost_bits"),
-                      ("neighborhood", "n_micro"),
-                      ("code_detect", "n_sym"),
-                      ("unigram_em", "cost_bits"),
-                      ("soft404", "n_soft404_hits"),
-                      # batch-11 ops
-                      ("crawl_traps", "path_depth"),
-                      ("robots_audit", "n_violations"),
-                      ("quality_calibration", "rank"),
-                      ("embedding_drift", "drift"),
-                      # batch-12 ops
-                      ("host_boilerplate", "n_removed"),
-                      ("login_pages", "n_markers"),
-                      # batch-13 ops
-                      ("truncation_loss", "lost_512"),
-                      ("md_structure", "n_headings"),
-                      ("sample_audit", "chi2_term"),
-                      # batch-14 ops
-                      ("host_features", "n_subdomains"),
-                      ("metric_corr", "pearson_r")]:
-        q = entry.queries()[name]
-        _, times[name] = _steady(
-            lambda q=q, col=col:
-            q(spark, sf_dir).agg(F.sum(col)).collect())
-    # image_hashes: sum(dhash) overflows bigint under ANSI at sf>=0.1
-    # (5k images x up-to-2^56 signatures) — max() forces the same
-    # computation without the overflow
-    q_ih = entry.queries()["image_hashes"]
-    _, times["image_hashes"] = _steady(
-        lambda: q_ih(spark, sf_dir).agg(
-            F.max("dhash"), F.max("ahash")).collect())
-
-    # string-output batch-6 ops: count(col)'s null check forces the
-    # computed value (sum would be an ANSI string cast)
-    for name, col in [("feeds", "published"),
-                      ("meta_robots", "canonical"),
-                      ("hreflang", "href"),
-                      ("variant_clusters", "cluster_id"),
-                      ("surt", "urlkey"),
-                      ("robots_sitemaps", "sitemap_url")]:
-        q = entry.queries()[name]
-        _, times[name] = _steady(
-            lambda q=q, col=col:
-            q(spark, sf_dir).agg(F.count(col)).collect())
-
-    # bow-tie decomposition (subsumes scc): single-shot — the cost is
-    # ~25 sequential fixpoint iterations of driver-loop jobs on the
-    # constant-size (<120-node) fixture, so min-of-2 would double a
-    # structurally deterministic wall time for no noise benefit
-    q_bt = entry.queries()["bowtie"]
-    t0 = time.time()
-    q_bt(spark, sf_dir).agg(F.sum("scc_id")).collect()
-    times["bowtie"] = round(time.time() - t0, 3)
-
-    # EVERY loop query gets the min-of-2 treatment: a round-5 sample
-    # caught an end-of-run host-noise burst reading sub-second queries
-    # at 9-18 s single-shot (sessionize 0.9 -> 12.0, anchor_text
-    # 1.2 -> 18.2 on identical code); the second run costs ~the steady
-    # sum (~25 s) and makes the driver-recorded numbers reproducible
-    for name in ["exact_dedup_groups", "minhash_lsh_pairs", "simhash_pairs",
-                 "ngram_jaccard", "knn_bruteforce", "label_centroids",
-                 "quality_scores", "lang_id", "events_running_sum",
-                 "rule_checks", "repetition_stats",
-                 "dsir_weights", "pagerank", "curation_pipeline",
-                 "sessionize", "anchor_text", "latest_revision"]:
-        fn = entry.queries()[name]
-        act = lambda: fn(spark, sf_dir).agg(F.count(F.lit(1))).collect()  # noqa: E731
-        _, times[name] = _steady(act)
-    return times
+    # every gated query, forced the same way (see force_all)
+    per_query = {}
+    for name, q in entry.queries().items():
+        _, per_query[name] = _steady(lambda q=q: force_all(q(spark, sf_dir)))
+    return times, per_query
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = CPUS
     sf = sf_of(sf_dir)
 
     from deepseek_ocr_omnidocbench_spark.session import get_spark
@@ -393,16 +260,23 @@ def main() -> None:
 
     spark = get_spark(app_name="bench", cores=cpus)
     t_all = time.time()
-    times = bench_queries(spark, sf_dir, sf)
+    times, per_query = bench_queries(spark, sf_dir, sf)
     total = round(time.time() - t_all, 3)
     docs = times.pop("_extraction_docs")
     eval_pages = times.pop("_eval_pages")
+    os.makedirs(os.path.dirname(QUERY_TIMES), exist_ok=True)
+    with open(QUERY_TIMES, "w") as f:
+        json.dump({"sf": sf, "cores": cpus, "queries": per_query}, f, indent=1)
     print(json.dumps({
-        "metric": "e2e_wall_sec", "value": total, "unit": "sec",
-        "queries": times, "sf": sf,
-        "extraction_docs": docs,
+        "metric": "e2e_wall_sec", "value": total, "unit": "sec", "sf": sf,
+        "cores": cpus,
         "docs_per_sec_extraction": round(docs / times["extraction_e2e"], 2),
-        "eval_pages": eval_pages,
+        "eval_pages_per_sec": round(eval_pages / times["eval_harness"], 2),
+        "curate_e2e": times["curate_e2e"],
+        "kernels": times,
+        "queries_sec": round(sum(per_query.values()), 3),
+        "n_queries": len(per_query),
+        "queries_file": os.path.relpath(QUERY_TIMES, HERE),
     }))
 
 

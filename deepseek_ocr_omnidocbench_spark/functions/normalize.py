@@ -395,15 +395,6 @@ def md_escape(s: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# N12 misclassified-formula text normalization — end2end_dataset.py:197-215
-# --------------------------------------------------------------------------
-
-
-def formula_as_text(latex: str) -> str:
-    return clean_string(latex_to_text(latex))
-
-
-# --------------------------------------------------------------------------
 # N13 dehyphenation — PDF/column line-break hyphen repair.
 # Extracted PDF text carries typographic line-break hyphens
 # ("exam-\nple" -> "example"); every extraction stack repairs them

@@ -31,6 +31,9 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .pdf_extract import extract_pdf_pages
 
 # ---- tunables (frozen; changing any of these breaks byte parity) ---------
 
@@ -644,25 +647,39 @@ def extract_markdown(html: Optional[str]) -> Optional[str]:
 # ---- Spark surface ----------------------------------------------------------
 
 
-def _extract_batch(html_bin: pd.Series) -> pd.Series:
-    def _one(b):
-        if b is None:
-            return None
-        raw = bytes(b)
-        if raw.startswith(b"%PDF"):
-            # content sniffing: CC-style blob columns mix HTML and PDF;
-            # decoding PDF bytes as HTML would emit mojibake markdown
-            from .pdf_extract import extract_pdf_markdown
-
-            return extract_pdf_markdown(raw)
-        return extract_markdown(raw.decode("utf-8", errors="replace"))
-
-    return html_bin.map(_one)
+PAGE_MD_TYPE = T.ArrayType(T.StructType([
+    T.StructField("page", T.IntegerType()),
+    T.StructField("md", T.StringType()),
+]))
 
 
-def extract_markdown_udf():
-    """Arrow-batched UDF (built lazily: pandas_udf needs a live session)."""
-    return F.pandas_udf(_extract_batch, "string")
+def _extract_any(blob: Optional[bytes]) -> Optional[list]:
+    """Dispatch on magic bytes: PDF -> one entry per page, HTML -> one.
+
+    Content sniffing: CC-style blob columns mix HTML and PDF; decoding
+    PDF bytes as HTML would emit mojibake markdown.  A failing row yields
+    ``[(0, None)]`` (NULL md) rather than raising: one poisoned blob (say
+    ~1,000 unclosed ``<div>``s, which overflow the recursive walkers)
+    must not kill a task at 10^12 rows; the NULL is counted into the
+    lineage failure metrics (run_stage failure_col)."""
+    if blob is None:
+        return None
+    try:
+        b = bytes(blob)
+        if b.startswith(b"%PDF"):
+            return list(enumerate(extract_pdf_pages(b)))
+        return [(0, extract_markdown(b.decode("utf-8", errors="replace")))]
+    except Exception:
+        return [(0, None)]
+
+
+def extract_any_udf():
+    """Arrow-batched UDF over ``_extract_any`` -> array<struct<page, md>>
+    (built lazily: pandas_udf needs a live session)."""
+    def _batch(blob: pd.Series) -> pd.Series:
+        return blob.map(_extract_any)
+
+    return F.pandas_udf(_batch, PAGE_MD_TYPE)
 
 
 BIG_BLOB_BYTES = 256 * 1024
@@ -693,7 +710,7 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 0,
     (test scale).
     """
     sel = lambda df: df.select(  # noqa: E731
-        "url", extract_markdown_udf()(F.col("html")).alias("md"))
+        "url", extract_any_udf()(F.col("html")).alias("pm"))
     if salt_buckets:
         is_big = F.length("html") >= big_blob_bytes
         small = pages.where(~is_big | F.col("html").isNull())
@@ -702,7 +719,11 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 0,
         out = sel(small).unionByName(sel(big))
     else:
         out = sel(pages)
-    return out.withColumn("n_chars", F.length("md"))
+    # one md per url: PDF pages joined by blank lines (extract_pdf_markdown),
+    # NULL when the blob is NULL or its kernel failed
+    md = F.when(~F.exists("pm", lambda p: p["md"].isNull()),
+                F.array_join(F.transform("pm", lambda p: p["md"]), "\n\n"))
+    return out.select("url", md.alias("md")).withColumn("n_chars", F.length("md"))
 
 
 def page_metadata_cols(html_text: Column) -> dict[str, Column]:

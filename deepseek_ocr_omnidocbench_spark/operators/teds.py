@@ -24,8 +24,6 @@ from typing import Optional
 
 import numpy as np
 
-from ..functions.editdist import norm_edit
-
 
 class _TNode:
     __slots__ = ("tag", "colspan", "rowspan", "text", "children")
@@ -111,50 +109,6 @@ def _postorder(root: _TNode):
     keyroots = [i for i in range(len(nodes))
                 if not any(lml[j] == lml[i] for j in range(i + 1, len(nodes)))]
     return nodes, lml, keyroots
-
-
-def _rename_cost(a: _TNode, b: _TNode, structure_only: bool) -> float:
-    if (a.tag, a.colspan, a.rowspan) != (b.tag, b.colspan, b.rowspan):
-        return 1.0
-    if a.tag == "td" and not structure_only:
-        # RAW cell text — the reference tokenizes node.text verbatim
-        # (table_metric.py:73-83); whitespace normalization belongs to
-        # normalized_table upstream, not the metric
-        if a.text or b.text:
-            return norm_edit(a.text, b.text)
-    return 0.0
-
-
-def _tree_edit_distance_scalar(t1: _TNode, t2: _TNode,
-                               structure_only: bool = False) -> float:
-    """Reference scalar Zhang-Shasha (kept for parity tests)."""
-    n1, l1, k1 = _postorder(t1)
-    n2, l2, k2 = _postorder(t2)
-    td = np.zeros((len(n1), len(n2)))
-
-    for i in k1:
-        for j in k2:
-            li, lj = l1[i], l2[j]
-            rows = i - li + 2
-            cols = j - lj + 2
-            fd = np.zeros((rows, cols))
-            fd[1:, 0] = np.arange(1, rows)
-            fd[0, 1:] = np.arange(1, cols)
-            for x in range(1, rows):
-                gi = li + x - 1
-                for y in range(1, cols):
-                    gj = lj + y - 1
-                    if l1[gi] == li and l2[gj] == lj:
-                        cost = _rename_cost(n1[gi], n2[gj], structure_only)
-                        fd[x, y] = min(fd[x - 1, y] + 1, fd[x, y - 1] + 1,
-                                       fd[x - 1, y - 1] + cost)
-                        td[gi, gj] = fd[x, y]
-                    else:
-                        px = l1[gi] - li
-                        py = l2[gj] - lj
-                        fd[x, y] = min(fd[x - 1, y] + 1, fd[x, y - 1] + 1,
-                                       fd[px, py] + td[gi, gj])
-    return float(td[len(n1) - 1, len(n2) - 1])
 
 
 def _cost_matrix(n1: list, n2: list, structure_only: bool) -> np.ndarray:

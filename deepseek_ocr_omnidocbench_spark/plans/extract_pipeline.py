@@ -18,50 +18,14 @@ StageCheckpoint's bucket lineage + anti-join resume (sources/lineage.py).
 
 from __future__ import annotations
 
-from typing import Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.assemble import assemble_documents
 from ..operators.filters import is_form_pdf, language_keep, page_quality_keep
-from ..operators.html_extract import BIG_BLOB_BYTES, extract_markdown
-from ..operators.pdf_extract import extract_pdf_pages
+from ..operators.html_extract import BIG_BLOB_BYTES, extract_any_udf
 from ..operators.textstats import lang_id_col, quality_cols
 from ..sources.lineage import StageCheckpoint
-
-PAGE_MD_TYPE = T.ArrayType(T.StructType([
-    T.StructField("page", T.IntegerType()),
-    T.StructField("md", T.StringType()),
-]))
-
-
-def _extract_any(blob: Optional[bytes]) -> Optional[list]:
-    """Dispatch on magic bytes: PDF -> one entry per page, HTML -> one.
-
-    A failing row yields ``[(0, None)]`` (NULL md) rather than raising:
-    one poisoned blob must not kill a task at 10^12 rows; the NULL is
-    counted into the lineage failure metrics (run_stage failure_col)."""
-    if blob is None:
-        return None
-    try:
-        b = bytes(blob)
-        if b.startswith(b"%PDF"):
-            pages = extract_pdf_pages(b) or []
-            return [(i, md) for i, md in enumerate(pages)]
-        md = extract_markdown(b.decode("utf-8", errors="replace"))
-        return [(0, md if md is not None else "")]
-    except Exception:
-        return [(0, None)]
-
-
-def extract_any_udf():
-    def _batch(blob: pd.Series) -> pd.Series:
-        return blob.map(_extract_any)
-
-    return F.pandas_udf(_batch, PAGE_MD_TYPE)
 
 
 def stage_filter(pages: DataFrame) -> DataFrame:

@@ -35,10 +35,6 @@ def scan_md_folder(spark: SparkSession, folder: str) -> DataFrame:
         "ext", F.regexp_extract("file_name", r"\.(m?md|md)$", 1))
 
 
-def _stem(col):
-    return F.regexp_replace(col, r"\.(mmd|md)$", "")
-
-
 def resolve_predictions(images: DataFrame, md_files: DataFrame,
                         img_col: str = "img_id") -> DataFrame:
     """images(img_id) x md_files(file_name, ext, md) -> (img_id, md).

@@ -38,6 +38,30 @@ def test_extract_pages_survives_all(spark, nasty_pages):
     assert "a" * 100 in out["huge_line"]
 
 
+def test_extract_pages_one_bad_row_is_null(spark):
+    """A page whose kernel raises (2,000 unclosed <div>s overflow the
+    recursive walkers) gets NULL md; the job completes and every other
+    page is still byte-identical to its text."""
+    import pyarrow as pa
+
+    from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
+    from deepseek_ocr_omnidocbench_spark.sources.pages import (
+        PAGES_ARROW_SCHEMA, generate_pages,
+    )
+
+    rows = generate_pages(30, seed=11)
+    bad = dict(rows[0], url="https://bad.example/deep",
+               html=("<div>" * 2000 + "x").encode())
+    rows.insert(15, bad)
+    pages = spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA).to_pandas())
+    out = {r["url"]: r["md"] for r in
+           extract_pages(pages, salt_buckets=2).collect()}
+    assert len(out) == len(rows)
+    assert out.pop(bad["url"]) is None
+    assert out == {r["url"]: r["text"] for r in rows if r is not bad}
+
+
 def test_pipeline_survives_all(spark, nasty_pages):
     from deepseek_ocr_omnidocbench_spark.plans.extract_pipeline import (
         run_pipeline_inline,
