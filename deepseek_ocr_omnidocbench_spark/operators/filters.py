@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import SEO_WORDS, SPAM_THRESHOLD, _word_array
+from .textstats import seo_spam_cols
 
 MAX_PAGE_ERROR_RATE = 0.004
 
@@ -42,10 +42,7 @@ def language_keep(lang: Column, keep=("en", None)) -> Column:
 
 def seo_spam_flag(text: Column) -> Column:
     """F5: seo-word hit ratio above threshold -> spam (filter.py:35-62)."""
-    words = _word_array(text)
-    hits = F.size(F.filter(words, lambda w: w.isin(SEO_WORDS)))
-    total = F.size(words)
-    return F.when(total > 0, hits / total).otherwise(F.lit(0.0)) > SPAM_THRESHOLD
+    return seo_spam_cols(text)["is_spam"]
 
 
 def likely_scanned(text: Column) -> Column:

@@ -2,7 +2,9 @@
 
 All hot-path functions are pure Column expressions (JVM-side, codegen'd,
 ANSI-SQL-translatable for the DuckDB oracle): language ID, quality
-scoring, token counting, SEO-spam and alpha-ratio filters.  The only
+scoring, token counting, SEO-spam and alpha-ratio filters.  Word and
+word-list counts on those paths are regex counts over the lowered text
+(``_lower_count``), not interpreted lambdas over a word array.  The only
 Python is the winnowing fingerprint and trailing-repeat detector (both
 ported heuristics from the reference: olmocr/olmocr/filter/filter.py:35-62,
 91-110 and olmocr/olmocr/repeatdetect.py:8-46).
@@ -178,6 +180,47 @@ def _word_array(c: Column) -> Column:
     return F.filter(F.split(F.lower(c), r"[^a-zA-Z]+"), lambda w: F.length(w) > 0)
 
 
+def _word_run_pattern(words) -> str:
+    """Regex matching exactly the maximal ASCII letter runs equal to one
+    of ``words`` (each pure ``[a-z]+``): the ``_word_array`` tokens in
+    the list, found without building the word array.
+
+    The alternation is a prefix trie (``a, and, as`` ->
+    ``a(?:nd|s)?``): Java regex tries a flat alternation branch by
+    branch at every run start, so a 390-word list costs ~390 attempts
+    per word of a megabyte page, the trie one branch per character.
+    The lookarounds force whole-run equality: a branch that stops
+    inside a run fails the lookahead and backtracks, and a run suffix
+    fails the lookbehind, whatever the branch order."""
+    trie: dict = {}
+    for w in words:
+        node = trie
+        for ch in w:
+            node = node.setdefault(ch, {})
+        node[""] = {}
+
+    def alt(node: dict) -> str:
+        branches = [ch + alt(sub) for ch, sub in sorted(node.items()) if ch]
+        if not branches:
+            return ""
+        body = "|".join(branches)
+        if len(branches) > 1 or ("" in node and len(body) > 1):
+            body = "(?:%s)" % body
+        return body + "?" if "" in node else body
+
+    return "(?<![a-zA-Z])%s(?![a-zA-Z])" % alt(trie)
+
+
+def _lower_count(text: Column, pattern: str) -> Column:
+    """Matches of ``pattern`` in lower(text): one codegen'd regex count,
+    NULL for NULL text like the word-array size it replaces.  With
+    ``[a-zA-Z]+`` it is size(_word_array(text)); with a
+    ``_word_run_pattern`` it is how many of those words are in the
+    list, without the interpreted per-word filter lambda."""
+    return F.when(text.isNotNull(),
+                  F.regexp_count(F.lower(text), F.lit(pattern)))
+
+
 def token_count_cols(text: Column) -> dict[str, Column]:
     """Whitespace tokens + regex (BPE-ish) tokens."""
     ws = F.size(F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0))
@@ -213,31 +256,27 @@ def lang_id_col(text: Column) -> Column:
     # are identical (tested against the SQL oracle, which keeps the
     # explicit cascade form).
     #
-    # Hit counting is ONE codegen'd JVM regex pass over the whole
-    # full 390-stopword alternation, NOT a words-array lambda filter per
-    # profile: higher-order functions are interpreted, so per-profile list
-    # filters re-tokenized the document per profile and paid
-    # interpreter overhead per word (~10x the factored form at sf0.1;
-    # separate per-profile regex passes were still ~3.5x).  The alternation
-    # with ASCII lookarounds extracts exactly the tokens the oracle's
-    # split-on-[^a-z]+ / list_contains form counts: every stopword is
-    # pure [a-z]+, a token is a maximal [a-zA-Z]+ run of lower(text)
-    # (Java character classes are ASCII-only by default, same boundary
-    # the split uses), and the lookarounds force whole-run equality —
-    # a shorter alternative matching a prefix of a run fails the
-    # lookahead and backtracks, and a run suffix fails the lookbehind,
-    # so match iff run == stopword regardless of alternation order
-    # (longest-first kept for matcher speed).  Per-profile counts then
-    # come from the TINY matched-token array (avg ~a dozen elements),
-    # where the per-profile interpreted filters cost ~nothing; both the matched
-    # array and the hits array are bound once per row via
-    # single-element transform() lambdas (the Spark analog of the
-    # oracle SQL's list_transform factoring).
+    # Hit counting is ONE codegen'd JVM regex pass over lower(text)
+    # with the 390-stopword alternation, NOT a words-array lambda filter
+    # per profile: higher-order functions are interpreted, so
+    # per-profile list filters re-tokenized the document per profile
+    # and paid interpreter overhead per word (~10x the factored form at
+    # sf0.1; separate per-profile regex passes were still ~3.5x).  The
+    # pattern (_word_run_pattern) extracts exactly the tokens the
+    # oracle's split-on-[^a-z]+ / list_contains form counts.  It is a
+    # prefix trie because Java regex tries a flat alternation branch by
+    # branch at every word start: on a ~1.5 MB giant page (~200k words)
+    # the 390-branch list was ~80M branch attempts and most of the
+    # documents stage's CPU, the trie a few per word.  Per-profile
+    # counts then come from the matched-token array (one element per
+    # stopword occurrence) walked by one interpreted filter per
+    # profile; both the matched array and the hits array are bound
+    # once per row via single-element
+    # transform() lambdas (the Spark analog of the oracle SQL's
+    # list_transform factoring).
     k = len(LATIN_PROFILES)
     lang_arr = F.array(*[F.lit(lang) for lang, _ in LATIN_PROFILES])
-    all_stop = sorted({w for _, ws in LATIN_PROFILES for w in ws},
-                      key=lambda w: (-len(w), w))
-    pat = "(?<![a-zA-Z])(?:%s)(?![a-zA-Z])" % "|".join(all_stop)
+    pat = _word_run_pattern(w for _, ws in LATIN_PROFILES for w in ws)
     matched = F.regexp_extract_all(low, F.lit(pat), 0)
 
     def _hits_arr(m: Column) -> Column:
@@ -272,19 +311,19 @@ def lang_id_col(text: Column) -> Column:
         e = latin
         for lang, lo, hi, thr in reversed(SCRIPT_PROFILES):
             dens = F.length(
-                F.regexp_replace(na, "[^%s-%s]" % (chr(lo), chr(hi)), ""))
+                F.regexp_replace(na, "[^%s-%s]+" % (chr(lo), chr(hi)), ""))
             e = F.when(dens / n > thr, F.lit(lang)).otherwise(e)
         # Sub-script markers wrap LAST so they are checked FIRST (before
         # the shared base script falls through to ru/ar).
         for lang, lo, hi, thr, marks in reversed(MARKER_PROFILES):
             dens = F.length(
-                F.regexp_replace(na, "[^%s-%s]" % (chr(lo), chr(hi)), ""))
-            hits = F.length(F.regexp_replace(na, "[^%s]" % marks, ""))
+                F.regexp_replace(na, "[^%s-%s]+" % (chr(lo), chr(hi)), ""))
+            hits = F.length(F.regexp_replace(na, "[^%s]+" % marks, ""))
             e = F.when((dens / n > thr) & (hits >= 1),
                        F.lit(lang)).otherwise(e)
         return e
 
-    non_ascii = F.regexp_replace(text, "[\\x00-\\x7f]", "")
+    non_ascii = F.regexp_replace(text, "[\\x00-\\x7f]+", "")
     expr = F.element_at(
         F.transform(F.array(non_ascii), _script_cascade), 1)
     return F.when(n == 0, F.lit("unknown")).otherwise(expr)
@@ -337,12 +376,11 @@ def quality_cols(text: Column) -> dict[str, Column]:
     simple monotone blend used for corpus filtering.
     """
     n = F.length(text)
-    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
-    digits = F.length(F.regexp_replace(text, r"[^0-9]", ""))
-    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    words = _word_array(text)
-    n_words = F.size(words)
-    stop_hits = F.size(F.filter(words, lambda w: w.isin(EN_STOPWORDS)))
+    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]+", ""))
+    digits = F.length(F.regexp_replace(text, r"[^0-9]+", ""))
+    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]+", ""))
+    n_words = _lower_count(text, "[a-zA-Z]+")
+    stop_hits = _lower_count(text, _word_run_pattern(EN_STOPWORDS))
     alpha_ratio = F.when(n > 0, alpha / n).otherwise(F.lit(0.0))
     punct_ratio = F.when(n > 0, punct / n).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_words > 0, stop_hits / n_words).otherwise(F.lit(0.0))
@@ -422,9 +460,8 @@ def gopher_rules_cols(text: Column,
 
 def seo_spam_cols(text: Column) -> dict[str, Column]:
     """SEO/download-spam ratio (filter.py:35-62): seo-word hits over words."""
-    words = _word_array(text)
-    hits = F.size(F.filter(words, lambda w: w.isin(SEO_WORDS)))
-    total = F.size(words)
+    hits = _lower_count(text, _word_run_pattern(SEO_WORDS))
+    total = _lower_count(text, "[a-zA-Z]+")
     ratio = F.when(total > 0, hits / total).otherwise(F.lit(0.0))
     return {"seo_hits": hits, "word_total": total, "seo_ratio": ratio,
             "is_spam": ratio > SPAM_THRESHOLD}

@@ -123,6 +123,21 @@ def test_lang_id_single_regex_pass(spark):
     assert plan.count("regexp_extract_all") == 1, plan
 
 
+def test_word_counts_have_no_interpreted_word_filter(spark):
+    """quality_cols and seo_spam_cols count words and list hits with
+    codegen'd regex counts: a size(filter(split(...), lambda)) over the
+    word array is interpreted per element (~200k elements on a giant
+    page) and was most of the documents stage's CPU."""
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        quality_cols, seo_spam_cols)
+
+    df = spark.createDataFrame([("the free pdf and of",)], "text string")
+    for cols in (quality_cols(F.col("text")), seo_spam_cols(F.col("text"))):
+        plan = (df.select(*[v.alias(k) for k, v in cols.items()])
+                ._jdf.queryExecution().optimizedPlan().toString())
+        assert "lambdafunction" not in plan and "split(" not in plan, plan
+
+
 def test_lang_id_oracle_sql_matches_spark(spark):
     """The generated DuckDB CASE must agree with lang_id_col on mixed
     multilingual rows (the same-table guarantee, checked end to end)."""
@@ -736,3 +751,147 @@ def test_sample_audit(spark):
     assert out2["fr"].chi2_term == pytest.approx(1.0)
     # en: exp 6, obs 10 -> (4)^2/6
     assert out2["en"].chi2_term == pytest.approx(16 / 6)
+
+
+# ---- regex word counts vs the word-array forms they replaced -------------
+
+# Strings where the two tokenizations could part: NULL/empty, characters
+# whose lowercase is ASCII (Kelvin sign -> 'k', U+0130 -> 'i' + combining
+# dot), stopwords glued to accented letters or digits, '-'/'_' joins,
+# one run made of repeated stopwords, CJK mixed with ASCII.
+_ADVERSARIAL = [
+    None, "", "\u212a", "\u212a free of", "\u0130stanbul", "the\u00e9 and",
+    "\u00e9the of", "the1and2of", "free-free_free", "the" * 50,
+    "the " * 50, "\u6570\u636e the and \u5904\u7406 free pdf",
+    "FREE PDF Download Ebook The", "And\nTHE\tof,to;in",
+]
+
+
+def _word_array_counts(t):
+    """The higher-order forms quality_cols/seo_spam_cols used before
+    the regex counts: word total, EN-stopword hits, SEO-word hits."""
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        EN_STOPWORDS, SEO_WORDS, _word_array)
+
+    words = _word_array(t)
+    return (F.size(words),
+            F.size(F.filter(words, lambda w: w.isin(EN_STOPWORDS))),
+            F.size(F.filter(words, lambda w: w.isin(SEO_WORDS))))
+
+
+def _parity_frame(spark, docs):
+    return docs.select("text").unionByName(
+        spark.createDataFrame([(t,) for t in _ADVERSARIAL], "text string"))
+
+
+def test_quality_and_seo_match_word_array_forms(spark, docs):
+    """quality_cols, seo_spam_cols, seo_spam_flag and page_quality_keep
+    give the cells the word-array forms gave, NULL text included."""
+    from deepseek_ocr_omnidocbench_spark.operators.filters import (
+        page_quality_keep, runaway_generation, seo_spam_flag)
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        SPAM_THRESHOLD, quality_cols, seo_spam_cols)
+
+    t = F.col("text")
+    n_words, stop_hits, seo_hits = _word_array_counts(t)
+    alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
+    seo_ratio = F.when(n_words > 0, seo_hits / n_words).otherwise(F.lit(0.0))
+    want = {
+        "alpha_ratio": F.when(F.length(t) > 0, alpha / F.length(t))
+        .otherwise(F.lit(0.0)),
+        "digit_chars": F.length(F.regexp_replace(t, r"[^0-9]", "")),
+        "punct_ratio": F.when(F.length(t) > 0, F.length(F.regexp_replace(
+            t, r"[A-Za-z0-9\s]", "")) / F.length(t)).otherwise(F.lit(0.0)),
+        "stopword_ratio": F.when(n_words > 0, stop_hits / n_words)
+        .otherwise(F.lit(0.0)),
+        "mean_word_len": F.when(n_words > 0, alpha / n_words)
+        .otherwise(F.lit(0.0)),
+        "seo_hits": seo_hits, "word_total": n_words, "seo_ratio": seo_ratio,
+        "is_spam": seo_ratio > SPAM_THRESHOLD,
+        "flag": seo_ratio > SPAM_THRESHOLD,
+        "keep": ~(seo_ratio > SPAM_THRESHOLD) & ~runaway_generation(t),
+    }
+    q, s = quality_cols(t), seo_spam_cols(t)
+    got = {**{k: q[k] for k in ("alpha_ratio", "digit_chars", "punct_ratio",
+                                "stopword_ratio", "mean_word_len")},
+           **s, "flag": seo_spam_flag(t), "keep": page_quality_keep(t)}
+    rows = _parity_frame(spark, docs).select(
+        "text", *[got[k].alias("g_" + k) for k in want],
+        *[v.alias("w_" + k) for k, v in want.items()]).collect()
+    assert len(rows) > len(_ADVERSARIAL)
+    for r in rows:
+        for k in want:
+            assert r["g_" + k] == r["w_" + k], (k, (r["text"] or "")[:80])
+    by_text = {r["text"]: r for r in rows}
+    assert by_text[None]["g_seo_hits"] is None
+    assert by_text[None]["g_word_total"] is None
+    assert by_text["the1and2of"]["g_word_total"] == 3
+    assert by_text["free-free_free"]["g_seo_hits"] == 3
+    assert by_text["the" * 50]["g_word_total"] == 1
+
+
+def test_lang_id_trie_matches_flat_alternation(spark, docs):
+    """lang_id_col's prefix-trie stopword pattern extracts the same
+    tokens as the flat longest-first alternation it replaced, and
+    lang_id_col still agrees with the DuckDB oracle on the same rows."""
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        LATIN_PROFILES, _word_run_pattern, lang_id_oracle_sql)
+
+    words = sorted({w for _, ws in LATIN_PROFILES for w in ws},
+                   key=lambda w: (-len(w), w))
+    flat = "(?<![a-zA-Z])(?:%s)(?![a-zA-Z])" % "|".join(words)
+    low = F.lower(F.col("text"))
+    rows = _parity_frame(spark, docs).select(
+        "text", lang_id_col(F.col("text")).alias("lang"),
+        F.regexp_extract_all(low, F.lit(flat), 0).alias("flat"),
+        F.regexp_extract_all(low, F.lit(_word_run_pattern(words)), 0)
+        .alias("trie")).collect()
+    for r in rows:
+        assert r["trie"] == r["flat"], (r["text"] or "")[:80]
+    assert any(r["flat"] for r in rows)
+
+    con = duckdb.connect()
+    con.execute("create table t(i int, text varchar)")
+    con.executemany("insert into t values (?, ?)",
+                    [(i, r["text"]) for i, r in enumerate(rows)])
+    want = [x[0] for x in con.sql(
+        "select %s from t order by i" % lang_id_oracle_sql("text")).fetchall()]
+    assert [r["lang"] for r in rows] == want
+
+
+def test_word_run_pattern_is_the_word_set():
+    """Property (hypothesis, no Spark): the trie pattern full-matches a
+    letter run iff the run is in the word list, and counts in any text
+    exactly the ``[^a-zA-Z]+``-split tokens that are in the list."""
+    import re
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        EN_STOPWORDS, LATIN_PROFILES, SEO_WORDS, _word_run_pattern)
+
+    def check(words, probes, text):
+        pat = re.compile(_word_run_pattern(words))
+        for p in probes:
+            assert bool(pat.fullmatch(p)) == (p in words), (p, pat.pattern)
+        tokens = [w for w in re.split("[^a-zA-Z]+", text) if w]
+        assert len(pat.findall(text)) == sum(w in words for w in tokens)
+
+    word = st.text(alphabet="abcd", min_size=1, max_size=5)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.sets(word, min_size=1, max_size=20), st.lists(word),
+           st.text(alphabet="abcdA1 -\u00e9", max_size=60))
+    def prop(words, probes, text):
+        check(words, probes + sorted(words), text)
+
+    prop()
+    lists = [ws for _, ws in LATIN_PROFILES] + [
+        EN_STOPWORDS, SEO_WORDS, [w for _, ws in LATIN_PROFILES for w in ws]]
+    every = sorted({w for ws in lists for w in ws})
+    for ws in lists:
+        words = set(ws)
+        probes = every + [w[:i] for w in ws for i in range(1, len(w))] + [
+            w + c for w in ws for c in "aesz"]
+        check(words, probes, " ".join(probes) + " " + "-".join(every))
