@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from deepseek_ocr_omnidocbench_spark.operators import dedup as D
 from deepseek_ocr_omnidocbench_spark.operators.filters import (
     PII_PATTERNS as _PII,
+    soft404_oracle_sql,
 )
 from deepseek_ocr_omnidocbench_spark.operators import classifier as CL
 from deepseek_ocr_omnidocbench_spark.operators import graph as GR
@@ -143,14 +144,18 @@ def query(*, oracle: str | None):
 # DuckDB oracle helpers shared by several queries
 # ---------------------------------------------------------------------------
 
-_WORDS_EXPR = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> len(x) > 0)"
 _AZ09_WORDS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
-_EN_STOP = "['the','and','of','to','in','is','that','for','with','as','on']"
-_DE_STOP = "['der','die','das','und','ist','nicht','mit','ein','eine','zu','den']"
-_ES_STOP = "['el','los','las','una','es','por','con','para','del','como','su']"
-_FR_STOP = "['le','les','des','et','est','pour','avec','dans','du','sur','au']"
-_SEO = ("['download','pdf','epub','mobi','free','ebook','file','save',"
-        "'casino','viagra','cialis','ciprofloxacin']")
+# the per-document gate mirrors over `text`, composed by the oracles below
+_QUALITY = TS.quality_oracle_sql("text")
+_SPAM = TS.seo_spam_oracle_sql("text")
+_GOPHER = TS.gopher_rules_oracle_sql("text")
+
+
+def _as_cols(cols: dict[str, str]) -> str:
+    """``expr as name, ...`` over every column of a gate mirror."""
+    return ",\n      ".join(f"{v} as {k}" for k, v in cols.items())
+
+
 _SHINGLES = (
     "list_distinct([array_to_string(w[i:i+2], ' ') "
     "for i in range(1, greatest(len(w) - 1, case when len(w) > 0 then 2 else 1 end))])"
@@ -207,65 +212,22 @@ _MINHASH_CTES = _minhash_ctes("documents")
 
 
 def _gate_ctes(src: str = "documents") -> str:
-    """curation_pipeline's composite-gate computation as a t/u/g CTE
-    chain ending at ``g`` (doc_id + four gate booleans) over ``src``
-    (must expose doc_id, text) — shared by the curation_pipeline oracle
-    and the curate_pipeline composition oracle."""
+    """curation_pipeline's composite-gate computation as a CTE ``g``
+    (doc_id + four gate booleans) over ``src`` (must expose doc_id,
+    text) — shared by the curation_pipeline oracle and the
+    curate_pipeline composition oracle."""
     runaway = " or ".join(
         "(length(text) >= %d and substr(text, -%d, %d)"
         " = substr(text, -%d, %d))"
         % (30 * g + g, 30 * g, 30 * g, 30 * g + g, 30 * g)
         for g in (1, 2, 3))
-    return f"""t as (
-              select doc_id, text,
-                list_filter(string_split_regex(text, '\\s+'),
-                            x -> len(x) > 0) as wwords,
-                list_filter(string_split_regex(text, '\\n'),
-                            l -> len(trim(l)) > 0) as lines,
-                {_WORDS_EXPR} as lwords
-              from {src}),
-            u as (
-              select doc_id, text, lwords,
-                len(wwords) as n_words,
-                case when len(wwords) > 0
-                  then len(array_to_string(wwords, ''))::double / len(wwords)
-                  else 0.0 end as mean_word_len,
-                case when len(wwords) > 0
-                  then ((length(text) - length(replace(text, '#', '')))
-                        + (length(text)
-                           - length(replace(text, '...', ''))) / 3)
-                       / len(wwords)
-                  else 0.0 end as symbol_word_ratio,
-                case when len(lines) > 0
-                  then len(list_filter(lines,
-                           l -> regexp_matches(trim(l), '^[-*•]')))::double
-                       / len(lines)
-                  else 0.0 end as bullet_line_ratio,
-                case when len(wwords) > 0
-                  then len(list_filter(wwords,
-                           w -> regexp_matches(w, '[A-Za-z]')))::double
-                       / len(wwords)
-                  else 0.0 end as alpha_word_ratio,
-                len(list_filter(wwords,
-                                w -> list_contains({_EN_STOP}, lower(w))))
-                  as stop_hits
-              from t),
-            g as (
+    return f"""g as (
               select doc_id,
-                ((n_words >= 50 and n_words <= 100000)
-                 and (mean_word_len >= 3.0 and mean_word_len <= 10.0)
-                 and (symbol_word_ratio <= 0.1)
-                 and (bullet_line_ratio <= 0.9)
-                 and (alpha_word_ratio >= 0.8)
-                 and (stop_hits >= 2)) as g_gopher,
-                (case when len(lwords) > 0
-                   then len(list_filter(lwords,
-                            w -> list_contains({_SEO}, w)))::double
-                        / len(lwords)
-                   else 0.0 end <= 0.004) as g_spam,
+                {_GOPHER["gopher_pass"]} as g_gopher,
+                not ({_SPAM["is_spam"]}) as g_spam,
                 not ({runaway}) as g_runaway,
                 (({TS.lang_id_oracle_sql("text")}) = 'en') as g_lang
-              from u)"""
+              from {src})"""
 
 
 def _classifier_feat_ctes(dim: int) -> str:
@@ -434,10 +396,7 @@ def q_lang_id(spark, sf_dir):
 
 @query(oracle=f"""
             with t as (
-              select doc_id, length(text) as n,
-                length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as alpha,
-                length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) as punct,
-                {_WORDS_EXPR} as words,
+              select doc_id, text,
                 len(regexp_extract_all(text, '[A-Za-z]+')) as n_words,
                 len(regexp_extract_all(text, '[.!?]+')) as n_sentences,
                 greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')),
@@ -445,24 +404,16 @@ def q_lang_id(spark, sf_dir):
                   as n_syllables
               from documents),
             u as (
-              select doc_id,
-                case when n > 0 then alpha / n else 0.0 end as alpha_ratio,
-                case when n > 0 then punct / n else 0.0 end as punct_ratio,
-                case when len(words) > 0
-                  then len(list_filter(words, w -> list_contains({_EN_STOP}, w)))
-                       / len(words) else 0.0 end as stop_ratio,
-                n, n_words, n_sentences, n_syllables,
+              select *,
                 greatest(n_words, 1)::double
                   / greatest(n_sentences, 1)::double as wps,
                 n_syllables::double / greatest(n_words, 1)::double as spw
               from t)
             select doc_id,
-              round(alpha_ratio, 6) as alpha_ratio,
-              round(punct_ratio, 6) as punct_ratio,
-              round(stop_ratio, 6) as stopword_ratio,
-              round(least(n / 1000.0, 1.0) * 0.2 + alpha_ratio * 0.4
-                    + least(stop_ratio * 5.0, 1.0) * 0.3
-                    + (1 - least(punct_ratio * 4.0, 1.0)) * 0.1, 6) as quality_score,
+              round({_QUALITY["alpha_ratio"]}, 6) as alpha_ratio,
+              round({_QUALITY["punct_ratio"]}, 6) as punct_ratio,
+              round({_QUALITY["stopword_ratio"]}, 6) as stopword_ratio,
+              round({_QUALITY["quality_score"]}, 6) as quality_score,
               n_words, n_sentences, n_syllables,
               round(206.835 - 1.015 * wps - 84.6 * spw, 6) as flesch_ease,
               round(0.39 * wps + 11.8 * spw - 15.59, 6) as fk_grade
@@ -490,14 +441,10 @@ def q_quality_scores(spark, sf_dir):
 
 
 @query(oracle=f"""
-            with t as (select doc_id, {_WORDS_EXPR} as words from documents)
-            select doc_id,
-              len(list_filter(words, w -> list_contains({_SEO}, w))) as seo_hits,
-              len(words) as word_total,
-              (case when len(words) > 0
-                then len(list_filter(words, w -> list_contains({_SEO}, w)))::double / len(words)
-                else 0.0 end > 0.004)::int as is_spam
-            from t
+            select doc_id, {_SPAM["seo_hits"]} as seo_hits,
+              {_SPAM["word_total"]} as word_total,
+              ({_SPAM["is_spam"]})::int as is_spam
+            from documents
         """)
 def q_seo_spam(spark, sf_dir):
     docs = _docs(spark, sf_dir)
@@ -509,70 +456,29 @@ def q_seo_spam(spark, sf_dir):
     )
 
 
+_GOPHER_RULES = ("r_word_count", "r_mean_word_len", "r_symbol_ratio",
+                 "r_bullet_ratio", "r_alpha_words", "r_stopwords",
+                 "gopher_pass")
+
+
 @query(oracle=f"""
-            with t as (
-              select doc_id, text,
-                list_filter(string_split_regex(text, '\\s+'),
-                            x -> len(x) > 0) as words,
-                list_filter(string_split_regex(text, '\\n'),
-                            l -> len(trim(l)) > 0) as lines
-              from documents),
-            u as (
-              select doc_id,
-                len(words) as n_words,
-                case when len(words) > 0
-                  then len(array_to_string(words, ''))::double / len(words)
-                  else 0.0 end as mean_word_len,
-                case when len(words) > 0
-                  then ((length(text) - length(replace(text, '#', '')))
-                        + (length(text) - length(replace(text, '...', ''))) / 3)
-                       / len(words)
-                  else 0.0 end as symbol_word_ratio,
-                case when len(lines) > 0
-                  then len(list_filter(lines,
-                           l -> regexp_matches(trim(l), '^[-*•]')))::double
-                       / len(lines)
-                  else 0.0 end as bullet_line_ratio,
-                case when len(words) > 0
-                  then len(list_filter(words,
-                           w -> regexp_matches(w, '[A-Za-z]')))::double
-                       / len(words)
-                  else 0.0 end as alpha_word_ratio,
-                len(list_filter(words,
-                                w -> list_contains({_EN_STOP}, lower(w))))
-                  as stop_hits
-              from t)
-            select doc_id, n_words,
-              round(mean_word_len, 6) as mean_word_len,
-              round(alpha_word_ratio, 6) as alpha_word_ratio,
-              (n_words >= 50 and n_words <= 100000)::int as r_word_count,
-              (mean_word_len >= 3.0 and mean_word_len <= 10.0)::int
-                as r_mean_word_len,
-              (symbol_word_ratio <= 0.1)::int as r_symbol_ratio,
-              (bullet_line_ratio <= 0.9)::int as r_bullet_ratio,
-              (alpha_word_ratio >= 0.8)::int as r_alpha_words,
-              (stop_hits >= 2)::int as r_stopwords,
-              ((n_words >= 50 and n_words <= 100000)
-               and (mean_word_len >= 3.0 and mean_word_len <= 10.0)
-               and (symbol_word_ratio <= 0.1)
-               and (bullet_line_ratio <= 0.9)
-               and (alpha_word_ratio >= 0.8)
-               and (stop_hits >= 2))::int as gopher_pass
-            from u order by doc_id
+            select doc_id, {_GOPHER["n_words"]} as n_words,
+              round({_GOPHER["mean_word_len"]}, 6) as mean_word_len,
+              round({_GOPHER["alpha_word_ratio"]}, 6) as alpha_word_ratio,
+              {", ".join(f"({_GOPHER[r]})::int as {r}" for r in _GOPHER_RULES)}
+            from documents order by doc_id
         """)
 def q_gopher_rules(spark, sf_dir):
     """Gopher-style webtext quality gate (Rae et al. 2021 §A1.1): each
     rule as its own int column + the conjunction, value-parity oracled."""
     docs = _docs(spark, sf_dir)
     cols = TS.gopher_rules_cols(F.col("text"))
-    rules = ("r_word_count", "r_mean_word_len", "r_symbol_ratio",
-             "r_bullet_ratio", "r_alpha_words", "r_stopwords", "gopher_pass")
     return docs.select(
         "doc_id",
         cols["n_words"].alias("n_words"),
         F.round(cols["mean_word_len"], R).alias("mean_word_len"),
         F.round(cols["alpha_word_ratio"], R).alias("alpha_word_ratio"),
-        *[cols[r].cast("int").alias(r) for r in rules],
+        *[cols[r].cast("int").alias(r) for r in _GOPHER_RULES],
     ).orderBy("doc_id")
 
 
@@ -1221,33 +1127,12 @@ def q_c4_clean(spark, sf_dir):
               from documents),
             t as (
               select lower(regexp_extract(url,
-                  '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?:]*)', 1)) as domain,
-                length(text) as n,
-                length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as alpha,
-                length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))
-                  as punct,
-                {_WORDS_EXPR} as words
-              from aug),
-            u as (
-              select domain,
-                case when n > 0 then alpha / n else 0.0 end as alpha_ratio,
-                case when n > 0 then punct / n else 0.0 end as punct_ratio,
-                case when len(words) > 0
-                  then len(list_filter(words,
-                       w -> list_contains({_EN_STOP}, w)))
-                       / len(words) else 0.0 end as stop_ratio,
-                case when len(words) > 0
-                  then len(list_filter(words,
-                       w -> list_contains({_SEO}, w)))::double
-                       / len(words) else 0.0 end as seo_ratio,
-                n from t)
+                  '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?:]*)', 1)) as domain, text
+              from aug)
             select domain, count(*) as n_docs,
-              round(avg(least(n / 1000.0, 1.0) * 0.2 + alpha_ratio * 0.4
-                    + least(stop_ratio * 5.0, 1.0) * 0.3
-                    + (1 - least(punct_ratio * 4.0, 1.0)) * 0.1), 6)
-                as avg_quality,
-              round(avg((seo_ratio > 0.004)::int), 6) as spam_share
-            from u group by domain order by domain
+              round(avg({_QUALITY["quality_score"]}), 6) as avg_quality,
+              round(avg(({_SPAM["is_spam"]})::int), 6) as spam_share
+            from t group by domain order by domain
         """)
 def q_domain_stats(spark, sf_dir):
     """Per-domain curation aggregates on deterministic synthetic hosts
@@ -2397,7 +2282,7 @@ def q_triangles(spark, sf_dir):
 
 
 @query(oracle=f"""
-            with t as (select {_WORDS_EXPR} as w from documents),
+            with t as (select {TS.words_oracle_sql("text")} as w from documents),
             tot as (select sum(len(w))::double as t_tok,
                            sum(greatest(len(w) - 1, 0))::double as t_big
                     from t),
@@ -2432,25 +2317,8 @@ def q_pmi_collocations(spark, sf_dir):
 
 @query(oracle=_pagerank_oracle_sql(tail=f"""
             , qstats as (
-              select source,
-                avg(least(length(text) / 1000.0, 1.0) * 0.2
-                    + (case when length(text) > 0 then
-                        length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                        / length(text) else 0.0 end) * 0.4
-                    + least((case when len({_WORDS_EXPR}) > 0 then
-                        len(list_filter({_WORDS_EXPR},
-                            w -> list_contains({_EN_STOP}, w)))
-                        / len({_WORDS_EXPR}) else 0.0 end) * 5.0, 1.0)
-                      * 0.3
-                    + (1 - least((case when length(text) > 0 then
-                        length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
-                                              'g')) / length(text)
-                        else 0.0 end) * 4.0, 1.0)) * 0.1) as aq,
-                avg(((case when len({_WORDS_EXPR}) > 0 then
-                      len(list_filter({_WORDS_EXPR},
-                          w -> list_contains({_SEO}, w)))::double
-                      / len({_WORDS_EXPR}) else 0.0 end) > 0.004)::int)
-                  as asp
+              select source, avg({_QUALITY["quality_score"]}) as aq,
+                avg(({_SPAM["is_spam"]})::int) as asp
               from documents group by source)
             select p.node, round(p.rank, 6) as rank,
               round(q.aq, 6) as avg_quality,
@@ -3620,63 +3488,13 @@ def q_quantized_recall(spark, sf_dir):
 
 
 @query(oracle=f"""
-            with t as (
-              select doc_id, lang, text, md5(text) as h,
-                length(text) as n,
-                length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as alpha,
-                length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))
-                  as punct,
-                {_WORDS_EXPR} as lwords,
-                list_filter(string_split_regex(text, '\\s+'),
-                            x -> len(x) > 0) as wwords,
-                list_filter(string_split_regex(text, '\\n'),
-                            l -> len(trim(l)) > 0) as lines
-              from documents),
-            u as (
-              select doc_id, lang, h,
-                len(wwords) as ws_tokens,
-                (case when n > 0 then alpha / n else 0.0 end) as alpha_ratio,
-                (case when n > 0 then punct / n else 0.0 end) as punct_ratio,
-                (case when len(lwords) > 0
-                   then len(list_filter(lwords,
-                            w -> list_contains({_EN_STOP}, w)))
-                        / len(lwords) else 0.0 end) as stop_ratio,
-                n,
-                (case when len(wwords) > 0
-                  then len(array_to_string(wwords, ''))::double / len(wwords)
-                  else 0.0 end) as mwl,
-                (case when len(wwords) > 0
-                  then ((length(text) - length(replace(text, '#', '')))
-                        + (length(text)
-                           - length(replace(text, '...', ''))) / 3)
-                       / len(wwords) else 0.0 end) as sym,
-                (case when len(lines) > 0
-                  then len(list_filter(lines,
-                           l -> regexp_matches(trim(l), '^[-*•]')))::double
-                       / len(lines) else 0.0 end) as bullet,
-                (case when len(wwords) > 0
-                  then len(list_filter(wwords,
-                           w -> regexp_matches(w, '[A-Za-z]')))::double
-                       / len(wwords) else 0.0 end) as alphaw,
-                len(list_filter(wwords,
-                                w -> list_contains({_EN_STOP}, lower(w))))
-                  as stop_hits,
-                (case when len(lwords) > 0
-                   then len(list_filter(lwords,
-                            w -> list_contains({_SEO}, w)))::double
-                        / len(lwords) else 0.0 end > 0.004)::int as sp
-              from t),
-            v as (
-              select lang, h, ws_tokens,
-                least(n / 1000.0, 1.0) * 0.2 + alpha_ratio * 0.4
-                  + least(stop_ratio * 5.0, 1.0) * 0.3
-                  + (1 - least(punct_ratio * 4.0, 1.0)) * 0.1 as qs,
-                ((ws_tokens >= 50 and ws_tokens <= 100000)
-                 and (mwl >= 3.0 and mwl <= 10.0) and (sym <= 0.1)
-                 and (bullet <= 0.9) and (alphaw >= 0.8)
-                 and (stop_hits >= 2))::int as gp,
-                sp
-              from u)
+            with v as (
+              select lang, md5(text) as h,
+                {_GOPHER["n_words"]} as ws_tokens,
+                {_QUALITY["quality_score"]} as qs,
+                ({_GOPHER["gopher_pass"]})::int as gp,
+                ({_SPAM["is_spam"]})::int as sp
+              from documents)
             select lang, count(*) as n_docs,
               sum(ws_tokens)::bigint as total_tokens,
               round(avg(qs), 6) as avg_quality,
@@ -5874,31 +5692,18 @@ def q_rouge(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def _encoding_oracle_sql() -> str:
-    """DuckDB mirror of q_encoding_health: the same injection fragment,
-    literal replace-length marker counts, the RE2-side control-char
-    count, the repair chain, and the per-source aggregation."""
-    def cnt(expr: str, m: str) -> str:
-        return (f"(len({expr}) - len(replace({expr}, '{m}', '')))"
-                f" // {len(m)}")
+_ENC_T = EN.encoding_health_oracle_sql("t")
 
-    def moji(expr: str) -> str:
-        return " + ".join(cnt(expr, m) for m in EN.MOJIBAKE_MARKERS)
 
-    fix = "t"
-    for m, good in EN.MOJIBAKE_REPAIRS:
-        fix = f"replace({fix}, '{m}', '{good}')"
-    ctl = EN.CONTROL_RE
-    return f"""
+@query(oracle=f"""
     with d as (select source, {_ENC_DAMAGE_SQL} as t from documents),
-    s0 as (select source, t, {fix} as ft from d),
+    s0 as (select source, t, {EN.fix_mojibake_oracle_sql("t")} as ft from d),
     s as (
       select source,
-        {cnt('t', chr(0xFFFD))} as nr,
-        {moji('t')} as nm,
-        len(regexp_extract_all(t, '{ctl}')) as nc,
-        case when {cnt('ft', chr(0xFFFD))} + {moji('ft')}
-                  + len(regexp_extract_all(ft, '{ctl}')) > 0
+        {_ENC_T["n_replacement"]} as nr,
+        {_ENC_T["n_mojibake"]} as nm,
+        {_ENC_T["n_control"]} as nc,
+        case when {EN.encoding_health_oracle_sql("ft")["is_damaged"]}
              then 1 else 0 end as dmg_f
       from s0),
     s2 as (
@@ -5914,10 +5719,7 @@ def _encoding_oracle_sql() -> str:
            sum(nc)::bigint as n_control,
            round(avg(dmg), 6) as damaged_share
     from s2 group by source order by source
-"""
-
-
-@query(oracle=_encoding_oracle_sql())
+""")
 def q_encoding_health(spark, sf_dir):
     """Encoding-damage report per source (ftfy-style signals): U+FFFD
     replacement chars, cp1252 double-encoding mojibake (counted as
@@ -5935,7 +5737,7 @@ def q_encoding_health(spark, sf_dir):
     with d as (select doc_id, text, {_DEHYPH_DAMAGE_SQL} as dmg
                from documents),
     r as (select doc_id, text, dmg,
-                 len(dmg) - len(replace(dmg, chr(173), '')) as n_soft,
+                 {TS.substr_count_oracle_sql("dmg", chr(173))} as n_soft,
                  regexp_replace(replace(dmg, chr(173), ''),
                                 '([a-z])- *\\n *([a-z])', '\\1\\2', 'g')
                    as rep
@@ -5960,11 +5762,9 @@ def q_dehyphenate(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     d = docs.select("doc_id", "text",
                     F.expr(_DEHYPH_DAMAGE_SQL).alias("dmg"))
-    n_soft = (F.length("dmg")
-              - F.length(F.replace(F.col("dmg"), F.lit("\u00ad"))))
     d = d.select("doc_id", "text", "dmg",
                  dehyphenate_col(F.col("dmg")).alias("rep"),
-                 n_soft.cast("bigint").alias("n_soft"))
+                 TS.substr_count(F.col("dmg"), "\u00ad").alias("n_soft"))
     return (d.select(
         "doc_id",
         F.length("dmg").cast("bigint").alias("len_damaged"),
@@ -8034,12 +7834,12 @@ def q_unigram_em(spark, sf_dir):
             .orderBy("word"))
 
 
-@query(oracle=r"""
+@query(oracle=rf"""
     with d as (
       select doc_id,
         case when doc_id % 8 = 0
-               then text || chr(10) || '{a=1};' || chr(10) || '{b=2};'
-                    || chr(10) || '{c=3};' || chr(10)
+               then text || chr(10) || '{{a=1}};' || chr(10) || '{{b=2}};'
+                    || chr(10) || '{{c=3}};' || chr(10)
              when doc_id % 4 = 0
                then text || chr(10)
                     || 'def f' || doc_id::varchar || '(a, b):' || chr(10)
@@ -8047,46 +7847,10 @@ def q_unigram_em(spark, sf_dir):
                     || 'def g' || doc_id::varchar || '(x):' || chr(10)
                     || '    return x * 2;' || chr(10)
              else text end as text
-      from documents),
-    sig as (
-      select doc_id,
-        (length(text) - length(translate(text, '{}();=<>[]', '')))::bigint
-          as n_sym,
-        ((length(text) - length(replace(text, 'def ', ''))) / 4
-         + (length(text) - length(replace(text, 'function ', ''))) / 9
-         + (length(text) - length(replace(text, 'return ', ''))) / 7
-         + (length(text) - length(replace(text, 'import ', ''))) / 7
-         + (length(text) - length(replace(text, '#include', ''))) / 8
-         + (length(text) - length(replace(text, 'public ', ''))) / 7
-         + (length(text) - length(replace(text, 'void ', ''))) / 5
-         + (length(text) - length(replace(text, 'const ', ''))) / 6
-         + (length(text) - length(replace(text, 'var ', ''))) / 4
-         + (length(text) - length(replace(text, 'class ', ''))) / 6
-         + (length(text) - length(replace(text, 'fn ', ''))) / 3
-         + (length(text) - length(replace(text, 'println', ''))) / 7
-         + (length(text) - length(replace(text, 'printf', ''))) / 6
-         + (length(text) - length(replace(text, 'elif ', ''))) / 5
-         + (length(text) - length(replace(text, 'lambda ', ''))) / 7
-        )::bigint as n_kw,
-        string_split(text, chr(10)) as lines,
-        greatest(length(text), 1)::bigint as n_chars
-      from d),
-    agg as (
-      select doc_id, n_sym, n_kw,
-        len(lines)::bigint as n_lines,
-        len(list_filter(lines, x ->
-          right(rtrim(x), 1) in (';', '{', '}', ')')))::bigint
-          as n_code_lines,
-        len(list_filter(lines, x ->
-          left(x, 1) = chr(9) or left(x, 4) = '    '))::bigint
-          as n_indent,
-        n_chars
-      from sig)
-    select doc_id, n_sym, n_kw, n_lines, n_code_lines, n_indent,
-      (n_sym * 100 >= n_chars * 3) and
-        (n_kw >= 2 or n_code_lines * 100 >= greatest(n_lines, 1) * 30)
-        as is_code
-    from agg order by doc_id
+      from documents)
+    select doc_id,
+      {_as_cols(TS.code_detect_oracle_sql("text"))}
+    from d order by doc_id
 """)
 def q_code_detect(spark, sf_dir):
     """Code-vs-prose routing gate (textstats.code_detect): every 4th
@@ -8113,14 +7877,7 @@ def q_code_detect(spark, sf_dir):
     return code_detect(d).orderBy("doc_id")
 
 
-def _soft404_oracle_sql() -> str:
-    from deepseek_ocr_omnidocbench_spark.operators.filters import (
-        SOFT404_PHRASES)
-
-    terms = " + ".join(
-        f"(length(low) - length(replace(low, '{ph}', ''))) / {len(ph)}"
-        for ph in SOFT404_PHRASES)
-    return f"""
+@query(oracle=f"""
     with d as (
       select doc_id,
         case when doc_id % 6 = 0
@@ -8129,20 +7886,11 @@ def _soft404_oracle_sql() -> str:
              when doc_id % 9 = 0
                then text || ' this domain for sale. coming soon.'
              else text end as text
-      from documents),
-    sig as (
-      select doc_id, length(text)::bigint as n_chars,
-        lower(text) as low
-      from d)
-    select doc_id, n_chars,
-      ({terms})::bigint as n_soft404_hits,
-      (({terms})::bigint >= 1 and n_chars < 400)
-        or ({terms})::bigint >= 2 as is_soft404
-    from sig order by doc_id
-"""
-
-
-@query(oracle=_soft404_oracle_sql())
+      from documents)
+    select doc_id,
+      {_as_cols(soft404_oracle_sql("text"))}
+    from d order by doc_id
+""")
 def q_soft404(spark, sf_dir):
     """Soft-404 / parked-domain gate (filters.soft404_scan): every 6th
     doc becomes a short error page, every 9th gets two placeholder
@@ -8407,16 +8155,7 @@ def q_host_boilerplate(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def _login_pages_oracle_sql() -> str:
-    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
-        LOGIN_MARKERS)
-
-    terms = " + ".join(
-        f"(length(low) - length(replace(low, '{ph}', ''))) / {len(ph)}"
-        for ph in LOGIN_MARKERS)
-    pw = ("(length(low) - length(replace(low, 'password', ''))) / 8")
-    form = ("(length(low) - length(replace(low, '<form', ''))) / 5")
-    return f"""
+@query(oracle=f"""
     with d as (
       select doc_id,
         case when doc_id % 6 = 0
@@ -8425,19 +8164,11 @@ def _login_pages_oracle_sql() -> str:
              when doc_id % 15 = 0
                then text || ' sign in or sign up / create account'
              else text end as text
-      from documents),
-    sig as (select doc_id, lower(text) as low from d)
+      from documents)
     select doc_id,
-      ({terms})::bigint as n_markers,
-      ({pw})::bigint as n_password,
-      ({form})::bigint >= 1 as has_form,
-      (({pw})::bigint >= 1 and (({form})::bigint >= 1
-        or ({terms})::bigint >= 3)) as is_login
-    from sig order by doc_id
-"""
-
-
-@query(oracle=_login_pages_oracle_sql())
+      {_as_cols(TS.login_page_oracle_sql("text"))}
+    from d order by doc_id
+""")
 def q_login_pages(spark, sf_dir):
     """Login/auth-wall detection (textstats.login_page_scan): every 6th
     doc gets a form+password block appended, every 15th a passwordless

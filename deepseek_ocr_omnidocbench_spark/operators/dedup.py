@@ -644,7 +644,8 @@ def connected_components(edges: DataFrame, a_col: str = "doc_a",
     self-join that halves remaining path lengths, so convergence takes
     O(log diameter) rounds instead of O(diameter).  Dup clusters are
     near-cliques in practice (diameter 2-3), and adversarial chains
-    still finish in ~log2(n) rounds.
+    still finish in ~log2(n) rounds.  The loop is ``reach_min`` over
+    the symmetrized edges, seeded with each node's min-neighbour label.
 
     Scale notes: per round the data volume is |V| label rows + |E|
     edge rows — never pairs-squared; every shuffle keys on node ids
@@ -671,32 +672,53 @@ def connected_components(edges: DataFrame, a_col: str = "doc_a",
                                _id(F.col(a_col)).alias("dst")))
            .distinct()
            .localCheckpoint(eager=True))
-    labels = (sym.groupBy("src")
-              .agg(F.min(F.least(F.col("dst"), F.col("src"))).alias("lbl"))
-              .localCheckpoint(eager=True))
+    labels = (sym.groupBy(F.col("src").alias("node"))
+              .agg(F.min(F.least(F.col("dst"), F.col("src"))).alias("lbl")))
+    return (reach_min(sym, init=labels, max_iters=max_iters)
+            .select("node", F.col("lbl").alias("cluster_id")))
+
+
+def reach_min(edges: DataFrame, nodes: DataFrame | None = None,
+              init: DataFrame | None = None,
+              max_iters: int = 30) -> DataFrame:
+    """Directed min-label reachability fixpoint over (src, dst) edges ->
+    (node, lbl) where lbl(v) = min label among {v} ∪ {u : u reaches v}
+    (labels default to the ``nodes`` ids themselves; pass ``init``
+    (node, lbl) to seed, e.g. a sentinel below every real id for
+    set-reachability).  Over symmetrized edges this is undirected CC.
+
+    Pointer jumping is SOUND here even though edges are directed:
+    lbl(v) reaches v and lbl(lbl(v)) reaches lbl(v), so the
+    composition reaches v — each round halves remaining label-chain
+    lengths, giving O(log diameter) rounds.  Per round: one groupBy
+    keyed on dst + one label self-join, both on node ids; lineage
+    truncated with eager localCheckpoints.  Labels only decrease, so
+    zero changes == fixpoint (one count per round)."""
+    labels = (init if init is not None
+              else nodes.select("node", F.col("node").alias("lbl"))) \
+        .localCheckpoint(eager=True)
     for _ in range(max_iters):
-        nbr_min = (sym.join(labels.select(F.col("src").alias("dst"),
-                                          F.col("lbl").alias("nl")), "dst")
-                   .groupBy("src").agg(F.min("nl").alias("lbl")))
-        new = (labels.union(nbr_min)
-               .groupBy("src").agg(F.min("lbl").alias("lbl")))
-        # pointer jump: follow the label one hop (lbl is itself a node
-        # present in `labels`, so the left join always resolves unless
-        # lbl(x) == x, where the coalesce keeps the root label).
-        new = (new.join(labels.select(F.col("src").alias("lbl"),
-                                      F.col("lbl").alias("jump")),
+        nbr = (edges.join(labels.select(F.col("node").alias("src"),
+                                        F.col("lbl").alias("nl")), "src")
+               .groupBy(F.col("dst").alias("node"))
+               .agg(F.min("nl").alias("lbl")))
+        new = (labels.union(nbr)
+               .groupBy("node").agg(F.min("lbl").alias("lbl")))
+        # pointer jump: follow the label one hop (the left join misses
+        # only when lbl is not itself a labelled node; then keep lbl)
+        new = (new.join(labels.select(F.col("node").alias("lbl"),
+                                      F.col("lbl").alias("ll")),
                         "lbl", "left")
-               .select("src", F.least(F.coalesce("jump", F.col("lbl")),
-                                      F.col("lbl")).alias("lbl"))
+               .select("node",
+                       F.least(F.col("lbl"), F.coalesce("ll", "lbl"))
+                       .alias("lbl"))
                .localCheckpoint(eager=True))
-        changed = (new.join(labels.select("src",
-                                          F.col("lbl").alias("old")), "src")
+        changed = (new.join(labels.withColumnRenamed("lbl", "old"), "node")
                    .where(F.col("lbl") != F.col("old")).count())
         labels = new
         if changed == 0:
             break
-    return labels.select(F.col("src").alias("node"),
-                         F.col("lbl").alias("cluster_id"))
+    return labels
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,

@@ -26,8 +26,13 @@ docs.  No Python workers.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .textstats import substr_count, substr_count_oracle_sql
 
 # (mojibake marker, repaired character).  cp1252 mis-decode signatures;
 # written with \u escapes because several repairs are themselves
@@ -50,29 +55,31 @@ MOJIBAKE_MARKERS: tuple[str, ...] = tuple(m for m, _ in MOJIBAKE_REPAIRS)
 CONTROL_RE = r"[\x01-\x08\x0B\x0C\x0E-\x1F]"
 
 
-def substr_count(text: Column, marker: str) -> Column:
-    """Occurrences of a literal marker, as (len - len(removed)) / len(marker)
-    — exact integer math, byte-identical across engines."""
-    return ((F.length(text) - F.length(F.replace(text, F.lit(marker))))
-            / F.lit(len(marker))).cast("bigint")
-
-
 def encoding_health_cols(text: Column) -> dict[str, Column]:
     """Per-document encoding-damage signals; ``is_damaged`` is their
     disjunction."""
-    n_repl = substr_count(text, "�")
-    n_moji: Column | None = None
-    for m in MOJIBAKE_MARKERS:
-        c = substr_count(text, m)
-        n_moji = c if n_moji is None else (n_moji + c)
-    assert n_moji is not None
+    n_repl = substr_count(text, "\ufffd")
+    n_moji = reduce(add, (substr_count(text, m) for m in MOJIBAKE_MARKERS))
     n_ctl = F.regexp_count(text, F.lit(CONTROL_RE)).cast("bigint")
     return {
         "n_replacement": n_repl,
-        "n_mojibake": n_moji.cast("bigint"),
+        "n_mojibake": n_moji,
         "n_control": n_ctl,
         "is_damaged": (n_repl + n_moji + n_ctl) > 0,
     }
+
+
+def encoding_health_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``encoding_health_cols``."""
+    out = {
+        "n_replacement": substr_count_oracle_sql(text_expr, "\ufffd"),
+        "n_mojibake": "(%s)" % " + ".join(
+            substr_count_oracle_sql(text_expr, m) for m in MOJIBAKE_MARKERS),
+        "n_control": "len(regexp_extract_all(%s, '%s'))" % (text_expr,
+                                                           CONTROL_RE),
+    }
+    out["is_damaged"] = "(%s) > 0" % " + ".join(out.values())
+    return out
 
 
 def fix_mojibake(text: Column) -> Column:
@@ -83,6 +90,13 @@ def fix_mojibake(text: Column) -> Column:
     for marker, fixed in MOJIBAKE_REPAIRS:
         out = F.replace(out, F.lit(marker), F.lit(fixed))
     return out
+
+
+def fix_mojibake_oracle_sql(text_expr: str = "text") -> str:
+    """DuckDB mirror of ``fix_mojibake``."""
+    for marker, fixed in MOJIBAKE_REPAIRS:
+        text_expr = "replace(%s, '%s', '%s')" % (text_expr, marker, fixed)
+    return text_expr
 
 
 def encoding_report(docs: DataFrame, text_col: str = "text",

@@ -13,10 +13,13 @@ References: olmocr/olmocr/filter/filter.py (form fields :29-33, language
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import seo_spam_cols
+from .textstats import seo_spam_cols, substr_count, substr_count_oracle_sql
 
 MAX_PAGE_ERROR_RATE = 0.004
 
@@ -660,20 +663,22 @@ def soft404_cols(text: Column) -> dict[str, Column]:
     Integer counts, boolean combine; free rider on the text scan."""
     low = F.lower(text)
     n_chars = F.length(text)
-    terms = []
-    for ph in SOFT404_PHRASES:
-        terms.append(
-            ((F.length(low) - F.length(F.replace(low, F.lit(ph),
-                                                 F.lit(""))))
-             / len(ph)).cast("long"))
-    n_hits = terms[0]
-    for t in terms[1:]:
-        n_hits = n_hits + t
+    n_hits = reduce(add, (substr_count(low, ph) for ph in SOFT404_PHRASES))
     return {
         "n_chars": n_chars.cast("long"),
         "n_soft404_hits": n_hits,
         "is_soft404": ((n_hits >= 1) & (n_chars < 400)) | (n_hits >= 2),
     }
+
+
+def soft404_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``soft404_cols``."""
+    low = "lower(%s)" % text_expr
+    n_hits = "(%s)" % " + ".join(substr_count_oracle_sql(low, ph)
+                                 for ph in SOFT404_PHRASES)
+    return {"n_chars": "length(%s)" % text_expr, "n_soft404_hits": n_hits,
+            "is_soft404": "(%s >= 1 and length(%s) < 400) or %s >= 2" % (
+                n_hits, text_expr, n_hits)}
 
 
 def soft404_scan(docs: DataFrame, text_col: str = "text",

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import connected_components, reach_min
+
 
 def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
              weight_col: str | None = "weight", iters: int = 10,
@@ -745,47 +747,6 @@ def assortativity(edges: DataFrame, src_col: str = "src",
                     .alias("assortativity"))
 
 
-def _reach_min(edges: DataFrame, nodes: DataFrame,
-               init: DataFrame | None = None,
-               max_iters: int = 30) -> DataFrame:
-    """Directed min-label reachability fixpoint -> (node, lbl) where
-    lbl(v) = min label among {v} ∪ {u : u reaches v} (labels default
-    to the node id itself; pass ``init`` (node, lbl) to seed, e.g. a
-    sentinel below every real id for set-reachability).
-
-    Pointer jumping is SOUND here even though edges are directed:
-    lbl(v) reaches v and lbl(lbl(v)) reaches lbl(v), so the
-    composition reaches v — each round halves remaining label-chain
-    lengths, giving O(log diameter) rounds like the undirected CC
-    kernel.  Per round: one groupBy keyed on dst + one label
-    self-join, both on node ids; lineage truncated with eager
-    localCheckpoints.  Labels only decrease, so zero changes ==
-    fixpoint (one count per round)."""
-    labels = (init if init is not None
-              else nodes.select("node", F.col("node").alias("lbl"))) \
-        .localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        nbr = (edges.join(labels.select(F.col("node").alias("src"),
-                                        F.col("lbl").alias("nl")), "src")
-               .groupBy(F.col("dst").alias("node"))
-               .agg(F.min("nl").alias("lbl")))
-        new = (labels.union(nbr)
-               .groupBy("node").agg(F.min("lbl").alias("lbl")))
-        new = (new.join(labels.select(F.col("node").alias("lbl"),
-                                      F.col("lbl").alias("ll")),
-                        "lbl", "left")
-               .select("node",
-                       F.least(F.col("lbl"), F.coalesce("ll", "lbl"))
-                       .alias("lbl"))
-               .localCheckpoint(eager=True))
-        changed = (new.join(labels.withColumnRenamed("lbl", "old"), "node")
-                   .where(F.col("lbl") != F.col("old")).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels
-
-
 def scc(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         max_rounds: int = 10, max_iters: int = 30,
         pre_normalized: bool = False) -> DataFrame:
@@ -797,7 +758,7 @@ def scc(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
 
     Forward-Backward anchor extraction, all DataFrame ops:
     per outer round (1) F(u) = min id reaching u (directed min-label
-    fixpoint WITH pointer jumping — see _reach_min); every F-class is
+    fixpoint WITH pointer jumping — see dedup.reach_min); every F-class is
     anchored at its own minimum m (F(m) = m), and any u→…→m path
     stays inside the class, so (2) R(u) = min id reachable from u
     along F-EQUAL edges detects mutual reachability: SCC(m) =
@@ -827,7 +788,7 @@ def scc(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     for _ in range(max_rounds):
         if nodes.limit(1).count() == 0:
             break
-        fwd = _reach_min(remaining, nodes, max_iters=max_iters)
+        fwd = reach_min(remaining, nodes, max_iters=max_iters)
         eq = (remaining
               .join(fwd.select(F.col("node").alias("src"),
                                F.col("lbl").alias("fa")), "src")
@@ -836,7 +797,7 @@ def scc(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
               .where(F.col("fa") == F.col("fb"))
               .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
               .localCheckpoint(eager=True))
-        back = _reach_min(eq, nodes, max_iters=max_iters)
+        back = reach_min(eq, nodes, max_iters=max_iters)
         done = (fwd.join(back.withColumnRenamed("lbl", "rl"), "node")
                 .where(F.col("lbl") == F.col("rl"))
                 .select("node", F.col("lbl").alias("scc_id"))
@@ -875,8 +836,6 @@ def bowtie(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     TENDRILS + TUBES, folded); disconnected = everything else.
     Driver-side state: two 1-row scalars (core scc_id, core WCC id).
     """
-    from .dedup import connected_components
-
     e = (edges.select(F.col(src_col).alias("src"),
                       F.col(dst_col).alias("dst"))
          .where(F.col("src") != F.col("dst"))
@@ -897,7 +856,7 @@ def bowtie(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                 .select("node",
                         F.when(F.col("_c").isNotNull(), F.lit(sentinel))
                         .otherwise(F.col("node")).alias("lbl")))
-        r = _reach_min(edge_df, nodes, init=seed)
+        r = reach_min(edge_df, nodes, init=seed)
         return r.select("node", (F.col("lbl") == F.lit(sentinel))
                         .alias("hit"))
 

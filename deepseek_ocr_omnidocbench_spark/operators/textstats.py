@@ -12,6 +12,10 @@ ported heuristics from the reference: olmocr/olmocr/filter/filter.py:35-62,
 
 from __future__ import annotations
 
+import inspect
+from functools import reduce
+from operator import add
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -221,6 +225,38 @@ def _lower_count(text: Column, pattern: str) -> Column:
                   F.regexp_count(F.lower(text), F.lit(pattern)))
 
 
+def substr_count(text: Column, marker: str) -> Column:
+    """Occurrences of a literal marker, as (len - len(removed)) / len(marker)
+    — exact integer math, byte-identical across engines."""
+    return ((F.length(text) - F.length(F.replace(text, F.lit(marker))))
+            / F.lit(len(marker))).cast("bigint")
+
+
+# ---- DuckDB mirrors -------------------------------------------------------
+# Each gate's ``*_oracle_sql(text_expr)`` sits next to its ``*_cols`` and
+# returns the same keys as DuckDB expressions over ``text_expr``, written
+# from the same constants; the oracles compose these, never Column trees.
+
+def _sql_str(s: str) -> str:
+    return "'%s'" % s.replace("'", "''")
+
+
+def _sql_list(words) -> str:
+    return "[%s]" % ",".join(map(_sql_str, words))
+
+
+def substr_count_oracle_sql(text_expr: str, marker: str) -> str:
+    """DuckDB twin of ``substr_count`` (a bigint)."""
+    return "((length(%s) - length(replace(%s, %s, ''))) // %d)" % (
+        text_expr, text_expr, _sql_str(marker), len(marker))
+
+
+def words_oracle_sql(text_expr: str = "text") -> str:
+    """DuckDB ``_word_array``: the ``[a-z]+`` runs of lower(text)."""
+    return ("list_filter(string_split_regex(lower(%s), '[^a-z]+'), "
+            "x -> len(x) > 0)" % text_expr)
+
+
 def token_count_cols(text: Column) -> dict[str, Column]:
     """Whitespace tokens + regex (BPE-ish) tokens."""
     ws = F.size(F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0))
@@ -332,8 +368,7 @@ def lang_id_col(text: Column) -> Column:
 def lang_id_oracle_sql(text_expr: str = "text") -> str:
     """DuckDB CASE expression equivalent to ``lang_id_col``, generated
     from the same SCRIPT_PROFILES / LATIN_PROFILES tables."""
-    words = ("list_filter(string_split_regex(lower(%s), '[^a-z]+'), "
-             "x -> len(x) > 0)" % text_expr)
+    words = words_oracle_sql(text_expr)
     parts = ["case when length(%s) = 0 then 'unknown'" % text_expr]
     for lang, lo, hi, thr, marks in MARKER_PROFILES:
         parts.append(
@@ -355,8 +390,7 @@ def lang_id_oracle_sql(text_expr: str = "text") -> str:
     # two nested single-element list_transform lambdas factor ``words``
     # and the hits list so each is computed ONCE per row.
     hits = ", ".join(
-        "len(list_filter(w, x -> list_contains([%s], x)))"
-        % ",".join("'%s'" % t for t in ws)
+        "len(list_filter(w, x -> list_contains(%s, x)))" % _sql_list(ws)
         for _, ws in LATIN_PROFILES)
     langs = ", ".join("'%s'" % lang for lang, _ in LATIN_PROFILES)
     k = len(LATIN_PROFILES)
@@ -398,6 +432,30 @@ def quality_cols(text: Column) -> dict[str, Column]:
     }
 
 
+def quality_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``quality_cols``."""
+    t, words = text_expr, words_oracle_sql(text_expr)
+    n = "length(%s)" % t
+    alpha = "length(regexp_replace(%s, '[^A-Za-z]', '', 'g'))" % t
+    punct = r"length(regexp_replace(%s, '[A-Za-z0-9\s]', '', 'g'))" % t
+    stop_hits = "len(list_filter(%s, w -> list_contains(%s, w)))" % (
+        words, _sql_list(EN_STOPWORDS))
+    alpha_ratio = "case when %s > 0 then %s / %s else 0.0 end" % (n, alpha, n)
+    punct_ratio = "case when %s > 0 then %s / %s else 0.0 end" % (n, punct, n)
+    stop_ratio = "case when len(%s) > 0 then %s / len(%s) else 0.0 end" % (
+        words, stop_hits, words)
+    return {
+        "n_chars_calc": n, "alpha_ratio": alpha_ratio,
+        "digit_chars": "length(regexp_replace(%s, '[^0-9]', '', 'g'))" % t,
+        "punct_ratio": punct_ratio, "stopword_ratio": stop_ratio,
+        "mean_word_len": "case when len(%s) > 0 then %s / len(%s) else 0.0 end"
+        % (words, alpha, words),
+        "quality_score": "least(%s / 1000.0, 1.0) * 0.2 + (%s) * 0.4"
+        " + least((%s) * 5.0, 1.0) * 0.3 + (1 - least((%s) * 4.0, 1.0)) * 0.1"
+        % (n, alpha_ratio, stop_ratio, punct_ratio),
+    }
+
+
 def gopher_rules_cols(text: Column,
                       min_words: int = 50, max_words: int = 100_000,
                       min_mean_word_len: float = 3.0,
@@ -421,11 +479,9 @@ def gopher_rules_cols(text: Column,
     n_words = F.size(words)
     sum_word_len = F.length(F.concat_ws("", words))
     mean_wl = F.when(n_words > 0, sum_word_len / n_words).otherwise(F.lit(0.0))
-    hashes = F.length(text) - F.length(F.replace(text, F.lit("#"), F.lit("")))
-    ellipses = (F.length(text)
-                - F.length(F.replace(text, F.lit("..."), F.lit("")))) / 3
+    symbols = substr_count(text, "#") + substr_count(text, "...")
     symbol_ratio = F.when(n_words > 0,
-                          (hashes + ellipses) / n_words).otherwise(F.lit(0.0))
+                          symbols / n_words).otherwise(F.lit(0.0))
     lines = F.filter(F.split(text, r"\n"),
                      lambda ln: F.length(F.trim(ln)) > 0)
     n_lines = F.size(lines)
@@ -458,6 +514,53 @@ def gopher_rules_cols(text: Column,
             "stop_hits": stop_hits, **rules, "gopher_pass": gopher_pass}
 
 
+def gopher_rules_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``gopher_rules_cols`` at its default thresholds."""
+    th = {k: p.default for k, p in
+          inspect.signature(gopher_rules_cols).parameters.items()
+          if p.default is not p.empty}
+    t = text_expr
+    words = r"list_filter(string_split_regex(%s, '\s+'), x -> len(x) > 0)" % t
+    lines = (r"list_filter(string_split_regex(%s, '\n'),"
+             " l -> len(trim(l)) > 0)" % t)
+    n = "len(%s)" % words
+
+    def ratio(num: str, den: str) -> str:
+        return "case when %s > 0 then %s / %s else 0.0 end" % (den, num, den)
+
+    mean_wl = ratio("len(array_to_string(%s, ''))::double" % words, n)
+    symbol_ratio = ratio("(%s + %s)" % (substr_count_oracle_sql(t, "#"),
+                                        substr_count_oracle_sql(t, "...")), n)
+    bullet_ratio = ratio(
+        "len(list_filter(%s, l -> regexp_matches(trim(l), '^[-*•]')))"
+        "::double" % lines, "len(%s)" % lines)
+    alpha_ratio = ratio(
+        "len(list_filter(%s, w -> regexp_matches(w, '[A-Za-z]')))::double"
+        % words, n)
+    stop_hits = "len(list_filter(%s, w -> list_contains(%s, lower(w))))" % (
+        words, _sql_list(EN_STOPWORDS))
+    rules = {
+        "r_word_count": "%s >= %r and %s <= %r" % (
+            n, th["min_words"], n, th["max_words"]),
+        "r_mean_word_len": "%s >= %r and %s <= %r" % (
+            mean_wl, th["min_mean_word_len"], mean_wl,
+            th["max_mean_word_len"]),
+        "r_symbol_ratio": "%s <= %r" % (symbol_ratio,
+                                        th["max_symbol_word_ratio"]),
+        "r_bullet_ratio": "%s <= %r" % (bullet_ratio,
+                                        th["max_bullet_line_ratio"]),
+        "r_alpha_words": "%s >= %r" % (alpha_ratio,
+                                       th["min_alpha_word_ratio"]),
+        "r_stopwords": "%s >= %r" % (stop_hits, th["min_stop_hits"]),
+    }
+    return {"n_words": n, "mean_word_len": mean_wl,
+            "symbol_word_ratio": symbol_ratio,
+            "bullet_line_ratio": bullet_ratio,
+            "alpha_word_ratio": alpha_ratio, "stop_hits": stop_hits,
+            **{k: "(%s)" % v for k, v in rules.items()},
+            "gopher_pass": " and ".join("(%s)" % v for v in rules.values())}
+
+
 def seo_spam_cols(text: Column) -> dict[str, Column]:
     """SEO/download-spam ratio (filter.py:35-62): seo-word hits over words."""
     hits = _lower_count(text, _word_run_pattern(SEO_WORDS))
@@ -465,6 +568,18 @@ def seo_spam_cols(text: Column) -> dict[str, Column]:
     ratio = F.when(total > 0, hits / total).otherwise(F.lit(0.0))
     return {"seo_hits": hits, "word_total": total, "seo_ratio": ratio,
             "is_spam": ratio > SPAM_THRESHOLD}
+
+
+def seo_spam_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``seo_spam_cols``."""
+    words = words_oracle_sql(text_expr)
+    hits = "len(list_filter(%s, w -> list_contains(%s, w)))" % (
+        words, _sql_list(SEO_WORDS))
+    ratio = ("case when len(%s) > 0 then %s::double / len(%s) else 0.0 end"
+             % (words, hits, words))
+    return {"seo_hits": hits, "word_total": "len(%s)" % words,
+            "seo_ratio": ratio,
+            "is_spam": "(%s) > %r" % (ratio, SPAM_THRESHOLD)}
 
 
 # ---- winnowing fingerprint (pandas UDF; standard published algorithm) ----
@@ -1238,16 +1353,7 @@ def code_detect_cols(text: Column) -> dict[str, Column]:
     n_chars = F.greatest(F.length(text), F.lit(1))
     n_sym = F.length(text) - F.length(
         F.translate(text, "{}();=<>[]", ""))
-    kw_terms = []
-    for kw in CODE_KEYWORDS:
-        kw_terms.append(
-            (F.length(text)
-             - F.length(F.replace(text, F.lit(kw), F.lit(""))))
-            / len(kw))
-    n_kw = kw_terms[0]
-    for t in kw_terms[1:]:
-        n_kw = n_kw + t
-    n_kw = n_kw.cast("long")
+    n_kw = reduce(add, (substr_count(text, kw) for kw in CODE_KEYWORDS))
     lines = F.split(text, "\n")
     n_lines = F.size(lines)
     stripped = F.transform(lines, lambda ln: F.rtrim(ln))
@@ -1267,6 +1373,28 @@ def code_detect_cols(text: Column) -> dict[str, Column]:
         "n_indent": indent.cast("long"),
         "is_code": is_code,
     }
+
+
+def code_detect_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``code_detect_cols``."""
+    t = text_expr
+    lines = "string_split(%s, chr(10))" % t
+    out = {
+        "n_sym": "(length(%s) - length(translate(%s, '{}();=<>[]', '')))"
+        "::bigint" % (t, t),
+        "n_kw": "(%s)" % " + ".join(substr_count_oracle_sql(t, kw)
+                                    for kw in CODE_KEYWORDS),
+        "n_lines": "len(%s)::bigint" % lines,
+        "n_code_lines": "len(list_filter(%s, x -> right(rtrim(x), 1)"
+        " in (';', '{', '}', ')')))::bigint" % lines,
+        "n_indent": "len(list_filter(%s, x -> left(x, 1) = chr(9)"
+        " or left(x, 4) = '    '))::bigint" % lines,
+    }
+    out["is_code"] = (
+        "(%s * 100 >= greatest(length(%s), 1)::bigint * 3) and (%s >= 2"
+        " or %s * 100 >= greatest(%s, 1) * 30)"
+        % (out["n_sym"], t, out["n_kw"], out["n_code_lines"], out["n_lines"]))
+    return out
 
 
 def code_detect(docs: DataFrame, text_col: str = "text",
@@ -1345,23 +1473,28 @@ def login_page_cols(text: Column) -> dict[str, Column]:
       is_login = n_password >= 1 AND (has_form OR n_markers >= 3)
     """
     low = F.lower(text)
-
-    def _cnt(ph):
-        return ((F.length(low) - F.length(
-            F.replace(low, F.lit(ph), F.lit("")))) / len(ph)).cast("long")
-
-    terms = [_cnt(ph) for ph in LOGIN_MARKERS]
-    n_markers = terms[0]
-    for t in terms[1:]:
-        n_markers = n_markers + t
-    n_password = _cnt("password")
-    has_form = _cnt("<form") >= 1
+    n_markers = reduce(add, (substr_count(low, ph) for ph in LOGIN_MARKERS))
+    n_password = substr_count(low, "password")
+    has_form = substr_count(low, "<form") >= 1
     return {
         "n_markers": n_markers,
         "n_password": n_password,
         "has_form": has_form,
         "is_login": (n_password >= 1) & (has_form | (n_markers >= 3)),
     }
+
+
+def login_page_oracle_sql(text_expr: str = "text") -> dict[str, str]:
+    """DuckDB mirror of ``login_page_cols``."""
+    low = "lower(%s)" % text_expr
+    n_markers = "(%s)" % " + ".join(substr_count_oracle_sql(low, ph)
+                                    for ph in LOGIN_MARKERS)
+    n_password = substr_count_oracle_sql(low, "password")
+    has_form = "%s >= 1" % substr_count_oracle_sql(low, "<form")
+    return {"n_markers": n_markers, "n_password": n_password,
+            "has_form": has_form,
+            "is_login": "%s >= 1 and (%s or %s >= 3)" % (
+                n_password, has_form, n_markers)}
 
 
 def login_page_scan(docs: DataFrame, text_col: str = "text",

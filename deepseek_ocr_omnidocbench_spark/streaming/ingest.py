@@ -181,18 +181,28 @@ def stream_domain_counters(spark: SparkSession, input_dir: str,
     analog of the lineage throughput report, and the pattern for any
     bespoke state Spark's built-in aggregations can't express.  State is
     one small struct per domain, evicted after ``state_timeout_min`` of
-    processing-time inactivity so a long tail of dead domains can't
-    grow state without bound."""
+    inactivity so a long tail of dead domains can't grow state without
+    bound.
+
+    The timeout is an event-time timeout on a watermark over the
+    micro-batch timestamp (``current_timestamp()``), so inactivity is
+    still measured in batch wall-clock time and no row is ever late.  A
+    processing-time timeout would not do: it makes every no-data batch
+    eligible to run, so an ``availableNow`` query never drains and
+    never stops; the event-time one runs a no-data batch only when the
+    watermark has moved."""
     import pandas as pd
     from pyspark.sql.streaming.state import (
         GroupState,
         GroupStateTimeout,
     )
 
-    stream = read_pages_stream(spark, input_dir).withColumn(
-        "domain",
-        F.regexp_replace(F.regexp_extract("url", r"^[a-z]+://([^/]*)", 1),
-                         r"^www\.", ""))
+    stream = (read_pages_stream(spark, input_dir)
+              .withColumn("domain", F.regexp_replace(
+                  F.regexp_extract("url", r"^[a-z]+://([^/]*)", 1),
+                  r"^www\.", ""))
+              .withColumn("batch_ts", F.current_timestamp())
+              .withWatermark("batch_ts", "0 seconds"))
 
     out_schema = ("domain string, total_pages bigint, total_bytes bigint, "
                   "batches int")
@@ -213,13 +223,14 @@ def stream_domain_counters(spark: SparkSession, input_dir: str,
             p0, b0, n0 = 0, 0, 0
         new = (p0 + pages, b0 + bytes_, n0 + 1)
         state.update(new)
-        state.setTimeoutDuration(60_000 * state_timeout_min)
+        state.setTimeoutTimestamp(state.getCurrentProcessingTimeMs()
+                                  + 60_000 * state_timeout_min)
         yield pd.DataFrame([{"domain": key[0], "total_pages": new[0],
                              "total_bytes": new[1], "batches": new[2]}])
 
     counters = stream.groupBy("domain").applyInPandasWithState(
         _update, out_schema, state_schema, "update",
-        GroupStateTimeout.ProcessingTimeTimeout)
+        GroupStateTimeout.EventTimeTimeout)
 
     def _sink(batch_df, batch_id):
         (batch_df.withColumn("batch_id", F.lit(batch_id))

@@ -17,9 +17,35 @@ from deepseek_ocr_omnidocbench_spark.streaming.ingest import (
 )
 
 
+def arrive_last(path):
+    """The file stream source takes new files in modification-time order
+    at millisecond resolution, so two drops written within one
+    millisecond can arrive in either order.  Give ``path`` a later
+    millisecond than every other file in its directory."""
+    d = os.path.dirname(path)
+    prev = [os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)
+            if os.path.join(d, f) != path]
+    if prev:
+        t = max(os.stat(path).st_mtime_ns, max(prev) + 1_000_000)
+        os.utime(path, ns=(t, t))
+
+
 def write_drop(rows, path):
     os.makedirs(os.path.dirname(path), exist_ok=True)
     pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA), path)
+    arrive_last(path)
+
+
+@pytest.fixture(autouse=True)
+def no_query_left_running(spark):
+    """Every test's streaming queries must have stopped by its end; any
+    still active is stopped (so it cannot leak into later tests) and
+    fails the test."""
+    yield
+    active = spark.streams.active
+    for q in active:
+        q.stop()
+    assert not active, [q.name or q.id for q in active]
 
 
 @pytest.fixture()
@@ -35,7 +61,7 @@ def test_stream_extract_processes_all_drops(spark, drops):
     tmp_path, rows = drops
     q = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
                        str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(str(tmp_path / "out"))
     non_empty = [r for r in rows if r["category"] != "empty"]
     assert out.count() >= len(non_empty) - 5
@@ -54,11 +80,11 @@ def test_stream_extract_is_incremental(spark, drops):
     tmp_path, rows = drops
     q = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
                        str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     n1 = spark.read.parquet(str(tmp_path / "out")).count()
     q2 = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
                         str(tmp_path / "ck"))
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(str(tmp_path / "out")).count() == n1
 
 
@@ -73,7 +99,7 @@ def test_stream_extract_batch_replay_is_idempotent(spark, drops):
     tmp_path, rows = drops
     q = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
                        str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out_path = str(tmp_path / "out")
     n1 = spark.read.parquet(out_path).count()
     # simulate a replay of batch 0 (both drops fit one trigger): re-run
@@ -96,7 +122,7 @@ def test_stream_dedup_drops_duplicate_content(spark, tmp_path):
         str(tmp_path / "in" / "b.parquet"))
     q = stream_dedup(spark, str(tmp_path / "in"), str(tmp_path / "out"),
                      str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == len(rows)
     assert out.select("content_hash").distinct().count() == len(rows)
@@ -122,7 +148,7 @@ def test_stream_crawl_rates_windows(spark, drops):
     q = stream_crawl_rates(spark, str(tmp_path / "in"), str(tmp_path / "rates"),
                            str(tmp_path / "rck"), window="1 minute",
                            max_files_per_trigger=1)
-    q.awaitTermination(240)
+    assert q.awaitTermination(240)
     out = spark.read.parquet(str(tmp_path / "rates"))
     got = out.agg(F.sum("n_pages"), F.sum("total_bytes")).collect()[0]
     # the sentinel's own window stays pending (nothing later advances
@@ -148,7 +174,7 @@ def test_stream_domain_counters_stateful(spark, drops):
     q = stream_domain_counters(
         spark, str(tmp_path / "in"), str(tmp_path / "cnt"),
         str(tmp_path / "cck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(str(tmp_path / "cnt"))
     # keep the LAST emitted snapshot per domain (update mode re-emits)
     from pyspark.sql import Window
@@ -186,7 +212,7 @@ def test_stream_curate_gates_and_ledger(spark, drops):
     write_drop(english, str(tmp_path / "in" / "drop-002.parquet"))
     q = stream_curate(spark, str(tmp_path / "in"), str(tmp_path / "cur"),
                       str(tmp_path / "cur_ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     kept = spark.read.parquet(str(tmp_path / "cur" / "kept"))
     drops_df = spark.read.parquet(str(tmp_path / "cur" / "drops"))
     n_kept = kept.count()
@@ -235,7 +261,7 @@ def test_stream_near_dedup_across_batches(spark, tmp_path):
     q = stream_near_dedup(spark, str(tmp_path / "in"),
                           str(tmp_path / "nd"), str(tmp_path / "nd_ck"),
                           max_files_per_trigger=1)  # force 2 micro-batches
-    q.awaitTermination(240)
+    assert q.awaitTermination(240)
     kept = spark.read.parquet(str(tmp_path / "nd" / "kept"))
     urls = {r["url"] for r in kept.select("url").collect()}
     # within-batch: one of x/1|x/2 survives; cross-batch: x/4 dropped
@@ -265,11 +291,11 @@ def test_stream_near_dedup_restart_is_idempotent(spark, tmp_path):
                str(tmp_path / "in" / "d0.parquet"))
     args = (spark, str(tmp_path / "in"), str(tmp_path / "nd"),
             str(tmp_path / "nd_ck"))
-    stream_near_dedup(*args).awaitTermination(180)
+    assert stream_near_dedup(*args).awaitTermination(180)
     first = spark.read.parquet(str(tmp_path / "nd" / "kept")).count()
     # restart with the same checkpoint: nothing new -> no re-processing,
     # and the sink row count is unchanged (no duplicate appends)
-    stream_near_dedup(*args).awaitTermination(120)
+    assert stream_near_dedup(*args).awaitTermination(120)
     again = spark.read.parquet(str(tmp_path / "nd" / "kept")).count()
     assert first == again == 1
 
@@ -301,7 +327,7 @@ def test_stream_curate_replayed_batch_is_idempotent(spark, drops):
     write_drop(english, str(tmp_path / "in" / "drop-replay.parquet"))
     q = stream_curate(spark, str(tmp_path / "in"), str(tmp_path / "rp"),
                       str(tmp_path / "rp_ck"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     q.stop()
     kept_dir = str(tmp_path / "rp" / "kept")
     drops_dir = str(tmp_path / "rp" / "drops")
@@ -321,7 +347,7 @@ def test_stream_curate_replayed_batch_is_idempotent(spark, drops):
 
     q2 = stream_curate(spark, str(tmp_path / "in"), str(tmp_path / "rp"),
                        str(tmp_path / "rp_ck"))
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
     q2.stop()
     assert spark.read.parquet(kept_dir).count() == n_kept_1
     assert spark.read.parquet(drops_dir).count() == n_drop_rows_1
@@ -359,7 +385,7 @@ def test_stream_fetch_sessions(spark, tmp_path):
                               str(tmp_path / "sess_ck"),
                               gap="10 minutes", watermark="30 minutes",
                               max_files_per_trigger=1)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     q.stop()
     rows = spark.read.parquet(str(tmp_path / "sess")).collect()
     got = {(r.host, r.session_start.minute): r for r in rows}
@@ -399,7 +425,7 @@ def test_sig_store_compaction_bounds_history_reads(spark, tmp_path):
     q = stream_near_dedup(spark, str(tmp_path / "in"), out,
                           str(tmp_path / "nd_ck"),
                           max_files_per_trigger=1, compact_every=2)
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
     # 5 micro-batches, compact_every=2 -> generations 2 and 4; marker = 4
     assert _sig_gen(spark, out) == 4
@@ -453,6 +479,7 @@ def _write_imgs(specs, path):
         "pixels": pa.array(rows["pixels"], pa.list_(pa.int32())),
     })
     pq.write_table(t, path, row_group_size=50)
+    arrive_last(path)
 
 
 def test_stream_image_dedup_across_batches(spark, tmp_path):
@@ -479,7 +506,7 @@ def test_stream_image_dedup_across_batches(spark, tmp_path):
     q = stream_image_dedup(spark, str(tmp_path / "in"),
                            str(tmp_path / "out"), str(tmp_path / "ck"),
                            max_files_per_trigger=1)
-    q.awaitTermination(240)
+    assert q.awaitTermination(240)
     kept = spark.read.parquet(str(tmp_path / "out" / "kept"))
     ids = {r["media_id"] for r in kept.select("media_id").collect()}
     assert len(ids & {"a1", "a2"}) == 1   # within-batch resolved
@@ -511,7 +538,7 @@ def test_stream_image_dedup_replayed_batch_is_idempotent(spark, tmp_path):
     args = (spark, str(tmp_path / "in"), str(tmp_path / "out"),
             str(tmp_path / "ck"))
     q = stream_image_dedup(*args)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     q.stop()
     kept_dir = str(tmp_path / "out" / "kept")
     first = spark.read.parquet(kept_dir).count()
@@ -525,7 +552,7 @@ def test_stream_image_dedup_replayed_batch_is_idempotent(spark, tmp_path):
     if os.path.exists(crc):
         os.remove(crc)
     q2 = stream_image_dedup(*args)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     q2.stop()
     again = spark.read.parquet(kept_dir).count()
     assert first == again == 1

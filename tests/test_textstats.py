@@ -895,3 +895,86 @@ def test_word_run_pattern_is_the_word_set():
         probes = every + [w[:i] for w in ws for i in range(1, len(w))] + [
             w + c for w in ws for c in "aesz"]
         check(words, probes, " ".join(probes) + " " + "-".join(every))
+
+
+# Rows for the gate-mirror parity test: overlapping literal markers,
+# upper case, U+FFFD and mojibake, a code snippet, bullets, quotes, a
+# marker inside a longer word, an SEO ratio exactly at the threshold.
+_GATE_ROWS = [
+    "......", ".....", "passwordpassword", "aaaa", "aaa",
+    "PASSWORD Sign In <FORM action=x> Remember Me",
+    "THE AND OF FREE PDF DOWNLOAD", "��", "Ã©tÃ©",
+    "def f(a, b):\n    return a + b;\nimport os\n#include <x>\n{a=1};\n",
+    "# title\n- item one\n* item two\n• three\n... and more...",
+    "Error 404: page not found. Coming soon", "it's the 'end'",
+    "password information form", "free " + "the " * 249,
+]
+
+
+def test_gate_mirrors_match_spark(spark, docs):
+    """Every per-document gate's DuckDB mirror (``*_oracle_sql``) has
+    the keys of its Column builder and equals it cell for cell (value
+    and Python type), and
+    ``substr_count`` equals its SQL twin, on the sf0.001 docs plus NULL,
+    "" and adversarial rows."""
+    from deepseek_ocr_omnidocbench_spark.operators.encoding import (
+        encoding_health_cols, encoding_health_oracle_sql, fix_mojibake,
+        fix_mojibake_oracle_sql)
+    from deepseek_ocr_omnidocbench_spark.operators.filters import (
+        soft404_cols, soft404_oracle_sql)
+    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
+        code_detect_cols, code_detect_oracle_sql, gopher_rules_cols,
+        gopher_rules_oracle_sql, login_page_cols, login_page_oracle_sql,
+        quality_cols, quality_oracle_sql, seo_spam_cols, seo_spam_oracle_sql,
+        substr_count, substr_count_oracle_sql)
+
+    t = F.col("text")
+    markers = ["#", "...", "aa", "password", "<form", "�",
+               "Ã©", "'", "def "]
+    gates = {
+        "substr_count": ({m: substr_count(t, m) for m in markers},
+                         {m: substr_count_oracle_sql("text", m)
+                          for m in markers}),
+        "quality": (quality_cols(t), quality_oracle_sql("text")),
+        "seo_spam": (seo_spam_cols(t), seo_spam_oracle_sql("text")),
+        "gopher": (gopher_rules_cols(t), gopher_rules_oracle_sql("text")),
+        "code_detect": (code_detect_cols(t), code_detect_oracle_sql("text")),
+        "login": (login_page_cols(t), login_page_oracle_sql("text")),
+        "soft404": (soft404_cols(t), soft404_oracle_sql("text")),
+        "encoding": (encoding_health_cols(t),
+                     encoding_health_oracle_sql("text")),
+        "fix_mojibake": ({"fixed": fix_mojibake(t)},
+                         {"fixed": fix_mojibake_oracle_sql("text")}),
+    }
+    cells = []
+    for g, (cols, sql) in gates.items():
+        assert list(sql) == list(cols), g
+        cells += [(g, k, cols[k], sql[k]) for k in cols]
+
+    frame = docs.select("text").unionByName(spark.createDataFrame(
+        [(x,) for x in _ADVERSARIAL + _GATE_ROWS], "text string"))
+    rows = frame.select("text", *[c.alias("c%d" % i) for i, (_, _, c, _)
+                                  in enumerate(cells)]).collect()
+    assert len(rows) > len(_ADVERSARIAL + _GATE_ROWS)
+    con = duckdb.connect()
+    con.execute("create table t(i int, text varchar)")
+    con.executemany("insert into t values (?, ?)",
+                    [(i, r["text"]) for i, r in enumerate(rows)])
+    want = con.sql("select %s from t order by i" % ", ".join(
+        sql for _, _, _, sql in cells)).fetchall()
+    bad = [(g, k, r["text"][:40], r["c%d" % i], w[i])
+           for r, w in zip(rows, want, strict=True)
+           for i, (g, k, _, _) in enumerate(cells)
+           if (type(r["c%d" % i]), r["c%d" % i]) != (type(w[i]), w[i])]
+    # the one known engine difference: Spark's lower('\u0130') is 'i' +
+    # U+0307 (two [a-z] runs in "\u0130stanbul"), DuckDB's is 'i' (one)
+    assert bad == [("quality", "mean_word_len", "\u0130stanbul", 3.5, 7.0),
+                   ("seo_spam", "word_total", "\u0130stanbul", 2, 1)], bad
+    by_text = {r["text"]: r for r in rows}
+    n = {(g, k): "c%d" % i for i, (g, k, _, _) in enumerate(cells)}
+    assert by_text["......"][n["substr_count", "..."]] == 2
+    assert by_text["passwordpassword"][n["login", "n_password"]] == 2
+    assert by_text["aaaa"][n["substr_count", "aa"]] == 2
+    assert by_text[None][n["substr_count", "#"]] is None
+    # one SEO word in 250: exactly at the threshold, not spam
+    assert by_text["free " + "the " * 249][n["seo_spam", "is_spam"]] is False
