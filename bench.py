@@ -234,7 +234,7 @@ def main() -> None:
     if "--scaling" in sys.argv:
         import subprocess
 
-        lo = max(2, cpus // 4)
+        lo = max(1, cpus // 4)
         # interleave lo/hi rounds and keep each side's best run: the
         # sandbox host is shared, so a noisy window must not poison one
         # side of the ratio

@@ -685,45 +685,48 @@ def extract_any_udf():
 BIG_BLOB_BYTES = 256 * 1024
 
 
-def extract_pages(pages: DataFrame, salt_buckets: int = 0,
-                  big_blob_bytes: int = BIG_BLOB_BYTES) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (url, md, n_chars).
+def routed_kernel(pages: DataFrame, salt_buckets: int, out) -> DataFrame:
+    """pages(url, html, ...) -> (url, *out(pm)): the extraction kernel,
+    ``pm`` = array<struct<page, md>>, skew-routed (the north rule's
+    giant-blob case).
 
-    Skew handling (the north rule's "giant HTML/PDF blobs" case): blobs
-    over ``big_blob_bytes`` dominate per-row cost by ~1000x, so hashing
-    them into salt buckets stacks several giants into one task and the
-    stage tail collapses scaling (measured: 0.3 efficiency 8->32 cores).
-    Instead the big side is round-robin repartitioned — at most
-    ceil(n_big/partitions) giants per task, so the critical path is one
-    giant.
+    Blobs over ``BIG_BLOB_BYTES`` cost ~1000x a small row; hashed into
+    salt buckets, several giants stack in one task (measured: 0.3
+    scaling efficiency 8->32 cores).  So giants go round-robin: the
+    critical path is one giant.  Small rows are salted into
+    ``salt_buckets`` hash partitions: a small file scans as ONE
+    partition, and unsalted the small side runs on one core (perfbench
+    ``extract``, one 3.8 MB file, 4 cores: peak RSS +12%).  The salt
+    is a shuffle, so where the scan is already split (sf0.1, 38 MB in 4
+    scan partitions) it costs ~12% docs/s.  ``salt_buckets`` = 0 keeps
+    the scan partitioning for everything (test scale).
 
-    The small side keeps the SCAN partitioning: with giants filtered
-    out, per-partition cost tracks bytes, which is exactly what the
-    file-split planner already balances (maxPartitionBytes) — an extra
-    hash shuffle would move ~98% of rows (half the corpus bytes)
-    through the exchange for no balance gain.  Both branches read the
-    source (predicates on length(html) don't push into parquet), which
-    was already true of the salted form, so this strictly removes one
-    full-table shuffle.
-
-    ``salt_buckets`` = 0 keeps the scan partitioning for everything
-    (test scale).
+    ``out`` maps the kernel Column to output columns inside each branch,
+    so a generator applies to the kernel expression itself.  Over a
+    ``pm`` column above the union, Catalyst infers ``size(pm) > 0``,
+    pushes it below the kernel's projection and runs the kernel twice.
     """
     sel = lambda df: df.select(  # noqa: E731
-        "url", extract_any_udf()(F.col("html")).alias("pm"))
-    if salt_buckets:
-        is_big = F.length("html") >= big_blob_bytes
-        small = pages.where(~is_big | F.col("html").isNull())
-        # round-robin: repartition(n) with no key balances rows exactly
-        big = pages.where(is_big).repartition(salt_buckets * 2)
-        out = sel(small).unionByName(sel(big))
-    else:
-        out = sel(pages)
+        "url", *out(extract_any_udf()(F.col("html"))))
+    if not salt_buckets:
+        return sel(pages)
+    is_big = F.length("html") >= BIG_BLOB_BYTES
+    small = pages.where(~is_big | F.col("html").isNull()).repartition(
+        salt_buckets, F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
+    # round-robin: repartition(n) with no key balances rows exactly
+    big = pages.where(is_big).repartition(salt_buckets * 2)
+    return sel(small).unionByName(sel(big))
+
+
+def extract_pages(pages: DataFrame, salt_buckets: int = 0) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> (url, md, n_chars), routed
+    as in ``routed_kernel``."""
     # one md per url: PDF pages joined by blank lines (extract_pdf_markdown),
     # NULL when the blob is NULL or its kernel failed
     md = F.when(~F.exists("pm", lambda p: p["md"].isNull()),
                 F.array_join(F.transform("pm", lambda p: p["md"]), "\n\n"))
-    return out.select("url", md.alias("md")).withColumn("n_chars", F.length("md"))
+    return routed_kernel(pages, salt_buckets, lambda pm: [pm.alias("pm")]) \
+        .select("url", md.alias("md")).withColumn("n_chars", F.length("md"))
 
 
 def page_metadata_cols(html_text: Column) -> dict[str, Column]:

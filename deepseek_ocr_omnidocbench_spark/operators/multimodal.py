@@ -109,8 +109,7 @@ def tile_media(media: DataFrame, decode=fake_decode_image,
     """media(media_id, data) -> one row per tile + one global view.
 
     mapInPandas (not a scalar UDF) because the fan-out is per-row
-    variable; Arrow batches bound worker memory — at 100 TB this stage
-    follows the same big-blob round-robin routing as extract_pages."""
+    variable; Arrow batches bound worker memory."""
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

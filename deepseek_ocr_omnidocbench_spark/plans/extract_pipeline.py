@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
 from ..operators.filters import is_form_pdf, language_keep, page_quality_keep
-from ..operators.html_extract import BIG_BLOB_BYTES, extract_any_udf
+from ..operators.html_extract import routed_kernel
 from ..operators.textstats import lang_id_col, quality_cols
 from ..sources.lineage import StageCheckpoint
 
@@ -40,22 +40,10 @@ def stage_filter(pages: DataFrame) -> DataFrame:
                        & ~F.coalesce(is_form_pdf(F.col("html")), F.lit(False)))
 
 
-def stage_page_md(pages: DataFrame, salt_buckets: int = 0,
-                  big_blob_bytes: int = BIG_BLOB_BYTES) -> DataFrame:
-    """-> (url, page, md): the heavy UDF stage, skew-routed like
-    html_extract.extract_pages (giants round-robin, small salted)."""
-    sel = lambda df: df.select(  # noqa: E731
-        "url", F.explode(extract_any_udf()(F.col("html"))).alias("pm"))
-    if salt_buckets:
-        is_big = F.length("html") >= big_blob_bytes
-        small = pages.where(~is_big | F.col("html").isNull()).repartition(
-            salt_buckets, F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-        big = pages.where(is_big).repartition(salt_buckets * 2)
-        exploded = sel(small).unionByName(sel(big))
-    else:
-        exploded = sel(pages)
-    return exploded.select("url", F.col("pm.page").alias("page"),
-                           F.col("pm.md").alias("md"))
+def stage_page_md(pages: DataFrame, salt_buckets: int = 0) -> DataFrame:
+    """-> (url, page, md): the heavy UDF stage, skew-routed as in
+    html_extract.routed_kernel, one row per page."""
+    return routed_kernel(pages, salt_buckets, lambda pm: [F.inline(pm)])
 
 
 def stage_documents(page_md: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ capability-gated so the rest of the engine never depends on the jar:
 
 | parquet stand-in (lineage.py)      | Iceberg (here)                      |
 |------------------------------------|-------------------------------------|
-| bucket dir write + os.rename       | `writeTo(table).append()` snapshot  |
+| bucket dir write + os.rename       | `overwritePartitions()` snapshot    |
 | lineage-*.json append              | `lineage` table append              |
 | committed_buckets set difference   | anti-join against lineage snapshot  |
 | restart-safe bucket granularity    | same salt-bucket column             |
@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import StageCheckpoint
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg catalog is usable in this session."""
@@ -36,13 +38,20 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-class IcebergStageCheckpoint:
-    """StageCheckpoint contract over Iceberg tables.
+class IcebergStageCheckpoint(StageCheckpoint):
+    """StageCheckpoint over Iceberg tables: the same bucket loop
+    (``StageCheckpoint.run_stage``), with Iceberg's store steps.
 
     ``catalog.namespace`` must point at a configured Iceberg catalog
     (spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog).
     Raises a clear error at construction when the runtime jar is absent
     so callers fall back to the parquet implementation explicitly.
+
+    Idempotency: lineage is appended *after* the data commit, so a crash
+    between them re-runs the bucket on restart.  The stage table is
+    partitioned by ``_bucket`` and each bucket commits via
+    ``overwritePartitions()``, so a re-run replaces that bucket's rows
+    instead of duplicating them (parquet: tmp-write + atomic rename).
     """
 
     def __init__(self, spark: SparkSession, namespace: str,
@@ -61,54 +70,36 @@ class IcebergStageCheckpoint:
             "n_failed bigint, failure_urls array<string>, elapsed_sec double, "
             "committed_at timestamp) USING iceberg")
 
-    def bucket_of(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(self.key_col), F.lit(self.n_buckets)).cast("int"))
-
     def committed_buckets(self, stage: str) -> set[int]:
         rows = self.spark.sql(
             f"SELECT DISTINCT partition_id FROM {self.namespace}.lineage "
             f"WHERE stage = '{stage}'").collect()
         return {r["partition_id"] for r in rows}
 
-    def run_stage(self, stage: str, inp: DataFrame, transform) -> DataFrame:
-        """Same per-bucket loop as the parquet protocol.
+    def _append_lineage(self, rows: list[dict]) -> None:
+        cols = ["stage", "partition_id", "doc_count", "bytes", "n_failed",
+                "failure_urls", "elapsed_sec"]
+        self.spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rows],
+            "stage string, partition_id int, doc_count bigint, bytes bigint, "
+            "n_failed bigint, failure_urls array<string>, elapsed_sec double",
+        ).withColumn("committed_at", F.current_timestamp()) \
+            .writeTo(f"{self.namespace}.lineage").append()
 
-        Idempotency: lineage is appended *after* the data commit, so a
-        crash between them re-runs the bucket on restart.  The data
-        write must therefore be a replace, not an append — the stage
-        table is partitioned by ``_bucket`` and each bucket commits via
-        ``overwritePartitions()``, which atomically swaps exactly that
-        bucket's partition.  Re-running a half-committed bucket replaces
-        its rows instead of duplicating them (the parquet protocol gets
-        the same property from tmp-write + atomic rename).
-        """
-        import time
-
+    def _write_bucket(self, stage: str, bucket: int, out: DataFrame) -> None:
         table = f"{self.namespace}.{stage}"
-        done = self.committed_buckets(stage)
-        bucketed = self.bucket_of(inp)
-        for b in sorted(set(range(self.n_buckets)) - done):
-            t0 = time.monotonic()
-            part = bucketed.where(F.col("_bucket") == b).drop("_bucket")
-            out = transform(part).withColumn("_bucket", F.lit(b))
-            # Create whenever absent (a retried bucket b != 0 may be the
-            # first writer if the table was dropped between runs).
-            if stage not in self._existing_tables():
-                out.writeTo(table).partitionedBy("_bucket").create()
-            else:
-                out.writeTo(table).overwritePartitions()
-            n = self.spark.table(table).where(F.col("_bucket") == b).count()
-            elapsed = time.monotonic() - t0
-            self.spark.createDataFrame(
-                [(stage, b, n, 0, 0, [], elapsed)],
-                "stage string, partition_id int, doc_count bigint, bytes bigint, "
-                "n_failed bigint, failure_urls array<string>, elapsed_sec double",
-            ).withColumn("committed_at", F.current_timestamp()) \
-                .writeTo(f"{self.namespace}.lineage").append()
-        return self.spark.table(table).drop("_bucket")
+        w = out.withColumn("_bucket", F.lit(bucket)).writeTo(table)
+        # Create whenever absent (a retried bucket b != 0 may be the
+        # first writer if the table was dropped between runs).
+        tables = self.spark.sql(f"SHOW TABLES IN {self.namespace}").collect()
+        if stage not in {r["tableName"] for r in tables}:
+            w.partitionedBy("_bucket").create()
+        else:
+            w.overwritePartitions()
 
-    def _existing_tables(self) -> set[str]:
-        rows = self.spark.sql(f"SHOW TABLES IN {self.namespace}").collect()
-        return {r["tableName"] for r in rows}
+    def _read_bucket(self, stage: str, bucket: int) -> DataFrame:
+        return self.spark.table(f"{self.namespace}.{stage}") \
+            .where(F.col("_bucket") == bucket).drop("_bucket")
+
+    def read_stage(self, stage: str) -> DataFrame:
+        return self.spark.table(f"{self.namespace}.{stage}").drop("_bucket")

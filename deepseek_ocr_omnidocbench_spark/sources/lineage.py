@@ -2,32 +2,33 @@
 
 Re-expresses the reference's work-queue protocol — sha1 work groups,
 done-flag objects, stale locks (olmocr/olmocr/work_queue.py:30-225) — as
-atomic table commits:
+atomic table commits, on the RStore model (immutable chunks plus a small
+commit index):
 
-* each pipeline stage writes its output bucketed by ``xxhash64(url) %
-  n_buckets`` (the salt key) to ``<root>/<stage>/data`` and appends one
-  lineage row per bucket: (stage, partition_id, doc_count, bytes,
-  failure_urls, committed_at run marker);
+* each stage writes its output bucketed by ``xxhash64(url) % n_buckets``
+  to ``<root>/<stage>/bucket=NNNNN``, one Spark job per bucket (its
+  counts are observed on the write), and appends one lineage row per
+  bucket — the commit index that ``read_stage`` reads;
 * a killed job resumes by anti-joining its input's bucket ids against
   committed lineage rows — only missing buckets recompute (O7);
-* commit atomicity comes from write-then-rename of the bucket file plus
-  the lineage append; on Iceberg this maps 1:1 to snapshot commits +
-  a lineage table MERGE (the deployment path at 10^12 docs).
-
-The driver-side orchestration is a few small Spark actions; all data
-movement stays in executors.
+* commit atomicity comes from write-then-rename of the bucket directory
+  plus the lineage append.  ``sources/iceberg.py`` overrides only these
+  store steps to run the same loop over Iceberg tables.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_COLS = ["stage", "partition_id", "doc_count", "bytes", "failure_urls", "committed_at"]
+MAX_FAILURE_URLS = 20  # failing keys kept per lineage row
 
 
 class StageCheckpoint:
@@ -46,16 +47,15 @@ class StageCheckpoint:
     def _lineage_path(self) -> str:
         return os.path.join(self.root, "lineage")
 
+    def _lineage_lines(self) -> list[str]:
+        # published files only: a kill inside _append_lineage leaves a
+        # partial .json.tmp that is not part of the log
+        files = sorted(glob.glob(os.path.join(self._lineage_path(), "*.json")))
+        return [line for fn in files for line in Path(fn).read_text().splitlines()]
+
     def committed_buckets(self, stage: str) -> set[int]:
-        path = self._lineage_path()
-        if not os.path.isdir(path) or not os.listdir(path):
-            return set()
-        rows = (
-            self.spark.read.json(path)
-            .where(F.col("stage") == stage)
-            .select("partition_id").distinct().collect()
-        )
-        return {r["partition_id"] for r in rows}
+        rows = map(json.loads, self._lineage_lines())
+        return {r["partition_id"] for r in rows if r["stage"] == stage}
 
     def _append_lineage(self, rows: list[dict]) -> None:
         path = self._lineage_path()
@@ -67,32 +67,54 @@ class StageCheckpoint:
                 f.write(json.dumps(r) + "\n")
         os.rename(tmp, fname)  # atomic publish (Iceberg-commit analog)
 
+    # -- store steps --------------------------------------------------------
+
+    def stage_output_path(self, stage: str, bucket: int) -> str:
+        return os.path.join(self.root, stage, "bucket=%05d" % bucket)
+
+    def _write_bucket(self, stage: str, bucket: int, out: DataFrame) -> None:
+        path = self.stage_output_path(stage, bucket)
+        tmp = path + "__tmp"
+        out.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(tmp, path)
+
+    def _read_bucket(self, stage: str, bucket: int) -> DataFrame:
+        return self.spark.read.parquet(self.stage_output_path(stage, bucket))
+
+    def read_stage(self, stage: str) -> DataFrame:
+        # one path per committed bucket: no ``bucket`` partition column
+        return self.spark.read.parquet(*[
+            self.stage_output_path(stage, b)
+            for b in sorted(self.committed_buckets(stage))])
+
     # -- stage run ----------------------------------------------------------
 
     def bucket_of(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             "_bucket", F.pmod(F.xxhash64(self.key_col), F.lit(self.n_buckets)).cast("int"))
 
-    def stage_output_path(self, stage: str, bucket: int) -> str:
-        return os.path.join(self.root, stage, "bucket=%05d" % bucket)
-
     def run_stage(self, stage: str, inp: DataFrame, transform,
                   failure_col: str | None = None,
-                  max_failure_urls: int = 20,
                   cross_bucket: bool = False) -> DataFrame:
         """Apply ``transform(df) -> df`` per uncommitted bucket; commit each
-        bucket's parquet + lineage row; return the stage's full output.
+        bucket's output + lineage row; return the stage's full output.
 
         Restart-safe: committed buckets are skipped via lineage anti-join
         semantics (here: set difference on bucket ids, since buckets are
         the work granularity — the exact analog of done-flag hashes).
 
         Per-partition metrics (north rule "lineage + metrics"): each row
-        carries doc_count, bytes, elapsed wall seconds, docs/sec, and —
-        when ``failure_col`` names a column whose NULLs mean a failed
-        row — the failure count plus up to ``max_failure_urls`` failing
-        urls (the reference's per-doc error tracking,
+        carries doc_count, bytes (the sum of an ``n_chars`` column, when
+        the output has one), elapsed wall seconds, docs/sec, and — when
+        ``failure_col`` names a column whose NULLs mean a failed row —
+        the failure count plus up to ``MAX_FAILURE_URLS`` failing keys
+        (the reference's per-doc error tracking,
         olmocr/olmocr/pipeline.py:430-434).
+
+        ``observe`` sits last, right above the write, so it runs in the
+        write's result stage, where Spark applies each partition's update
+        once even when a task is retried: the counts are exact.
 
         ``cross_bucket=True`` runs the transform over the FULL input as
         one committed unit (bucket 0) — for stages whose semantics span
@@ -101,45 +123,38 @@ class StageCheckpoint:
         """
         done = self.committed_buckets(stage)
         if cross_bucket:
-            bucketed = inp.withColumn("_bucket", F.lit(0).cast("int"))
             todo = [] if 0 in done else [0]
         else:
             bucketed = self.bucket_of(inp)
             todo = sorted(set(range(self.n_buckets)) - done)
         for b in todo:
             t0 = time.monotonic()
-            part = bucketed.where(F.col("_bucket") == b).drop("_bucket")
+            part = inp if cross_bucket else \
+                bucketed.where(F.col("_bucket") == b).drop("_bucket")
             out = transform(part)
-            path = self.stage_output_path(stage, b)
-            tmp = path + "__tmp"
-            out.write.mode("overwrite").parquet(tmp)
-            written = self.spark.read.parquet(tmp)
-            aggs = [F.count(F.lit(1)).alias("n"),
-                    (F.sum(F.coalesce(F.col("n_chars"), F.lit(0)))
-                     if "n_chars" in out.columns else F.lit(0)).alias("bytes")]
-            if failure_col and failure_col in out.columns:
-                aggs.append(F.sum(F.col(failure_col).isNull().cast("long"))
-                            .alias("n_failed"))
-            agg = written.agg(*aggs).collect()[0]
+            n_chars = F.col("n_chars") if "n_chars" in out.columns else F.lit(0)
+            metrics = [F.count(F.lit(1)).alias("n"),
+                       F.coalesce(F.sum(n_chars), F.lit(0)).alias("bytes")]
+            if failure_col in out.columns:
+                metrics.append(F.count(F.when(F.col(failure_col).isNull(), 1))
+                               .alias("n_failed"))
+            obs = Observation()
+            self._write_bucket(stage, b, out.observe(obs, *metrics))
+            m = obs.get
+            n, n_failed = int(m["n"]), int(m.get("n_failed", 0))
             failure_urls: list[str] = []
-            n_failed = int(agg["n_failed"]) if failure_col and "n_failed" in agg.asDict() else 0
             if n_failed and self.key_col in out.columns:
                 failure_urls = [
-                    r[self.key_col]
-                    for r in written.where(F.col(failure_col).isNull())
-                    .select(self.key_col).limit(max_failure_urls).collect()
-                ]
-            if os.path.isdir(path):
-                import shutil
-                shutil.rmtree(path)
-            os.rename(tmp, path)
+                    r[self.key_col] for r in self._read_bucket(stage, b)
+                    .where(F.col(failure_col).isNull())
+                    .select(self.key_col).limit(MAX_FAILURE_URLS).collect()]
             elapsed = time.monotonic() - t0
             self._append_lineage([{
                 "stage": stage, "partition_id": b,
-                "doc_count": int(agg["n"]), "bytes": int(agg["bytes"] or 0),
+                "doc_count": n, "bytes": int(m["bytes"]),
                 "n_failed": n_failed, "failure_urls": failure_urls,
                 "elapsed_sec": round(elapsed, 3),
-                "docs_per_sec": round(int(agg["n"]) / elapsed, 2) if elapsed > 0 else 0.0,
+                "docs_per_sec": round(n / elapsed, 2) if elapsed > 0 else 0.0,
                 "committed_at": time.time(),
             }])
         return self.read_stage(stage)
@@ -158,8 +173,6 @@ class StageCheckpoint:
                  .alias("docs_per_sec_serial"))
         )
 
-    def read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, stage))
-
     def lineage(self) -> DataFrame:
-        return self.spark.read.json(self._lineage_path())
+        return self.spark.read.json(
+            self.spark.sparkContext.parallelize(self._lineage_lines(), 1))

@@ -1,24 +1,46 @@
 """IcebergStageCheckpoint protocol logic, exercised against an
 in-memory fake catalog (no Iceberg jar ships in this container — the
-fake implements exactly the DataFrame/SQL surface run_stage touches, so
-the idempotency-by-overwritePartitions contract is testable)."""
+fake implements exactly the DataFrame/SQL surface the checkpoint loop
+touches: the Iceberg store steps, plus ``observe``/``Observation`` for
+the per-bucket counts, so the idempotency-by-overwritePartitions
+contract and the lineage metrics are testable)."""
 
 from deepseek_ocr_omnidocbench_spark.sources.iceberg import IcebergStageCheckpoint
 
 
+class FakeObservation:
+    """Metrics land when the observed frame is written (as in Spark,
+    where the write is the action that fills the Observation)."""
+
+    def __init__(self):
+        self.metrics = None
+
+    @property
+    def get(self):
+        assert self.metrics is not None, "observation read before its action"
+        return self.metrics
+
+
 class FakeWriter:
-    def __init__(self, cat, table, rows):
-        self.cat, self.table, self.rows = cat, table, rows
+    def __init__(self, cat, table, df):
+        self.cat, self.table, self.rows = cat, table, df.rows
+        self.df = df
 
     def partitionedBy(self, col):
         return self
 
+    def _fire(self):
+        for obs, metrics in self.df.observers:
+            obs.metrics = {m.name: m.fn(self.rows) for m in metrics}
+
     def create(self):
         assert self.table not in self.cat.tables, "create on existing table"
         self.cat.tables[self.table] = list(self.rows)
+        self._fire()
 
     def append(self):
         self.cat.tables.setdefault(self.table, []).extend(self.rows)
+        self._fire()
 
     def overwritePartitions(self):
         assert self.table in self.cat.tables, "overwrite on missing table"
@@ -26,31 +48,49 @@ class FakeWriter:
         kept = [r for r in self.cat.tables[self.table]
                 if r["_bucket"] not in buckets]
         self.cat.tables[self.table] = kept + list(self.rows)
+        self._fire()
 
 
 class FakeDF:
     """Rows are dicts; implements the exact chain run_stage uses."""
 
-    def __init__(self, cat, rows):
-        self.cat, self.rows = cat, rows
+    def __init__(self, cat, rows, observers=()):
+        self.cat, self.rows, self.observers = cat, rows, observers
+
+    @property
+    def columns(self):
+        return list(dict.fromkeys(k for r in self.rows for k in r))
+
+    def _derive(self, rows):
+        return FakeDF(self.cat, rows, self.observers)
 
     def withColumn(self, name, value):
-        lit = getattr(value, "_lit", value)
-        return FakeDF(self.cat, [{**r, name: lit} for r in self.rows])
+        return self._derive([{**r, name: value.fn(r)} for r in self.rows])
 
-    def where(self, cond):  # cond is a _BucketEq from the fake functions
-        return FakeDF(self.cat, [r for r in self.rows
-                                 if r.get("_bucket") == cond.value])
+    def where(self, cond):
+        return self._derive([r for r in self.rows if cond.fn(r)])
 
     def drop(self, col):
-        return FakeDF(self.cat, [{k: v for k, v in r.items() if k != col}
-                                 for r in self.rows])
+        return self._derive([{k: v for k, v in r.items() if k != col}
+                             for r in self.rows])
+
+    def select(self, *cols):
+        return self._derive([{c: r[c] for c in cols} for r in self.rows])
+
+    def limit(self, n):
+        return self._derive(self.rows[:n])
+
+    def collect(self):
+        return list(self.rows)
 
     def count(self):
         return len(self.rows)
 
+    def observe(self, obs, *metrics):
+        return FakeDF(self.cat, self.rows, self.observers + ((obs, metrics),))
+
     def writeTo(self, table):
-        return FakeWriter(self.cat, table, self.rows)
+        return FakeWriter(self.cat, table, self)
 
 
 class FakeSpark:
@@ -93,53 +133,83 @@ class Catalog:
         self.tables = {}
 
 
-class _BucketEq:
-    def __init__(self, value):
-        self.value = value
+class _Expr:
+    """A row-level column: ``fn(row) -> value``."""
+
+    def __init__(self, fn):
+        self.fn = fn
+
+    def __eq__(self, other):
+        return _Expr(lambda r: self.fn(r) == other)
+
+    def isNull(self):
+        return _Expr(lambda r: self.fn(r) is None)
+
+    def cast(self, t):
+        return self
+
+    def alias(self, name):
+        self.name = name
+        return self
+
+
+class _Agg(_Expr):
+    """An aggregate: ``fn(rows) -> value``."""
 
 
 def _fake_env(monkeypatch, n_buckets=4):
-    """Wire the fakes through the module's F.* uses."""
+    """Wire the fakes through the F.* and Observation uses of both the
+    checkpoint loop (lineage) and the Iceberg store steps."""
     import deepseek_ocr_omnidocbench_spark.sources.iceberg as ice
+    import deepseek_ocr_omnidocbench_spark.sources.lineage as lineage
 
     monkeypatch.setattr(ice, "iceberg_available", lambda s: True)
 
-    class _Col:
-        def __init__(self, name):
-            self.name = name
-
-        def __eq__(self, other):
-            return _BucketEq(other)
-
-        def cast(self, t):
-            return self
-
-    class _Lit:
-        def __init__(self, v):
-            self._lit = v
+    def value(e, rows):
+        return e.fn(rows) if isinstance(e, _Agg) else e.fn({})
 
     class FakeF:
         @staticmethod
         def col(name):
-            return _Col(name)
+            return _Expr(lambda r: r.get(name))
 
         @staticmethod
         def lit(v):
-            return _Lit(v)
+            return _Expr(lambda r: v)
+
+        @staticmethod
+        def when(cond, v):
+            return _Expr(lambda r: v if cond.fn(r) else None)
+
+        @staticmethod
+        def count(e):
+            return _Agg(lambda rows: sum(e.fn(r) is not None for r in rows))
+
+        @staticmethod
+        def sum(e):
+            return _Agg(lambda rows: sum(v for v in map(e.fn, rows) if v is not None)
+                        if rows else None)
+
+        @staticmethod
+        def coalesce(*es):
+            return _Agg(lambda rows: next(
+                (v for v in (value(e, rows) for e in es) if v is not None), None))
 
         @staticmethod
         def pmod(a, b):
-            return _Col("_pmod")
+            return _Expr(lambda r: None)
 
         @staticmethod
         def xxhash64(c):
-            return _Col("_hash")
+            return _Expr(lambda r: None)
 
         @staticmethod
         def current_timestamp():
-            return _Lit("ts")
+            return _Expr(lambda r: "ts")
 
     monkeypatch.setattr(ice, "F", FakeF)
+    monkeypatch.setattr(lineage, "F", FakeF)
+    monkeypatch.setattr(lineage, "Observation", FakeObservation)
     cat = Catalog()
     ckpt = IcebergStageCheckpoint(FakeSpark(cat), "glue", n_buckets=n_buckets)
     return ice, cat, ckpt
@@ -203,3 +273,43 @@ def test_retried_bucket_creates_missing_table(monkeypatch):
         r for r in cat.tables["glue.lineage"] if r["partition_id"] != 3]
     ckpt.run_stage("extract", inp, lambda df: df)
     assert {r["_bucket"] for r in cat.tables["glue.extract"]} == {3}
+
+
+def test_failing_transform_records_failures(monkeypatch):
+    """The Iceberg path records what the parquet path records: bytes,
+    the exact failure count and up to MAX_FAILURE_URLS failing keys."""
+    from deepseek_ocr_omnidocbench_spark.sources.lineage import MAX_FAILURE_URLS
+
+    ice, cat, ckpt = _fake_env(monkeypatch)
+    monkeypatch.setattr(ckpt, "bucket_of", lambda df: df)
+
+    def flaky(df):  # all of bucket 1 and one row of bucket 2 fail
+        bad = lambda u: u.startswith("u1-") or u == "u2-0"  # noqa: E731
+        return FakeDF(df.cat, [{"url": r["url"], "n_chars": len(r["url"]),
+                                "md": None if bad(r["url"]) else "ok"}
+                               for r in df.rows])
+
+    ckpt.run_stage("extract", _input_df(cat, rows_per_bucket=25), flaky,
+                   failure_col="md")
+    lin = {r["partition_id"]: r for r in cat.tables["glue.lineage"]}
+    assert {b: r["n_failed"] for b, r in lin.items()} == {0: 0, 1: 25, 2: 1, 3: 0}
+    assert len(lin[1]["failure_urls"]) == MAX_FAILURE_URLS
+    assert all(u.startswith("u1-") for u in lin[1]["failure_urls"])
+    assert lin[2]["failure_urls"] == ["u2-0"]
+    assert lin[0]["failure_urls"] == [] and lin[3]["failure_urls"] == []
+    assert lin[1]["bytes"] == sum(len("u1-%d" % i) for i in range(25))
+    assert all(r["doc_count"] == 25 for r in lin.values())
+
+
+def test_cross_bucket_stage_commits_one_row(monkeypatch):
+    ice, cat, ckpt = _fake_env(monkeypatch)
+    inp = FakeDF(cat, [{"url": "u%d" % i} for i in range(12)])
+    ckpt.run_stage("dedup", inp, lambda df: df, cross_bucket=True)
+    (row,) = cat.tables["glue.lineage"]
+    assert (row["stage"], row["partition_id"], row["doc_count"]) == ("dedup", 0, 12)
+    assert {r["_bucket"] for r in cat.tables["glue.dedup"]} == {0}
+    runs = []
+    out = ckpt.run_stage("dedup", inp, lambda df: (runs.append(1), df)[1],
+                         cross_bucket=True)
+    assert runs == [] and len(cat.tables["glue.lineage"]) == 1
+    assert out.count() == 12
