@@ -5138,7 +5138,7 @@ def q_eval_fixture_report(spark, sf_dir):
 
     gt, _pages, preds = fixture_frames(spark, n_pages=10, seed=3, perturb=1.0)
     matches = match_elements(gt, preds)
-    scored = score_samples(arbitrate_tables(matches), with_teds=False)
+    scored = score_samples(arbitrate_tables(matches))
     rep = edit_dist_report(scored)
     return rep.select(
         "element_class", "n_samples",

@@ -17,9 +17,10 @@ uses), with mteval-13a tokenization (shared with bleu.py).  nltk adds
 Porter-stem and WordNet-synonym fallback stages and punkt tokenization;
 neither corpus is shipped in this container, and for
 markdown-extraction text (the only caller) exact matching dominates —
-stem/synonym matches move scores by <2% on the demo pages.  Used inside ``applyInPandas`` per attribute
-group — Spark supplies the grouping, this stays per-row Python inside
-an Arrow batch like bleu.py.
+stem/synonym matches move scores by <2% on the demo pages.  The
+evaluation scores each row with ``sentence_meteor`` inside its match
+pass (metrics_report.score_record); the report averages the scores
+natively per group.
 """
 
 from __future__ import annotations

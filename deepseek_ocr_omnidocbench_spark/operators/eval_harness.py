@@ -11,11 +11,15 @@ md_tex_filter span parse (P1) -> table-format arbitration feeding
 unmatched table cells back into the text pool (J7,
 end2end_dataset.py:287-302) -> quick/simple match with deadline
 fallback (J6) -> stream classification (text/formula/table/order) ->
-reading-order pairing (A6, end2end_dataset.py:125-143).
+reading-order pairing (A6, end2end_dataset.py:125-143) -> per-row
+scores (metrics_report.score_record: table normalization, TEDS, METEOR,
+BLEU counts).
 
-The only cross-page decision — latex-vs-html table-format arbitration by
-global count (end2end_dataset.py:229-234) — happens later in
-metrics_report.py as two tiny aggregates.
+This is the evaluation's only Python pass.  The only cross-page
+decision — latex-vs-html table-format arbitration by global count
+(end2end_dataset.py:229-234) — happens later in
+metrics_report.arbitrate_tables, from two stream counts observed over
+this pass's output.
 """
 
 from __future__ import annotations
@@ -41,6 +45,7 @@ from .matching import (
     match_quick,
     match_simple,
 )
+from .metrics_report import SCORE_FIELDS, score_record
 
 # ---------------------------------------------------------------------------
 # P8: element grouping + truncated merge
@@ -233,6 +238,9 @@ MATCH_SCHEMA = T.StructType([
     T.StructField("edit", T.DoubleType()),
 ])
 
+# match_elements' output: match rows with their per-row scores
+SCORED_MATCH_SCHEMA = T.StructType(MATCH_SCHEMA.fields + SCORE_FIELDS)
+
 GT_ELEMENT_FIELDS = ["img_id", "anno_id", "category_type", "order", "text",
                      "latex", "html", "ignore", "attribute", "truncated_pair"]
 
@@ -265,10 +273,11 @@ def _to_row(rec: dict) -> dict:
 
 def match_elements(gt_elements: DataFrame, pred_pages: DataFrame,
                    method: str = "quick_match") -> DataFrame:
-    """(gt_elements, pages-of-markdown) -> match-record DataFrame.
+    """(gt_elements, pages-of-markdown) -> scored match-record DataFrame
+    (SCORED_MATCH_SCHEMA).
 
-    Shuffles both sides once on img_id (the cogroup key); everything
-    downstream is per-page Python inside Arrow workers.  At cluster
+    Shuffles both sides once on img_id (the cogroup key); matching and
+    per-row scoring are per-page Python inside Arrow workers.  At cluster
     scale the key is page-granular so skew is bounded by page size.
 
     The shuffle partition count is PINNED with an explicit
@@ -285,8 +294,8 @@ def match_elements(gt_elements: DataFrame, pred_pages: DataFrame,
         md = pred_pdf["md"].iloc[0] if len(pred_pdf) else ""
         gt_rows = gt_pdf.to_dict("records") if len(gt_pdf) else []
         recs = match_page(gt_rows, md, img_id, method=method)
-        rows = [_to_row(r) for r in recs]
-        return pd.DataFrame(rows, columns=[f.name for f in MATCH_SCHEMA.fields])
+        rows = [score_record(_to_row(r)) for r in recs]
+        return pd.DataFrame(rows, columns=SCORED_MATCH_SCHEMA.fieldNames())
 
     n_part = gt_elements.sparkSession.sparkContext.defaultParallelism
     return (
@@ -295,5 +304,5 @@ def match_elements(gt_elements: DataFrame, pred_pages: DataFrame,
         .groupBy("img_id")
         .cogroup(pred_pages.select("img_id", "md")
                  .repartition(n_part, "img_id").groupBy("img_id"))
-        .applyInPandas(_match, MATCH_SCHEMA)
+        .applyInPandas(_match, SCORED_MATCH_SCHEMA)
     )

@@ -1,105 +1,137 @@
 """Metric computation + report aggregations (SURVEY §2.6 A1-A10).
 
-All aggregation is native Spark SQL; Python appears only in the TEDS
-tree-edit UDF and the table-normalization UDF.  Parity targets:
+Python runs once per match row, inside the evaluation pass: ``score_record``
+(called by operators/eval_harness.match_elements) normalizes table rows
+and adds every per-row score that does not depend on the global table
+decision — TEDS, sentence METEOR and the BLEU sufficient statistics.
+Everything after the pass is native Spark: the table arbitration, the
+native ``levenshtein`` edit distance, and ONE two-level aggregate
+(``report_frame``) that all five reports read.  Parity targets:
 
 * Edit_dist — `Levenshtein(pred, gt)/max(len)` per sample, three
   aggregates (metrics 2/cal_metric.py:139-184): page-weighted mean of
   per-page sum(edit)/sum(upper_len) (`ALL_page_avg`), global sum ratio
-  (`edit_whole`), sample mean (`edit_sample_avg`).  The per-sample
-  distance uses Spark's built-in ``levenshtein`` — whole metric stays
-  JVM-side.
+  (`edit_whole`), sample mean (`edit_sample_avg`).
 * TEDS / TEDS_structure_only — sample mean per group
   (cal_metric.py:36-96), scores from operators/teds.py.
-* Attribute-group means (metrics 2/show_result.py:22-49) — explode
-  gt_attribute maps, mean + count per "k: v" label.
+* BLEU / METEOR per element class (cal_metric.py:99-137): corpus BLEU
+  from summed per-row n-gram counts (functions/bleu.py), mean of
+  sentence METEOR.  Scored gt-as-hypothesis, the reference's argument
+  swap.
+* Attribute-group means (metrics 2/show_result.py:22-49) — gt_attribute
+  'k: v' labels, mean + count per label.
 * Page-attribute split (show_result.py:83-139) — rows x (ALL + page
-  attrs + special issues); Edit_dist aggregates page-weighted, others
-  page mean -> attribute mean.
+  attrs + special issues); Edit_dist page-weighted, then page mean per
+  label.
 * Overall = ((1-text_ED)*100 + (1-formula_ED)*100 + TEDS*100)/3
   (tools/generate_result_tables_final.ipynb).
 
 Table-format arbitration (end2end_dataset.py:218-234): the only global
 decision — latex wins when the latex match stream outnumbers html; the
-losing latex stream is folded in as pred-empty rows.
+losing latex stream is folded in as pred-empty rows, whose scores follow
+from the gt alone (TEDS and METEOR 0, no matched n-grams).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.bleu import bleu_from_stats, bleu_stats
+from ..functions.meteor import sentence_meteor
 from ..functions.normalize import normalized_table
 from .teds import teds_score
 
+TABLE_FORMATS = {"table_latex": "latex", "table_html": "html"}
 
-def _norm_table_udf(fmt: str):
-    def _batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: normalized_table(x, fmt) if x else "")
+SCORE_FIELDS = [
+    T.StructField("teds", T.DoubleType()),
+    T.StructField("teds_struct", T.DoubleType()),
+    T.StructField("meteor", T.DoubleType()),
+    # functions/bleu.bleu_stats(gt, pred): 4 clipped counts, 4 gt n-gram
+    # totals, gt token count, pred token count
+    T.StructField("bleu_stats", T.ArrayType(T.LongType())),
+]
+_N_BLEU = 10  # len(bleu_stats(...)) at max_n=4
+# the bleu_stats slots that count prediction tokens (clipped n-grams and
+# the reference length): all zero when the prediction is empty
+_PRED_SLOTS = (0, 1, 2, 3, 9)
 
-    return F.pandas_udf(_batch, "string")
+
+def _eff_text(norm: Optional[str], raw: Optional[str]) -> str:
+    """Reference convention: norm field when non-empty else raw field."""
+    return norm if norm else (raw or "")
+
+
+def score_record(rec: dict) -> dict:
+    """Add the per-row scores to one match row (in place) and return it.
+
+    Table rows (``table_latex``/``table_html``) get their gt normalized as
+    html and their prediction in the row's own stream format, then
+    ``teds``/``teds_struct``; other rows get NULL TEDS.  Every row gets
+    sentence METEOR and ``bleu_stats`` over the norm-effective texts."""
+    fmt = TABLE_FORMATS.get(rec.get("element_class"))
+    if fmt:
+        rec["norm_gt"] = normalized_table(rec["gt"], "html") if rec.get("gt") else ""
+        rec["norm_pred"] = normalized_table(rec["pred"], fmt) if rec.get("pred") else ""
+    gt = _eff_text(rec.get("norm_gt"), rec.get("gt"))
+    pred = _eff_text(rec.get("norm_pred"), rec.get("pred"))
+    rec["teds"] = teds_score(pred, gt) if fmt else None
+    rec["teds_struct"] = teds_score(pred, gt, structure_only=True) if fmt else None
+    rec["meteor"] = sentence_meteor(gt, pred)
+    rec["bleu_stats"] = bleu_stats(gt, pred)
+    return rec
 
 
 def arbitrate_tables(matches: DataFrame) -> DataFrame:
-    """Pick the winning table stream by global count (J7) and normalize.
+    """Pick the winning table stream by global count (J7).
 
-    Returns the matches DataFrame with table rows unified under
-    element_class='table' and norm_gt/norm_pred rewritten by N4/N5.
-    """
-    counts = {
-        r["element_class"]: r["n"]
-        for r in matches.filter(F.col("element_class").isin("table_latex", "table_html"))
-        .groupBy("element_class").count().withColumnRenamed("count", "n").collect()
-    }
-    n_latex = counts.get("table_latex", 0)
-    n_html = counts.get("table_html", 0)
-    non_table = matches.filter(~F.col("element_class").isin("table_latex", "table_html"))
+    The two stream counts are observed while one action runs over
+    ``matches`` (which fills its cache, if it is cached); the rest is a
+    filter and a projection.  Table rows come out as
+    element_class='table'.  When html wins, latex rows stay as empty
+    predictions: their scores are rewritten to what ``score_record``
+    gives for an empty prediction."""
+    cls = F.col("element_class")
+    streams = Observation()
+    (matches.observe(streams, *[F.count(F.when(cls == c, 1)).alias(c) for c in TABLE_FORMATS])
+     .write.format("noop").mode("overwrite").save())
+    n_latex, n_html = streams.get["table_latex"], streams.get["table_html"]
+    as_table = F.when(cls.isin(*TABLE_FORMATS), F.lit("table")).otherwise(cls)
     if n_latex > n_html:
-        tables = matches.filter(F.col("element_class") == "table_latex")
-        fmt = "latex"
-    else:
-        html_side = matches.filter(F.col("element_class") == "table_html")
-        # losing latex matches fold in as unmatched (pred blanked, edit 1)
-        latex_side = (
-            matches.filter(F.col("element_class") == "table_latex")
-            .withColumn("pred", F.lit(""))
-            .withColumn("norm_pred", F.lit(""))
-            .withColumn("pred_category", F.lit(""))
-            .withColumn("edit", F.lit(1.0))
-        )
-        tables = html_side.unionByName(latex_side)
-        fmt = "html"
-    tables = (
-        tables.withColumn("element_class", F.lit("table"))
-        .withColumn("norm_gt", _norm_table_udf("html")(F.col("gt")))
-        .withColumn("norm_pred", _norm_table_udf(fmt)(F.col("pred")))
-    )
-    return non_table.unionByName(tables)
+        return (matches.where(cls.isNotNull() & (cls != "table_html"))
+                .withColumn("element_class", as_table))
+    blank = cls == "table_latex"
+    blanked = {
+        "pred": F.lit(""), "norm_pred": F.lit(""), "pred_category": F.lit(""),
+        "edit": F.lit(1.0), "teds": F.lit(0.0), "teds_struct": F.lit(0.0),
+        "meteor": F.lit(0.0),
+        "bleu_stats": F.transform("bleu_stats", lambda x, i: F.when(
+            i.isin(*_PRED_SLOTS), F.lit(0).cast("long")).otherwise(x)),
+    }
+    return matches.where(cls.isNotNull()).withColumns(
+        {c: F.when(blank, v).otherwise(F.col(c)) for c, v in blanked.items()}
+        | {"element_class": as_table})
 
 
 def _eff(col: str, fallback: str):
-    """Reference convention: norm field when non-empty else raw field."""
+    """``_eff_text`` as a Column."""
     c = F.col(col)
     return F.when(c.isNotNull() & (F.length(c) > 0), c).otherwise(
         F.coalesce(F.col(fallback), F.lit("")))
 
 
-def score_samples(matches: DataFrame, with_teds: bool = True,
-                  teds_partitions: int | None = None) -> DataFrame:
-    """Add per-sample metric columns: upper_len, edit_num, edit_dist,
-    teds, teds_struct (tables only).
+def score_samples(matches: DataFrame, teds_partitions: int | None = None) -> DataFrame:
+    """Add the edit-distance columns upper_len, edit_num (native
+    levenshtein) and edit_dist.  The scores of ``score_record`` come with
+    rows of the evaluation pass; a frame without them (md2md) gets them
+    as NULL, so every scored frame has one schema.
 
-    ``teds_partitions``: explicit partition count for the TEDS Python
-    stage.  Table rows are a small minority of matches, so at
-    benchmark/fixture scale the per-partition Python-worker round trip
-    dominates the stage (56 tables across 32 partitions = 32 worker
-    hops for ~1.5 core-seconds of scoring); the harness passes 8.
-    Leave None at corpus scale — there the inherited partitioning is
-    the parallelism the tables actually need."""
+    ``teds_partitions`` is accepted and ignored: TEDS runs in the
+    evaluation pass."""
     df = (
         matches.withColumn("_gt_eff", _eff("norm_gt", "gt"))
         .withColumn("_pred_eff", _eff("norm_pred", "pred"))
@@ -111,164 +143,165 @@ def score_samples(matches: DataFrame, with_teds: bool = True,
                    F.col("edit_num") / F.col("upper_len")).otherwise(F.lit(None)),
         )
     )
-    if with_teds:
-        def _teds_batch(it):
-            for pdf in it:
-                scores = [
-                    teds_score(p or "", g or "")
-                    for p, g in zip(pdf["_pred_eff"], pdf["_gt_eff"])
-                ]
-                structs = [
-                    teds_score(p or "", g or "", structure_only=True)
-                    for p, g in zip(pdf["_pred_eff"], pdf["_gt_eff"])
-                ]
-                pdf = pdf.assign(teds=pd.array(scores, dtype="float64"),
-                                 teds_struct=pd.array(structs, dtype="float64"))
-                yield pdf
+    missing = {f.name: F.lit(None).cast(f.dataType)
+               for f in SCORE_FIELDS if f.name not in df.columns}
+    return df.withColumns(missing).drop("_gt_eff", "_pred_eff")
 
-        schema = T.StructType(
-            df.schema.fields
-            + [T.StructField("teds", T.DoubleType()), T.StructField("teds_struct", T.DoubleType())]
-        )
-        # only table rows enter the Python stage: TEDS ignores every
-        # other element class, but a whole-frame mapInPandas would ship
-        # ALL rows (with their long normalized-text columns) through
-        # Arrow both ways — on the eval fixtures that serialization was
-        # most of the stage's wall time.  Non-table rows take the
-        # JVM-only branch with null scores; downstream consumers are
-        # aggregates, so the union's row order is irrelevant.
-        is_table = F.col("element_class").eqNullSafe("table")
-        tab = df.where(is_table)
-        if teds_partitions:
-            tab = tab.repartition(teds_partitions)
-        tables = tab.mapInPandas(_teds_batch, schema)
-        others = (df.where(~is_table)
-                  .withColumn("teds", F.lit(None).cast("double"))
-                  .withColumn("teds_struct", F.lit(None).cast("double")))
-        df = tables.unionByName(others)
-    return df.drop("_gt_eff", "_pred_eff")
+
+# ---------------------------------------------------------------------------
+# reports: one aggregate, collected once and split in Python
+# ---------------------------------------------------------------------------
+
+def _or_empty(strings):
+    return F.coalesce(strings, F.array().cast("array<string>"))
+
+
+def _kv_labels(m):
+    """'k: v' per entry of a map Column; empty for a NULL map."""
+    return _or_empty(F.transform(F.map_entries(m),
+                                 lambda e: F.concat_ws(": ", e["key"], e["value"])))
+
+
+def _page_labels(page_attrs: DataFrame) -> DataFrame:
+    """img_id -> its distinct page labels: 'ALL', each 'k: v' page
+    attribute and each special issue not about tables."""
+    labels = F.concat(F.array(F.lit("ALL")), _kv_labels("page_attribute"),
+                      _or_empty(F.filter("special_issue", lambda x: ~x.contains("table"))))
+    return (page_attrs.groupBy("img_id")
+            .agg(F.array_distinct(F.flatten(F.collect_list(labels))).alias("page_labels")))
+
+
+def _keys(report: str, labels):
+    return F.transform(labels, lambda x: F.struct(F.lit(report).alias("report"),
+                                                  x.alias("label")))
+
+
+def report_frame(scored: DataFrame, page_attrs: Optional[DataFrame] = None) -> DataFrame:
+    """Every report's sums in one two-level aggregate.
+
+    Each scored row is counted under the keys (report, label):
+    ('class', NULL) once, ('attr', 'k: v') per gt attribute entry, and
+    ('page', label) per page label of its img_id (with ``page_attrs``).
+    Level one sums per (report, element_class, label, img_id), level two
+    per (report, element_class, label) and takes the page-weighted mean
+    edit ratio (``page_avg``, ``n_pages``: pages with a non-empty
+    sample).  BLEU counts are summed as integers."""
+    keys = [F.array(F.struct(F.lit("class").alias("report"),
+                             F.lit(None).cast("string").alias("label"))),
+            _keys("attr", _or_empty(F.flatten(F.transform("gt_attribute", _kv_labels))))]
+    if page_attrs is not None:
+        scored = scored.join(F.broadcast(_page_labels(page_attrs)), "img_id", "left")
+        keys.append(_keys("page", _or_empty(F.col("page_labels"))))
+    counted = F.col("upper_len") > 0
+    rows = scored.select(
+        "element_class", "img_id", "edit_dist", "teds", "teds_struct", "meteor",
+        "bleu_stats", F.when(counted, F.col("edit_num")).alias("_edit"),
+        F.when(counted, F.col("upper_len")).alias("_len"), F.inline(F.concat(*keys)))
+    sums = [F.sum("_edit").alias("e_n"), F.sum("_len").alias("e_len"),
+            F.sum("edit_dist").alias("e_dsum"), F.count("edit_dist").alias("e_cnt"),
+            F.count(F.lit(1)).alias("n_rows"), F.sum("teds").alias("teds_sum"),
+            F.sum("teds_struct").alias("teds_struct_sum"), F.count("teds").alias("teds_n"),
+            F.sum("meteor").alias("meteor_sum")]
+    per_page = rows.groupBy("report", "element_class", "label", "img_id").agg(
+        *sums, *[F.sum(F.col("bleu_stats")[i]).alias("b%d" % i) for i in range(_N_BLEU)])
+    return per_page.groupBy("report", "element_class", "label").agg(
+        F.avg(F.col("e_n") / F.col("e_len")).alias("page_avg"),
+        F.count(F.col("e_n") / F.col("e_len")).alias("n_pages"),
+        *[F.sum(c).alias(c) for c in ("e_n", "e_len", "e_dsum", "e_cnt", "n_rows",
+                                      "teds_sum", "teds_struct_sum", "teds_n", "meteor_sum")],
+        F.array(*[F.sum("b%d" % i) for i in range(_N_BLEU)]).alias("bleu"))
+
+
+def _div(a, b):
+    """a / b; NULL for an empty group or unscored rows (md2md)."""
+    return None if a is None or not b else a / b
+
+
+def _ordered(rows: list[dict], *keys: str) -> list[dict]:
+    """Spark's ORDER BY: NULLs first."""
+    return sorted(rows, key=lambda r: [(r[k] is not None, r[k] or "") for k in keys])
+
+
+def collect_reports(scored: DataFrame, page_attrs: Optional[DataFrame] = None) -> dict:
+    """Collect ``report_frame`` once and split it into the five reports
+    (lists of row dicts, in each report's documented order).
+    ``page_split`` is empty without ``page_attrs``."""
+    parts: dict = {"class": [], "attr": [], "page": []}
+    for r in report_frame(scored, page_attrs).collect():
+        parts[r["report"]].append(r.asDict())
+    by_class = _ordered(parts["class"], "element_class")
+    return {
+        "edit_dist": [
+            {"element_class": r["element_class"], "page_avg_edit": r["page_avg"],
+             "edit_whole": r["e_n"] / r["e_len"],
+             "edit_sample_avg": r["e_dsum"] / r["e_cnt"], "n_samples": r["e_cnt"]}
+            for r in by_class if r["e_cnt"]],
+        "teds": [
+            {"teds": _div(r["teds_sum"], r["teds_n"]),
+             "teds_structure_only": _div(r["teds_struct_sum"], r["teds_n"]),
+             "n_tables": r["n_rows"]}
+            for r in by_class if r["element_class"] == "table"],
+        "attributes": _ordered([
+            {"element_class": r["element_class"], "attribute": r["label"],
+             "mean_score": r["e_dsum"] / r["e_cnt"], "sample_count": r["e_cnt"]}
+            for r in parts["attr"] if r["e_cnt"]], "element_class", "attribute"),
+        "page_split": _ordered([
+            {"element_class": r["element_class"], "attribute": r["label"],
+             "edit_dist": r["page_avg"], "page_count": r["n_pages"]}
+            for r in parts["page"] if r["n_pages"]], "element_class", "attribute"),
+        "text_metrics": [
+            {"group": r["element_class"],
+             "bleu": bleu_from_stats(r["bleu"]) if None not in r["bleu"] else None,
+             "meteor": _div(r["meteor_sum"], r["n_rows"]), "n_samples": r["n_rows"]}
+            for r in by_class],
+    }
+
+
+_REPORT_SCHEMAS = {
+    "edit_dist": "element_class string, page_avg_edit double, edit_whole double, "
+                 "edit_sample_avg double, n_samples long",
+    "teds": "teds double, teds_structure_only double, n_tables long",
+    "attributes": "element_class string, attribute string, mean_score double, "
+                  "sample_count long",
+    "page_split": "element_class string, attribute string, edit_dist double, "
+                  "page_count long",
+    "text_metrics": "group string, bleu double, meteor double, n_samples long",
+}
+
+
+def _view(name: str, scored: DataFrame, page_attrs: Optional[DataFrame] = None) -> DataFrame:
+    """One report of ``collect_reports`` as a small local DataFrame."""
+    rows = collect_reports(scored, page_attrs)[name]
+    return scored.sparkSession.createDataFrame(rows, _REPORT_SCHEMAS[name])
 
 
 def edit_dist_report(scored: DataFrame) -> DataFrame:
     """Three Edit_dist aggregates per element_class (cal_metric.py:159-184)."""
-    per_page = (
-        scored.filter(F.col("upper_len") > 0)
-        .groupBy("element_class", "img_id")
-        .agg((F.sum("edit_num") / F.sum("upper_len")).alias("page_ratio"),
-             F.sum("edit_num").alias("page_edit"),
-             F.sum("upper_len").alias("page_len"),
-             F.avg("edit_dist").alias("page_sample_avg"),
-             F.count(F.lit(1)).alias("n_samples"))
-    )
-    return (
-        per_page.groupBy("element_class")
-        .agg(
-            F.avg("page_ratio").alias("page_avg_edit"),
-            (F.sum("page_edit") / F.sum("page_len")).alias("edit_whole"),
-            (F.sum(F.col("page_sample_avg") * F.col("n_samples")) / F.sum("n_samples")
-             ).alias("edit_sample_avg"),
-            F.sum("n_samples").alias("n_samples"),
-        )
-        .orderBy("element_class")
-    )
+    return _view("edit_dist", scored)
 
 
 def teds_report(scored: DataFrame) -> DataFrame:
-    """Sample-mean TEDS for the table stream (cal_metric.py:80-96)."""
-    return (
-        scored.filter(F.col("element_class") == "table")
-        .agg(F.avg("teds").alias("teds"),
-             F.avg("teds_struct").alias("teds_structure_only"),
-             F.count(F.lit(1)).alias("n_tables"))
-    )
+    """Sample-mean TEDS for the table stream (cal_metric.py:80-96); no
+    row when there is no table."""
+    return _view("teds", scored)
 
 
-def text_metric_report(matches: DataFrame,
-                       group_col: str = "element_class") -> DataFrame:
-    """Corpus BLEU + mean METEOR per group (cal_metric.py:99-137 —
-    call_BLEU / call_METEOR evaluate per group over norm-effective
-    gt/pred).  Grouping and shuffle are Spark's; the scoring loop runs
-    in applyInPandas workers like the reference's per-group HF calls.
-    Note the reference passes predictions=gt, references=pred (its
-    argument swap) — scores are computed gt-as-hypothesis to match."""
-    from ..functions.bleu import corpus_bleu
-    from ..functions.meteor import corpus_meteor
-
-    d = (matches.withColumn("_gt_eff", _eff("norm_gt", "gt"))
-         .withColumn("_pred_eff", _eff("norm_pred", "pred"))
-         .select(F.col(group_col).alias("group"), "_gt_eff", "_pred_eff"))
-
-    schema = T.StructType([
-        T.StructField("group", T.StringType()),
-        T.StructField("bleu", T.DoubleType()),
-        T.StructField("meteor", T.DoubleType()),
-        T.StructField("n_samples", T.LongType()),
-    ])
-
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        gts = [g or "" for g in pdf["_gt_eff"]]
-        preds = [p or "" for p in pdf["_pred_eff"]]
-        return pd.DataFrame([{
-            "group": pdf["group"].iloc[0],
-            "bleu": corpus_bleu(gts, preds),
-            "meteor": corpus_meteor(gts, preds),
-            "n_samples": len(pdf),
-        }])
-
-    return d.groupBy("group").applyInPandas(_score, schema).orderBy("group")
+def text_metric_report(scored: DataFrame) -> DataFrame:
+    """Corpus BLEU + mean METEOR per element_class (cal_metric.py:99-137)."""
+    return _view("text_metrics", scored)
 
 
-def attribute_report(scored: DataFrame, metric_col: str = "edit_dist") -> DataFrame:
-    """Mean score + count per gt_attribute 'k: v' label (A7)."""
-    exploded = (
-        scored.filter(F.col("gt_attribute").isNotNull())
-        .select("element_class", metric_col, F.explode("gt_attribute").alias("attr"))
-        .select("element_class", metric_col, F.explode("attr").alias("k", "v"))
-        .select(
-            "element_class",
-            F.concat_ws(": ", "k", "v").alias("attribute"),
-            F.col(metric_col).alias("score"),
-        )
-        .filter(F.col("score").isNotNull())
-    )
-    return (
-        exploded.groupBy("element_class", "attribute")
-        .agg(F.avg("score").alias("mean_score"), F.count(F.lit(1)).alias("sample_count"))
-        .orderBy("element_class", "attribute")
-    )
+def attribute_report(scored: DataFrame) -> DataFrame:
+    """Mean edit_dist + count per gt_attribute 'k: v' label (A7)."""
+    return _view("attributes", scored)
 
 
 def page_split_report(scored: DataFrame, page_attrs: DataFrame) -> DataFrame:
     """ALL + per-page-attribute rows; Edit_dist page-weighted (A8).
 
     page_attrs: (img_id, page_attribute map<string,string>,
-    special_issue array<string>).  The explode+union re-expresses the
-    reference's row multiplication; 'ALL' covers the ungrouped total —
-    the GROUPING SETS ((), (attribute)) pattern.
-    """
-    attr_rows = (
-        page_attrs.select("img_id", F.explode("page_attribute").alias("k", "v"))
-        .select("img_id", F.concat_ws(": ", "k", "v").alias("attribute"))
-    )
-    issue_rows = (
-        page_attrs.select("img_id", F.explode("special_issue").alias("attribute"))
-        .filter(~F.col("attribute").contains("table"))
-    )
-    all_rows = page_attrs.select("img_id", F.lit("ALL").alias("attribute"))
-    page_attr_long = all_rows.unionByName(attr_rows).unionByName(issue_rows)
-
-    joined = scored.filter(F.col("upper_len") > 0).join(
-        F.broadcast(page_attr_long), "img_id")
-    per_page = (
-        joined.groupBy("element_class", "attribute", "img_id")
-        .agg((F.sum("edit_num") / F.sum("upper_len")).alias("page_weighted"))
-    )
-    return (
-        per_page.groupBy("element_class", "attribute")
-        .agg(F.avg("page_weighted").alias("edit_dist"),
-             F.count(F.lit(1)).alias("page_count"))
-        .orderBy("element_class", "attribute")
-    )
+    special_issue array<string>)."""
+    return _view("page_split", scored, page_attrs)
 
 
 def cdm_export(scored: DataFrame) -> DataFrame:

@@ -1,27 +1,24 @@
 """End-to-end evaluation plan (SURVEY §3.1 re-expressed as a DataFrame DAG).
 
-config -> gt/pred scan -> cogroup match (shuffle on img_id) -> table
-arbitration -> per-sample scoring (native levenshtein + TEDS UDF) ->
-native groupBy reports.  One shuffle for the match, one per report
-aggregate; Catalyst handles the rest.
+gt/pred scan -> ONE Python pass: cogroup on img_id, per page match and
+per row score (TEDS, METEOR, BLEU counts) -> cache -> table arbitration
+(stream counts observed on the action that fills the cache, then a
+filter/projection) -> native levenshtein -> one two-level report
+aggregate, collected once and split into the five reports in Python.
+A cold 50-page run is 4 Python tasks (one per core) and 9 Spark jobs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.eval_harness import match_elements
 from ..operators.metrics_report import (
     arbitrate_tables,
-    attribute_report,
-    edit_dist_report,
+    collect_reports,
     overall_score,
-    page_split_report,
     score_samples,
-    teds_report,
-    text_metric_report,
 )
 from ..sources.annotations import generate_eval_fixtures
 
@@ -60,54 +57,21 @@ def fixture_frames(spark: SparkSession, n_pages: int, seed: int = 42,
 
 
 def evaluate(gt: DataFrame, preds: DataFrame, page_attrs: DataFrame,
-             method: str = "quick_match", with_teds: bool = True) -> dict:
+             method: str = "quick_match") -> dict:
     """Run the full harness; returns the nested result dict (S10 shape)."""
-    # cache the cogroup output: arbitrate_tables collects stream counts
-    # (its one global decision) before scoring, which would otherwise
-    # re-run the whole per-page match a second time
+    # cached: the arbitration's count and the report aggregate both read it
     matches = match_elements(gt, preds, method=method).cache()
-    unified = arbitrate_tables(matches)
-    # repartition(8) BEFORE caching: scoring needs wide parallelism for
-    # its Python kernels, but the five report aggregates over the tiny
-    # scored frame pay per-task scheduling overhead x 32 partitions x 5
-    # jobs — narrowing the cached frame cut the report tail ~30%
-    # (2.4 s -> 1.7 s at 100 pages x 32 cores; the one small exchange
-    # costs less than the saved task churn)
-    scored = score_samples(unified, with_teds=with_teds,
-                           teds_partitions=8).repartition(8).cache()
-    scored.count()  # materialize ONCE before the concurrent report jobs
-
-    # the five reports are independent aggregates over the cached frame;
-    # each is compute-light but pays ~0.5-1 s of job overhead (schedule +
-    # python-worker round trip), so submit them concurrently — Spark
-    # actions are thread-safe and the scheduler interleaves the tiny
-    # stages (measured: ~6 s sequential tail -> ~2 s)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_edit = pool.submit(lambda: edit_dist_report(scored).collect())
-        f_teds = pool.submit(lambda: teds_report(scored).collect())
-        f_attr = pool.submit(lambda: attribute_report(scored).collect())
-        f_page = pool.submit(
-            lambda: page_split_report(scored, page_attrs).collect())
-        f_text = pool.submit(lambda: text_metric_report(scored).collect())
-        edit_rows = [r.asDict() for r in f_edit.result()]
-        teds_row = f_teds.result()
-        attr_rows = [r.asDict() for r in f_attr.result()]
-        page_rows = [r.asDict() for r in f_page.result()]
-        text_rows = [r.asDict() for r in f_text.result()]
-    teds_row = teds_row[0].asDict() if teds_row and teds_row[0]["n_tables"] else None
-    result = {
-        "edit_dist": {r["element_class"]: r for r in edit_rows},
-        "teds": teds_row,
-        "attributes": attr_rows,
-        "page_split": page_rows,
-        "text_metrics": {r["group"]: r for r in text_rows},
-        "overall": overall_score(edit_rows, teds_row),
-    }
-    scored.unpersist()
+    reports = collect_reports(score_samples(arbitrate_tables(matches)), page_attrs)
     matches.unpersist()
-    return result
+    teds = reports["teds"][0] if reports["teds"] else None
+    return {
+        "edit_dist": {r["element_class"]: r for r in reports["edit_dist"]},
+        "teds": teds,
+        "attributes": reports["attributes"],
+        "page_split": reports["page_split"],
+        "text_metrics": {r["group"]: r for r in reports["text_metrics"]},
+        "overall": overall_score(reports["edit_dist"], teds),
+    }
 
 
 def evaluate_fixtures(spark: SparkSession, n_pages: int = 50, seed: int = 42,

@@ -103,7 +103,7 @@ def md2md_evaluate(spark: SparkSession, gt_folder: str, pred_folder: str,
         F.col("md").alias("pred_md"))
     pairs = gt.join(F.broadcast(pred), "img_id")  # missing preds warn via anti-join
     matches = match_md2md(pairs, method=method)
-    scored = score_samples(matches, with_teds=False)
+    scored = score_samples(matches)
     report = [r.asDict() for r in edit_dist_report(scored).collect()]
     return {"edit_dist": {r["element_class"]: r for r in report},
             "n_pages": pairs.count()}

@@ -8,7 +8,8 @@ commit index):
 * each stage writes its output bucketed by ``xxhash64(url) % n_buckets``
   to ``<root>/<stage>/bucket=NNNNN``, one Spark job per bucket (its
   counts are observed on the write), and appends one lineage row per
-  bucket — the commit index that ``read_stage`` reads;
+  bucket — the commit index that ``read_stage`` reads, carrying the
+  bucket's schema so reading starts no schema-inference job;
 * a killed job resumes by anti-joining its input's bucket ids against
   committed lineage rows — only missing buckets recompute (O7);
 * commit atomicity comes from write-then-rename of the bucket directory
@@ -27,6 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MAX_FAILURE_URLS = 20  # failing keys kept per lineage row
 
@@ -83,10 +85,17 @@ class StageCheckpoint:
         return self.spark.read.parquet(self.stage_output_path(stage, bucket))
 
     def read_stage(self, stage: str) -> DataFrame:
-        # one path per committed bucket: no ``bucket`` partition column
-        return self.spark.read.parquet(*[
+        # one path per committed bucket: no ``bucket`` partition column.
+        # The schema recorded at commit spares parquet's schema-inference
+        # job (a log written before schemas were recorded still infers).
+        rows = [r for r in map(json.loads, self._lineage_lines()) if r["stage"] == stage]
+        reader = self.spark.read
+        schemas = {r.get("schema") for r in rows}
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*[
             self.stage_output_path(stage, b)
-            for b in sorted(self.committed_buckets(stage))])
+            for b in sorted({r["partition_id"] for r in rows})])
 
     # -- stage run ----------------------------------------------------------
 
@@ -156,6 +165,7 @@ class StageCheckpoint:
                 "elapsed_sec": round(elapsed, 3),
                 "docs_per_sec": round(n / elapsed, 2) if elapsed > 0 else 0.0,
                 "committed_at": time.time(),
+                "schema": out.schema.json(),
             }])
         return self.read_stage(stage)
 

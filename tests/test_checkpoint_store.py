@@ -115,3 +115,21 @@ def test_checkpointed_pipeline_equals_inline(spark, pages_df, tmp_path):
     assert ck.columns == inline.columns
     key = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
     assert key(ck) == key(inline)
+
+
+def test_resume_with_nothing_to_recompute_runs_no_job(spark, pages_df, tmp_path):
+    """Each stage is read back with the schema its lineage rows recorded,
+    so a resume over a fully committed root starts no Spark job before
+    the caller's first action, and returns the first run's rows."""
+    first = run_pipeline(spark, pages_df, str(tmp_path), n_buckets=2)
+    want = sorted(map(tuple, first.collect()), key=repr)
+    sc = spark.sparkContext
+    group = "no-op-resume-%d" % os.getpid()
+    sc.setJobGroup(group, "resume job count")
+    try:
+        again = run_pipeline(spark, pages_df, str(tmp_path), n_buckets=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again.schema == first.schema
+    assert sorted(map(tuple, again.collect()), key=repr) == want

@@ -36,7 +36,7 @@ def demo_result(spark):
     gt, pattrs = load_omnidoc_json(spark, DEMO_JSON)
     preds = resolve_predictions(pattrs, scan_md_folder(spark, DEMO_MDS))
     assert preds.count() == 18  # every page resolves a prediction
-    return evaluate(gt, preds, pattrs, method="quick_match", with_teds=True)
+    return evaluate(gt, preds, pattrs, method="quick_match")
 
 
 def test_all_streams_present(demo_result):

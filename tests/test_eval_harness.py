@@ -1,6 +1,8 @@
 """End-to-end evaluation harness: fixed point, perturbation response,
 element grouping, reading order (Spark path)."""
 
+import re
+
 import pytest
 
 from deepseek_ocr_omnidocbench_spark.operators.eval_harness import (
@@ -119,8 +121,7 @@ def test_cdm_export_shape(spark, tmp_path):
     from deepseek_ocr_omnidocbench_spark.plans.evaluate import fixture_frames
 
     gt, _pages, preds = fixture_frames(spark, 8, seed=4, perturb=1.0)
-    scored = score_samples(arbitrate_tables(match_elements(gt, preds)),
-                           with_teds=False)
+    scored = score_samples(arbitrate_tables(match_elements(gt, preds)))
     path = str(tmp_path / "formulas.json")
     write_cdm_export(scored, path)
     rows = json.load(open(path))
@@ -147,38 +148,84 @@ def test_quick_beats_simple_on_truncated_blocks(spark):
 
 
 def test_score_samples_table_split_edges(spark):
-    """The round-5 TEDS split (tables -> Python stage, everything else
-    a JVM null branch) must handle zero-table frames, all-table frames
-    and NULL element_class without dropping or duplicating rows."""
+    """TEDS comes from the per-row scorer of the evaluation pass
+    (``score_record``): table rows get a score, every other row (NULL
+    element_class too) gets NULL, and ``score_samples`` keeps every row
+    of zero-table and all-table frames."""
     import pyspark.sql.functions as F
 
+    from deepseek_ocr_omnidocbench_spark.operators.eval_harness import (
+        SCORED_MATCH_SCHEMA,
+        _to_row,
+    )
     from deepseek_ocr_omnidocbench_spark.operators.metrics_report import (
+        score_record,
         score_samples,
     )
 
+    table = "<table><tr><td>a</td></tr></table>"
     rows = [
-        ("table", "<table><tr><td>a</td></tr></table>",
-         "<table><tr><td>a</td></tr></table>"),
+        ("table_html", table, table),
         ("text_block", "hello world", "hello world"),
         (None, "x", "y"),
     ]
     df = spark.createDataFrame(
-        rows, "element_class string, norm_gt string, norm_pred string"
-    ).withColumn("gt", F.col("norm_gt")).withColumn("pred", F.col("norm_pred"))
+        [score_record(_to_row({"img_id": "p", "element_class": c, "gt": g,
+                               "norm_gt": g, "pred": p, "norm_pred": p}))
+         for c, g, p in rows], SCORED_MATCH_SCHEMA)
 
-    out = score_samples(df, with_teds=True, teds_partitions=2).collect()
+    out = score_samples(df, teds_partitions=2).collect()
     assert len(out) == 3
     by_class = {r["element_class"]: r for r in out}
-    assert by_class["table"]["teds"] == 1.0
+    assert by_class["table_html"]["teds"] == 1.0
     assert by_class["text_block"]["teds"] is None
     assert by_class[None]["teds"] is None
 
-    # zero tables: the Python branch is empty, union must still work
+    # zero tables
     no_tab = df.where(F.col("element_class").eqNullSafe("text_block"))
-    out2 = score_samples(no_tab, with_teds=True, teds_partitions=2).collect()
+    out2 = score_samples(no_tab, teds_partitions=2).collect()
     assert len(out2) == 1 and out2[0]["teds"] is None
 
     # all tables
-    all_tab = df.where(F.col("element_class").eqNullSafe("table"))
-    out3 = score_samples(all_tab, with_teds=True).collect()
+    all_tab = df.where(F.col("element_class").eqNullSafe("table_html"))
+    out3 = score_samples(all_tab).collect()
     assert len(out3) == 1 and out3[0]["teds"] == 1.0
+
+
+_PYTHON_NODE = re.compile(r"InPandas|InArrow|EvalPython")
+
+
+def test_evaluate_job_and_python_budget(spark):
+    """evaluate on 8 fixture pages runs at most 10 Spark jobs, and every
+    plan it executes holds exactly one Python evaluation node: the
+    cogroup pass of match_elements (the report reads its cached output)."""
+    import time
+
+    from deepseek_ocr_omnidocbench_spark.plans.evaluate import evaluate, fixture_frames
+
+    sc = spark.sparkContext
+    gt, pages, preds = fixture_frames(spark, 8, seed=41)
+    group = "evaluate-budget"
+    sc.setJobGroup(group, "evaluate job count")
+    try:
+        evaluate(gt, preds, pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 10
+
+    # the SQL status store hears of executions through the listener bus
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.monotonic() + 30
+    while True:
+        execs = store.executionsList()
+        ours = [execs.apply(i) for i in range(execs.size())
+                if any(execs.apply(i).jobs().contains(j) for j in jobs)]
+        if sum(e.jobs().size() for e in ours) >= len(jobs) or time.monotonic() > deadline:
+            break
+        time.sleep(0.2)
+    assert ours
+    for e in ours:
+        nodes = store.planGraph(e.executionId()).allNodes()
+        names = [nodes.apply(k).name() for k in range(nodes.size())]
+        assert [n for n in names if _PYTHON_NODE.search(n)] == ["FlatMapCoGroupsInPandas"]

@@ -5,6 +5,8 @@ touches: the Iceberg store steps, plus ``observe``/``Observation`` for
 the per-bucket counts, so the idempotency-by-overwritePartitions
 contract and the lineage metrics are testable)."""
 
+from types import SimpleNamespace
+
 from deepseek_ocr_omnidocbench_spark.sources.iceberg import IcebergStageCheckpoint
 
 
@@ -60,6 +62,11 @@ class FakeDF:
     @property
     def columns(self):
         return list(dict.fromkeys(k for r in self.rows for k in r))
+
+    @property
+    def schema(self):
+        # run_stage records out.schema.json() in each lineage row
+        return SimpleNamespace(json=lambda: repr(self.columns))
 
     def _derive(self, rows):
         return FakeDF(self.cat, rows, self.observers)

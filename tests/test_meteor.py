@@ -51,7 +51,15 @@ def test_corpus_is_sentence_mean():
 
 
 def test_text_metric_report(spark):
+    """Per-row scores from the evaluation pass's scorer, summed by the
+    report aggregate."""
+    from deepseek_ocr_omnidocbench_spark.operators.eval_harness import (
+        SCORED_MATCH_SCHEMA,
+        _to_row,
+    )
     from deepseek_ocr_omnidocbench_spark.operators.metrics_report import (
+        score_record,
+        score_samples,
         text_metric_report,
     )
 
@@ -61,9 +69,10 @@ def test_text_metric_report(spark):
         ("title", "hello world", "", "hello world", ""),
     ]
     df = spark.createDataFrame(
-        rows, "element_class string, gt string, norm_gt string, "
-              "pred string, norm_pred string")
-    out = {r["group"]: r for r in text_metric_report(df).collect()}
+        [score_record(_to_row({"img_id": "p", "element_class": c, "gt": g,
+                               "norm_gt": ng, "pred": p, "norm_pred": np_}))
+         for c, g, ng, p, np_ in rows], SCORED_MATCH_SCHEMA)
+    out = {r["group"]: r for r in text_metric_report(score_samples(df)).collect()}
     assert set(out) == {"text", "title"}
     want_text = (sentence_meteor("the cat sat", "the cat sat")
                  + sentence_meteor("b a", "a b")) / 2
