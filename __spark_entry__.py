@@ -1364,6 +1364,7 @@ def q_events_rollup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+# value-gated twin: q_minhash_lsh_oracle (err "no_oracle" here is no coverage gap)
 @query(oracle=None)
 def q_minhash_lsh_pairs(spark, sf_dir):
     docs = _docs(spark, sf_dir)
@@ -1371,6 +1372,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     return out.select("doc_a", "doc_b", F.round("jaccard", R).alias("jaccard"))
 
 
+# value-gated twin: q_simhash_oracle (err "no_oracle" here is no coverage gap)
 @query(oracle=None)
 def q_simhash_pairs(spark, sf_dir):
     docs = _docs(spark, sf_dir)
@@ -4798,6 +4800,7 @@ def q_extract_pipeline(spark, sf_dir):
     )
 
 
+# value-gated twin: q_knn_ivf_oracle (err "no_oracle" here is no coverage gap)
 @query(oracle=None)
 def q_knn_ivf(spark, sf_dir):
     """IVF approximate knn: mini-kmeans coarse centroids (deterministic

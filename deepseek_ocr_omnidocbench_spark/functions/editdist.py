@@ -1,14 +1,19 @@
-"""Levenshtein edit distance — numpy DP, no C extension needed.
+"""Levenshtein and indel distances — bit-parallel, on Python ints.
 
 The reference uses the `Levenshtein` C library (e.g.
 OmniDocBench/utils/match.py:20-29, metrics 2/cal_metric.py:153).  This
-container has no such wheel, so we implement the classic
-Wagner-Fischer DP with a vectorized inner row.  Runs inside pandas-UDF
-workers only — never on the driver hot path.
+package does not depend on it: every distance here comes from one
+bit-vector core: Myers' edit distance (J. ACM 1999) in Hyyrö's
+formulation, and its LCS sibling for indel distances.
 
-The insertion recurrence cur[j] = min(cur[j], cur[j-1]+1) is a prefix-min:
-    cur[j] = j + min_{k<=j} (cur[k] - k)
-so it vectorizes with np.minimum.accumulate.
+Many sequences are packed into ONE Python int, one *lane* per sequence
+with a zero guard bit above each lane.  Each symbol of the other
+sequence then costs 18 big-int operations for every lane at once: the
+guard bit absorbs a lane's carry and ``& lanes`` clears it.  Python ints
+have no width limit, so lanes longer than 64 symbols need no multi-word
+code.  Lane k's distance is ``len(a) + popcount(pv & lane_k) -
+popcount(mv & lane_k)``.  Called from the Python workers of the
+matching, TEDS and rule-check stages.
 """
 
 from __future__ import annotations
@@ -18,118 +23,117 @@ from typing import Sequence
 import numpy as np
 
 
+def _to_int(bits: np.ndarray) -> int:
+    """A bool array as an int: element i is bit i."""
+    return int.from_bytes(np.packbits(bits, bitorder="little").tobytes(), "little")
+
+
+class _Lanes(dict):
+    """Sequences packed one per lane of an int, each lane followed by one
+    zero guard bit.  ``flat`` holds the symbol id of every bit (-1 on a
+    guard).  The dict maps a symbol (a character, or a list element
+    compared by ``==``) to the bits where a lane holds it: Myers' Peq,
+    built on first lookup."""
+
+    def __init__(self, ids: dict, flat: np.ndarray, lens: np.ndarray):
+        self.ids, self.flat, self.lens = ids, flat, lens
+        self.starts = np.cumsum(lens + 1) - (lens + 1)
+        self.mask = _to_int(flat >= 0)
+        bottom = np.zeros(len(flat), dtype=bool)
+        bottom[self.starts[lens > 0]] = True
+        self.bottoms = _to_int(bottom)
+
+    @classmethod
+    def of(cls, seqs: list) -> "_Lanes":
+        ids: dict = {}
+        flat: list = []
+        for s in seqs:
+            flat += [ids.setdefault(x, len(ids)) for x in s]
+            flat.append(-1)
+        lens = np.asarray([len(s) for s in seqs], dtype=np.int64)
+        return cls(ids, np.asarray(flat, dtype=np.int32), lens)
+
+    @classmethod
+    def windows(cls, text: str, width: int) -> "_Lanes":
+        """One lane per ``width``-long window of ``text``."""
+        ids: dict = {}
+        codes = np.asarray([ids.setdefault(x, len(ids)) for x in text], dtype=np.int32)
+        win = np.lib.stride_tricks.sliding_window_view(codes, width)
+        flat = np.pad(win, ((0, 0), (0, 1)), constant_values=-1).ravel()
+        return cls(ids, flat, np.full(len(win), width, dtype=np.int64))
+
+    def __missing__(self, x) -> int:
+        i = self.ids.get(x)
+        bits = self[x] = 0 if i is None else _to_int(self.flat == i)
+        return bits
+
+    def popcounts(self, plus: int, minus: int = 0) -> np.ndarray:
+        """Per lane: popcount(plus & lane) - popcount(minus & lane)."""
+        n = len(self.flat) // 8 + 1
+
+        def bits(x):
+            return np.unpackbits(np.frombuffer(x.to_bytes(n, "little"), dtype=np.uint8),
+                                 count=len(self.flat), bitorder="little").view(np.int8)
+
+        # a lane's slice runs up to the next lane's start: its guard bit is 0
+        return np.add.reduceat(bits(plus) - bits(minus), self.starts, dtype=np.int64)
+
+
+def _myers(lanes: _Lanes, a: Sequence) -> np.ndarray:
+    """Levenshtein distance from ``a`` to every lane (Hyyrö's recurrence)."""
+    mask, bottoms = lanes.mask, lanes.bottoms
+    pv, mv = mask, 0
+    for x in a:
+        eq = lanes[x]
+        xv = eq | mv
+        xh = (((eq & pv) + pv) ^ pv) | eq  # a carry may sit in a guard bit
+        ph = mv | ((xh | pv) ^ mask)
+        mh = pv & xh
+        ph = ((ph << 1) & mask) | bottoms  # row 0 of the DP steps by +1
+        mh = (mh << 1) & mask
+        pv = mh | ((xv | ph) ^ mask)
+        mv = ph & xv
+    return len(a) + lanes.popcounts(pv, mv)
+
+
+def _lcs(lanes: _Lanes, a: Sequence) -> np.ndarray:
+    """Longest-common-subsequence length of ``a`` and every lane: the
+    zero bits of ``v`` after the bit-parallel LCS step."""
+    mask = v = lanes.mask
+    for x in a:
+        u = v & lanes[x]
+        v = ((v + u) | (v ^ u)) & mask
+    return lanes.lens - lanes.popcounts(v)
+
+
 def levenshtein(a: Sequence, b: Sequence) -> int:
     """Exact Levenshtein distance between two sequences (str or lists)."""
-    la, lb = len(a), len(b)
-    if la == 0:
-        return lb
-    if lb == 0:
-        return la
-    if la < lb:  # iterate over the shorter outer dim
-        a, b, la, lb = b, a, lb, la
-    if isinstance(b, str):
-        b_arr = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    else:
-        # hash elements so mixed types compare by equality
-        b_arr = np.asarray([hash(x) for x in b], dtype=np.int64)
-        a = [hash(x) for x in a]
-    idx = np.arange(lb + 1, dtype=np.int64)
-    prev = idx.copy()
-    cur = np.empty(lb + 1, dtype=np.int64)
-    for i in range(1, la + 1):
-        ai = ord(a[i - 1]) if isinstance(a, str) else a[i - 1]
-        cur[0] = i
-        np.minimum(prev[:-1] + (b_arr != ai), prev[1:] + 1, out=cur[1:])
-        # prefix-min for insertions
-        cur -= idx
-        np.minimum.accumulate(cur, out=cur)
-        cur += idx
-        prev, cur = cur, prev
-    return int(prev[lb])
+    if len(a) > len(b):  # step over the shorter one, pack the longer
+        a, b = b, a
+    return int(_myers(_Lanes.of([b]), a)[0])
 
 
-def _encode(s: Sequence) -> np.ndarray:
-    if isinstance(s, str):
-        return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    return np.asarray([hash(x) for x in s], dtype=np.int64)
+def lcs_length(a: Sequence, b: Sequence) -> int:
+    """Length of the longest common subsequence of ``a`` and ``b``."""
+    if len(a) > len(b):
+        a, b = b, a
+    return int(_lcs(_Lanes.of([b]), a)[0])
 
 
 def levenshtein_one_to_many(a: Sequence, bs: list) -> np.ndarray:
-    """Distances from ``a`` to every sequence in ``bs``, one DP sweep
-    vectorized across the whole batch (pad to max length, mask tails).
-
-    Same recurrence as :func:`levenshtein`; the batch dimension turns
-    m small DPs into len(a) numpy ops over an (m, Lmax) matrix — the
-    C-extension-free answer to the reference's python-Levenshtein use
-    (OmniDocBench/utils/match.py:20-29)."""
-    m = len(bs)
-    if m == 0:
+    """Distances from ``a`` to every sequence in ``bs``: all of ``bs`` in
+    one packed int, one sweep over ``a``."""
+    if not bs:
         return np.empty(0, dtype=np.int64)
-    a_arr = _encode(a)
-    la = len(a_arr)
-    lens = np.asarray([len(b) for b in bs], dtype=np.int64)
-    lmax = int(lens.max()) if m else 0
-    if la == 0:
-        return lens.copy()
-    if lmax == 0:
-        return np.full(m, la, dtype=np.int64)
-    B = np.zeros((m, lmax), dtype=np.int64)
-    for j, b in enumerate(bs):
-        e = _encode(b)
-        # pad with distinct sentinels so padded cells never match
-        B[j, :len(e)] = e
-        B[j, len(e):] = -1 - np.arange(lmax - len(e))
-    idx = np.arange(lmax + 1, dtype=np.int64)
-    prev = np.broadcast_to(idx, (m, lmax + 1)).copy()
-    cur = np.empty_like(prev)
-    for i in range(1, la + 1):
-        ai = a_arr[i - 1]
-        cur[:, 0] = i
-        np.minimum(prev[:, :-1] + (B != ai), prev[:, 1:] + 1, out=cur[:, 1:])
-        cur -= idx
-        np.minimum.accumulate(cur, axis=1, out=cur)
-        cur += idx
-        prev, cur = cur, prev
-    return prev[np.arange(m), lens]
+    return _myers(_Lanes.of(bs), a)
 
 
 def levenshtein_many_to_many(a_list: list, b_list: list) -> np.ndarray:
-    """Full |a| x |b| distance matrix; the padded/encoded b batch is
-    built ONCE (per-call rebuilding dominated the cost-matrix path)."""
-    n, m = len(a_list), len(b_list)
-    out = np.zeros((n, m), dtype=np.int64)
-    if n == 0 or m == 0:
-        return out
-    lens = np.asarray([len(b) for b in b_list], dtype=np.int64)
-    lmax = int(lens.max())
-    B = np.zeros((m, max(lmax, 1)), dtype=np.int64)
-    for j, b in enumerate(b_list):
-        e = _encode(b)
-        B[j, :len(e)] = e
-        B[j, len(e):] = -1 - np.arange(B.shape[1] - len(e))
-    idx = np.arange(B.shape[1] + 1, dtype=np.int64)
-    sel = np.arange(m)
-    for i, a in enumerate(a_list):
-        a_arr = _encode(a)
-        la = len(a_arr)
-        if la == 0:
-            out[i] = lens
-            continue
-        if lmax == 0:
-            out[i] = la
-            continue
-        prev = np.broadcast_to(idx, (m, B.shape[1] + 1)).copy()
-        cur = np.empty_like(prev)
-        for t in range(1, la + 1):
-            at = a_arr[t - 1]
-            cur[:, 0] = t
-            np.minimum(prev[:, :-1] + (B != at), prev[:, 1:] + 1, out=cur[:, 1:])
-            cur -= idx
-            np.minimum.accumulate(cur, axis=1, out=cur)
-            cur += idx
-            prev, cur = cur, prev
-        out[i] = prev[sel, lens]
-    return out
+    """Full |a| x |b| distance matrix; ``b_list`` is packed ONCE."""
+    if not a_list or not b_list:
+        return np.zeros((len(a_list), len(b_list)), dtype=np.int64)
+    lanes = _Lanes.of(b_list)
+    return np.stack([_myers(lanes, a) for a in a_list])
 
 
 def windowed_distances(text: str, pattern: str) -> np.ndarray:
@@ -138,26 +142,11 @@ def windowed_distances(text: str, pattern: str) -> np.ndarray:
     Exact fixed-length-window semantics of the reference's substring
     fuzzy search (match_quick.py:721-758) — NOT the cheaper
     any-substring (Sellers) variant, which would change threshold
-    behavior.  Batched across windows in one DP."""
+    behavior.  One lane per window."""
     lp = len(pattern)
-    n_win = len(text) - lp + 1
-    if n_win <= 0 or lp == 0:
+    if len(text) < lp or lp == 0:
         return np.empty(0, dtype=np.int64)
-    t = _encode(text)
-    windows = np.lib.stride_tricks.sliding_window_view(t, lp)  # (n_win, lp)
-    p = _encode(pattern)
-    idx = np.arange(lp + 1, dtype=np.int64)
-    prev = np.broadcast_to(idx, (n_win, lp + 1)).copy()
-    cur = np.empty_like(prev)
-    for i in range(1, lp + 1):
-        pi = p[i - 1]
-        cur[:, 0] = i
-        np.minimum(prev[:, :-1] + (windows != pi), prev[:, 1:] + 1, out=cur[:, 1:])
-        cur -= idx
-        np.minimum.accumulate(cur, axis=1, out=cur)
-        cur += idx
-        prev, cur = cur, prev
-    return prev[:, lp]
+    return _myers(_Lanes.windows(text, lp), pattern)
 
 
 def windowed_indel_distances(text: str, pattern: str) -> np.ndarray:
@@ -165,29 +154,12 @@ def windowed_indel_distances(text: str, pattern: str) -> np.ndarray:
     of ``pattern`` vs every fixed-length window of ``text``.
 
     rapidfuzz's fuzz.partial_ratio scores each candidate window with the
-    indel ratio (|a|+|b|-d)/(|a|+|b|); this supplies d for all windows
-    in one batched DP (same prefix-min trick as windowed_distances,
-    still valid because insertions cost 1)."""
+    indel ratio (|a|+|b|-d)/(|a|+|b|); this supplies d = |a|+|b|-2*LCS
+    for all windows, one lane per window."""
     lp = len(pattern)
-    n_win = len(text) - lp + 1
-    if n_win <= 0 or lp == 0:
+    if len(text) < lp or lp == 0:
         return np.empty(0, dtype=np.int64)
-    t = _encode(text)
-    windows = np.lib.stride_tricks.sliding_window_view(t, lp)
-    p = _encode(pattern)
-    idx = np.arange(lp + 1, dtype=np.int64)
-    prev = np.broadcast_to(idx, (n_win, lp + 1)).copy()
-    cur = np.empty_like(prev)
-    for i in range(1, lp + 1):
-        pi = p[i - 1]
-        cur[:, 0] = i
-        np.minimum(prev[:, :-1] + 2 * (windows != pi), prev[:, 1:] + 1,
-                   out=cur[:, 1:])
-        cur -= idx
-        np.minimum.accumulate(cur, axis=1, out=cur)
-        cur += idx
-        prev, cur = cur, prev
-    return prev[:, lp]
+    return 2 * lp - 2 * _lcs(_Lanes.windows(text, lp), pattern)
 
 
 def norm_edit(a: Sequence, b: Sequence) -> float:
@@ -203,16 +175,9 @@ def norm_edit(a: Sequence, b: Sequence) -> float:
 
 def edit_matrix(gt_lines: list, pred_lines: list) -> np.ndarray:
     """len(gt) x len(pred) normalized distance matrix (match.py:20-29
-    parity); each row is one batched one-to-many sweep."""
-    n, m = len(gt_lines), len(pred_lines)
-    mat = np.zeros((n, m), dtype=np.float64)
-    if n == 0 or m == 0:
-        return mat
+    parity); the pred lines are packed once for the whole matrix.  Two
+    empty lines give 0 / 1 = 0.0."""
+    gt_lens = np.asarray([len(g) for g in gt_lines], dtype=np.int64)
     pred_lens = np.asarray([len(p) for p in pred_lines], dtype=np.int64)
-    for i, g in enumerate(gt_lines):
-        dists = levenshtein_one_to_many(g, pred_lines)
-        denom = np.maximum(np.maximum(pred_lens, len(g)), 1)
-        row = dists / denom
-        row[(pred_lens == 0) & (len(g) == 0)] = 0.0
-        mat[i] = row
-    return mat
+    denom = np.maximum(np.maximum(gt_lens[:, None], pred_lens[None, :]), 1)
+    return levenshtein_many_to_many(gt_lines, pred_lines) / denom

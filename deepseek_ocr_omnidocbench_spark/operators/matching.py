@@ -470,11 +470,11 @@ def _truncation_merge(cost, norm_gt, norm_pred, deadline):
     if not chosen:
         return cost, list(range(len(norm_pred)))
     idx_list = _merge_into_main(range(len(norm_pred)), chosen)
-    merged_lines = [
-        " ".join(norm_pred[k[0]:k[-1] + 1]) if isinstance(k, list) else norm_pred[k]
-        for k in idx_list
-    ]
-    return edit_matrix(norm_gt, merged_lines), idx_list
+    # an int entry is a column of `cost` already: only merged runs are new
+    runs = [" ".join(norm_pred[k[0]:k[-1] + 1]) for k in idx_list if isinstance(k, list)]
+    run_cols = iter(edit_matrix(norm_gt, runs).T)
+    return np.column_stack([next(run_cols) if isinstance(k, list) else cost[:, k]
+                            for k in idx_list]), idx_list
 
 
 def _assign_with_merges(cost, norm_gt, norm_pred, deadline):

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.editdist import (
+    lcs_length,
     levenshtein,
     windowed_distances,
     windowed_indel_distances,
@@ -88,24 +89,9 @@ def normalize_check_text(s: str | None) -> str | None:
 
 def indel_ratio(a: str, b: str) -> float:
     """2*LCS/(|a|+|b|) — insert/delete-only similarity (fuzz.ratio)."""
-    la, lb = len(a), len(b)
-    if la + lb == 0:
+    if not (a or b):
         return 1.0
-    if la == 0 or lb == 0:
-        return 0.0
-    # LCS two-row DP, vectorized over b: cur[j] = max(prev[j],
-    # prev[j-1]+eq, cur[j-1]); the cur[j-1] term carries no increment,
-    # so the row reduces to a prefix-max over max(prev[1:], diag)
-    bv = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    prev = np.zeros(lb + 1, dtype=np.int64)
-    cur = np.zeros(lb + 1, dtype=np.int64)
-    for ca in a:
-        np.maximum(prev[1:], prev[:-1] + (bv == ord(ca)), out=cur[1:])
-        np.maximum.accumulate(cur[1:], out=cur[1:])
-        prev, cur = cur, prev
-        cur[0] = 0
-    lcs = int(prev[-1])
-    return 2.0 * lcs / (la + lb)
+    return 2.0 * lcs_length(a, b) / (len(a) + len(b))
 
 
 def best_partial_ratio(query: str, content: str) -> float:

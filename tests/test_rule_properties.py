@@ -1,14 +1,13 @@
 """Property tests for the round-2 kernels (SURVEY §5 strategy: fuzz the
 from-scratch kernels against brute-force oracles)."""
 
-from functools import lru_cache
-
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from deepseek_ocr_omnidocbench_spark.functions.bleu import corpus_bleu, tokenize_13a
 from deepseek_ocr_omnidocbench_spark.functions.editdist import (
+    lcs_length,
     windowed_indel_distances,
 )
 from deepseek_ocr_omnidocbench_spark.functions.meteor import sentence_meteor
@@ -20,16 +19,19 @@ from deepseek_ocr_omnidocbench_spark.operators.rule_checks import (
 short_text = st.text(alphabet="abcxyz ", min_size=0, max_size=24)
 
 
-def _lcs(a: str, b: str) -> int:
-    @lru_cache(maxsize=None)
-    def rec(i, j):
-        if i == len(a) or j == len(b):
-            return 0
-        if a[i] == b[j]:
-            return 1 + rec(i + 1, j + 1)
-        return max(rec(i + 1, j), rec(i, j + 1))
+def _lcs(a, b) -> int:
+    """Longest common subsequence by the naive row-by-row table."""
+    prev = [0] * (len(b) + 1)
+    for x in a:
+        cur = [0]
+        for j, y in enumerate(b):
+            cur.append(prev[j] + 1 if x == y else max(prev[j + 1], cur[j]))
+        prev = cur
+    return prev[-1]
 
-    return rec(0, 0)
+
+# BMP, CJK and astral-plane symbols; lanes both under and over 64
+wide_text = st.text(alphabet="ab c日\U0001D11E\U0001F600", max_size=150)
 
 
 @settings(max_examples=200, deadline=None)
@@ -49,9 +51,8 @@ def test_indel_ratio_symmetric_and_bounded(a, b):
     assert indel_ratio(a, a) == 1.0
 
 
-@settings(max_examples=100, deadline=None)
-@given(st.text(alphabet="abcx", min_size=1, max_size=20),
-       st.text(alphabet="abcx", min_size=1, max_size=6))
+@settings(max_examples=100, deadline=None, derandomize=True)
+@given(wide_text, st.text(alphabet="ab c日\U0001D11E\U0001F600", min_size=1, max_size=70))
 def test_windowed_indel_matches_per_window(text, pattern):
     got = windowed_indel_distances(text, pattern)
     lp = len(pattern)
@@ -97,3 +98,19 @@ def test_windowed_indel_empty_cases():
     assert windowed_indel_distances("abc", "").size == 0
     assert np.array_equal(windowed_indel_distances("abab", "ab"),
                           np.array([0, 2, 0]))
+
+
+@settings(max_examples=100, deadline=None, derandomize=True)
+@given(wide_text, wide_text)
+def test_lcs_length_matches_dp(a, b):
+    assert lcs_length(a, b) == lcs_length(b, a) == _lcs(a, b)
+
+
+@settings(max_examples=5, deadline=None, derandomize=True)
+@given(st.text(alphabet="abc日\U0001F600", min_size=1001, max_size=1200),
+       st.text(alphabet="abc日\U0001F600", min_size=1, max_size=30))
+def test_lcs_length_over_1000_codepoints(long, short):
+    assert lcs_length(long, short) == _lcs(short, long)
+    assert lcs_length([ord(c) for c in long], [float(ord(c)) for c in short]) == \
+        _lcs(short, long)
+
