@@ -103,7 +103,7 @@ def entry(spark: SparkSession) -> DataFrame:
         wrap_udf(F.col("text")).alias("html"),
         "text", "source",
     )
-    extracted = extract_pages(pages, salt_buckets=8)
+    extracted = extract_pages(pages)
     scored = (
         extracted.join(pages.select("url", "text", "source"), "url")
         .withColumn("edit_num", F.levenshtein(F.coalesce("md", F.lit("")), "text"))
@@ -4252,13 +4252,13 @@ def q_extraction_roundtrip(spark, sf_dir):
     HTML, extract, count byte-exact matches per source.  Oracle-backed:
     the ground truth is EXACTLY "every document extracts byte-identical
     and none is lost", so the oracle states per-source doc counts with
-    n_byte_identical = n_docs — any extraction or routing regression
+    n_byte_identical = n_docs — any extraction regression
     (dropped row, mutated byte) reds the value-hash gate."""
     docs = _docs(spark, sf_dir)
     wrap_udf = F.pandas_udf(_wrap_batch, "binary")
     pages = docs.select(F.col("doc_id").cast("string").alias("url"),
                         wrap_udf(F.col("text")).alias("html"), "text", "source")
-    out = extract_pages(pages, salt_buckets=8)
+    out = extract_pages(pages)
     joined = out.join(pages.select("url", "text", "source"), "url")
     return (
         joined.groupBy("source")
@@ -4787,7 +4787,7 @@ def q_extract_pipeline(spark, sf_dir):
     rows = generate_pages(100, seed=17)
     pdf = pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA).to_pandas()
     pages = spark.createDataFrame(pdf)
-    docs = run_pipeline_inline(pages, salt_buckets=4)
+    docs = run_pipeline_inline(pages)
     joined = docs.join(pages.select("url", "text", "category"), "url")
     return (
         joined.groupBy("category")

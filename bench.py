@@ -44,7 +44,7 @@ def sf_of(sf_dir: str) -> float:
         return 0.01
 
 
-def run_extraction(spark, sf: float, salt_buckets: int) -> tuple[float, int]:
+def run_extraction(spark, sf: float) -> tuple[float, int]:
     """Returns (seconds, n_docs).  Forces the UDF via sum(n_chars)."""
     from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
     from deepseek_ocr_omnidocbench_spark.sources.pages import pages_path_for_sf
@@ -52,7 +52,7 @@ def run_extraction(spark, sf: float, salt_buckets: int) -> tuple[float, int]:
     path = pages_path_for_sf(sf)
     pages = spark.read.parquet(path)
     t0 = time.time()
-    out = extract_pages(pages, salt_buckets=salt_buckets)
+    out = extract_pages(pages)
     row = out.agg(F.count(F.lit(1)).alias("n"),
                   F.sum("n_chars").alias("chars")).collect()[0]
     return time.time() - t0, int(row["n"])
@@ -109,9 +109,9 @@ def bench_queries(spark, sf_dir: str,
     # then min-of-2 full runs — the headline is THE driver-recorded
     # throughput, and a single shot in a noisy host window read up to
     # 4x its steady state across round-5 samples (2.3 s vs 8.9 s)
-    run_extraction(spark, min(sf, 0.001), salt_buckets=4)
-    t1, n = run_extraction(spark, sf, salt_buckets=CPUS)
-    t2, _ = run_extraction(spark, sf, salt_buckets=CPUS)
+    run_extraction(spark, min(sf, 0.001))
+    t1, n = run_extraction(spark, sf)
+    t2, _ = run_extraction(spark, sf)
     times["extraction_e2e"] = round(min(t1, t2), 3)
     times["_extraction_docs"] = n
 
@@ -219,16 +219,22 @@ def main() -> None:
         # on the same code)
         scaling_sf = sf * float(os.environ.get("SCALING_SF_MULT", "16"))
         spark = get_spark(app_name="bench-scaling", cores=n, shuffle_partitions=n)
-        run_extraction(spark, sf, salt_buckets=n)  # warm (JIT + page gen)
+        run_extraction(spark, sf)  # warm (JIT + page gen)
         # min of 3: the sandbox shares a noisy host, single runs vary 2x
         best = None
         for _ in range(3):
-            secs, docs = run_extraction(spark, scaling_sf, salt_buckets=n)
+            secs, docs = run_extraction(spark, scaling_sf)
             if best is None or secs < best[0]:
                 best = (secs, docs)
         secs, docs = best
+        # the scan split is the extraction's only parallelism: fewer scan
+        # partitions than cores leaves cores idle
+        from deepseek_ocr_omnidocbench_spark.sources.pages import pages_path_for_sf
+        scan_parts = spark.read.parquet(
+            pages_path_for_sf(scaling_sf)).rdd.getNumPartitions()
         print(json.dumps({"cores": n, "sec": secs, "docs": docs,
-                          "docs_per_sec": docs / secs}))
+                          "docs_per_sec": docs / secs,
+                          "scan_partitions": scan_parts}))
         return
 
     if "--scaling" in sys.argv:

@@ -17,8 +17,19 @@ published Boilerpipe/jusText line of work):
 
 The whole thing is a pure function str -> str, exposed to Spark as an
 Arrow-batched pandas UDF over the pages table's ``html: binary`` column
-(input_hint shape).  Determinism is a hard invariant: the byte-identical
-"extracted text per url" check depends on it.
+(input_hint shape), run in the scan's own partitions (``extract_pages``).
+Determinism is a hard invariant: the byte-identical "extracted text per
+url" check depends on it.
+
+Giant-blob routing (giants round-robin, small rows hash-salted) was
+measured and dropped: it scanned the html twice, shuffled it, and ran
+perfbench ``extract``'s one-split input as 12 Python tasks to protect 4
+giant pages of ~0.12 CPU-s each.  Without it ``rows_per_cpu_s`` rose
+x1.33 (median of 10 alternating pairs, 10/10 better).  The stage tail
+is now one scan split (32 MB, ``session.py``): a small table whose
+giants all share one parquet row group runs them in one task (sf0.1
+sorted by category, 4 cores: 301-343 docs/s against the router's
+473-529; as written 582-597 against 438-447).
 """
 
 from __future__ import annotations
@@ -682,50 +693,25 @@ def extract_any_udf():
     return F.pandas_udf(_batch, PAGE_MD_TYPE)
 
 
+# a "giant" page: perfbench's ``giant_cpu_share`` counts the kernel CPU
+# spent on blobs at least this long (2% of the synthetic pages, ~1.5 MB)
 BIG_BLOB_BYTES = 256 * 1024
 
 
-def routed_kernel(pages: DataFrame, salt_buckets: int, out) -> DataFrame:
-    """pages(url, html, ...) -> (url, *out(pm)): the extraction kernel,
-    ``pm`` = array<struct<page, md>>, skew-routed (the north rule's
-    giant-blob case).
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> (url, md, n_chars), one
+    row per url, computed in the input's own partitions.
 
-    Blobs over ``BIG_BLOB_BYTES`` cost ~1000x a small row; hashed into
-    salt buckets, several giants stack in one task (measured: 0.3
-    scaling efficiency 8->32 cores).  So giants go round-robin: the
-    critical path is one giant.  Small rows are salted into
-    ``salt_buckets`` hash partitions: a small file scans as ONE
-    partition, and unsalted the small side runs on one core (perfbench
-    ``extract``, one 3.8 MB file, 4 cores: peak RSS +12%).  The salt
-    is a shuffle, so where the scan is already split (sf0.1, 38 MB in 4
-    scan partitions) it costs ~12% docs/s.  ``salt_buckets`` = 0 keeps
-    the scan partitioning for everything (test scale).
-
-    ``out`` maps the kernel Column to output columns inside each branch,
-    so a generator applies to the kernel expression itself.  Over a
-    ``pm`` column above the union, Catalyst infers ``size(pm) > 0``,
-    pushes it below the kernel's projection and runs the kernel twice.
-    """
-    sel = lambda df: df.select(  # noqa: E731
-        "url", *out(extract_any_udf()(F.col("html"))))
-    if not salt_buckets:
-        return sel(pages)
-    is_big = F.length("html") >= BIG_BLOB_BYTES
-    small = pages.where(~is_big | F.col("html").isNull()).repartition(
-        salt_buckets, F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-    # round-robin: repartition(n) with no key balances rows exactly
-    big = pages.where(is_big).repartition(salt_buckets * 2)
-    return sel(small).unionByName(sel(big))
-
-
-def extract_pages(pages: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (url, md, n_chars), routed
-    as in ``routed_kernel``."""
+    No repartition: the scan's split sizing already spreads the rows
+    (``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    bytes / cores))``, so sf0.1's 37 MB scans as 4 partitions), and a
+    small input that scans as one partition is cheaper as one Python
+    task, each of which costs ~0.27 CPU-s before its first row."""
     # one md per url: PDF pages joined by blank lines (extract_pdf_markdown),
     # NULL when the blob is NULL or its kernel failed
     md = F.when(~F.exists("pm", lambda p: p["md"].isNull()),
                 F.array_join(F.transform("pm", lambda p: p["md"]), "\n\n"))
-    return routed_kernel(pages, salt_buckets, lambda pm: [pm.alias("pm")]) \
+    return pages.select("url", extract_any_udf()(F.col("html")).alias("pm")) \
         .select("url", md.alias("md")).withColumn("n_chars", F.length("md"))
 
 

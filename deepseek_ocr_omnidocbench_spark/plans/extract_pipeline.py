@@ -8,7 +8,10 @@ assembly -> Dolma sink) as three Spark stages:
 
   stage ``filtered``   F3/F4 predicates (prunable Column filters)
   stage ``page_md``    content sniff (%PDF vs HTML) -> pandas UDF ->
-                       explode per page; big-blob round-robin routing
+                       explode per page, in the input's own partitions
+                       (giant-blob routing was measured and dropped:
+                       perfbench ``extract`` x1.33 rows per CPU-s
+                       without it; see the html_extract docstring)
   stage ``documents``  window-offset span assembly (A14) + F8 fallback
                        cut + quality columns; sha1 doc ids
 
@@ -23,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
 from ..operators.filters import is_form_pdf, language_keep, page_quality_keep
-from ..operators.html_extract import routed_kernel
+from ..operators.html_extract import extract_any_udf
 from ..operators.textstats import lang_id_col, quality_cols
 from ..sources.lineage import StageCheckpoint
 
@@ -33,17 +36,22 @@ def stage_filter(pages: DataFrame) -> DataFrame:
     the scan by Catalyst (PushedFilters for ``lang`` on parquet).
 
     NULL html must flow through: ``~is_form_pdf(NULL)`` is SQL NULL and
-    where() would silently drop the row before stage_page_md's isNull()
-    routing and the lineage failure counters ever see it — coalesce to
-    keep NULL-blob rows."""
+    where() would silently drop the row before stage_page_md and the
+    lineage failure counters ever see it — coalesce to keep NULL-blob
+    rows."""
     return pages.where(language_keep(F.col("lang"), keep=("en", "zh", "de", None))
                        & ~F.coalesce(is_form_pdf(F.col("html")), F.lit(False)))
 
 
 def stage_page_md(pages: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """-> (url, page, md): the heavy UDF stage, skew-routed as in
-    html_extract.routed_kernel, one row per page."""
-    return routed_kernel(pages, salt_buckets, lambda pm: [F.inline(pm)])
+    """-> (url, page, md): the heavy UDF stage, one row per page, in the
+    input's partitions (as html_extract.extract_pages).
+
+    ``salt_buckets`` is accepted and ignored: no stage salts any more."""
+    # inline the kernel expression itself: over a ``pm`` column projected
+    # first, Catalyst infers ``size(pm) > 0``, pushes it below the
+    # kernel's projection and runs the kernel twice
+    return pages.select("url", F.inline(extract_any_udf()(F.col("html"))))
 
 
 def stage_documents(page_md: DataFrame) -> DataFrame:
@@ -61,18 +69,16 @@ def stage_documents(page_md: DataFrame) -> DataFrame:
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, checkpoint_root: str,
                  n_buckets: int = 16, salt_buckets: int = 0) -> DataFrame:
-    """Checkpointed end-to-end run; restart-safe per stage bucket."""
+    """Checkpointed end-to-end run; restart-safe per stage bucket.
+    ``salt_buckets`` is accepted and ignored (see ``stage_page_md``)."""
     ck = StageCheckpoint(spark, checkpoint_root, n_buckets=n_buckets)
     filtered = ck.run_stage("filtered", pages, stage_filter)
-    page_md = ck.run_stage(
-        "page_md", filtered,
-        lambda df: stage_page_md(df, salt_buckets=salt_buckets),
-        failure_col="md")
+    page_md = ck.run_stage("page_md", filtered, stage_page_md, failure_col="md")
     docs = ck.run_stage("documents", page_md, stage_documents)
     return docs
 
 
 def run_pipeline_inline(pages: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """Same dataflow without checkpoints (benchmarks, small runs)."""
-    return stage_documents(stage_page_md(stage_filter(pages),
-                                         salt_buckets=salt_buckets))
+    """Same dataflow without checkpoints (benchmarks, small runs).
+    ``salt_buckets`` is accepted and ignored (see ``stage_page_md``)."""
+    return stage_documents(stage_page_md(stage_filter(pages)))

@@ -10,8 +10,8 @@ This module runs the SAME extraction dataflow incrementally:
 
 ``foreachBatch`` is the right primitive here: the extraction pipeline is
 stateless per url, so each micro-batch runs the identical batch plan
-(skew routing included) and the streaming engine supplies incremental
-input + recovery.  Stateful dedup across batches would layer
+(in the micro-batch's own partitions) and the streaming engine supplies
+incremental input + recovery.  Stateful dedup across batches would layer
 ``dropDuplicates`` with a watermark on ``warc_ts``; shown in
 ``stream_dedup`` below.
 
@@ -41,8 +41,7 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
 
 
 def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
-                   checkpoint_dir: str, salt_buckets: int = 0,
-                   available_now: bool = True):
+                   checkpoint_dir: str, available_now: bool = True):
     """Incremental extraction: each micro-batch runs the batch pipeline
     and appends to the sink.  Returns the StreamingQuery."""
     stream = read_pages_stream(spark, input_dir)
@@ -52,7 +51,7 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
         # the write must be idempotent to keep the exactly-once claim:
         # partition the sink by batch_id and dynamically overwrite only
         # the replayed batch's partition instead of appending twice.
-        docs = run_pipeline_inline(batch_df, salt_buckets=salt_buckets)
+        docs = run_pipeline_inline(batch_df)
         (docs.withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

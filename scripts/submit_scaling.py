@@ -36,7 +36,7 @@ pages = spark.read.parquet(path)
 
 def one_run():
     t0 = time.time()
-    out = extract_pages(pages, salt_buckets=n)
+    out = extract_pages(pages)
     row = out.agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars")).collect()[0]
     return time.time() - t0, int(row["n"])
 

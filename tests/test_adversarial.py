@@ -29,7 +29,7 @@ def test_extract_pages_survives_all(spark, nasty_pages):
     from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
 
     out = {r["url"]: r["md"] for r in
-           extract_pages(nasty_pages, salt_buckets=2).collect()}
+           extract_pages(nasty_pages).collect()}
     assert len(out) == nasty_pages.count()
     assert out["null"] is None
     assert out["deep"] is not None and "core" in out["deep"]
@@ -56,7 +56,7 @@ def test_extract_pages_one_bad_row_is_null(spark):
     pages = spark.createDataFrame(
         pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA).to_pandas())
     out = {r["url"]: r["md"] for r in
-           extract_pages(pages, salt_buckets=2).collect()}
+           extract_pages(pages).collect()}
     assert len(out) == len(rows)
     assert out.pop(bad["url"]) is None
     assert out == {r["url"]: r["text"] for r in rows if r is not bad}
@@ -71,7 +71,7 @@ def test_pipeline_survives_all(spark, nasty_pages):
         "url", F.lit(None).cast("timestamp").alias("warc_ts"), "html",
         F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"),
         F.lit("x").alias("category"))
-    docs = run_pipeline_inline(df, salt_buckets=2)
+    docs = run_pipeline_inline(df)
     got = docs.collect()  # must not raise
     assert all(r["doc_id"] is not None for r in got)
 

@@ -43,7 +43,7 @@ def test_page_md_explodes_pdf_pages(spark, pages_df):
 def test_inline_pipeline_output_matches_text(spark, pages_df):
     """For single-page (html) urls the assembled markdown must equal the
     ground-truth text byte-for-byte; for pdfs it is the page join."""
-    docs = run_pipeline_inline(pages_df, salt_buckets=4)
+    docs = run_pipeline_inline(pages_df)
     joined = docs.join(pages_df.select("url", "text", "category"), "url")
     html_bad = joined.where(
         (F.col("category") != "pdfish")

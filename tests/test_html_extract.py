@@ -1,6 +1,8 @@
 """HTML -> markdown extractor: boilerplate pruning, serialization,
 reading order, and the byte-identity round-trip invariant."""
 
+import pytest
+
 from deepseek_ocr_omnidocbench_spark.operators.html_extract import (
     extract_markdown,
     parse_html,
@@ -133,25 +135,71 @@ def test_byte_identity_roundtrip_200_pages():
         assert got == row["text"], row["url"]
 
 
-def test_spark_extract_pages_byte_identity(spark):
-    """Distributed path: binary column in, markdown out, equal to text."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
+@pytest.fixture(scope="module")
+def mixed_scans(spark, tmp_path_factory):
+    """-> (rows, {n: pages scanned from n parquet files}).
 
-    from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
+    One full category cycle of synthetic pages (small HTML of every
+    kind, empty pages, multi-page PDFs, 2 giant pages from
+    ``_content_giant``) plus a NULL blob."""
+    import pyarrow as pa
+
     from deepseek_ocr_omnidocbench_spark.sources.pages import PAGES_ARROW_SCHEMA
 
-    # pdfish included: extract_pages sniffs %PDF and routes accordingly
-    rows = list(generate_pages(60, seed=3))
-    pdf = pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA).to_pandas()
-    df = spark.createDataFrame(pdf)
-    out = extract_pages(df, salt_buckets=4)
-    joined = out.join(df.select("url", "text"), "url")
-    n_bad = joined.where(
-        F.coalesce(F.col("md"), F.lit("")) != F.coalesce(F.col("text"), F.lit(""))
-    ).count()
-    assert n_bad == 0
-    assert out.count() == len(rows)
+    rows = generate_pages(100, seed=3)
+    rows.append(dict(rows[0], url="https://example.org/null/000100.html",
+                     html=None, text=None))
+    df = spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA).to_pandas())
+    root = tmp_path_factory.mktemp("mixed_pages")
+    scans = {}
+    for n in (1, 4):
+        df.repartition(n).write.parquet(str(root / str(n)))
+        scans[n] = spark.read.parquet(str(root / str(n)))
+        # split packing may fold small files together (4 files scan as 3
+        # partitions on 4 cores), but the 4-file case must span partitions
+        parts = scans[n].rdd.getNumPartitions()
+        assert parts == 1 if n == 1 else parts > 1, (n, parts)
+    return rows, scans
+
+
+def test_spark_extract_pages_byte_identity(mixed_scans):
+    """Distributed path: binary column in, markdown out, equal to text,
+    one row per url, whether the giants share a scan partition with
+    everything else or not."""
+    from deepseek_ocr_omnidocbench_spark.operators.html_extract import (
+        BIG_BLOB_BYTES, extract_pages,
+    )
+    from deepseek_ocr_omnidocbench_spark.operators.pdf_extract import extract_pdf_pages
+
+    rows, scans = mixed_scans
+    blobs = [r["html"] for r in rows]
+    assert sum(b is not None and len(b) >= BIG_BLOB_BYTES for b in blobs) >= 2
+    assert any(b is not None and b.startswith(b"%PDF")
+               and len(extract_pdf_pages(b)) > 1 for b in blobs)
+    assert None in blobs
+    want = {r["url"]: r["text"] for r in rows}
+    for n, pages in scans.items():
+        got = extract_pages(pages).select("url", "md").collect()
+        assert len(got) == len(rows), n
+        assert {r["url"]: r["md"] for r in got} == want, n
+
+
+def test_kernel_runs_in_the_scan_partitions(mixed_scans):
+    """extract_pages and stage_page_md run the kernel once (one
+    ArrowEvalPython) in the scan's partitions: no Exchange between the
+    scan and the kernel, as many output partitions as scan partitions."""
+    from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
+    from deepseek_ocr_omnidocbench_spark.plans.extract_pipeline import stage_page_md
+
+    _, scans = mixed_scans
+    for n, pages in scans.items():
+        for op in (extract_pages, stage_page_md):
+            out = op(pages)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert out.rdd.getNumPartitions() == pages.rdd.getNumPartitions(), n
 
 
 def test_page_metadata_cols(spark):

@@ -105,7 +105,7 @@ def test_stream_extract_batch_replay_is_idempotent(spark, drops):
     # simulate a replay of batch 0 (both drops fit one trigger): re-run
     # the per-batch write by hand with the same input
     batch_df = spark.read.parquet(str(tmp_path / "in"))
-    docs = run_pipeline_inline(batch_df, salt_buckets=0)
+    docs = run_pipeline_inline(batch_df)
     (docs.withColumn("batch_id", F.lit(0))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
