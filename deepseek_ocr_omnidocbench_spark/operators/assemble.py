@@ -6,6 +6,9 @@ order, record per-page [start, end, page] char spans via cumulative
 offsets, id the document by sha1 of its text, and carry metadata.
 The cumulative offset is a window sum (SURVEY §2.7 O4,
 pipeline.py:458-471); everything here is native Spark SQL — no Python.
+Per-page ``counts`` (textstats TEXT_COUNTS, counted by the extraction
+kernel) are summed per document: every slot is additive across the
+page separator.
 
 Fallback-rate filtering (F8, pipeline.py:426-432): a document whose
 fallback-page fraction exceeds ``max_page_error_rate`` is dropped,
@@ -17,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textstats import TEXT_COUNTS
+
 PAGE_SEP = "\n"  # reference joins page texts with "\n" (pipeline.py:469)
 
 
@@ -24,20 +29,23 @@ def assemble_documents(pages_md: DataFrame, url_col: str = "url",
                        page_col: str = "page", md_col: str = "md",
                        fallback_col: str = "is_fallback",
                        max_page_error_rate: float = 0.004) -> DataFrame:
-    """(url, page, md[, is_fallback]) -> one row per url:
+    """(url, page, md[, is_fallback][, counts]) -> one row per url:
 
     (url, doc_id, markdown, page_spans array<struct<start,end,page>>,
-     n_pages, n_fallback_pages) — documents over the error-rate cut are
-    dropped (pipeline.py:426-432).
+     n_pages, n_fallback_pages[, counts]) — documents over the
+    error-rate cut are dropped (pipeline.py:426-432).  ``counts`` is the
+    slot-wise sum of the pages' TEXT_COUNTS arrays (array<bigint>).
 
     Single shuffle on url (window + groupBy share the partitioning).
     """
     has_fallback = fallback_col in pages_md.columns
+    has_counts = "counts" in pages_md.columns
     df = pages_md.select(
         F.col(url_col).alias("url"),
         F.col(page_col).alias("page"),
         F.coalesce(F.col(md_col), F.lit("")).alias("md"),
         (F.col(fallback_col).cast("int") if has_fallback else F.lit(0)).alias("fb"),
+        *([F.col("counts")] if has_counts else []),
     )
     w = Window.partitionBy("url").orderBy("page")
     # start offset = sum of (len + separator) of preceding pages
@@ -60,6 +68,13 @@ def assemble_documents(pages_md: DataFrame, url_col: str = "url",
                 F.struct("start", "end", "page"))).alias("page_spans"),
             F.count(F.lit(1)).alias("n_pages"),
             F.sum("fb").alias("n_fallback_pages"),
+            # one fold over the collected arrays: 87 sum() aggregates
+            # took twice as long (200 perfbench pages, 4 cores: 1.3-1.8
+            # against 0.7-1.0 s warm, 4.5 against 3.0 s cold)
+            *([F.aggregate(F.collect_list("counts"),
+                           F.array_repeat(F.lit(0).cast("long"), TEXT_COUNTS),
+                           lambda acc, c: F.zip_with(acc, c, lambda a, b: a + b))
+               .alias("counts")] if has_counts else []),
         )
         .withColumn("doc_id", F.sha1(F.encode("markdown", "UTF-8")))
     )

@@ -69,22 +69,33 @@ def runaway_generation(text: Column, max_repeats: int = 30) -> Column:
     bench BaselineTest caps trailing repeats at 30, tests.py:905-918).
 
     Native approximation of the RepeatDetector for gram=1..3: compare the
-    tail against itself shifted by the gram size."""
-    checks = []
-    for g in (1, 2, 3):
-        span = g * max_repeats
-        tail = F.substring(text, -span, span)
-        shifted = F.substring(text, -(span + g), span)
-        checks.append((F.length(text) >= span + g) & (tail == shifted))
-    out = checks[0]
-    for c in checks[1:]:
-        out = out | c
-    return out
+    tail against itself shifted by the gram size.  The last
+    ``3 * max_repeats + 3`` chars are sliced once and bound with
+    length(text) as one struct argument of a single-element transform():
+    a negative-position substring walks the whole string, and six of
+    them over a megabyte document were six walks."""
+    def check(s: Column) -> Column:
+        out = None
+        for g in (1, 2, 3):
+            span = g * max_repeats
+            same = (F.substring(s["tail"], -span, span)
+                    == F.substring(s["tail"], -(span + g), span))
+            c = (s["n"] >= span + g) & same
+            out = c if out is None else (out | c)
+        return out
+
+    w = 3 * max_repeats + 3
+    bound = F.struct(F.length(text).alias("n"),
+                     F.substring(text, -w, w).alias("tail"))
+    return F.element_at(F.transform(F.array(bound), check), 1)
 
 
-def page_quality_keep(text: Column) -> Column:
-    """Composite pre-train keep-predicate: not spam, not runaway."""
-    return ~seo_spam_flag(text) & ~runaway_generation(text)
+def page_quality_keep(text: Column, is_spam: Column | None = None) -> Column:
+    """Composite pre-train keep-predicate: not spam, not runaway.
+    ``is_spam`` replaces the text's own SEO-spam verdict when the caller
+    already has it (the documents stage takes it from page counts)."""
+    spam = seo_spam_flag(text) if is_spam is None else is_spam
+    return ~spam & ~runaway_generation(text)
 
 
 def canonical_url(url: Column) -> Column:

@@ -19,7 +19,10 @@ The whole thing is a pure function str -> str, exposed to Spark as an
 Arrow-batched pandas UDF over the pages table's ``html: binary`` column
 (input_hint shape), run in the scan's own partitions (``extract_pages``).
 Determinism is a hard invariant: the byte-identical "extracted text per
-url" check depends on it.
+url" check depends on it.  For the pipeline's ``page_md`` stage the same
+kernel also returns each page's ``textstats.text_counts``
+(``extract_any_udf(counts=True)``), so the documents stage needs no
+JVM regex pass over the markdown; ``extract_pages`` does not count.
 
 Giant-blob routing (giants round-robin, small rows hash-salted) was
 measured and dropped: it scanned the html twice, shuffled it, and ran
@@ -45,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .pdf_extract import extract_pdf_pages
+from .textstats import text_counts
 
 # ---- tunables (frozen; changing any of these breaks byte parity) ---------
 
@@ -658,10 +662,18 @@ def extract_markdown(html: Optional[str]) -> Optional[str]:
 # ---- Spark surface ----------------------------------------------------------
 
 
+# the kernel's output: one (page, md) per page -- one for HTML, one per
+# content stream for PDF -- exploded by the pipeline's ``page_md`` stage
 PAGE_MD_TYPE = T.ArrayType(T.StructType([
     T.StructField("page", T.IntegerType()),
     T.StructField("md", T.StringType()),
 ]))
+# ... and with each page's TEXT_COUNTS (textstats.text_counts of its md,
+# all zero for a NULL md), counted in the same Python pass, for the
+# documents stage's language, quality and spam decisions
+PAGE_MD_COUNTS_TYPE = T.ArrayType(T.StructType(
+    PAGE_MD_TYPE.elementType.fields
+    + [T.StructField("counts", T.ArrayType(T.IntegerType()))]))
 
 
 def _extract_any(blob: Optional[bytes]) -> Optional[list]:
@@ -684,13 +696,23 @@ def _extract_any(blob: Optional[bytes]) -> Optional[list]:
         return [(0, None)]
 
 
-def extract_any_udf():
-    """Arrow-batched UDF over ``_extract_any`` -> array<struct<page, md>>
-    (built lazily: pandas_udf needs a live session)."""
-    def _batch(blob: pd.Series) -> pd.Series:
-        return blob.map(_extract_any)
+def _extract_counted(blob: Optional[bytes]) -> Optional[list]:
+    pages = _extract_any(blob)
+    if pages is None:
+        return None
+    return [(p, md, text_counts(md or "")) for p, md in pages]
 
-    return F.pandas_udf(_batch, PAGE_MD_TYPE)
+
+def extract_any_udf(counts: bool = False):
+    """Arrow-batched UDF over ``_extract_any`` -> PAGE_MD_TYPE, or with
+    ``counts`` PAGE_MD_COUNTS_TYPE (built lazily: pandas_udf needs a
+    live session)."""
+    kernel = _extract_counted if counts else _extract_any
+
+    def _batch(blob: pd.Series) -> pd.Series:
+        return blob.map(kernel)
+
+    return F.pandas_udf(_batch, PAGE_MD_COUNTS_TYPE if counts else PAGE_MD_TYPE)
 
 
 # a "giant" page: perfbench's ``giant_cpu_share`` counts the kernel CPU

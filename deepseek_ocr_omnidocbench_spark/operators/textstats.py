@@ -4,15 +4,28 @@ All hot-path functions are pure Column expressions (JVM-side, codegen'd,
 ANSI-SQL-translatable for the DuckDB oracle): language ID, quality
 scoring, token counting, SEO-spam and alpha-ratio filters.  Word and
 word-list counts on those paths are regex counts over the lowered text
-(``_lower_count``), not interpreted lambdas over a word array.  The only
+(``_lower_count``), not interpreted lambdas over a word array.  The other
 Python is the winnowing fingerprint and trailing-repeat detector (both
 ported heuristics from the reference: olmocr/olmocr/filter/filter.py:35-62,
 91-110 and olmocr/olmocr/repeatdetect.py:8-46).
+
+Counting twin: ``text_counts`` is the pure-Python counter of every
+integer the language, quality and SEO-spam gates read (the
+``TEXT_COUNTS`` layout), for a caller that already holds the text in
+Python -- the extraction kernel counts each page as it emits it, as the
+reference filters the text it has just extracted (filter.py:35-105).
+The decisions live once, in ``lang_from_counts``,
+``quality_from_counts`` and ``seo_spam_from_counts``: the Column gates
+feed them JVM regex counts, ``decisions_from_counts`` feeds them a
+``text_counts`` array.  ``tests/test_text_counts.py`` binds the two
+counters.
 """
 
 from __future__ import annotations
 
 import inspect
+import re
+from collections import Counter
 from functools import reduce
 from operator import add
 
@@ -179,6 +192,66 @@ SEO_WORDS = ["download", "pdf", "epub", "mobi", "free", "ebook", "file", "save",
              "casino", "viagra", "cialis", "ciprofloxacin"]  # filter.py:36-50
 SPAM_THRESHOLD = 0.004  # filter.py:20
 
+# TEXT_COUNTS layout: slot -> what ``text_counts`` counts.  Every slot is
+# additive over texts joined by "\n" (a separator that is whitespace, in
+# no profiled range, and ends any letter run), so a document's counts
+# are the sum of its pages'.
+ALPHA = 0        # ASCII letters
+PUNCT = 1        # chars outside [A-Za-z0-9] and Java's \s ([ \t\n\x0B\f\r])
+WORDS = 2        # [a-z]+ runs of lower(text)
+STOP_HITS = 3    # runs in EN_STOPWORDS
+SEO_HITS = 4     # runs in SEO_WORDS
+LATIN0 = 5                                       # + i: runs in LATIN_PROFILES[i]
+SCRIPT0 = LATIN0 + len(LATIN_PROFILES)           # + i: chars in SCRIPT_PROFILES[i]
+MARKER_RANGE0 = SCRIPT0 + len(SCRIPT_PROFILES)   # + i: chars in MARKER_PROFILES[i]'s range
+MARKER0 = MARKER_RANGE0 + len(MARKER_PROFILES)   # + i: MARKER_PROFILES[i]'s marker chars
+TEXT_COUNTS = MARKER0 + len(MARKER_PROFILES)
+
+_ASCII_LETTERS = b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+_NOT_PUNCT = _ASCII_LETTERS + b"0123456789 \t\n\x0b\x0c\r"
+_WORD_RUN = re.compile("[a-z]+")
+_ASCII_RUN = re.compile("[\x00-\x7f]+")
+_WORD_LISTS = ([(STOP_HITS, EN_STOPWORDS), (SEO_HITS, SEO_WORDS)]
+               + [(LATIN0 + i, ws) for i, (_, ws) in enumerate(LATIN_PROFILES)])
+_WORD_SLOTS = {w: [s for s, ws in _WORD_LISTS if w in ws]
+               for _, ws in _WORD_LISTS for w in ws}
+_RANGE_SLOTS = ([(SCRIPT0 + i, lo, hi)
+                 for i, (_, lo, hi, _) in enumerate(SCRIPT_PROFILES)]
+                + [(MARKER_RANGE0 + i, lo, hi)
+                   for i, (_, lo, hi, _, _) in enumerate(MARKER_PROFILES)])
+_MARKER_SLOTS = [(MARKER0 + i, frozenset(marks))
+                 for i, (*_, marks) in enumerate(MARKER_PROFILES)]
+
+
+def text_counts(text: str) -> list[int]:
+    """The TEXT_COUNTS layout of ``text``, in one Python pass: the same
+    integers the Column gates count with JVM regexes (tested field by
+    field, ``tests/test_text_counts.py``).  Lengths are in code points,
+    as Spark's ``length``; ASCII bytes of the UTF-8 encoding are exactly
+    the ASCII chars, so the ASCII classes are counted on bytes."""
+    out = [0] * TEXT_COUNTS
+    b = text.encode("utf-8")
+    out[ALPHA] = len(b) - len(b.translate(None, _ASCII_LETTERS))
+    out[PUNCT] = len(text) - (len(b) - len(b.translate(None, _NOT_PUNCT)))
+    words = _WORD_RUN.findall(text.lower())
+    out[WORDS] = len(words)
+    get = Counter(words).get
+    for w, slots in _WORD_SLOTS.items():
+        k = get(w)
+        if k:
+            for s in slots:
+                out[s] += k
+    if not text.isascii():
+        chars = Counter(_ASCII_RUN.sub("", text))
+        for ch, k in chars.items():
+            cp = ord(ch)
+            for s, lo, hi in _RANGE_SLOTS:
+                if lo <= cp <= hi:
+                    out[s] += k
+        for s, marks in _MARKER_SLOTS:
+            out[s] = sum(chars.get(ch, 0) for ch in marks)
+    return out
+
 
 def _word_array(c: Column) -> Column:
     return F.filter(F.split(F.lower(c), r"[^a-zA-Z]+"), lambda w: F.length(w) > 0)
@@ -264,6 +337,44 @@ def token_count_cols(text: Column) -> dict[str, Column]:
     return {"ws_tokens": ws, "bpe_tokens": bpe}
 
 
+def lang_from_counts(n: Column, latin_hits: Column, script_chars: list,
+                     marker_range_chars: list, marker_chars: list) -> Column:
+    """The language decision of ``lang_id_col`` from its counts over a
+    text of ``n`` chars: ``latin_hits`` is the array of LATIN_PROFILES
+    hit counts, the lists hold one count per SCRIPT_PROFILES /
+    MARKER_PROFILES entry (range chars, range chars, marker chars).
+
+    Markers are checked first, then script densities, then the Latin
+    cascade ("language i wins iff its hit count strictly beats every
+    LATER profile's; en, last, needs only > 0").  The cascade is exactly
+    the LAST argmax of the hits array when the max is > 0, built as
+    array_position(reverse(hits), max) with the array bound once by a
+    single-element transform(): nested when(h > greatest(rest)) levels
+    would embed each count O(k) times in codegen, the blow-up the
+    round-3 ivf_assign fix removed.  The oracle SQL keeps the explicit
+    cascade; the two are tested equal."""
+    k = len(LATIN_PROFILES)
+    lang_arr = F.array(*[F.lit(lang) for lang, _ in LATIN_PROFILES])
+
+    def _argmax_of(hits: Column) -> Column:
+        mx = F.array_max(hits)
+        last_idx = (F.lit(k + 1)
+                    - F.array_position(F.reverse(hits), mx)).cast("int")
+        return F.when(mx > 0, F.element_at(lang_arr, last_idx)) \
+            .otherwise(F.lit("unknown"))
+
+    e = F.element_at(F.transform(F.array(latin_hits), _argmax_of), 1)
+    for (lang, _, _, thr), dens in reversed(
+            list(zip(SCRIPT_PROFILES, script_chars))):
+        e = F.when(dens / n > thr, F.lit(lang)).otherwise(e)
+    # sub-script markers wrap LAST so they are checked FIRST (before the
+    # shared base script falls through to ru/ar)
+    for (lang, _, _, thr, _), dens, hits in reversed(
+            list(zip(MARKER_PROFILES, marker_range_chars, marker_chars))):
+        e = F.when((dens / n > thr) & (hits >= 1), F.lit(lang)).otherwise(e)
+    return F.when(n == 0, F.lit("unknown")).otherwise(e)
+
+
 def lang_id_col(text: Column) -> Column:
     """Stopword-profile heuristic language ID, 72 languages in three
     tiers: (1) sub-script marker letters for languages sharing Cyrillic
@@ -276,22 +387,10 @@ def lang_id_col(text: Column) -> Column:
     ro/da/fi/cs/hu/ca/fr/es/de/en) — the from-scratch stand-in for
     the reference's lingua detector
     (olmocr/filter/filter.py:101-105).  'unknown' over a wrong guess for
-    unprofiled languages.  The oracle SQL is generated from the SAME
+    unprofiled languages.  The counts are JVM regex passes; the decision
+    is ``lang_from_counts``.  The oracle SQL is generated from the SAME
     profile tables (lang_id_oracle_sql), so Spark and DuckDB cannot
     drift."""
-    n = F.length(text)
-    low = F.lower(text)
-
-    # The cascade ("language i wins iff its hit count strictly beats
-    # every LATER profile's; en, last, needs only > 0") is exactly the
-    # LAST argmax of the hits array when the max is > 0 — so build it
-    # as array_position(reverse(hits), max) instead of nested
-    # when(h > greatest(rest)) levels: each hit count appears ONCE in
-    # codegen (linear in profiles) instead of O(k^2) re-embeddings,
-    # the same blow-up the round-3 ivf_assign fix removed.  Semantics
-    # are identical (tested against the SQL oracle, which keeps the
-    # explicit cascade form).
-    #
     # Hit counting is ONE codegen'd JVM regex pass over lower(text)
     # with the 390-stopword alternation, NOT a words-array lambda filter
     # per profile: higher-order functions are interpreted, so
@@ -305,64 +404,40 @@ def lang_id_col(text: Column) -> Column:
     # the 390-branch list was ~80M branch attempts and most of the
     # documents stage's CPU, the trie a few per word.  Per-profile
     # counts then come from the matched-token array (one element per
-    # stopword occurrence) walked by one interpreted filter per
-    # profile; both the matched array and the hits array are bound
-    # once per row via single-element
-    # transform() lambdas (the Spark analog of the oracle SQL's
-    # list_transform factoring).
-    k = len(LATIN_PROFILES)
-    lang_arr = F.array(*[F.lit(lang) for lang, _ in LATIN_PROFILES])
+    # stopword occurrence), bound once per row by a single-element
+    # transform() (the Spark analog of the oracle SQL's list_transform
+    # factoring) and walked by one interpreted filter per profile.
     pat = _word_run_pattern(w for _, ws in LATIN_PROFILES for w in ws)
-    matched = F.regexp_extract_all(low, F.lit(pat), 0)
-
-    def _hits_arr(m: Column) -> Column:
-        return F.array(*[
-            F.size(F.filter(m, lambda x: x.isin(ws)))
-            for _, ws in LATIN_PROFILES])
-
-    def _argmax_of(hits: Column) -> Column:
-        mx = F.array_max(hits)
-        last_idx = (F.lit(k + 1)
-                    - F.array_position(F.reverse(hits), mx)).cast("int")
-        return F.when(mx > 0, F.element_at(lang_arr, last_idx)) \
-            .otherwise(F.lit("unknown"))
-
-    latin = F.element_at(
-        F.transform(
-            F.array(matched),
-            lambda m: F.element_at(
-                F.transform(F.array(_hits_arr(m)), _argmax_of), 1)),
-        1)
+    matched = F.regexp_extract_all(F.lower(text), F.lit(pat), 0)
+    latin_hits = F.element_at(F.transform(F.array(matched), lambda m: F.array(*[
+        F.size(F.filter(m, lambda x: x.isin(ws))) for _, ws in LATIN_PROFILES])), 1)
 
     # Script/marker cascade: 25 range densities + 9 marker checks (two
     # regexes each) would be 43 full-document regex passes per row if
     # run on ``text``.  Every profiled range sits above U+0370, so a
     # range/marker count over text-with-ASCII-stripped equals the count
-    # over text — strip ASCII ONCE (one full pass), bind the remainder
-    # via a single-element transform() (computed once, not per branch),
-    # and run all 43 counts over what is a near-empty string for the
-    # Latin-script bulk of a web corpus.  Denominator stays
-    # length(text), preserving the density semantics the oracle uses.
-    def _script_cascade(na: Column) -> Column:
-        e = latin
-        for lang, lo, hi, thr in reversed(SCRIPT_PROFILES):
-            dens = F.length(
-                F.regexp_replace(na, "[^%s-%s]+" % (chr(lo), chr(hi)), ""))
-            e = F.when(dens / n > thr, F.lit(lang)).otherwise(e)
-        # Sub-script markers wrap LAST so they are checked FIRST (before
-        # the shared base script falls through to ru/ar).
-        for lang, lo, hi, thr, marks in reversed(MARKER_PROFILES):
-            dens = F.length(
-                F.regexp_replace(na, "[^%s-%s]+" % (chr(lo), chr(hi)), ""))
-            hits = F.length(F.regexp_replace(na, "[^%s]+" % marks, ""))
-            e = F.when((dens / n > thr) & (hits >= 1),
-                       F.lit(lang)).otherwise(e)
-        return e
+    # over text — strip ASCII ONCE (one full pass) and run all 43 counts
+    # over what is a near-empty string for the Latin-script bulk of a
+    # web corpus.  The remainder and length(text) (the density
+    # denominator) are bound once per row, as one struct argument of a
+    # single-element transform(): referenced inside the lambda, an outer
+    # length(text) is re-evaluated, interpreted, in every branch.
+    def _cascade(s: Column) -> Column:
+        def chars_in(cls: str) -> Column:
+            return F.length(F.regexp_replace(s["na"], "[^%s]+" % cls, ""))
 
-    non_ascii = F.regexp_replace(text, "[\\x00-\\x7f]+", "")
-    expr = F.element_at(
-        F.transform(F.array(non_ascii), _script_cascade), 1)
-    return F.when(n == 0, F.lit("unknown")).otherwise(expr)
+        return lang_from_counts(
+            s["n"], latin_hits,
+            [chars_in("%s-%s" % (chr(lo), chr(hi)))
+             for _, lo, hi, _ in SCRIPT_PROFILES],
+            [chars_in("%s-%s" % (chr(lo), chr(hi)))
+             for _, lo, hi, _, _ in MARKER_PROFILES],
+            [chars_in(marks) for *_, marks in MARKER_PROFILES])
+
+    bound = F.struct(
+        F.length(text).alias("n"),
+        F.regexp_replace(text, "[\\x00-\\x7f]+", "").alias("na"))
+    return F.element_at(F.transform(F.array(bound), _cascade), 1)
 
 
 def lang_id_oracle_sql(text_expr: str = "text") -> str:
@@ -403,18 +478,12 @@ def lang_id_oracle_sql(text_expr: str = "text") -> str:
     return "\n".join(parts)
 
 
-def quality_cols(text: Column) -> dict[str, Column]:
-    """Length/alpha/stopword/punct ratios + composite score.
-
-    alpha-ratio guard semantics from filter.py:91-99; the composite is a
-    simple monotone blend used for corpus filtering.
-    """
-    n = F.length(text)
-    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]+", ""))
-    digits = F.length(F.regexp_replace(text, r"[^0-9]+", ""))
-    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]+", ""))
-    n_words = _lower_count(text, "[a-zA-Z]+")
-    stop_hits = _lower_count(text, _word_run_pattern(EN_STOPWORDS))
+def quality_from_counts(n: Column, alpha: Column, punct: Column,
+                        n_words: Column, stop_hits: Column) -> dict[str, Column]:
+    """The ratios and composite score of ``quality_cols`` from its counts
+    over a text of ``n`` chars (alpha-ratio guard semantics from
+    filter.py:91-99; the composite is a simple monotone blend used for
+    corpus filtering)."""
     alpha_ratio = F.when(n > 0, alpha / n).otherwise(F.lit(0.0))
     punct_ratio = F.when(n > 0, punct / n).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_words > 0, stop_hits / n_words).otherwise(F.lit(0.0))
@@ -425,10 +494,24 @@ def quality_cols(text: Column) -> dict[str, Column]:
         + F.least(stop_ratio * F.lit(5.0), F.lit(1.0)) * 0.3
         + (1 - F.least(punct_ratio * F.lit(4.0), F.lit(1.0))) * 0.1
     )
+    return {"alpha_ratio": alpha_ratio, "punct_ratio": punct_ratio,
+            "stopword_ratio": stop_ratio, "mean_word_len": mean_word_len,
+            "quality_score": score}
+
+
+def quality_cols(text: Column) -> dict[str, Column]:
+    """Length/alpha/stopword/punct ratios + composite score: JVM regex
+    counts, decided by ``quality_from_counts``."""
+    n = F.length(text)
+    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]+", ""))
+    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]+", ""))
+    q = quality_from_counts(n, alpha, punct, _lower_count(text, "[a-zA-Z]+"),
+                            _lower_count(text, _word_run_pattern(EN_STOPWORDS)))
     return {
-        "n_chars_calc": n, "alpha_ratio": alpha_ratio, "digit_chars": digits,
-        "punct_ratio": punct_ratio, "stopword_ratio": stop_ratio,
-        "mean_word_len": mean_word_len, "quality_score": score,
+        "n_chars_calc": n, "alpha_ratio": q["alpha_ratio"],
+        "digit_chars": F.length(F.regexp_replace(text, r"[^0-9]+", "")),
+        "punct_ratio": q["punct_ratio"], "stopword_ratio": q["stopword_ratio"],
+        "mean_word_len": q["mean_word_len"], "quality_score": q["quality_score"],
     }
 
 
@@ -561,13 +644,40 @@ def gopher_rules_oracle_sql(text_expr: str = "text") -> dict[str, str]:
             "gopher_pass": " and ".join("(%s)" % v for v in rules.values())}
 
 
+def seo_spam_from_counts(hits: Column, total: Column) -> dict[str, Column]:
+    """SEO-spam ratio and verdict from the seo-word hits and the word
+    total (filter.py:35-62)."""
+    ratio = F.when(total > 0, hits / total).otherwise(F.lit(0.0))
+    return {"seo_ratio": ratio, "is_spam": ratio > SPAM_THRESHOLD}
+
+
 def seo_spam_cols(text: Column) -> dict[str, Column]:
     """SEO/download-spam ratio (filter.py:35-62): seo-word hits over words."""
     hits = _lower_count(text, _word_run_pattern(SEO_WORDS))
     total = _lower_count(text, "[a-zA-Z]+")
-    ratio = F.when(total > 0, hits / total).otherwise(F.lit(0.0))
-    return {"seo_hits": hits, "word_total": total, "seo_ratio": ratio,
-            "is_spam": ratio > SPAM_THRESHOLD}
+    return {"seo_hits": hits, "word_total": total,
+            **seo_spam_from_counts(hits, total)}
+
+
+def decisions_from_counts(n: Column, counts: Column) -> dict[str, Column]:
+    """``lang_pred``, ``quality_score`` (unrounded) and ``is_spam`` from a
+    TEXT_COUNTS array (``text_counts``, or a document's sum of its
+    pages' arrays) over a text of ``n`` chars: what ``lang_id_col``,
+    ``quality_cols`` and ``seo_spam_cols`` give on the text itself,
+    through the same decision functions."""
+    def run(start: int, profiles) -> list[Column]:
+        return [counts[start + i] for i in range(len(profiles))]
+
+    return {
+        "lang_pred": lang_from_counts(
+            n, F.slice(counts, LATIN0 + 1, len(LATIN_PROFILES)),
+            run(SCRIPT0, SCRIPT_PROFILES), run(MARKER_RANGE0, MARKER_PROFILES),
+            run(MARKER0, MARKER_PROFILES)),
+        "quality_score": quality_from_counts(
+            n, counts[ALPHA], counts[PUNCT], counts[WORDS],
+            counts[STOP_HITS])["quality_score"],
+        "is_spam": seo_spam_from_counts(counts[SEO_HITS], counts[WORDS])["is_spam"],
+    }
 
 
 def seo_spam_oracle_sql(text_expr: str = "text") -> dict[str, str]:

@@ -59,6 +59,12 @@ class StageCheckpoint:
         rows = map(json.loads, self._lineage_lines())
         return {r["partition_id"] for r in rows if r["stage"] == stage}
 
+    def committed_schemas(self, stage: str) -> set:
+        """The schemas (JSON, None where unrecorded) of a stage's
+        committed buckets."""
+        rows = map(json.loads, self._lineage_lines())
+        return {r.get("schema") for r in rows if r["stage"] == stage}
+
     def _append_lineage(self, rows: list[dict]) -> None:
         path = self._lineage_path()
         os.makedirs(path, exist_ok=True)

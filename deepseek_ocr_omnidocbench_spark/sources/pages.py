@@ -15,8 +15,10 @@ Template mix per 100 rows follows FIXTURES.md: 40 article / 20 table /
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import os
 import random
+from typing import Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -277,8 +279,9 @@ _CONTENT_BUILDERS = {
 }
 
 
-def generate_pages(n_rows: int, seed: int = 42) -> list[dict]:
-    rows = []
+def iter_pages(n_rows: int, seed: int = 42) -> Iterator[dict]:
+    """The synthetic pages one row at a time; each row has its own
+    seeded rng, so any prefix is the same as in a longer table."""
     for seq in range(n_rows):
         rng = random.Random("%d:%d" % (seed, seq))
         category = CATEGORY_MIX[seq % len(CATEGORY_MIX)]
@@ -297,11 +300,12 @@ def generate_pages(n_rows: int, seed: int = 42) -> list[dict]:
             content = _CONTENT_BUILDERS[category](rng)
             text = extract_markdown(content) or ""
             blob = _boilerplate_wrap(rng, content).encode("utf-8")
-        rows.append(
-            {"url": url, "warc_ts": ts, "html": blob, "text": text,
-             "lang": lang, "category": category}
-        )
-    return rows
+        yield {"url": url, "warc_ts": ts, "html": blob, "text": text,
+               "lang": lang, "category": category}
+
+
+def generate_pages(n_rows: int, seed: int = 42) -> list[dict]:
+    return list(iter_pages(n_rows, seed))
 
 
 PAGES_ARROW_SCHEMA = pa.schema(
@@ -320,11 +324,15 @@ def write_pages(path: str, n_rows: int, seed: int = 42,
                 row_group_size: int = 50) -> str:
     """Small row groups matter: Spark parallelizes a parquet scan only at
     row-group boundaries, so one giant row group serializes the whole
-    read (measured: a single 500 MB group capped scaling at 0.35)."""
-    rows = generate_pages(n_rows, seed)
-    table = pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA)
+    read (measured: a single 500 MB group capped scaling at 0.35).
+    Rows are generated and written one row group at a time, so memory
+    holds one group, not the table."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(table, path, row_group_size=row_group_size)
+    rows = iter_pages(n_rows, seed)
+    with pq.ParquetWriter(path, PAGES_ARROW_SCHEMA) as writer:
+        while batch := list(itertools.islice(rows, row_group_size)):
+            writer.write_table(pa.Table.from_pylist(batch, schema=PAGES_ARROW_SCHEMA),
+                               row_group_size=row_group_size)
     return path
 
 

@@ -86,3 +86,35 @@ def test_checkpointed_pipeline_resumes(spark, pages_df, tmp_path):
     per_stage = {r["stage"]: r["n"] for r in
                  lin.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert per_stage == {"filtered": 4, "page_md": 4, "documents": 4}
+
+
+def test_root_without_page_counts_is_refused(spark, pages_df, tmp_path):
+    """A page_md stage committed before the kernel counted pages has no
+    ``counts`` column; run_pipeline must refuse the root rather than
+    decide documents from NULL counts."""
+    from deepseek_ocr_omnidocbench_spark.sources.lineage import StageCheckpoint
+
+    ck = StageCheckpoint(spark, str(tmp_path), n_buckets=2)
+    filtered = ck.run_stage("filtered", pages_df, stage_filter)
+    ck.run_stage("page_md", filtered,
+                 lambda df: stage_page_md(df).drop("counts"), failure_col="md")
+    with pytest.raises(ValueError, match="without per-page counts"):
+        run_pipeline(spark, pages_df, str(tmp_path), n_buckets=2)
+
+
+def test_write_pages_streams_row_groups(tmp_path):
+    """write_pages writes one row group at a time; the file reads back
+    equal to the whole table written at once, with the same row groups."""
+    import pyarrow.parquet as pq
+
+    from deepseek_ocr_omnidocbench_spark.sources.pages import write_pages
+
+    got = write_pages(str(tmp_path / "streamed" / "pages.parquet"), 120, seed=4)
+    want = str(tmp_path / "whole.parquet")
+    pq.write_table(pa.Table.from_pylist(generate_pages(120, seed=4),
+                                        schema=PAGES_ARROW_SCHEMA),
+                   want, row_group_size=50)
+    assert pq.read_table(got).equals(pq.read_table(want))
+    sizes = [[m.row_group(i).num_rows for i in range(m.num_row_groups)]
+             for m in (pq.ParquetFile(p).metadata for p in (got, want))]
+    assert sizes[0] == sizes[1] == [50, 50, 20]

@@ -57,6 +57,43 @@ def test_runaway_generation(spark):
     assert got == [True, False]
 
 
+def test_runaway_generation_tail_slice(spark):
+    """The one-tail-slice form equals the six whole-text substrings it
+    replaced and a code-point reference, for every length 0-200 of
+    pure and broken repeats with ASCII, non-ASCII and supplementary
+    units, so the length guards hit span+g-1 and span+g exactly."""
+    def old_form(text):
+        checks = []
+        for g in (1, 2, 3):
+            span = g * 30
+            checks.append((F.length(text) >= span + g)
+                          & (F.substring(text, -span, span)
+                             == F.substring(text, -(span + g), span)))
+        return checks[0] | checks[1] | checks[2]
+
+    def reference(t):
+        n = len(t)
+        return any(n >= 31 * g and t[n - 30 * g:] == t[n - 31 * g:n - g]
+                   for g in (1, 2, 3))
+
+    units = ["a", "ab", "xyz", "é", "数据", "😀", "a😀", "é数😀"]
+    texts = [None]
+    for u in units:
+        rep = u * 200
+        for n in range(0, 201):
+            tail = rep[len(rep) - n:] if n else ""
+            texts += [tail, "Z" + tail, tail[:n // 2] + "Q" + tail[n // 2 + 1:]]
+    rows = spark.createDataFrame([(t,) for t in texts], "t string").select(
+        "t", FL.runaway_generation(F.col("t")).alias("new"),
+        old_form(F.col("t")).alias("old")).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["new"] == r["old"], r["t"]
+        if r["t"] is not None:
+            assert r["new"] == reference(r["t"]), r["t"]
+    assert {True, False} <= {r["new"] for r in rows}
+
+
 def test_canonical_url_folding(spark):
     """Scheme/host case folding, default ports, www, fragments, tracking
     params, param order, trailing slashes, bare hosts."""

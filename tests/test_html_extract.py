@@ -202,6 +202,25 @@ def test_kernel_runs_in_the_scan_partitions(mixed_scans):
             assert out.rdd.getNumPartitions() == pages.rdd.getNumPartitions(), n
 
 
+def test_documents_stage_reads_no_text_after_the_kernel(mixed_scans):
+    """run_pipeline_inline runs the kernel once and takes the language,
+    quality and spam decisions from the kernel's page counts: no
+    lower() or regex pass over the markdown anywhere in the executed
+    plan.  extract_pages, the docs/s path, stays (url, md, n_chars)."""
+    from deepseek_ocr_omnidocbench_spark.operators.html_extract import extract_pages
+    from deepseek_ocr_omnidocbench_spark.plans.extract_pipeline import (
+        run_pipeline_inline)
+
+    _, scans = mixed_scans
+    for pages in scans.values():
+        docs = run_pipeline_inline(pages)
+        plan = docs._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+        for op in ("lower(", "regexp_"):
+            assert op not in plan, (op, plan)
+        assert extract_pages(pages).columns == ["url", "md", "n_chars"]
+
+
 def test_page_metadata_cols(spark):
     from pyspark.sql import functions as F
 
