@@ -3722,7 +3722,7 @@ def q_curate_pipeline(spark, sf_dir):
         """)
 def q_curation_pipeline(spark, sf_dir):
     """FineWeb-style composite keep/drop decision (gopher + spam +
-    runaway + predicted-lang gates in one codegen pass) with per-gate
+    runaway + predicted-lang gates in one scan-stage pass) with per-gate
     verdicts and a comma-joined failed-gate reasons string — every gate
     mirrored in SQL, so the composite sits under the value gate too."""
     from deepseek_ocr_omnidocbench_spark.operators.curation import (

@@ -112,10 +112,10 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id",
                       keep_lang: str = "en") -> DataFrame:
     """FineWeb-style composite curation decision: run the per-row
-    quality gates in ONE codegen pass and return, for every document,
-    each gate's verdict, the conjunction ``keep``, and a ``reasons``
-    string naming every failed gate (comma-joined, fixed order) so a
-    corpus report can explain drops.
+    quality gates in ONE pass over the scan and return, for every
+    document, each gate's verdict, the conjunction ``keep``, and a
+    ``reasons`` string naming every failed gate (comma-joined, fixed
+    order) so a corpus report can explain drops.
 
     Default gate set (each independently value-checked elsewhere):
 
@@ -128,10 +128,12 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text",
     Line-level C4 cleaning stays a separate operator (c4_clean): it
     rewrites text rather than gating documents.
 
-    Scale: zero shuffles and zero joins — every signal is a Column
-    expression over the row's own text, so the whole decision pipelines
-    inside the scan stage; at 100 TB this is a single pass that
-    predicate-pushes nothing and shuffles nothing."""
+    Scale: zero shuffles and zero joins — every signal reads only the
+    row's own text: ``gopher`` and ``runaway`` are Column expressions,
+    ``spam`` and ``lang`` decide from one Python count of the text
+    (textstats.text_counts_col, evaluated once for both), so the whole
+    decision pipelines inside the scan stage; at 100 TB this is a
+    single pass that predicate-pushes nothing and shuffles nothing."""
     from .filters import runaway_generation
     from .textstats import gopher_rules_cols, lang_id_col, seo_spam_cols
 

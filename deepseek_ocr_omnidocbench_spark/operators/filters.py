@@ -90,12 +90,11 @@ def runaway_generation(text: Column, max_repeats: int = 30) -> Column:
     return F.element_at(F.transform(F.array(bound), check), 1)
 
 
-def page_quality_keep(text: Column, is_spam: Column | None = None) -> Column:
+def page_quality_keep(text: Column, is_spam: Column) -> Column:
     """Composite pre-train keep-predicate: not spam, not runaway.
-    ``is_spam`` replaces the text's own SEO-spam verdict when the caller
-    already has it (the documents stage takes it from page counts)."""
-    spam = seo_spam_flag(text) if is_spam is None else is_spam
-    return ~spam & ~runaway_generation(text)
+    ``is_spam`` is the text's SEO-spam verdict (``seo_spam_flag``, or
+    the documents stage's, decided from its page counts)."""
+    return ~is_spam & ~runaway_generation(text)
 
 
 def canonical_url(url: Column) -> Column:

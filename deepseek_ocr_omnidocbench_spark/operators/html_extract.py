@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .pdf_extract import extract_pdf_pages
-from .textstats import text_counts
+from .textstats import TEXT_COUNTS_TYPE, text_counts
 
 # ---- tunables (frozen; changing any of these breaks byte parity) ---------
 
@@ -673,7 +673,7 @@ PAGE_MD_TYPE = T.ArrayType(T.StructType([
 # documents stage's language, quality and spam decisions
 PAGE_MD_COUNTS_TYPE = T.ArrayType(T.StructType(
     PAGE_MD_TYPE.elementType.fields
-    + [T.StructField("counts", T.ArrayType(T.IntegerType()))]))
+    + [T.StructField("counts", TEXT_COUNTS_TYPE)]))
 
 
 def _extract_any(blob: Optional[bytes]) -> Optional[list]:

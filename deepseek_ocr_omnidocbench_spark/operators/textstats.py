@@ -1,24 +1,23 @@
 """Text-analysis operators for training-data pipelines (task brief §extras).
 
-All hot-path functions are pure Column expressions (JVM-side, codegen'd,
-ANSI-SQL-translatable for the DuckDB oracle): language ID, quality
-scoring, token counting, SEO-spam and alpha-ratio filters.  Word and
-word-list counts on those paths are regex counts over the lowered text
-(``_lower_count``), not interpreted lambdas over a word array.  The other
-Python is the winnowing fingerprint and trailing-repeat detector (both
-ported heuristics from the reference: olmocr/olmocr/filter/filter.py:35-62,
-91-110 and olmocr/olmocr/repeatdetect.py:8-46).
-
-Counting twin: ``text_counts`` is the pure-Python counter of every
-integer the language, quality and SEO-spam gates read (the
-``TEXT_COUNTS`` layout), for a caller that already holds the text in
-Python -- the extraction kernel counts each page as it emits it, as the
-reference filters the text it has just extracted (filter.py:35-105).
-The decisions live once, in ``lang_from_counts``,
-``quality_from_counts`` and ``seo_spam_from_counts``: the Column gates
-feed them JVM regex counts, ``decisions_from_counts`` feeds them a
-``text_counts`` array.  ``tests/test_text_counts.py`` binds the two
-counters.
+Most operators are Column expressions (JVM-side, codegen'd, each with a
+hand-written DuckDB mirror for the oracle): token counts, Gopher rules,
+readability, repetition and corpus statistics.  The language, quality
+and SEO-spam gates count in Python instead: ``text_counts`` counts every
+integer they read (the ``TEXT_COUNTS`` layout) in one pass over the
+text, and ``text_counts_col`` runs it as an Arrow UDF.  Their decisions
+are Columns over those counts, written once in ``lang_from_counts``,
+``quality_from_counts`` and ``seo_spam_from_counts`` (composed by
+``decisions_from_counts``).  The Column gates feed them
+``text_counts_col`` of their text; the extraction pipeline feeds them
+the counts its kernel took on each page as it emitted it, as the
+reference filters the text it has just extracted (olmocr
+filter/filter.py:35-105).  Spark evaluates identical calls of one
+deterministic Python UDF in a projection once, so gates mixed in one
+select count each text once.  The other Python is the winnowing
+fingerprint and trailing-repeat detector (ported heuristics from the
+reference: olmocr/olmocr/filter/filter.py:35-62, 91-110 and
+olmocr/olmocr/repeatdetect.py:8-46).
 """
 
 from __future__ import annotations
@@ -32,6 +31,7 @@ from operator import add
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # token pattern shared with the DuckDB oracle: letter runs, digit runs,
 # single other-non-space (a BPE-ish pre-tokenization).
@@ -224,11 +224,12 @@ _MARKER_SLOTS = [(MARKER0 + i, frozenset(marks))
 
 
 def text_counts(text: str) -> list[int]:
-    """The TEXT_COUNTS layout of ``text``, in one Python pass: the same
-    integers the Column gates count with JVM regexes (tested field by
-    field, ``tests/test_text_counts.py``).  Lengths are in code points,
-    as Spark's ``length``; ASCII bytes of the UTF-8 encoding are exactly
-    the ASCII chars, so the ASCII classes are counted on bytes."""
+    """The TEXT_COUNTS layout of ``text``, in one Python pass.  Words
+    are the ``[a-z]+`` runs of ``text.lower()``, which lowers as Spark's
+    ``lower()`` does; lengths are in code points, as Spark's ``length``
+    (both tested over every code point, ``tests/test_text_counts.py``).
+    ASCII bytes of the UTF-8 encoding are exactly the ASCII chars, so
+    the ASCII classes are counted on bytes."""
     out = [0] * TEXT_COUNTS
     b = text.encode("utf-8")
     out[ALPHA] = len(b) - len(b.translate(None, _ASCII_LETTERS))
@@ -257,45 +258,17 @@ def _word_array(c: Column) -> Column:
     return F.filter(F.split(F.lower(c), r"[^a-zA-Z]+"), lambda w: F.length(w) > 0)
 
 
-def _word_run_pattern(words) -> str:
-    """Regex matching exactly the maximal ASCII letter runs equal to one
-    of ``words`` (each pure ``[a-z]+``): the ``_word_array`` tokens in
-    the list, found without building the word array.
-
-    The alternation is a prefix trie (``a, and, as`` ->
-    ``a(?:nd|s)?``): Java regex tries a flat alternation branch by
-    branch at every run start, so a 390-word list costs ~390 attempts
-    per word of a megabyte page, the trie one branch per character.
-    The lookarounds force whole-run equality: a branch that stops
-    inside a run fails the lookahead and backtracks, and a run suffix
-    fails the lookbehind, whatever the branch order."""
-    trie: dict = {}
-    for w in words:
-        node = trie
-        for ch in w:
-            node = node.setdefault(ch, {})
-        node[""] = {}
-
-    def alt(node: dict) -> str:
-        branches = [ch + alt(sub) for ch, sub in sorted(node.items()) if ch]
-        if not branches:
-            return ""
-        body = "|".join(branches)
-        if len(branches) > 1 or ("" in node and len(body) > 1):
-            body = "(?:%s)" % body
-        return body + "?" if "" in node else body
-
-    return "(?<![a-zA-Z])%s(?![a-zA-Z])" % alt(trie)
+TEXT_COUNTS_TYPE = T.ArrayType(T.IntegerType())
 
 
-def _lower_count(text: Column, pattern: str) -> Column:
-    """Matches of ``pattern`` in lower(text): one codegen'd regex count,
-    NULL for NULL text like the word-array size it replaces.  With
-    ``[a-zA-Z]+`` it is size(_word_array(text)); with a
-    ``_word_run_pattern`` it is how many of those words are in the
-    list, without the interpreted per-word filter lambda."""
-    return F.when(text.isNotNull(),
-                  F.regexp_count(F.lower(text), F.lit(pattern)))
+def _text_counts_batch(texts: pd.Series) -> pd.Series:
+    return texts.map(lambda t: None if t is None else text_counts(t))
+
+
+# ``text_counts`` of a string Column (NULL for NULL text).  One object
+# for every caller: Spark folds the calls of one deterministic Python
+# UDF on the same text in a projection into one evaluation.
+text_counts_col = F.pandas_udf(_text_counts_batch, TEXT_COUNTS_TYPE)
 
 
 def substr_count(text: Column, marker: str) -> Column:
@@ -337,41 +310,32 @@ def token_count_cols(text: Column) -> dict[str, Column]:
     return {"ws_tokens": ws, "bpe_tokens": bpe}
 
 
-def lang_from_counts(n: Column, latin_hits: Column, script_chars: list,
-                     marker_range_chars: list, marker_chars: list) -> Column:
-    """The language decision of ``lang_id_col`` from its counts over a
-    text of ``n`` chars: ``latin_hits`` is the array of LATIN_PROFILES
-    hit counts, the lists hold one count per SCRIPT_PROFILES /
-    MARKER_PROFILES entry (range chars, range chars, marker chars).
+def lang_from_counts(n: Column, counts: Column) -> Column:
+    """The language of a text of ``n`` chars from its TEXT_COUNTS
+    ``counts``.
 
     Markers are checked first, then script densities, then the Latin
     cascade ("language i wins iff its hit count strictly beats every
     LATER profile's; en, last, needs only > 0").  The cascade is exactly
-    the LAST argmax of the hits array when the max is > 0, built as
-    array_position(reverse(hits), max) with the array bound once by a
-    single-element transform(): nested when(h > greatest(rest)) levels
-    would embed each count O(k) times in codegen, the blow-up the
-    round-3 ivf_assign fix removed.  The oracle SQL keeps the explicit
-    cascade; the two are tested equal."""
+    the LAST argmax of the LATIN_PROFILES hits when the max is > 0,
+    built as array_position(reverse(hits), max): nested
+    when(h > greatest(rest)) levels would embed each count O(k) times in
+    codegen, the blow-up the round-3 ivf_assign fix removed.  The oracle
+    SQL keeps the explicit cascade; the two are tested equal."""
     k = len(LATIN_PROFILES)
-    lang_arr = F.array(*[F.lit(lang) for lang, _ in LATIN_PROFILES])
-
-    def _argmax_of(hits: Column) -> Column:
-        mx = F.array_max(hits)
-        last_idx = (F.lit(k + 1)
-                    - F.array_position(F.reverse(hits), mx)).cast("int")
-        return F.when(mx > 0, F.element_at(lang_arr, last_idx)) \
-            .otherwise(F.lit("unknown"))
-
-    e = F.element_at(F.transform(F.array(latin_hits), _argmax_of), 1)
-    for (lang, _, _, thr), dens in reversed(
-            list(zip(SCRIPT_PROFILES, script_chars))):
-        e = F.when(dens / n > thr, F.lit(lang)).otherwise(e)
+    hits = F.slice(counts, LATIN0 + 1, k)
+    mx = F.array_max(hits)
+    last_idx = (F.lit(k + 1) - F.array_position(F.reverse(hits), mx)).cast("int")
+    e = F.when(mx > 0, F.element_at(
+        F.array(*[F.lit(lang) for lang, _ in LATIN_PROFILES]), last_idx)) \
+        .otherwise(F.lit("unknown"))
+    for i, (lang, _, _, thr) in reversed(list(enumerate(SCRIPT_PROFILES))):
+        e = F.when(counts[SCRIPT0 + i] / n > thr, F.lit(lang)).otherwise(e)
     # sub-script markers wrap LAST so they are checked FIRST (before the
     # shared base script falls through to ru/ar)
-    for (lang, _, _, thr, _), dens, hits in reversed(
-            list(zip(MARKER_PROFILES, marker_range_chars, marker_chars))):
-        e = F.when((dens / n > thr) & (hits >= 1), F.lit(lang)).otherwise(e)
+    for i, (lang, _, _, thr, _) in reversed(list(enumerate(MARKER_PROFILES))):
+        e = F.when((counts[MARKER_RANGE0 + i] / n > thr)
+                   & (counts[MARKER0 + i] >= 1), F.lit(lang)).otherwise(e)
     return F.when(n == 0, F.lit("unknown")).otherwise(e)
 
 
@@ -387,57 +351,10 @@ def lang_id_col(text: Column) -> Column:
     ro/da/fi/cs/hu/ca/fr/es/de/en) — the from-scratch stand-in for
     the reference's lingua detector
     (olmocr/filter/filter.py:101-105).  'unknown' over a wrong guess for
-    unprofiled languages.  The counts are JVM regex passes; the decision
-    is ``lang_from_counts``.  The oracle SQL is generated from the SAME
-    profile tables (lang_id_oracle_sql), so Spark and DuckDB cannot
-    drift."""
-    # Hit counting is ONE codegen'd JVM regex pass over lower(text)
-    # with the 390-stopword alternation, NOT a words-array lambda filter
-    # per profile: higher-order functions are interpreted, so
-    # per-profile list filters re-tokenized the document per profile
-    # and paid interpreter overhead per word (~10x the factored form at
-    # sf0.1; separate per-profile regex passes were still ~3.5x).  The
-    # pattern (_word_run_pattern) extracts exactly the tokens the
-    # oracle's split-on-[^a-z]+ / list_contains form counts.  It is a
-    # prefix trie because Java regex tries a flat alternation branch by
-    # branch at every word start: on a ~1.5 MB giant page (~200k words)
-    # the 390-branch list was ~80M branch attempts and most of the
-    # documents stage's CPU, the trie a few per word.  Per-profile
-    # counts then come from the matched-token array (one element per
-    # stopword occurrence), bound once per row by a single-element
-    # transform() (the Spark analog of the oracle SQL's list_transform
-    # factoring) and walked by one interpreted filter per profile.
-    pat = _word_run_pattern(w for _, ws in LATIN_PROFILES for w in ws)
-    matched = F.regexp_extract_all(F.lower(text), F.lit(pat), 0)
-    latin_hits = F.element_at(F.transform(F.array(matched), lambda m: F.array(*[
-        F.size(F.filter(m, lambda x: x.isin(ws))) for _, ws in LATIN_PROFILES])), 1)
-
-    # Script/marker cascade: 25 range densities + 9 marker checks (two
-    # regexes each) would be 43 full-document regex passes per row if
-    # run on ``text``.  Every profiled range sits above U+0370, so a
-    # range/marker count over text-with-ASCII-stripped equals the count
-    # over text — strip ASCII ONCE (one full pass) and run all 43 counts
-    # over what is a near-empty string for the Latin-script bulk of a
-    # web corpus.  The remainder and length(text) (the density
-    # denominator) are bound once per row, as one struct argument of a
-    # single-element transform(): referenced inside the lambda, an outer
-    # length(text) is re-evaluated, interpreted, in every branch.
-    def _cascade(s: Column) -> Column:
-        def chars_in(cls: str) -> Column:
-            return F.length(F.regexp_replace(s["na"], "[^%s]+" % cls, ""))
-
-        return lang_from_counts(
-            s["n"], latin_hits,
-            [chars_in("%s-%s" % (chr(lo), chr(hi)))
-             for _, lo, hi, _ in SCRIPT_PROFILES],
-            [chars_in("%s-%s" % (chr(lo), chr(hi)))
-             for _, lo, hi, _, _ in MARKER_PROFILES],
-            [chars_in(marks) for *_, marks in MARKER_PROFILES])
-
-    bound = F.struct(
-        F.length(text).alias("n"),
-        F.regexp_replace(text, "[\\x00-\\x7f]+", "").alias("na"))
-    return F.element_at(F.transform(F.array(bound), _cascade), 1)
+    unprofiled languages.  ``lang_from_counts`` over ``text_counts_col``
+    of the text.  The oracle SQL is generated from the SAME profile
+    tables (lang_id_oracle_sql), so Spark and DuckDB cannot drift."""
+    return lang_from_counts(F.length(text), text_counts_col(text))
 
 
 def lang_id_oracle_sql(text_expr: str = "text") -> str:
@@ -458,8 +375,8 @@ def lang_id_oracle_sql(text_expr: str = "text") -> str:
             " / length(%s) > %s then '%s'"
             % (text_expr, chr(lo), chr(hi), text_expr, thr, lang))
     # Same LAST-argmax form as the Spark side (the strictly-greater
-    # cascade is exactly the last argmax when the max is > 0 — proved
-    # in lang_id_col).  The old explicit-cascade SQL re-evaluated every
+    # cascade is exactly the last argmax when the max is > 0 — see
+    # lang_from_counts).  The old explicit-cascade SQL re-evaluated every
     # later profile's hit count per branch (O(k^2) list_filters, each
     # re-splitting the words) — quadratic death at 34 profiles.  The
     # two nested single-element list_transform lambdas factor ``words``
@@ -478,15 +395,16 @@ def lang_id_oracle_sql(text_expr: str = "text") -> str:
     return "\n".join(parts)
 
 
-def quality_from_counts(n: Column, alpha: Column, punct: Column,
-                        n_words: Column, stop_hits: Column) -> dict[str, Column]:
-    """The ratios and composite score of ``quality_cols`` from its counts
-    over a text of ``n`` chars (alpha-ratio guard semantics from
-    filter.py:91-99; the composite is a simple monotone blend used for
-    corpus filtering)."""
+def quality_from_counts(n: Column, counts: Column) -> dict[str, Column]:
+    """The ratios and composite score of ``quality_cols`` for a text of
+    ``n`` chars from its TEXT_COUNTS ``counts`` (alpha-ratio guard
+    semantics from filter.py:91-99; the composite is a simple monotone
+    blend used for corpus filtering)."""
+    alpha, n_words = counts[ALPHA], counts[WORDS]
     alpha_ratio = F.when(n > 0, alpha / n).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n > 0, punct / n).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_words > 0, stop_hits / n_words).otherwise(F.lit(0.0))
+    punct_ratio = F.when(n > 0, counts[PUNCT] / n).otherwise(F.lit(0.0))
+    stop_ratio = F.when(n_words > 0, counts[STOP_HITS] / n_words) \
+        .otherwise(F.lit(0.0))
     mean_word_len = F.when(n_words > 0, alpha / n_words).otherwise(F.lit(0.0))
     score = (
         F.least(n / F.lit(1000.0), F.lit(1.0)) * 0.2
@@ -500,13 +418,10 @@ def quality_from_counts(n: Column, alpha: Column, punct: Column,
 
 
 def quality_cols(text: Column) -> dict[str, Column]:
-    """Length/alpha/stopword/punct ratios + composite score: JVM regex
-    counts, decided by ``quality_from_counts``."""
+    """Length/alpha/stopword/punct ratios + composite score:
+    ``quality_from_counts`` over ``text_counts_col`` of the text."""
     n = F.length(text)
-    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]+", ""))
-    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]+", ""))
-    q = quality_from_counts(n, alpha, punct, _lower_count(text, "[a-zA-Z]+"),
-                            _lower_count(text, _word_run_pattern(EN_STOPWORDS)))
+    q = quality_from_counts(n, text_counts_col(text))
     return {
         "n_chars_calc": n, "alpha_ratio": q["alpha_ratio"],
         "digit_chars": F.length(F.regexp_replace(text, r"[^0-9]+", "")),
@@ -644,40 +559,31 @@ def gopher_rules_oracle_sql(text_expr: str = "text") -> dict[str, str]:
             "gopher_pass": " and ".join("(%s)" % v for v in rules.values())}
 
 
-def seo_spam_from_counts(hits: Column, total: Column) -> dict[str, Column]:
-    """SEO-spam ratio and verdict from the seo-word hits and the word
-    total (filter.py:35-62)."""
+def seo_spam_from_counts(n: Column, counts: Column) -> dict[str, Column]:
+    """SEO-spam hits, word total, ratio and verdict from TEXT_COUNTS
+    ``counts`` (filter.py:35-62).  The ratio is over words, so ``n``,
+    the text's length, is not read."""
+    hits, total = counts[SEO_HITS], counts[WORDS]
     ratio = F.when(total > 0, hits / total).otherwise(F.lit(0.0))
-    return {"seo_ratio": ratio, "is_spam": ratio > SPAM_THRESHOLD}
+    return {"seo_hits": hits, "word_total": total, "seo_ratio": ratio,
+            "is_spam": ratio > SPAM_THRESHOLD}
 
 
 def seo_spam_cols(text: Column) -> dict[str, Column]:
-    """SEO/download-spam ratio (filter.py:35-62): seo-word hits over words."""
-    hits = _lower_count(text, _word_run_pattern(SEO_WORDS))
-    total = _lower_count(text, "[a-zA-Z]+")
-    return {"seo_hits": hits, "word_total": total,
-            **seo_spam_from_counts(hits, total)}
+    """SEO/download-spam ratio (filter.py:35-62): seo-word hits over
+    words, ``seo_spam_from_counts`` over ``text_counts_col`` of the
+    text."""
+    return seo_spam_from_counts(F.length(text), text_counts_col(text))
 
 
 def decisions_from_counts(n: Column, counts: Column) -> dict[str, Column]:
-    """``lang_pred``, ``quality_score`` (unrounded) and ``is_spam`` from a
-    TEXT_COUNTS array (``text_counts``, or a document's sum of its
-    pages' arrays) over a text of ``n`` chars: what ``lang_id_col``,
-    ``quality_cols`` and ``seo_spam_cols`` give on the text itself,
-    through the same decision functions."""
-    def run(start: int, profiles) -> list[Column]:
-        return [counts[start + i] for i in range(len(profiles))]
-
-    return {
-        "lang_pred": lang_from_counts(
-            n, F.slice(counts, LATIN0 + 1, len(LATIN_PROFILES)),
-            run(SCRIPT0, SCRIPT_PROFILES), run(MARKER_RANGE0, MARKER_PROFILES),
-            run(MARKER0, MARKER_PROFILES)),
-        "quality_score": quality_from_counts(
-            n, counts[ALPHA], counts[PUNCT], counts[WORDS],
-            counts[STOP_HITS])["quality_score"],
-        "is_spam": seo_spam_from_counts(counts[SEO_HITS], counts[WORDS])["is_spam"],
-    }
+    """``lang_pred``, ``quality_score`` (unrounded) and ``is_spam`` of a
+    text of ``n`` chars from its TEXT_COUNTS ``counts`` (``text_counts``,
+    or a document's sum of its pages' arrays): what ``lang_id_col``,
+    ``quality_cols`` and ``seo_spam_cols`` give on the text itself."""
+    return {"lang_pred": lang_from_counts(n, counts),
+            "quality_score": quality_from_counts(n, counts)["quality_score"],
+            "is_spam": seo_spam_from_counts(n, counts)["is_spam"]}
 
 
 def seo_spam_oracle_sql(text_expr: str = "text") -> dict[str, str]:
@@ -789,14 +695,6 @@ def trailing_repeats_udf(max_ngram: int = 10):
         return s.map(lambda t: trailing_repeats(t or "", max_ngram))
 
     return F.pandas_udf(_batch, "int")
-
-
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents -> per-doc text analysis (all native columns)."""
-    t = F.col(text_col)
-    cols = {**token_count_cols(t), **quality_cols(t), **seo_spam_cols(t),
-            "lang_id": lang_id_col(t)}
-    return docs.select("doc_id", *[v.alias(k) for k, v in cols.items()])
 
 
 def repetition_stats(docs: DataFrame, text_col: str = "text",

@@ -70,7 +70,7 @@ def stage_documents(page_md: DataFrame) -> DataFrame:
     docs = assemble_documents(page_md)
     n = F.length("markdown")
     d = decisions_from_counts(n, F.col("counts"))
-    return docs.where(page_quality_keep(F.col("markdown"), is_spam=d["is_spam"])).select(
+    return docs.where(page_quality_keep(F.col("markdown"), d["is_spam"])).select(
         "url", "doc_id", "markdown", "page_spans", "n_pages",
         n.alias("n_chars"),
         d["lang_pred"].alias("lang_pred"),

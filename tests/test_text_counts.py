@@ -1,7 +1,8 @@
-"""The Python text counter (``textstats.text_counts``) against the JVM
-regex counts the Column gates use, field by field, and the decisions
-the documents stage takes from summed page counts against the gates
-themselves."""
+"""The Python text counter (``textstats.text_counts``) against the same
+counts taken with plain Spark forms (``lower``, ``split``, ``isin`` and
+regex character classes), field by field, so the counter keeps Spark's
+own case mapping and ``\\s``; and the decisions the documents stage takes
+from summed page counts against the gates on the joined text."""
 
 import ast
 import os
@@ -22,42 +23,46 @@ FIELDS = (["alpha", "punct", "words", "stop_hits", "seo_hits"]
           + ["marker_" + p[0] for p in TS.MARKER_PROFILES])
 
 
-def _jvm_counts(t):
-    """The TEXT_COUNTS layout as JVM regex counts, in the gates' forms:
-    ``_lower_count`` word runs, the trie-matched stopword array walked
-    per profile, and range/marker counts over the ASCII-stripped text."""
-    words = [w for _, ws in TS.LATIN_PROFILES for w in ws]
-    matched = F.regexp_extract_all(
-        F.lower(t), F.lit(TS._word_run_pattern(words)), 0)
+def _spark_counts(df):
+    """(i, text) -> (i, c): the TEXT_COUNTS layout in plain Spark forms.
+    Words are the non-empty pieces of split(lower(text), '[^a-z]+'),
+    list hits are isin over them, character classes are the length left
+    by regexp_replace; the range and marker classes run over the text
+    with ASCII removed (every profiled range is above U+0370)."""
+    t = F.col("text")
+    words = F.filter(F.split(F.lower(t), "[^a-z]+"), lambda w: F.length(w) > 0)
+    listed = sorted({w for _, ws in TS.LATIN_PROFILES for w in ws}
+                    | set(TS.EN_STOPWORDS) | set(TS.SEO_WORDS))
+    # one select per step: Spark keeps a projection apart when merging
+    # it would repeat a costly expression (the word array) per count
+    bound = df.select(
+        "i", "text", F.size(words).alias("n_words"),
+        F.filter(words, lambda w: w.isin(listed)).alias("m"),
+        F.regexp_replace(t, "[\\x00-\\x7f]+", "").alias("na"))
 
-    def fields(s):
-        def chars_in(cls):
-            return F.length(F.regexp_replace(s["na"], "[^%s]+" % cls, ""))
+    def hits(ws):
+        return F.size(F.filter(F.col("m"), lambda w: w.isin(ws)))
 
-        rng = ["%s-%s" % (chr(p[1]), chr(p[2])) for p in TS.SCRIPT_PROFILES]
-        mrng = ["%s-%s" % (chr(p[1]), chr(p[2])) for p in TS.MARKER_PROFILES]
-        return F.array(
-            F.length(F.regexp_replace(t, "[^A-Za-z]+", "")),
-            F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]+", "")),
-            TS._lower_count(t, "[a-zA-Z]+"),
-            TS._lower_count(t, TS._word_run_pattern(TS.EN_STOPWORDS)),
-            TS._lower_count(t, TS._word_run_pattern(TS.SEO_WORDS)),
-            *[F.size(F.filter(s["m"], lambda x: x.isin(ws)))
-              for _, ws in TS.LATIN_PROFILES],
-            *[chars_in(c) for c in rng + mrng],
-            *[chars_in(p[4]) for p in TS.MARKER_PROFILES])
+    def chars_in(c, cls):
+        return F.length(F.regexp_replace(c, "[^%s]+" % cls, ""))
 
-    bound = F.struct(matched.alias("m"),
-                     F.regexp_replace(t, "[\\x00-\\x7f]+", "").alias("na"))
-    return F.element_at(F.transform(F.array(bound), fields), 1)
+    na = F.col("na")
+    ranges = ["%s-%s" % (chr(p[1]), chr(p[2]))
+              for p in TS.SCRIPT_PROFILES + TS.MARKER_PROFILES]
+    return bound.select("i", F.array(
+        chars_in(t, "A-Za-z"),
+        F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]+", "")),
+        F.col("n_words"), hits(TS.EN_STOPWORDS), hits(TS.SEO_WORDS),
+        *[hits(ws) for _, ws in TS.LATIN_PROFILES],
+        *[chars_in(na, c) for c in ranges],
+        *[chars_in(na, p[4]) for p in TS.MARKER_PROFILES]).alias("c"))
 
 
 def _check_counts(spark, texts, what):
     assert len(FIELDS) == TS.TEXT_COUNTS
     df = spark.createDataFrame([(i, x) for i, x in enumerate(texts)],
                                "i int, text string")
-    got = {r["i"]: r["c"] for r in
-           df.select("i", _jvm_counts(F.col("text")).alias("c")).collect()}
+    got = {r["i"]: r["c"] for r in _spark_counts(df).collect()}
     assert len(got) == len(texts)
     for i, x in enumerate(texts):
         py = TS.text_counts(x)
@@ -164,7 +169,8 @@ def test_pipeline_decisions_match_gates_on_pdf_documents(spark):
     kernel's summed page counts, equal the Column gates over the
     assembled markdown of multi-page PDF documents (and of the rest)."""
     from deepseek_ocr_omnidocbench_spark.operators.assemble import assemble_documents
-    from deepseek_ocr_omnidocbench_spark.operators.filters import page_quality_keep
+    from deepseek_ocr_omnidocbench_spark.operators.filters import (
+        page_quality_keep, seo_spam_flag)
     from deepseek_ocr_omnidocbench_spark.plans.extract_pipeline import (
         run_pipeline_inline, stage_page_md)
 
@@ -183,5 +189,5 @@ def test_pipeline_decisions_match_gates_on_pdf_documents(spark):
     _decisions_match_gates(got)
     # the same documents survive the quality cut as under the text gates
     kept = assemble_documents(stage_page_md(pages)).where(
-        page_quality_keep(t)).count()
+        page_quality_keep(t, seo_spam_flag(t))).count()
     assert kept == len(got)

@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from deepseek_ocr_omnidocbench_spark.operators.textstats import (
-    analyze_documents,
     fingerprint_udf,
     lang_id_col,
     token_count_cols,
@@ -112,35 +111,35 @@ def test_lang_profiles_disjoint():
             seen[w] = lang
 
 
-def test_lang_id_single_regex_pass(spark):
-    """Hit counting must stay ONE combined-alternation regex pass over
-    the text: a per-profile regexp (34 passes) or per-profile lambda
-    filter over the words array (34 interpreted re-tokenizations) is
-    the measured 3.5x-10x regression the round-5 rewrite removed."""
-    df = spark.createDataFrame([("the and of to in is that",)], "text string")
-    plan = (df.select(lang_id_col(F.col("text")).alias("l"))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("regexp_extract_all") == 1, plan
-
-
-def test_word_counts_have_no_interpreted_word_filter(spark):
-    """quality_cols and seo_spam_cols count words and list hits with
-    codegen'd regex counts: a size(filter(split(...), lambda)) over the
-    word array is interpreted per element (~200k elements on a giant
-    page) and was most of the documents stage's CPU."""
+def test_gates_count_each_text_once(spark):
+    """lang_id_col, quality_cols and seo_spam_cols count their text with
+    one Python UDF (text_counts_col), and Spark evaluates it once for
+    all three over the same text: one ArrowEvalPython holding one UDF,
+    also in curation_pipeline, which mixes two of them with Column
+    gates over its coalesced text."""
+    from deepseek_ocr_omnidocbench_spark.operators.curation import (
+        curation_pipeline)
     from deepseek_ocr_omnidocbench_spark.operators.textstats import (
         quality_cols, seo_spam_cols)
 
-    df = spark.createDataFrame([("the free pdf and of",)], "text string")
-    for cols in (quality_cols(F.col("text")), seo_spam_cols(F.col("text"))):
-        plan = (df.select(*[v.alias(k) for k, v in cols.items()])
-                ._jdf.queryExecution().optimizedPlan().toString())
-        assert "lambdafunction" not in plan and "split(" not in plan, plan
+    df = spark.createDataFrame([(1, "the free pdf and of")],
+                               "doc_id int, text string")
+    t = F.col("text")
+    cols = {"lang": lang_id_col(t), **quality_cols(t), **seo_spam_cols(t)}
+    for out in (df.select(*[v.alias(k) for k, v in cols.items()]),
+                curation_pipeline(df)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        assert len(nodes) == 1, plan
+        assert nodes[0].count("pythonUDF") == 1, plan
+        out.collect()
 
 
-def test_lang_id_oracle_sql_matches_spark(spark):
-    """The generated DuckDB CASE must agree with lang_id_col on mixed
-    multilingual rows (the same-table guarantee, checked end to end)."""
+def test_lang_id_oracle_sql_matches_spark(spark, docs):
+    """The generated DuckDB CASE must agree with lang_id_col (the
+    same-table guarantee, checked end to end) on mixed multilingual
+    rows, the sf0.001 documents and the adversarial rows: NULL,
+    case-mapping and glued-stopword strings."""
     import duckdb
 
     from deepseek_ocr_omnidocbench_spark.operators.textstats import (
@@ -156,23 +155,17 @@ def test_lang_id_oracle_sql_matches_spark(spark):
         "안녕하세요 한국어", "это русский текст", "هذا نص عربي",
         "यह हिंदी है", "数据处理分布式系统", "", "zz qq xx",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = [r[0] for r in df.select(lang_id_col(F.col("text"))).collect()]
+    texts += [r["text"] for r in docs.select("text").collect()] + _ADVERSARIAL
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    got = [r[0] for r in df.orderBy("i").select(
+        lang_id_col(F.col("text"))).collect()]
     con = duckdb.connect()
-    con.execute("create table t(text varchar)")
-    con.executemany("insert into t values (?)", [(t,) for t in texts])
+    con.execute("create table t(i int, text varchar)")
+    con.executemany("insert into t values (?, ?)", list(enumerate(texts)))
     want = [r[0] for r in con.sql(
-        "select %s from t" % lang_id_oracle_sql("text")).fetchall()]
+        "select %s from t order by i" % lang_id_oracle_sql("text")).fetchall()]
     assert got == want
-
-
-def test_analyze_documents_ranges(docs):
-    out = analyze_documents(docs).collect()
-    assert len(out) == docs.count()
-    for r in out:
-        assert 0.0 <= r["alpha_ratio"] <= 1.0
-        assert 0.0 <= r["quality_score"] <= 1.1
-        assert r["ws_tokens"] >= 0
 
 
 def test_winnow_fingerprint_properties():
@@ -786,7 +779,8 @@ def _parity_frame(spark, docs):
 
 def test_quality_and_seo_match_word_array_forms(spark, docs):
     """quality_cols, seo_spam_cols, seo_spam_flag and page_quality_keep
-    give the cells the word-array forms gave, NULL text included."""
+    give the cells the word-array forms gave, NULL text included: NULL
+    counts, and the 'unknown' language of an empty text."""
     from deepseek_ocr_omnidocbench_spark.operators.filters import (
         page_quality_keep, runaway_generation, seo_spam_flag)
     from deepseek_ocr_omnidocbench_spark.operators.textstats import (
@@ -814,9 +808,11 @@ def test_quality_and_seo_match_word_array_forms(spark, docs):
     q, s = quality_cols(t), seo_spam_cols(t)
     got = {**{k: q[k] for k in ("alpha_ratio", "digit_chars", "punct_ratio",
                                 "stopword_ratio", "mean_word_len")},
-           **s, "flag": seo_spam_flag(t), "keep": page_quality_keep(t)}
+           **s, "flag": seo_spam_flag(t),
+           "keep": page_quality_keep(t, seo_spam_flag(t))}
     rows = _parity_frame(spark, docs).select(
-        "text", *[got[k].alias("g_" + k) for k in want],
+        "text", lang_id_col(t).alias("lang"),
+        *[got[k].alias("g_" + k) for k in want],
         *[v.alias("w_" + k) for k, v in want.items()]).collect()
     assert len(rows) > len(_ADVERSARIAL)
     for r in rows:
@@ -825,76 +821,10 @@ def test_quality_and_seo_match_word_array_forms(spark, docs):
     by_text = {r["text"]: r for r in rows}
     assert by_text[None]["g_seo_hits"] is None
     assert by_text[None]["g_word_total"] is None
+    assert by_text[None]["lang"] == by_text[""]["lang"] == "unknown"
     assert by_text["the1and2of"]["g_word_total"] == 3
     assert by_text["free-free_free"]["g_seo_hits"] == 3
     assert by_text["the" * 50]["g_word_total"] == 1
-
-
-def test_lang_id_trie_matches_flat_alternation(spark, docs):
-    """lang_id_col's prefix-trie stopword pattern extracts the same
-    tokens as the flat longest-first alternation it replaced, and
-    lang_id_col still agrees with the DuckDB oracle on the same rows."""
-    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
-        LATIN_PROFILES, _word_run_pattern, lang_id_oracle_sql)
-
-    words = sorted({w for _, ws in LATIN_PROFILES for w in ws},
-                   key=lambda w: (-len(w), w))
-    flat = "(?<![a-zA-Z])(?:%s)(?![a-zA-Z])" % "|".join(words)
-    low = F.lower(F.col("text"))
-    rows = _parity_frame(spark, docs).select(
-        "text", lang_id_col(F.col("text")).alias("lang"),
-        F.regexp_extract_all(low, F.lit(flat), 0).alias("flat"),
-        F.regexp_extract_all(low, F.lit(_word_run_pattern(words)), 0)
-        .alias("trie")).collect()
-    for r in rows:
-        assert r["trie"] == r["flat"], (r["text"] or "")[:80]
-    assert any(r["flat"] for r in rows)
-
-    con = duckdb.connect()
-    con.execute("create table t(i int, text varchar)")
-    con.executemany("insert into t values (?, ?)",
-                    [(i, r["text"]) for i, r in enumerate(rows)])
-    want = [x[0] for x in con.sql(
-        "select %s from t order by i" % lang_id_oracle_sql("text")).fetchall()]
-    assert [r["lang"] for r in rows] == want
-
-
-def test_word_run_pattern_is_the_word_set():
-    """Property (hypothesis, no Spark): the trie pattern full-matches a
-    letter run iff the run is in the word list, and counts in any text
-    exactly the ``[^a-zA-Z]+``-split tokens that are in the list."""
-    import re
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from deepseek_ocr_omnidocbench_spark.operators.textstats import (
-        EN_STOPWORDS, LATIN_PROFILES, SEO_WORDS, _word_run_pattern)
-
-    def check(words, probes, text):
-        pat = re.compile(_word_run_pattern(words))
-        for p in probes:
-            assert bool(pat.fullmatch(p)) == (p in words), (p, pat.pattern)
-        tokens = [w for w in re.split("[^a-zA-Z]+", text) if w]
-        assert len(pat.findall(text)) == sum(w in words for w in tokens)
-
-    word = st.text(alphabet="abcd", min_size=1, max_size=5)
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.sets(word, min_size=1, max_size=20), st.lists(word),
-           st.text(alphabet="abcdA1 -\u00e9", max_size=60))
-    def prop(words, probes, text):
-        check(words, probes + sorted(words), text)
-
-    prop()
-    lists = [ws for _, ws in LATIN_PROFILES] + [
-        EN_STOPWORDS, SEO_WORDS, [w for _, ws in LATIN_PROFILES for w in ws]]
-    every = sorted({w for ws in lists for w in ws})
-    for ws in lists:
-        words = set(ws)
-        probes = every + [w[:i] for w in ws for i in range(1, len(w))] + [
-            w + c for w in ws for c in "aesz"]
-        check(words, probes, " ".join(probes) + " " + "-".join(every))
 
 
 # Rows for the gate-mirror parity test: overlapping literal markers,
