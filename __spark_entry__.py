@@ -7963,7 +7963,7 @@ def q_crawl_traps(spark, sf_dir):
     """Crawl-trap detection over adversarial synthetic URLs: every 5th
     url repeats a path loop, every 7th walks a calendar space, every
     11th carries a session id, every 13th nests 9 segments deep —
-    flat array/string signal columns, no UDF (filters.crawl_trap_scan)."""
+    flat array/string signal columns, no UDF (filters.crawl_trap_cols)."""
     from deepseek_ocr_omnidocbench_spark.operators.filters import (
         crawl_trap_cols)
 
@@ -8360,7 +8360,7 @@ def q_sample_audit(spark, sf_dir):
     from s order by doc_id
 """)
 def q_host_features(spark, sf_dir):
-    """Host-name hygiene features (filters.host_feature_scan) over
+    """Host-name hygiene features (filters.host_feature_cols) over
     adversarial synthetic hosts: deep subdomain chains, punycode
     labels, raw-IP hosts, DGA-length labels, digit-heavy shop
     subdomains — integer-permille digit fractions keep every compare

@@ -79,7 +79,3 @@ def corpus_bleu(preds: list[str], refs: list[str], max_n: int = 4) -> float:
     for pred, ref in zip(preds, refs):
         sums = [a + b for a, b in zip(sums, bleu_stats(pred, ref, max_n))]
     return bleu_from_stats(sums, max_n)
-
-
-def sentence_bleu(pred: str, ref: str, max_n: int = 4) -> float:
-    return corpus_bleu([pred], [ref], max_n)

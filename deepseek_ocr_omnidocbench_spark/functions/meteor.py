@@ -61,8 +61,7 @@ def _count_chunks(matches: list[tuple[int, int]]) -> int:
     return chunks
 
 
-def sentence_meteor(pred: str, ref: str, alpha: float = ALPHA,
-                    beta: float = BETA, gamma: float = GAMMA) -> float:
+def sentence_meteor(pred: str, ref: str) -> float:
     hyp_t = tokenize_13a(pred)
     ref_t = tokenize_13a(ref)
     matches = _align_exact(hyp_t, ref_t)
@@ -71,8 +70,8 @@ def sentence_meteor(pred: str, ref: str, alpha: float = ALPHA,
         return 0.0
     precision = m / len(hyp_t)
     recall = m / len(ref_t)
-    fmean = (precision * recall) / (alpha * precision + (1 - alpha) * recall)
-    penalty = gamma * (_count_chunks(matches) / m) ** beta
+    fmean = (precision * recall) / (ALPHA * precision + (1 - ALPHA) * recall)
+    penalty = GAMMA * (_count_chunks(matches) / m) ** BETA
     return (1 - penalty) * fmean
 
 

@@ -1,11 +1,13 @@
-"""Normalization functions (SURVEY.md §2.4, N1-N12).
+"""Normalization functions (SURVEY.md §2.4, N1-N13).
 
-Each normalizer exists in two forms where possible:
-
-* a pure-Python function (used inside pandas UDFs and in pytest golden
-  tests) reproducing the reference semantics, cited per function;
-* a native Column expression builder (``*_col``) so Catalyst keeps the
-  cheap ones JVM-side (regexp_replace / translate chains — no Python).
+Pure-Python functions reproducing the reference semantics, cited per
+function; they run inside the evaluation's Python pass and in pytest
+golden tests.  Dehyphenation (N13) also has a native Column form,
+``dehyphenate_col``, so Catalyst keeps it JVM-side.  N9 (formula
+whitespace) is ``plans/recognition.recog_formula_normalize``.  N7
+(fullwidth to halfwidth), N8 (olmOCR ``normalize_text``), N10
+(``clean_formula``) and F12 (grounding-token cleanup) are not
+implemented: no pipeline stage applies them.
 
 Divergences from the reference are deliberate and documented:
 pylatexenc's LatexNodes2Text and the latexmlc subprocess are not in this
@@ -34,31 +36,6 @@ def clean_string(s: str) -> str:
     for lit in ("\\t", "\\n", "\t", "\n", "/t", "/n"):
         s = s.replace(lit, "")
     return _CLEAN_DROP.sub("", s)
-
-
-def clean_string_col(c: Column) -> Column:
-    for lit in ("\\\\t", "\\\\n", "\t", "\n", "/t", "/n"):
-        c = F.regexp_replace(c, F.lit(lit), F.lit(""))
-    # (?U): Java \w is ASCII-only by default; Python's is unicode-aware
-    return F.regexp_replace(c, F.lit(r"(?U)[^\w\u4e00-\u9fff]"), F.lit(""))
-
-
-# --------------------------------------------------------------------------
-# N7 fullwidth -> halfwidth — data_preprocess.py:26-37
-# U+3000 -> space; U+FF01..FF5E -> code-0xFEE0.
-# --------------------------------------------------------------------------
-
-_FW_SRC = "\u3000" + "".join(chr(c) for c in range(0xFF01, 0xFF5F))
-_FW_DST = " " + "".join(chr(c - 0xFEE0) for c in range(0xFF01, 0xFF5F))
-_FW_TABLE = str.maketrans(_FW_SRC, _FW_DST)
-
-
-def fullwidth_to_halfwidth(s: str) -> str:
-    return s.translate(_FW_TABLE)
-
-
-def fullwidth_to_halfwidth_col(c: Column) -> Column:
-    return F.translate(c, _FW_SRC, _FW_DST)
 
 
 # --------------------------------------------------------------------------
@@ -95,41 +72,6 @@ def md_preclean(s: str) -> str:
         s.replace("<html>", "").replace("</html>", "")
         .replace("<body>", "").replace("</body>", "")
     )
-
-
-# --------------------------------------------------------------------------
-# F12 grounding-token cleanup — DeepSeek-OCR-vllm/run_dpsk_ocr_eval_batch.py:70-79,154-156
-# Strip <|ref|>..<|/ref|><|det|>..<|/det|> blocks, squeeze blank lines,
-# drop <center> tags.  Pure Column chain.
-# --------------------------------------------------------------------------
-
-_GROUND_RE = re.compile(r"<\|ref\|>.*?<\|/ref\|><\|det\|>.*?<\|/det\|>", re.DOTALL)
-
-
-def strip_grounding(s: str) -> str:
-    s = _GROUND_RE.sub("", s)
-    s = s.replace("\n\n\n\n", "\n\n").replace("\n\n\n", "\n\n")
-    return s.replace("<center>", "").replace("</center>", "")
-
-
-def strip_grounding_col(c: Column) -> Column:
-    c = F.regexp_replace(c, F.lit(r"(?s)<\|ref\|>.*?<\|/ref\|><\|det\|>.*?<\|/det\|>"), F.lit(""))
-    c = F.regexp_replace(c, F.lit("\n{3,4}"), F.lit("\n\n"))
-    return F.regexp_replace(c, F.lit("</?center>"), F.lit(""))
-
-
-# --------------------------------------------------------------------------
-# N10 clean_formula — run_dpsk_ocr_eval_batch.py:53-68
-# drop \quad (...) annotations inside \[...\]; strip the body.
-# --------------------------------------------------------------------------
-
-
-def clean_formula(s: str) -> str:
-    def _proc(m: re.Match) -> str:
-        body = re.sub(r"\\quad\s*\([^)]*\)", "", m.group(1)).strip()
-        return r"\[" + body + r"\]"
-
-    return re.sub(r"\\\[(.*?)\\\]", _proc, s)
 
 
 # --------------------------------------------------------------------------
@@ -326,61 +268,6 @@ def normalized_table(text: str, fmt: str = "html") -> str:
     if fmt == "latex":
         return normalized_latex_table(text)
     raise ValueError("Invalid format: %s" % fmt)
-
-
-# --------------------------------------------------------------------------
-# N8 olmocr normalize_text — olmocr/olmocr/bench/tests.py:116-146
-# --------------------------------------------------------------------------
-
-_N8_REPL = {
-    "\u2018": "'", "\u2019": "'", "\u201a": "'", "\u201c": '"', "\u201d": '"',
-    "\u201e": '"', "\uff3f": "_", "\u2013": "-", "\u2014": "-", "\u2011": "-",
-    "\u2012": "-", "\u2212": "-", "\u00b5": "\u03bc",
-}
-
-
-def olmocr_normalize_text(s: str) -> str:
-    s = re.sub(r"<br/?>", " ", s)
-    s = re.sub(r"\s+", " ", s)
-    s = re.sub(r"\*\*(.*?)\*\*", r"\1", s)
-    s = re.sub(r"__(.*?)__", r"\1", s)
-    s = re.sub(r"</?b>", "", s)
-    s = re.sub(r"</?i>", "", s)
-    s = re.sub(r"\*(.*?)\*", r"\1", s)
-    s = re.sub(r"_(.*?)_", r"\1", s)
-    s = unicodedata.normalize("NFC", s)
-    for k, v in _N8_REPL.items():
-        s = s.replace(k, v)
-    return s
-
-
-def olmocr_normalize_text_col(c: Column) -> Column:
-    c = F.regexp_replace(c, F.lit("<br/?>"), F.lit(" "))
-    c = F.regexp_replace(c, F.lit(r"\s+"), F.lit(" "))
-    c = F.regexp_replace(c, F.lit(r"\*\*(.*?)\*\*"), F.lit("$1"))
-    c = F.regexp_replace(c, F.lit("__(.*?)__"), F.lit("$1"))
-    c = F.regexp_replace(c, F.lit("</?b>"), F.lit(""))
-    c = F.regexp_replace(c, F.lit("</?i>"), F.lit(""))
-    c = F.regexp_replace(c, F.lit(r"\*(.*?)\*"), F.lit("$1"))
-    c = F.regexp_replace(c, F.lit("_(.*?)_"), F.lit("$1"))
-    c = F.translate(c, "".join(_N8_REPL.keys()), "".join(_N8_REPL.values()))
-    return c
-
-
-# --------------------------------------------------------------------------
-# N9 formula whitespace normalizer — dataset/recog_dataset.py:148-163
-# iterated removal of whitespace at letter/non-letter boundaries.
-# --------------------------------------------------------------------------
-
-
-def normalize_formula_ws(s: str) -> str:
-    prev = None
-    while prev != s:
-        prev = s
-        s = re.sub(r"([^A-Za-z])\s+([A-Za-z])", r"\1\2", s)
-        s = re.sub(r"([A-Za-z])\s+([^A-Za-z])", r"\1\2", s)
-        s = re.sub(r"([^A-Za-z])\s+([^A-Za-z])", r"\1\2", s)
-    return s
 
 
 # --------------------------------------------------------------------------

@@ -11,8 +11,11 @@ kernel) are summed per document: every slot is additive across the
 page separator.
 
 Fallback-rate filtering (F8, pipeline.py:426-432): a document whose
-fallback-page fraction exceeds ``max_page_error_rate`` is dropped,
-mirroring the reference's per-doc guard.
+fraction of ``is_fallback`` pages exceeds ``MAX_PAGE_ERROR_RATE`` is
+dropped, mirroring the reference's per-doc guard.  The extraction
+kernel emits no ``is_fallback`` column, so in ``plans/extract_pipeline``
+every document has ``n_fallback_pages`` 0 and the cut drops nothing; a
+kernel failure is a NULL ``md`` that assembles as an empty page.
 """
 
 from __future__ import annotations
@@ -23,12 +26,10 @@ from pyspark.sql import functions as F
 from .textstats import TEXT_COUNTS
 
 PAGE_SEP = "\n"  # reference joins page texts with "\n" (pipeline.py:469)
+MAX_PAGE_ERROR_RATE = 0.004  # the reference's default (pipeline.py:426-432)
 
 
-def assemble_documents(pages_md: DataFrame, url_col: str = "url",
-                       page_col: str = "page", md_col: str = "md",
-                       fallback_col: str = "is_fallback",
-                       max_page_error_rate: float = 0.004) -> DataFrame:
+def assemble_documents(pages_md: DataFrame) -> DataFrame:
     """(url, page, md[, is_fallback][, counts]) -> one row per url:
 
     (url, doc_id, markdown, page_spans array<struct<start,end,page>>,
@@ -38,13 +39,12 @@ def assemble_documents(pages_md: DataFrame, url_col: str = "url",
 
     Single shuffle on url (window + groupBy share the partitioning).
     """
-    has_fallback = fallback_col in pages_md.columns
+    has_fallback = "is_fallback" in pages_md.columns
     has_counts = "counts" in pages_md.columns
     df = pages_md.select(
-        F.col(url_col).alias("url"),
-        F.col(page_col).alias("page"),
-        F.coalesce(F.col(md_col), F.lit("")).alias("md"),
-        (F.col(fallback_col).cast("int") if has_fallback else F.lit(0)).alias("fb"),
+        "url", "page",
+        F.coalesce(F.col("md"), F.lit("")).alias("md"),
+        (F.col("is_fallback").cast("int") if has_fallback else F.lit(0)).alias("fb"),
         *([F.col("counts")] if has_counts else []),
     )
     w = Window.partitionBy("url").orderBy("page")
@@ -79,18 +79,4 @@ def assemble_documents(pages_md: DataFrame, url_col: str = "url",
         .withColumn("doc_id", F.sha1(F.encode("markdown", "UTF-8")))
     )
     return docs.where(
-        (F.col("n_fallback_pages") / F.col("n_pages")) <= F.lit(max_page_error_rate))
-
-
-def spans_consistent(docs: DataFrame) -> DataFrame:
-    """Debug/validation view: every span must slice markdown back to the
-    page text length (end - start), and spans must tile the document."""
-    return docs.select(
-        "url",
-        F.forall(
-            "page_spans",
-            lambda s: (s["end"] >= s["start"]) & (s["end"] <= F.length("markdown")),
-        ).alias("spans_in_bounds"),
-        (F.element_at("page_spans", -1)["end"] == F.length("markdown")
-         ).alias("last_span_at_end"),
-    )
+        (F.col("n_fallback_pages") / F.col("n_pages")) <= F.lit(MAX_PAGE_ERROR_RATE))

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from .dedup import word_shingles
 
+KEEP_LANG = "en"  # the language curation_pipeline's ``lang`` gate keeps
+
 
 def ngram_contamination(corpus: DataFrame, benchmark: DataFrame,
                         text_col: str = "text", id_col: str = "doc_id",
@@ -108,12 +110,10 @@ def stratified_sample(docs: DataFrame, strata_col: str = "lang",
         else out.drop("_rank")
 
 
-def curation_pipeline(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      keep_lang: str = "en") -> DataFrame:
-    """FineWeb-style composite curation decision: run the per-row
-    quality gates in ONE pass over the scan and return, for every
-    document, each gate's verdict, the conjunction ``keep``, and a
+def curation_pipeline(docs: DataFrame) -> DataFrame:
+    """FineWeb-style composite curation decision over (doc_id, text):
+    run the per-row quality gates in ONE pass over the scan and return,
+    for every document, each gate's verdict, the conjunction ``keep``, and a
     ``reasons`` string naming every failed gate (comma-joined, fixed
     order) so a corpus report can explain drops.
 
@@ -122,7 +122,7 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text",
     - ``gopher``  — Gopher §A1.1 conjunction (textstats.gopher_rules_cols)
     - ``spam``    — SEO keyword-stuffing ratio (textstats.seo_spam_cols)
     - ``runaway`` — trailing n-gram repetition (filters.runaway_generation)
-    - ``lang``    — predicted language == ``keep_lang``
+    - ``lang``    — predicted language == ``KEEP_LANG``
                     (textstats.lang_id_col, not the table's lang column)
 
     Line-level C4 cleaning stays a separate operator (c4_clean): it
@@ -139,11 +139,11 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text",
 
     # NULL text must gate out with non-NULL verdicts (a poisoned row at
     # 10^12 scale must not leave NULL cells in the drop ledger)
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     g_gopher = gopher_rules_cols(text)["gopher_pass"]
     g_spam = ~seo_spam_cols(text)["is_spam"]
     g_runaway = ~runaway_generation(text)
-    g_lang = lang_id_col(text) == F.lit(keep_lang)
+    g_lang = lang_id_col(text) == F.lit(KEEP_LANG)
     gates = [("gopher", g_gopher), ("spam", g_spam),
              ("runaway", g_runaway), ("lang", g_lang)]
     keep = None
@@ -153,7 +153,7 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text",
         F.array(*[F.when(~g, F.lit(name)) for name, g in gates]),
         lambda x: x.isNotNull()))
     return docs.select(
-        id_col,
+        "doc_id",
         *[g.cast("int").alias("g_" + name) for name, g in gates],
         keep.cast("int").alias("keep"),
         reasons.alias("reasons"))

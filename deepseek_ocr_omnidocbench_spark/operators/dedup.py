@@ -1,11 +1,13 @@
 """Deduplication operators for the 100 TB training-data path.
 
-Exact (hash groupBy), MinHash+LSH (shingle -> minhash -> band ->
-bucket-join), SimHash, and n-gram Jaccard verification.  Design notes
+MinHash+LSH (shingle -> minhash -> band -> bucket-join), SimHash,
+n-gram Jaccard verification, substring/paragraph dedup and duplicate
+clusters.  Design notes
 for scale:
 
-* Exact dedup: one shuffle on the content hash; survivor = min doc_id
-  via window — no collect, no skew (hash keys are uniform).
+* Exact dedup is one groupBy on the content hash (query
+  ``exact_dedup_groups``): survivor = min doc_id — no collect, no skew
+  (hash keys are uniform).
 * MinHash signatures are pure Column/window expressions (posexplode +
   window leads -> flat min-aggregates — stays in codegen; one exchange
   shared by the window and the aggregation).  LSH bands unroll to flat
@@ -42,21 +44,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
                      lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]))
     return F.when(k <= 0, F.array_distinct(F.array(F.concat_ws(" ", words)))) \
         .otherwise(F.array_distinct(sh))
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """-> (doc_id, content_hash, group_size, is_canonical).
-
-    Survivor per hash group = lowest doc_id (deterministic); analog of
-    the reference's queue-population skip of already-seen paths
-    (olmocr/olmocr/work_queue.py:131-151, SURVEY O8)."""
-    w = Window.partitionBy("content_hash")
-    return (
-        docs.select(id_col, F.md5(F.col(text_col)).alias("content_hash"))
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("is_canonical", F.col(id_col) == F.min(id_col).over(w))
-    )
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -602,30 +589,6 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text",
             .select(id_col, "clean_text", "n_paras", "n_removed_paras"))
 
 
-def remove_duplicate_spans(docs: DataFrame, spans: DataFrame,
-                           text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Drop every word inside a duplicated span; adds ``clean_text``
-    (surviving words space-joined) and ``n_removed_words``.  The span
-    list per doc is small (merged maximal spans), so it rides in an
-    array column through one broadcast-friendly join; the word filter
-    is a native two-arg lambda — no UDF."""
-    sp = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
-    joined = docs.join(sp, id_col, "left")
-    words = F.coalesce(normalized_words(F.col(text_col)),
-                       F.array().cast("array<string>"))
-    in_span = lambda i: F.exists(  # noqa: E731
-        F.col("_spans"),
-        lambda s: (i >= s["span_start"]) & (i < s["span_end"]))
-    kept = F.when(F.col("_spans").isNull(), words).otherwise(
-        F.filter(words, lambda w, i: ~in_span(i)))
-    return (joined
-            .withColumn("clean_text", F.concat_ws(" ", kept))
-            .withColumn("n_removed_words", F.size(words) - F.size(kept))
-            .drop("_spans"))
-
-
 # ---- duplicate-cluster resolution (connected components) ---------------
 
 def connected_components(edges: DataFrame, a_col: str = "doc_a",
@@ -728,9 +691,9 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     """Resolve dup pairs into clusters over the full corpus ->
     (doc_id, cluster_id, is_survivor).  Docs in no pair are their own
     singleton cluster; the survivor is the minimum doc_id of each
-    component (the same min-id survivor rule as exact_dedup).  The
-    components table is tiny relative to the corpus (only docs that
-    appear in some pair), so the final join broadcasts at any scale
+    component (the same min-id survivor rule as the ``exact_dedup_groups``
+    query).  The components table is tiny relative to the corpus (only
+    docs that appear in some pair), so the final join broadcasts at any scale
     where dups are a minority."""
     cc = connected_components(pairs, a_col, b_col, max_iters)
     out = (docs.select(id_col)

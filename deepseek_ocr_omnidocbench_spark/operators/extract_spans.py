@@ -7,20 +7,14 @@ display-formula extraction + delimiter normalization (extract.py:201-256),
 pipe-table -> HTML conversion (utils/table_utils.py:76-239), code blocks
 (extract.py:282-296) and paragraph split (extract.py:335-382).
 
-Spark surface: ``spans_udf`` — an Arrow-batched pandas UDF returning
-``array<struct>`` which callers ``explode`` into a spans table.  The
-parser itself is pure Python string scanning: Arrow batching across rows
-is the vectorization; there is no per-row JVM round trip.
+The parser is pure Python string scanning; it runs per page inside the
+evaluation's match pass (``eval_harness.match_page``) and the md2md
+plan, so it has no Spark surface of its own.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Optional
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.normalize import md_preclean
 
@@ -279,60 +273,3 @@ def md_tex_filter(content: str) -> list[dict]:
                           "content": text, "fine_category_type": "text_block"})
 
     return sorted(spans, key=lambda x: x["position"][0])
-
-
-# ---- Spark surface --------------------------------------------------------
-
-SPAN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("category_type", T.StringType()),
-            T.StructField("pos_start", T.LongType()),
-            T.StructField("pos_end", T.LongType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("fine_category_type", T.StringType()),
-            T.StructField("language", T.StringType()),
-        ]
-    )
-)
-
-
-def _spans_of(md: Optional[str]) -> Optional[list]:
-    if md is None:
-        return None
-    return [
-        (
-            d["category_type"],
-            int(d["position"][0]),
-            int(d["position"][1]),
-            d["content"],
-            d.get("fine_category_type"),
-            d.get("language"),
-        )
-        for d in md_tex_filter(md)
-    ]
-
-
-def _spans_batch(md: pd.Series) -> pd.Series:
-    return md.map(_spans_of)
-
-
-def spans_udf():
-    """Arrow-batched UDF (built lazily: pandas_udf needs a live session)."""
-    return F.pandas_udf(_spans_batch, SPAN_TYPE)
-
-
-def parse_spans(df, md_col: str = "md", id_col: str = "img_id"):
-    """pages-of-markdown -> exploded spans DataFrame (one row per element)."""
-    return (
-        df.select(id_col, F.explode(spans_udf()(F.col(md_col))).alias("span"))
-        .select(
-            id_col,
-            F.col("span.category_type").alias("category_type"),
-            F.col("span.pos_start").alias("pos_start"),
-            F.col("span.pos_end").alias("pos_end"),
-            F.col("span.content").alias("content"),
-            F.col("span.fine_category_type").alias("fine_category_type"),
-            F.col("span.language").alias("language"),
-        )
-    )

@@ -1,5 +1,11 @@
 """Document/page filters (SURVEY §2.2 F3-F9) — the olmocr pre-extraction
-and post-extraction guards, re-expressed as Column predicates.
+and post-extraction guards, re-expressed as Column predicates: F3
+form-PDF drop, F4 language keep and F9 runaway generation, then the
+crawl-frontier layers (canonical URLs, PII, URL hygiene, revisions,
+meta robots, soft 404s, crawl traps, host features).  The F5 SEO-spam
+verdict is ``textstats.seo_spam_cols`` and the F8 fallback-rate cut sits
+in ``assemble.assemble_documents``.  F6 (the alpha-ratio "likely
+scanned" guard) is not implemented: no pipeline routes pages to OCR.
 
 All predicates are native expressions except the PDF form-field sniff
 (regex over binary needs a decode; still a Column chain).  Each filter
@@ -7,8 +13,7 @@ returns a boolean Column so pipelines compose them with plain
 ``.where`` — Catalyst pushes them into the scan where possible.
 
 References: olmocr/olmocr/filter/filter.py (form fields :29-33, language
-:101-105, SEO spam :35-62, alpha ratio :91-99), pipeline.py:426-432
-(fallback rate), generate_ocr_outputs.py:552-558 (repeat skip).
+:101-105), generate_ocr_outputs.py:552-558 (repeat skip).
 """
 
 from __future__ import annotations
@@ -19,9 +24,9 @@ from operator import add
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import seo_spam_cols, substr_count, substr_count_oracle_sql
+from .textstats import substr_count, substr_count_oracle_sql
 
-MAX_PAGE_ERROR_RATE = 0.004
+RUNAWAY_MAX_REPEATS = 30  # the bench BaselineTest's cap (tests.py:905-918)
 
 
 def is_form_pdf(blob: Column) -> Column:
@@ -43,48 +48,28 @@ def language_keep(lang: Column, keep=("en", None)) -> Column:
     return c
 
 
-def seo_spam_flag(text: Column) -> Column:
-    """F5: seo-word hit ratio above threshold -> spam (filter.py:35-62)."""
-    return seo_spam_cols(text)["is_spam"]
-
-
-def likely_scanned(text: Column) -> Column:
-    """F6: short or low-alpha extracted text -> likely a scanned page
-    that needs the OCR path (filter.py:91-99)."""
-    n = F.length(text)
-    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z ]", ""))
-    return (n < 200) | (F.when(n > 0, alpha / n).otherwise(F.lit(0.0)) < 0.5)
-
-
-def fallback_rate_keep(n_fallback: Column, n_pages: Column,
-                       max_rate: float = MAX_PAGE_ERROR_RATE) -> Column:
-    """F8: drop documents whose fallback-page fraction exceeds the cap
-    (pipeline.py:426-432)."""
-    return (n_fallback / n_pages) <= F.lit(max_rate)
-
-
-def runaway_generation(text: Column, max_repeats: int = 30) -> Column:
+def runaway_generation(text: Column) -> Column:
     """F9/R2: trailing n-gram repetition beyond the cap marks runaway
     output (generate_ocr_outputs.py:552-558 drops pages missing EOS; the
-    bench BaselineTest caps trailing repeats at 30, tests.py:905-918).
+    bench BaselineTest caps trailing repeats at ``RUNAWAY_MAX_REPEATS``).
 
     Native approximation of the RepeatDetector for gram=1..3: compare the
     tail against itself shifted by the gram size.  The last
-    ``3 * max_repeats + 3`` chars are sliced once and bound with
+    ``3 * RUNAWAY_MAX_REPEATS + 3`` chars are sliced once and bound with
     length(text) as one struct argument of a single-element transform():
     a negative-position substring walks the whole string, and six of
     them over a megabyte document were six walks."""
     def check(s: Column) -> Column:
         out = None
         for g in (1, 2, 3):
-            span = g * max_repeats
+            span = g * RUNAWAY_MAX_REPEATS
             same = (F.substring(s["tail"], -span, span)
                     == F.substring(s["tail"], -(span + g), span))
             c = (s["n"] >= span + g) & same
             out = c if out is None else (out | c)
         return out
 
-    w = 3 * max_repeats + 3
+    w = 3 * RUNAWAY_MAX_REPEATS + 3
     bound = F.struct(F.length(text).alias("n"),
                      F.substring(text, -w, w).alias("tail"))
     return F.element_at(F.transform(F.array(bound), check), 1)
@@ -92,8 +77,8 @@ def runaway_generation(text: Column, max_repeats: int = 30) -> Column:
 
 def page_quality_keep(text: Column, is_spam: Column) -> Column:
     """Composite pre-train keep-predicate: not spam, not runaway.
-    ``is_spam`` is the text's SEO-spam verdict (``seo_spam_flag``, or
-    the documents stage's, decided from its page counts)."""
+    ``is_spam`` is the text's SEO-spam verdict (``seo_spam_cols``'
+    ``is_spam``, or the documents stage's, decided from its page counts)."""
     return ~is_spam & ~runaway_generation(text)
 
 
@@ -135,7 +120,7 @@ def canonical_url(url: Column) -> Column:
 
 def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """URL-level exact dedup on the canonical form: one shuffle on the
-    canonical key, min-url survivor (the analog of exact_dedup for the
+    canonical key, min-url survivor (the analog of content-hash exact dedup for the
     crawl frontier — dedupe BEFORE fetching/extracting at 100 TB)."""
     from pyspark.sql import Window
 
@@ -728,11 +713,6 @@ def crawl_trap_cols(url: Column) -> dict[str, Column]:
     }
 
 
-def crawl_trap_scan(urls: DataFrame, url_col: str = "url") -> DataFrame:
-    cols = crawl_trap_cols(F.col(url_col))
-    return urls.select(url_col, *[v.alias(k) for k, v in cols.items()])
-
-
 # ---- host-name hygiene features ------------------------------------------
 
 def host_feature_cols(url: Column) -> dict[str, Column]:
@@ -770,8 +750,3 @@ def host_feature_cols(url: Column) -> dict[str, Column]:
         "host_suspect": (is_ip | puny | (n_sub >= 4) | long_label
                          | (n_digits * 1000 > hl * 300)),
     }
-
-
-def host_feature_scan(urls: DataFrame, url_col: str = "url") -> DataFrame:
-    cols = host_feature_cols(F.col(url_col))
-    return urls.select(url_col, *[v.alias(k) for k, v in cols.items()])

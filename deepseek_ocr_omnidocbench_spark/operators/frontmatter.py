@@ -11,7 +11,9 @@ a 10^12-row job.
 
 The subset YAML understood here is the flat ``key: value`` map the
 model emits (the only form the reference produces); no external yaml lib
-is needed.
+is needed.  The reference's per-page retry ladder (R5,
+pipeline.py:251-375: re-ask with a hotter temperature and the corrected
+rotation) is not here: no pipeline calls a model, so nothing retries.
 """
 
 from __future__ import annotations
@@ -108,66 +110,3 @@ def parse_responses(df, md_col: str = "md"):
         F.col("resp.natural_text").alias("natural_text"),
         F.col("resp.valid").alias("response_valid"),
     ).drop("resp")
-
-
-# ---------------------------------------------------------------------------
-# R5: retry ladder (pipeline.py:251-375) as declarative work-queue columns
-
-TEMPERATURE_BY_ATTEMPT = [0.1, 0.1, 0.2, 0.3, 0.5, 0.8, 0.9, 1.0]
-
-
-def _temperature_for(attempt_col):
-    """TEMPERATURE_BY_ATTEMPT[min(attempt, last)] as a Column cascade."""
-    last = len(TEMPERATURE_BY_ATTEMPT) - 1
-    expr = F.lit(TEMPERATURE_BY_ATTEMPT[last])
-    for i in range(last - 1, -1, -1):
-        expr = F.when(attempt_col <= i, F.lit(TEMPERATURE_BY_ATTEMPT[i])) \
-            .otherwise(expr)
-    return expr
-
-
-def retry_plan(parsed, max_retries: int = 8, attempt_col: str = "attempt",
-               rotation_col: str = "cumulative_rotation"):
-    """Split parsed responses into (done, retry, failed) — the Spark
-    re-expression of the reference's per-page retry loop
-    (olmocr/olmocr/pipeline.py:259-375): instead of a worker looping on
-    one page, each iteration is one batch round and the 'loop state'
-    (attempt count, temperature, cumulative rotation) travels as
-    columns.
-
-    - done:   valid responses with a valid rotation
-    - retry:  invalid parse or rotation feedback, attempts remaining —
-      attempt+1, next ladder temperature, rotation advanced by
-      (cumulative + correction) % 360 when the model asked for it
-    - failed: attempts exhausted — callers emit the reference's
-      fallback response (empty text, rotation reset; pipeline.py:363-374)
-
-    ``parsed`` needs the parse_responses columns; missing attempt /
-    rotation columns default to 0 (first round).
-    """
-    df = parsed
-    if attempt_col not in df.columns:
-        df = df.withColumn(attempt_col, F.lit(0))
-    if rotation_col not in df.columns:
-        df = df.withColumn(rotation_col, F.lit(0))
-
-    ok = F.col("response_valid") & F.coalesce(F.col("is_rotation_valid"),
-                                              F.lit(False))
-    exhausted = F.col(attempt_col) >= max_retries - 1
-
-    done = df.where(ok)
-    retry = (
-        df.where(~ok & ~exhausted)
-        .withColumn(rotation_col,
-                    F.when(F.col("response_valid")
-                           & ~F.coalesce(F.col("is_rotation_valid"), F.lit(True)),
-                           (F.col(rotation_col)
-                            + F.coalesce(F.col("rotation_correction"), F.lit(0)))
-                           % 360)
-                    .otherwise(F.col(rotation_col)))
-        .withColumn(attempt_col, F.col(attempt_col) + 1)
-        # attempt already advanced above, so the ladder indexes on it
-        .withColumn("temperature", _temperature_for(F.col(attempt_col)))
-    )
-    failed = df.where(~ok & exhausted)
-    return done, retry, failed

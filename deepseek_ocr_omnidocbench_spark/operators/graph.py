@@ -350,16 +350,6 @@ def degree_distribution(edges: DataFrame, src_col: str = "src",
     return out[0].unionByName(out[1])
 
 
-def host_link_stats(ranks: DataFrame, docs: DataFrame,
-                    host_col: str = "host",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Join host ranks back onto documents (the curation read path):
-    every doc gets its host's rank — a broadcast join at any scale,
-    since the rank table is host-cardinality."""
-    r = ranks.withColumnRenamed("node", host_col)
-    return docs.join(F.broadcast(r), host_col, "left")
-
-
 def extract_links(pages: DataFrame, html_col: str = "html_text",
                   url_col: str = "url") -> DataFrame:
     """Out-link extraction -> (src_url, dst_url, anchor_text): the step

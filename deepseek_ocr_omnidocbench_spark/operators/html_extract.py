@@ -63,9 +63,6 @@ NOISE_CLASS_RE = re.compile(
 LINK_DENSITY_MAX = 0.5       # blocks denser than this are boilerplate...
 LINK_DENSITY_MIN_TEXT = 200  # ...unless they carry this much text
 VOID_TAGS = frozenset("br hr img meta link input area base col embed source track wbr".split())
-BLOCK_TAGS = frozenset(
-    "p div section article main h1 h2 h3 h4 h5 h6 ul ol li table thead tbody tr pre blockquote figure header footer".split()
-)
 
 
 class Node:
@@ -465,7 +462,6 @@ def order_children(node: Node) -> None:
 
 
 _WS_RUN_RE = re.compile(r"[ \t\r\f\v]+")
-_WS_OTHER = ("\t", "\r", "\f", "\v", "  ")
 
 
 def _inline_text(node) -> str:

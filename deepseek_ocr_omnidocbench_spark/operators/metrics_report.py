@@ -304,40 +304,6 @@ def page_split_report(scored: DataFrame, page_attrs: DataFrame) -> DataFrame:
     return _view("page_split", scored, page_attrs)
 
 
-def cdm_export(scored: DataFrame) -> DataFrame:
-    """CDM_plain (metrics 2/cal_metric.py:318-337): the reference's CDM
-    entry exports cleaned formula pairs for an external CDM evaluator
-    rather than scoring in-process.  Same cleanup as columns:
-    strip $$ wrappers and ```latex fences, sequential ids."""
-    from pyspark.sql import Window
-
-    formulas = scored.filter(F.col("element_class") == "display_formula")
-    clean = lambda c: F.trim(F.regexp_replace(  # noqa: E731
-        F.regexp_replace(c, r"^\$\$+", ""), r"\$\$+$", ""))
-    pred_body = F.regexp_extract(
-        F.coalesce(F.col("pred"), F.lit("")),
-        r"(?s)(?:```latex)?([^`]*)(?:```)?", 1)
-    w = Window.orderBy("img_id", "pred_position")
-    return (
-        formulas.withColumn("_seq", F.row_number().over(w) - 1)
-        .select(
-            F.col("img_id").alias("img_name"),
-            clean(F.coalesce(F.col("gt"), F.lit(""))).alias("gt"),
-            clean(pred_body).alias("pred"),
-            F.col("_seq").cast("string").alias("img_id"),
-        )
-    )
-
-
-def write_cdm_export(scored: DataFrame, path: str) -> None:
-    """Driver-side JSON sink (S10 scale: one small file per run)."""
-    import json
-
-    rows = [r.asDict() for r in cdm_export(scored).collect()]
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(rows, f, indent=4, ensure_ascii=False)
-
-
 def overall_score(edit_report_rows: list, teds_row) -> Optional[float]:
     """((1-text_ED)*100 + (1-formula_ED)*100 + TEDS*100)/3 (A10)."""
     by_class = {r["element_class"]: r for r in edit_report_rows}

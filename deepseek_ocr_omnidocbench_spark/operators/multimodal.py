@@ -9,7 +9,14 @@ tested here; the pixel work (PIL decode/resize, pdf rasterize) has no
 library in this container, so it is stubbed behind
 ``NotImplementedError`` with a deterministic fake used by tests — the
 Spark-side plumbing (schema, batch shape, mapInPandas signature,
-partitioning) is real.
+partitioning) is real.  The media jobs (``tile_media``,
+``sample_frames``, ``chunk_audio``) wait for those libraries; no query
+calls them yet.
+
+Live paths: ``sniff_image_header`` (width/height from container headers,
+no pixel decode) feeds ``pdf_extract.pdf_image_report`` and
+``pdf_image_placements``; the perceptual hashes back the image dedup
+queries and ``streaming.ingest.stream_image_dedup``.
 
 Image rows: (media_id string, kind string, data binary,
 meta map<string,string> with width/height as strings).
@@ -315,45 +322,6 @@ def sniff_image_header(data: bytes | None) -> tuple[str, int, int] | None:
     except (struct.error, IndexError):
         return None
     return None
-
-
-def probe_image_headers(media: DataFrame,
-                        data_col: str = "data") -> DataFrame:
-    """Annotate media rows with (img_format, width, height, n_tiles)
-    from pure header parsing — one Arrow-batched pass, no shuffle; the
-    tiling-grid count composes with count_tiles so downstream crop
-    planning runs without any pixel decode."""
-    out_schema = T.StructType(list(media.schema.fields) + [
-        T.StructField("img_format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_tiles", T.IntegerType()),
-    ])
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, ts = [], [], [], []
-            for raw in pdf[data_col]:
-                got = sniff_image_header(raw)
-                if got is None:
-                    fmts.append(None), ws.append(None), hs.append(None)
-                    ts.append(None)
-                else:
-                    f, w, h = got
-                    fmts.append(f), ws.append(w), hs.append(h)
-                    if w and h:
-                        cols, rows_ = count_tiles(w, h)
-                        ts.append(cols * rows_)
-                    else:
-                        ts.append(None)
-            pdf = pdf.copy()
-            pdf["img_format"] = fmts
-            pdf["width"] = pd.array(ws, dtype="Int32")
-            pdf["height"] = pd.array(hs, dtype="Int32")
-            pdf["n_tiles"] = pd.array(ts, dtype="Int32")
-            yield pdf
-
-    return media.mapInPandas(_gen, out_schema)
 
 
 # ---- PDF image placements over a pages table -----------------------------

@@ -667,16 +667,3 @@ def pdf_image_report(data: Optional[bytes], merge: bool = True) -> Optional[list
         pages.append(_merge_placements(placed) if merge else placed)
         page_no += 1
     return pages
-
-
-def image_anchors(data: Optional[bytes]) -> Optional[list[str]]:
-    """Per-page anchor strings in the reference's exact shape —
-    ``[Image x0xy0 to x1xy1]`` per merged placement (anchor.py:270)."""
-    report = pdf_image_report(data)
-    if report is None:
-        return None
-    return [
-        "\n".join("[Image %.0fx%.0f to %.0fx%.0f]"
-                  % (p["x0"], p["y0"], p["x1"], p["y1"]) for p in page)
-        for page in report
-    ]

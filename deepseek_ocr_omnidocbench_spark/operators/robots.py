@@ -184,21 +184,6 @@ def parse_sitemaps(sitemaps: DataFrame, xml_col: str = "xml",
     return out.where(F.length("loc") > 0)
 
 
-def sitemap_index_children(sitemaps: DataFrame,
-                           xml_col: str = "xml",
-                           host_col: str = "host") -> DataFrame:
-    """Sitemap-index XML -> (host, child_loc): the recursion edge a
-    frontier scheduler follows to fetch nested sitemaps."""
-    block = F.regexp_extract_all(
-        F.col(xml_col), F.lit(r"(?s)<sitemap>(.*?)</sitemap>"), 1)
-    loc = F.regexp_extract(F.col("_entry"), r"<loc>\s*(.*?)\s*</loc>", 1)
-    return (sitemaps
-            .select(F.col(host_col).alias("host"),
-                    F.explode(block).alias("_entry"))
-            .select("host", loc.alias("child_loc"))
-            .where(F.length("child_loc") > 0))
-
-
 def politeness_schedule(frontier: DataFrame, host_col: str = "host",
                         priority_col: str = "priority",
                         url_col: str = "url",

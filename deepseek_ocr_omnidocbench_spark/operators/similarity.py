@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (task brief §extras).
 
-Brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
-(random hyperplane / SRP) variant as the scale path.  Dot products are
+Brute-force cosine top-k as the exact baseline, IVF and PQ as the
+scale paths, and random-hyperplane (SRP) bands bucketing the
+near-duplicate join (``embedding_near_dups_srp``).  Dot products are
 ``zip_with`` + ``aggregate`` Column expressions — no Python in the inner
 loop; the broadcast of the (small) query set keeps the big side
 shuffle-free.
@@ -103,27 +104,6 @@ def deterministic_planes(dim: int, n_planes: int, seed: int = 13) -> list[list[f
             row.append(math.sin(h))  # deterministic, roughly uniform sign
         planes.append(row)
     return planes
-
-
-def knn_lsh(embeddings: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-            n_planes: int = 6, id_col: str = "vec_id",
-            vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: SRP bucket join then exact cosine within bucket.
-
-    At 10^12 scale the bucket key bounds the join fan-out; recall is
-    tuned by n_planes (fewer planes -> bigger buckets -> higher recall)."""
-    planes = deterministic_planes(dim, n_planes)
-    c = embeddings.withColumn("bucket", srp_signature(F.col(vec_col), planes))
-    q = (queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-         .withColumn("bucket", srp_signature(F.col("qvec"), planes)))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"),
-                cosine_sim(F.col("qvec"), F.col(vec_col)).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
@@ -408,7 +388,7 @@ def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding",
     q_i = clamp(round(x_i / scale), -127, 127).  A float32 embedding
     column shrinks 4x — at 10^12-vector ANN scale that is the
     difference between an index that fits executor memory and one that
-    spills; recall loss is checked by ``quantization_error``.
+    spills; the ``quantized_recall`` query measures the recall loss.
 
     Pure Columns (transform/array_max), no shuffle, no UDF; zero
     vectors quantize to zeros with scale 0."""
@@ -420,20 +400,6 @@ def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding",
                              F.lit(127.0)).cast("int"))) \
         .otherwise(F.transform(v, lambda x: F.lit(0)))
     return embeddings.withColumn("scale", scale).withColumn("qvec", qvec)
-
-
-def quantization_error(embeddings: DataFrame, vec_col: str = "embedding",
-                       id_col: str = "vec_id") -> DataFrame:
-    """Per-vector cosine between the original embedding and its
-    dequantized int8 form — the recall-risk audit run before swapping
-    the ANN index to quantized storage."""
-    q = quantize_embeddings(embeddings, vec_col=vec_col, id_col=id_col)
-    dv = F.transform(F.col("qvec"),
-                     lambda x: x.cast("double") * F.col("scale"))
-    return q.select(
-        id_col,
-        F.round("scale", 6).alias("scale"),
-        F.round(cosine_sim(F.col(vec_col), dv), 6).alias("cos_q"))
 
 
 # ---- Product quantization (Jégou et al. 2011, "PQ for NN search") ------

@@ -16,14 +16,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def poly2bbox(poly: Column) -> Column:
-    """8-float polygon -> [x0, y0, x1, y1] (ocr_utils.py:170-178)."""
-    xs = F.array(poly[0], poly[2], poly[4], poly[6])
-    ys = F.array(poly[1], poly[3], poly[5], poly[7])
-    return F.array(F.array_min(xs), F.array_min(ys),
-                   F.array_max(xs), F.array_max(ys))
-
-
 def _overlap_area(a: Column, b: Column) -> Column:
     """Intersection area of two [x0,y0,x1,y1] bboxes."""
     w = F.greatest(

@@ -250,8 +250,8 @@ def _truncate_tree(root: _TNode, max_nodes: int) -> _TNode:
     return walk(root)
 
 
-def teds_score(pred_html: str, gt_html: str, structure_only: bool = False,
-               max_nodes: int = TEDS_MAX_NODES) -> float:
+def teds_score(pred_html: str, gt_html: str,
+               structure_only: bool = False) -> float:
     """1 - dist/max(descendant counts); 0 when either side lacks a table
     (cal_metric.py:49-58 sets errors to 0).
 
@@ -266,10 +266,10 @@ def teds_score(pred_html: str, gt_html: str, structure_only: bool = False,
         return 0.0
     n_pred = len(_postorder(t_pred)[0])
     n_gt = len(_postorder(t_gt)[0])
-    if n_pred > max_nodes:
-        t_pred = _truncate_tree(t_pred, max_nodes)
-    if n_gt > max_nodes:
-        t_gt = _truncate_tree(t_gt, max_nodes)
+    if n_pred > TEDS_MAX_NODES:
+        t_pred = _truncate_tree(t_pred, TEDS_MAX_NODES)
+    if n_gt > TEDS_MAX_NODES:
+        t_gt = _truncate_tree(t_gt, TEDS_MAX_NODES)
     dist = tree_edit_distance(t_pred, t_gt, structure_only)
     denom = max(n_pred - 1, n_gt - 1)  # UNtruncated sizes, sans root
     return 1.0 - dist / denom if denom > 0 else 0.0

@@ -22,7 +22,6 @@ olmocr/olmocr/repeatdetect.py:8-46).
 
 from __future__ import annotations
 
-import inspect
 import re
 from collections import Counter
 from functools import reduce
@@ -454,14 +453,18 @@ def quality_oracle_sql(text_expr: str = "text") -> dict[str, str]:
     }
 
 
-def gopher_rules_cols(text: Column,
-                      min_words: int = 50, max_words: int = 100_000,
-                      min_mean_word_len: float = 3.0,
-                      max_mean_word_len: float = 10.0,
-                      max_symbol_word_ratio: float = 0.1,
-                      max_bullet_line_ratio: float = 0.9,
-                      min_alpha_word_ratio: float = 0.8,
-                      min_stop_hits: int = 2) -> dict[str, Column]:
+# Gopher thresholds (Rae et al. 2021, §A1.1)
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_WORD_RATIO = 0.1
+GOPHER_MAX_BULLET_LINE_RATIO = 0.9
+GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
+GOPHER_MIN_STOP_HITS = 2
+
+
+def gopher_rules_cols(text: Column) -> dict[str, Column]:
     """Gopher-style document quality rules (Rae et al. 2021, §A1.1) as
     pure Columns — the standard repetition-free webtext gate applied by
     most public corpus pipelines.  Each rule is its own boolean column
@@ -494,13 +497,14 @@ def gopher_rules_cols(text: Column,
                                 lambda w: F.lower(w).isin(EN_STOPWORDS)))
 
     rules = {
-        "r_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "r_mean_word_len": (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len),
-        "r_symbol_ratio": symbol_ratio <= max_symbol_word_ratio,
-        "r_bullet_ratio": bullet_ratio <= max_bullet_line_ratio,
-        "r_alpha_words": alpha_word_ratio >= min_alpha_word_ratio,
-        "r_stopwords": stop_hits >= min_stop_hits,
+        "r_word_count": (n_words >= GOPHER_MIN_WORDS)
+        & (n_words <= GOPHER_MAX_WORDS),
+        "r_mean_word_len": (mean_wl >= GOPHER_MIN_MEAN_WORD_LEN)
+        & (mean_wl <= GOPHER_MAX_MEAN_WORD_LEN),
+        "r_symbol_ratio": symbol_ratio <= GOPHER_MAX_SYMBOL_WORD_RATIO,
+        "r_bullet_ratio": bullet_ratio <= GOPHER_MAX_BULLET_LINE_RATIO,
+        "r_alpha_words": alpha_word_ratio >= GOPHER_MIN_ALPHA_WORD_RATIO,
+        "r_stopwords": stop_hits >= GOPHER_MIN_STOP_HITS,
     }
     gopher_pass = None
     for c in rules.values():
@@ -513,10 +517,7 @@ def gopher_rules_cols(text: Column,
 
 
 def gopher_rules_oracle_sql(text_expr: str = "text") -> dict[str, str]:
-    """DuckDB mirror of ``gopher_rules_cols`` at its default thresholds."""
-    th = {k: p.default for k, p in
-          inspect.signature(gopher_rules_cols).parameters.items()
-          if p.default is not p.empty}
+    """DuckDB mirror of ``gopher_rules_cols``, from the same thresholds."""
     t = text_expr
     words = r"list_filter(string_split_regex(%s, '\s+'), x -> len(x) > 0)" % t
     lines = (r"list_filter(string_split_regex(%s, '\n'),"
@@ -539,17 +540,17 @@ def gopher_rules_oracle_sql(text_expr: str = "text") -> dict[str, str]:
         words, _sql_list(EN_STOPWORDS))
     rules = {
         "r_word_count": "%s >= %r and %s <= %r" % (
-            n, th["min_words"], n, th["max_words"]),
+            n, GOPHER_MIN_WORDS, n, GOPHER_MAX_WORDS),
         "r_mean_word_len": "%s >= %r and %s <= %r" % (
-            mean_wl, th["min_mean_word_len"], mean_wl,
-            th["max_mean_word_len"]),
+            mean_wl, GOPHER_MIN_MEAN_WORD_LEN, mean_wl,
+            GOPHER_MAX_MEAN_WORD_LEN),
         "r_symbol_ratio": "%s <= %r" % (symbol_ratio,
-                                        th["max_symbol_word_ratio"]),
+                                        GOPHER_MAX_SYMBOL_WORD_RATIO),
         "r_bullet_ratio": "%s <= %r" % (bullet_ratio,
-                                        th["max_bullet_line_ratio"]),
+                                        GOPHER_MAX_BULLET_LINE_RATIO),
         "r_alpha_words": "%s >= %r" % (alpha_ratio,
-                                       th["min_alpha_word_ratio"]),
-        "r_stopwords": "%s >= %r" % (stop_hits, th["min_stop_hits"]),
+                                       GOPHER_MIN_ALPHA_WORD_RATIO),
+        "r_stopwords": "%s >= %r" % (stop_hits, GOPHER_MIN_STOP_HITS),
     }
     return {"n_words": n, "mean_word_len": mean_wl,
             "symbol_word_ratio": symbol_ratio,
@@ -688,13 +689,6 @@ def trailing_repeats(text: str, max_ngram: int = 10) -> int:
             pos -= g
         best = max(best, count)
     return best
-
-
-def trailing_repeats_udf(max_ngram: int = 10):
-    def _batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: trailing_repeats(t or "", max_ngram))
-
-    return F.pandas_udf(_batch, "int")
 
 
 def repetition_stats(docs: DataFrame, text_col: str = "text",

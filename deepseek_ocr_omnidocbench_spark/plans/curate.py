@@ -40,13 +40,14 @@ from ..operators.textstats import pack_documents
 from ..sources.lineage import StageCheckpoint
 
 
-def stage_gated(docs: DataFrame, text_col: str = "markdown",
-                keep_lang: str = "en") -> DataFrame:
+JACCARD_THRESHOLD = 0.5  # verified MinHash jaccard that marks a near-dup
+
+
+def stage_gated(docs: DataFrame) -> DataFrame:
     """Composite quality gates + canonical-URL materialization (the
     next stage buckets on the canonical form, so it must exist at the
     stage boundary)."""
-    verdicts = curation_pipeline(docs.withColumnRenamed(text_col, "text"),
-                                 keep_lang=keep_lang)
+    verdicts = curation_pipeline(docs.withColumnRenamed("markdown", "text"))
     return (docs.join(verdicts.select("doc_id", "keep", "reasons"), "doc_id")
             .where(F.col("keep") == 1)
             .drop("keep", "reasons")
@@ -66,29 +67,24 @@ def stage_url_unique(docs: DataFrame) -> DataFrame:
             .drop("_min_url", "canonical_url"))
 
 
-def stage_survivors(docs: DataFrame, text_col: str = "markdown",
-                    jaccard_threshold: float = 0.5) -> DataFrame:
-    pairs = (lsh_candidate_pairs(docs, text_col=text_col)
-             .where(F.col("jaccard") >= jaccard_threshold))
+def stage_survivors(docs: DataFrame) -> DataFrame:
+    pairs = (lsh_candidate_pairs(docs, text_col="markdown")
+             .where(F.col("jaccard") >= JACCARD_THRESHOLD))
     clusters = dedup_clusters(docs, pairs)
     return (docs.join(clusters.where(F.col("is_survivor") == 1)
                       .select("doc_id", "cluster_id"), "doc_id"))
 
 
-def stage_packed(docs: DataFrame, text_col: str = "markdown",
-                 budget: int = 2048,
-                 lang_col: str = "lang_pred") -> DataFrame:
+def stage_packed(docs: DataFrame, budget: int = 2048) -> DataFrame:
     counted = docs.withColumn(
-        "grp", F.coalesce(F.col(lang_col), F.lit("unknown")))
-    return pack_documents(counted.withColumnRenamed(text_col, "text"),
+        "grp", F.coalesce(F.col("lang_pred"), F.lit("unknown")))
+    return pack_documents(counted.withColumnRenamed("markdown", "text"),
                           budget=budget, group_col="grp")
 
 
 def run_curation(spark: SparkSession, docs: DataFrame,
                  checkpoint_root: str, n_buckets: int = 16,
-                 text_col: str = "markdown", keep_lang: str = "en",
-                 jaccard_threshold: float = 0.5,
-                 budget: int = 2048, lang_col: str = "lang_pred") -> DataFrame:
+                 budget: int = 2048) -> DataFrame:
     """Checkpointed end-to-end curation; restart-safe per stage bucket.
 
     Note the ONE intentional deviation from bucket-local semantics:
@@ -98,41 +94,25 @@ def run_curation(spark: SparkSession, docs: DataFrame,
     still records counts/bytes/elapsed for the whole stage.
     """
     ck = StageCheckpoint(spark, checkpoint_root, n_buckets=n_buckets)
-    gated = ck.run_stage(
-        "gated", docs,
-        lambda df: stage_gated(df, text_col=text_col, keep_lang=keep_lang))
+    gated = ck.run_stage("gated", docs, stage_gated)
     # url dedup buckets on the CANONICAL url so every canonical group is
     # bucket-local and per-bucket resume stays correct
     ck_url = StageCheckpoint(spark, checkpoint_root, n_buckets=n_buckets,
                              key_col="canonical_url")
     uniq = ck_url.run_stage("url_unique", gated, stage_url_unique)
-    surv = ck.run_stage(
-        "survivors", uniq,
-        lambda df: stage_survivors(df, text_col=text_col,
-                                   jaccard_threshold=jaccard_threshold),
-        cross_bucket=True)
+    surv = ck.run_stage("survivors", uniq, stage_survivors, cross_bucket=True)
     return ck.run_stage(
-        "packed", surv,
-        lambda df: stage_packed(df, text_col=text_col, budget=budget,
-                                lang_col=lang_col),
+        "packed", surv, lambda df: stage_packed(df, budget=budget),
         cross_bucket=True)
 
 
-def run_curation_inline(docs: DataFrame, text_col: str = "markdown",
-                        keep_lang: str = "en",
-                        jaccard_threshold: float = 0.5,
-                        budget: int = 2048,
-                        lang_col: str = "lang_pred") -> DataFrame:
+def run_curation_inline(docs: DataFrame, budget: int = 2048) -> DataFrame:
     """Same dataflow without checkpoints (benchmarks, small runs).
 
     The url-unique frame feeds three consumers (pair generation, the
     survivor join, packing); one lazy localCheckpoint materializes it
     once — the in-memory analog of the parquet stage boundary the
     checkpointed ``run_curation`` gets for free."""
-    gated = stage_gated(docs, text_col=text_col, keep_lang=keep_lang)
+    gated = stage_gated(docs)
     uniq = stage_url_unique(gated).localCheckpoint(eager=False)
-
-    surv = stage_survivors(uniq, text_col=text_col,
-                           jaccard_threshold=jaccard_threshold)
-    return stage_packed(surv, text_col=text_col, budget=budget,
-                        lang_col=lang_col)
+    return stage_packed(stage_survivors(uniq), budget=budget)

@@ -14,8 +14,11 @@ assembly -> Dolma sink) as three Spark stages:
                        without it; see the html_extract docstring).
                        The kernel also counts each page's TEXT_COUNTS
                        (textstats.text_counts) in the same Python pass
-  stage ``documents``  window-offset span assembly (A14) + F8 fallback
-                       cut; per-url sums of the page counts give
+  stage ``documents``  window-offset span assembly (A14); the F8
+                       fallback cut of ``assemble_documents`` reads
+                       ``is_fallback``, which the kernel does not emit,
+                       so ``n_fallback_pages`` is always 0 here and the
+                       cut drops nothing; per-url sums of the page counts give
                        lang_pred, quality_score and the SEO-spam cut
                        (textstats.decisions_from_counts) with no JVM
                        regex pass over the markdown; the runaway cut

@@ -103,3 +103,8 @@ class IcebergStageCheckpoint(StageCheckpoint):
 
     def read_stage(self, stage: str) -> DataFrame:
         return self.spark.table(f"{self.namespace}.{stage}").drop("_bucket")
+
+    def lineage(self) -> DataFrame:
+        # the parquet class reads lineage files under ``root``; here the
+        # rows live in the namespace's lineage table
+        return self.spark.table(f"{self.namespace}.lineage")

@@ -64,7 +64,7 @@ def _paragraph(rng: random.Random, n_sent=(2, 5)) -> str:
 def _cjk_paragraph(rng: random.Random) -> str:
     n = rng.randint(30, 90)
     s = "".join(rng.choice(_CJK_CHARS) for _ in range(n))
-    # sprinkle fullwidth punctuation/digits to exercise the N7 fold
+    # sprinkle fullwidth punctuation/digits, as real CJK pages carry them
     return s + "\uff0c\uff11\uff12\uff13\uff01"
 
 

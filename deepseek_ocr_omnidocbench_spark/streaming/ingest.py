@@ -71,8 +71,9 @@ def stream_dedup(spark: SparkSession, input_dir: str, output_dir: str,
                  checkpoint_dir: str, watermark: str = "1 hour",
                  available_now: bool = True):
     """Streaming exact dedup: keep the first arrival per content hash
-    within the watermark horizon (the streaming analog of exact_dedup's
-    groupBy).  Uses ``dropDuplicatesWithinWatermark`` — plain
+    within the watermark horizon (the streaming analog of the
+    ``exact_dedup_groups`` query's groupBy).  Uses
+    ``dropDuplicatesWithinWatermark`` — plain
     ``dropDuplicates(["content_hash"])`` would ignore the watermark for
     state eviction (the event-time column isn't in the subset) and keep
     every hash forever, unbounded on a continuous crawl; the
@@ -246,8 +247,7 @@ def stream_domain_counters(spark: SparkSession, input_dir: str,
 
 
 def stream_curate(spark: SparkSession, input_dir: str, output_dir: str,
-                  checkpoint_dir: str, keep_lang: str = "en",
-                  available_now: bool = True):
+                  checkpoint_dir: str, available_now: bool = True):
     """Continuous curation: extract each micro-batch, run the composite
     quality gates (curation_pipeline — stateless Columns, so streaming
     composition is free), and append only kept docs plus a per-batch
@@ -265,9 +265,7 @@ def stream_curate(spark: SparkSession, input_dir: str, output_dir: str,
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         docs = run_pipeline_inline(batch_df).withColumn(
             "doc_id", F.xxhash64("url"))
-        verdicts = curation_pipeline(
-            docs.withColumnRenamed("markdown", "text"),
-            keep_lang=keep_lang)
+        verdicts = curation_pipeline(docs.withColumnRenamed("markdown", "text"))
         annotated = (docs.join(verdicts.select("doc_id", "keep", "reasons"),
                                "doc_id")
                      .withColumn("batch_id", F.lit(batch_id)))

@@ -1,10 +1,8 @@
 """Document assembly: span offsets, ordering, fallback cut (A14/F8)."""
 
-from pyspark.sql import functions as F
-
 from deepseek_ocr_omnidocbench_spark.operators.assemble import (
+    MAX_PAGE_ERROR_RATE,
     assemble_documents,
-    spans_consistent,
 )
 
 
@@ -35,18 +33,24 @@ def test_doc_id_is_sha1_of_markdown(spark):
 
 
 def test_fallback_rate_cut(spark):
-    rows = [("bad", p, "x", p < 2) for p in range(4)]   # 50% fallback
+    at_cap = round(1 / MAX_PAGE_ERROR_RATE)             # 1 fallback page in 250
+    rows = [("bad", p, "x", p == 0) for p in range(4)]   # 25% fallback
     rows += [("good", p, "x", False) for p in range(4)]
-    out = assemble_documents(make_pages(spark, rows), max_page_error_rate=0.25)
+    rows += [("at_cap", p, "x", p == 0) for p in range(at_cap)]
+    out = assemble_documents(make_pages(spark, rows))
     urls = {r["url"] for r in out.collect()}
-    assert urls == {"good"}
+    assert urls == {"good", "at_cap"}
 
 
-def test_spans_consistent_view(spark):
+def test_spans_tile_the_markdown(spark):
     rows = [("u", p, "page %d content" % p, False) for p in range(5)]
-    docs = assemble_documents(make_pages(spark, rows))
-    chk = spans_consistent(docs).collect()[0]
-    assert chk["spans_in_bounds"] and chk["last_span_at_end"]
+    d = assemble_documents(make_pages(spark, rows)).collect()[0]
+    n = len(d["markdown"])
+    spans = [(s["start"], s["end"]) for s in d["page_spans"]]
+    assert all(0 <= s <= e <= n for s, e in spans)
+    assert spans[0][0] == 0 and spans[-1][1] == n
+    # consecutive spans are separated by exactly the page separator
+    assert all(b[0] == a[1] + 1 for a, b in zip(spans, spans[1:]))
 
 
 def test_empty_pages_still_assemble(spark):

@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from deepseek_ocr_omnidocbench_spark.operators.dedup import (
-    exact_dedup,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
@@ -18,19 +17,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-def test_exact_dedup_matches_duckdb(docs):
-    got = exact_dedup(docs)
-    n_canonical = got.where("is_canonical").count()
-    want = duckdb.sql(
-        f"select count(distinct md5(text)) from read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchone()[0]
-    assert n_canonical == want
-    # every group has exactly one canonical row
-    per_group = got.groupBy("content_hash").agg(
-        F.sum(F.col("is_canonical").cast("int")).alias("n")).collect()
-    assert all(r["n"] == 1 for r in per_group)
 
 
 def test_word_shingles(spark):
@@ -46,10 +32,6 @@ def test_selfdup_found_by_all_detectors(spark, docs):
     dup = docs.limit(1).withColumn("doc_id", F.lit(999_999).cast("long"))
     both = docs.unionByName(dup)
     orig_id = docs.limit(1).collect()[0]["doc_id"]
-
-    ex = exact_dedup(both)
-    grp = ex.where(F.col("doc_id").isin([orig_id, 999_999])).collect()
-    assert all(r["group_size"] >= 2 for r in grp)
 
     lsh = lsh_candidate_pairs(both).where(
         (F.col("doc_a") == orig_id) & (F.col("doc_b") == 999_999)).collect()

@@ -107,30 +107,6 @@ def test_perturbed_scores_degrade(spark):
     assert any(r["attribute"] == "ALL" for r in res["page_split"])
 
 
-def test_cdm_export_shape(spark, tmp_path):
-    """CDM_plain export (cal_metric.py:318-337): cleaned formula pairs,
-    sequential string ids, original page kept as img_name."""
-    import json
-
-    from deepseek_ocr_omnidocbench_spark.operators.eval_harness import match_elements
-    from deepseek_ocr_omnidocbench_spark.operators.metrics_report import (
-        arbitrate_tables,
-        score_samples,
-        write_cdm_export,
-    )
-    from deepseek_ocr_omnidocbench_spark.plans.evaluate import fixture_frames
-
-    gt, _pages, preds = fixture_frames(spark, 8, seed=4, perturb=1.0)
-    scored = score_samples(arbitrate_tables(match_elements(gt, preds)))
-    path = str(tmp_path / "formulas.json")
-    write_cdm_export(scored, path)
-    rows = json.load(open(path))
-    assert rows
-    assert [r["img_id"] for r in rows] == [str(i) for i in range(len(rows))]
-    assert all(not r["gt"].startswith("$$") for r in rows)
-    assert all(r["img_name"].startswith("synth_page_") for r in rows)
-
-
 def test_quick_beats_simple_on_truncated_blocks(spark):
     """simple_match has no truncation merge, so GT blocks split across
     pred paragraphs score > 0 even at perturb=0; quick_match merges them

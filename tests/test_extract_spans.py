@@ -125,14 +125,9 @@ def test_section_macros_unwrapped():
     assert spans[0]["content"] == "Intro"
 
 
-def test_spark_parse_spans(spark):
-    from deepseek_ocr_omnidocbench_spark.operators.extract_spans import parse_spans
-
-    df = spark.createDataFrame(
-        [("p1", "Hello.\n\n$$x=1$$\n\n<table><tr><td>c</td></tr></table>")],
-        ["img_id", "md"])
-    rows = parse_spans(df).collect()
-    got = {r["category_type"] for r in rows}
+def test_span_positions_and_categories():
+    spans = md_tex_filter(
+        "Hello.\n\n$$x=1$$\n\n<table><tr><td>c</td></tr></table>")
+    got = {s["category_type"] for s in spans}
     assert got == {"text_all", "equation_isolated", "html_table"}
-    assert all(r["img_id"] == "p1" for r in rows)
-    assert all(r["pos_end"] > r["pos_start"] for r in rows)
+    assert all(s["position"][1] > s["position"][0] for s in spans)

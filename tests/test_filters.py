@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from deepseek_ocr_omnidocbench_spark.operators import filters as FL
+from deepseek_ocr_omnidocbench_spark.operators.textstats import seo_spam_cols
 
 
 def col_eval(spark, col, rows, schema):
@@ -28,25 +29,9 @@ def test_language_keep(spark):
 def test_seo_spam_flag(spark):
     spam = " ".join(["download free ebook pdf"] * 30)
     ham = "a thoughtful essay about distributed systems " * 30
-    got = col_eval(spark, FL.seo_spam_flag(F.col("t")), [(spam,), (ham,)], ["t"])
+    got = col_eval(spark, seo_spam_cols(F.col("t"))["is_spam"],
+                   [(spam,), (ham,)], ["t"])
     assert got == [True, False]
-
-
-def test_likely_scanned(spark):
-    short = "tiny"
-    low_alpha = ("0123456789 " * 40)
-    normal = ("this page has plenty of alphabetic words in it " * 10)
-    got = col_eval(spark, FL.likely_scanned(F.col("t")),
-                   [(short,), (low_alpha,), (normal,)], ["t"])
-    assert got == [True, True, False]
-
-
-def test_fallback_rate_keep(spark):
-    rows = [(0, 100), (1, 100), (5, 100)]
-    got = col_eval(spark, FL.fallback_rate_keep(F.col("fb"), F.col("n"),
-                                                max_rate=0.01),
-                   rows, ["fb", "n"])
-    assert got == [True, True, False]
 
 
 def test_runaway_generation(spark):
@@ -334,10 +319,14 @@ def test_soft404_scan(spark):
     assert out[6].is_soft404 is False
 
 
-def test_crawl_trap_scan(spark):
-    from deepseek_ocr_omnidocbench_spark.operators.filters import (
-        crawl_trap_scan)
+def _url_scan(spark, rows, cols_of):
+    urls = spark.createDataFrame(rows, ["url"])
+    cols = cols_of(F.col("url"))
+    return {r.url: r for r in urls.select(
+        "url", *[v.alias(k) for k, v in cols.items()]).collect()}
 
+
+def test_crawl_trap_scan(spark):
     rows = [
         ("https://a.com/x/y/z",),                     # clean
         ("https://a.com/a/b/a/b/a/c",),               # repeating loop
@@ -345,8 +334,7 @@ def test_crawl_trap_scan(spark):
         ("https://a.com/p?PHPSESSID=deadbeef",),      # session id
         ("https://a.com/" + "/".join("abcdefghij"),),  # depth 10
     ]
-    out = {r.url: r for r in crawl_trap_scan(
-        spark.createDataFrame(rows, ["url"])).collect()}
+    out = _url_scan(spark, rows, FL.crawl_trap_cols)
     assert out[rows[0][0]].is_trap is False
     loop = out[rows[1][0]]
     assert loop.n_dup_segments == 3 and loop.is_trap is True
@@ -358,9 +346,6 @@ def test_crawl_trap_scan(spark):
 
 
 def test_host_feature_scan(spark):
-    from deepseek_ocr_omnidocbench_spark.operators.filters import (
-        host_feature_scan)
-
     rows = [
         ("https://www.example.com/x",),
         ("https://a.b.c.d.example.com/x",),       # 4 subdomains
@@ -369,8 +354,7 @@ def test_host_feature_scan(spark):
         ("https://abcdefghijklmnopqrstuvwxyz123.example.com/x",),
         ("https://shop123456.example.com/x",),    # digits < 30%
     ]
-    out = {r.url: r for r in host_feature_scan(
-        spark.createDataFrame(rows, ["url"])).collect()}
+    out = _url_scan(spark, rows, FL.host_feature_cols)
     # url_host strips www. -> plain registrable pair
     assert out[rows[0][0]].host_suspect is False
     assert out[rows[1][0]].n_subdomains == 4

@@ -60,71 +60,3 @@ def test_spark_parse_responses(spark):
     assert rows["a"]["response_valid"] and rows["a"]["rotation_correction"] == 0
     assert not rows["b"]["response_valid"]
     assert rows["b"]["natural_text"] == "plain text"
-
-
-def test_retry_plan_ladder(spark):
-    """R5 retry ladder: done/retry/failed routing, temperature schedule,
-    cumulative rotation advance (pipeline.py:259-375 semantics)."""
-    from deepseek_ocr_omnidocbench_spark.operators.frontmatter import (
-        TEMPERATURE_BY_ATTEMPT,
-        retry_plan,
-    )
-
-    rows = [
-        # url, valid, rotation_valid, correction, attempt, cum_rot
-        ("ok", True, True, 0, 0, 0),
-        ("rot", True, False, 90, 0, 0),       # rotation feedback
-        ("rot2", True, False, 270, 2, 90),    # cumulative wraps mod 360
-        ("bad", False, None, None, 1, 0),     # parse failure
-        ("dead", False, None, None, 7, 0),    # attempts exhausted
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, response_valid boolean, is_rotation_valid boolean, "
-              "rotation_correction int, attempt int, cumulative_rotation int")
-    done, retry, failed = retry_plan(df, max_retries=8)
-    assert [r["url"] for r in done.collect()] == ["ok"]
-    got = {r["url"]: r for r in retry.collect()}
-    assert set(got) == {"rot", "rot2", "bad"}
-    assert got["rot"]["cumulative_rotation"] == 90
-    assert got["rot"]["attempt"] == 1
-    assert got["rot"]["temperature"] == TEMPERATURE_BY_ATTEMPT[1]
-    assert got["rot2"]["cumulative_rotation"] == 0  # (90+270) % 360
-    assert got["rot2"]["temperature"] == TEMPERATURE_BY_ATTEMPT[3]
-    assert got["bad"]["cumulative_rotation"] == 0  # no feedback on parse fail
-    assert [r["url"] for r in failed.collect()] == ["dead"]
-
-
-def test_retry_plan_converges_with_fake_responder(spark):
-    """Drive the ladder to a fixed point with a deterministic fake
-    responder: pages answer invalid-rotation until the cumulative
-    rotation reaches their true skew, then produce a valid response."""
-    from pyspark.sql import functions as F
-
-    from deepseek_ocr_omnidocbench_spark.operators.frontmatter import retry_plan
-
-    true_skew = {"a": 0, "b": 90, "c": 180}
-    pages = spark.createDataFrame([(u,) for u in true_skew], "url string")
-
-    def respond(batch):
-        # fake model: valid iff current rotation matches the skew;
-        # otherwise asks for +90 more
-        return batch.select(
-            "url", "attempt", "cumulative_rotation",
-            F.lit(True).alias("response_valid"),
-            (F.col("cumulative_rotation")
-             == F.udf(lambda u: true_skew[u], "int")("url")).alias("is_rotation_valid"),
-            F.lit(90).alias("rotation_correction"),
-        )
-
-    work = pages.withColumn("attempt", F.lit(0)) \
-        .withColumn("cumulative_rotation", F.lit(0))
-    finished = []
-    for _ in range(8):
-        if not work.take(1):
-            break
-        done, retry, failed = retry_plan(respond(work), max_retries=8)
-        finished.extend(done.collect())
-        assert failed.count() == 0
-        work = retry.select("url", "attempt", "cumulative_rotation")
-    got = {r["url"]: r["cumulative_rotation"] for r in finished}
-    assert got == true_skew

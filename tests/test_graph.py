@@ -5,10 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from deepseek_ocr_omnidocbench_spark.operators.graph import (
-    host_link_stats,
-    pagerank,
-)
+from deepseek_ocr_omnidocbench_spark.operators.graph import pagerank
 
 
 def _dense_pagerank(edges, iters=10, d=0.85):
@@ -61,16 +58,6 @@ class TestPagerank:
         for k in want:
             assert got[k] == pytest.approx(want[k], abs=1e-9)
         assert sum(got.values()) == pytest.approx(1.0)
-
-    def test_join_back_to_docs(self, spark):
-        ranks = spark.createDataFrame([("a.com", 0.7), ("b.com", 0.3)],
-                                      "node string, rank double")
-        docs = spark.createDataFrame(
-            [(1, "a.com"), (2, "b.com"), (3, "c.com")],
-            "doc_id long, host string")
-        out = {r["doc_id"]: r["rank"]
-               for r in host_link_stats(ranks, docs).collect()}
-        assert out == {1: 0.7, 2: 0.3, 3: None}
 
 
 def test_extract_links_and_host_edges(spark):

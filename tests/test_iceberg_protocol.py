@@ -99,6 +99,22 @@ class FakeDF:
     def writeTo(self, table):
         return FakeWriter(self.cat, table, self)
 
+    def groupBy(self, *keys):
+        return FakeGrouped(self, keys)
+
+
+class FakeGrouped:
+    def __init__(self, df, keys):
+        self.df, self.keys = df, keys
+
+    def agg(self, *aggs):
+        groups = {}
+        for r in self.df.rows:
+            groups.setdefault(tuple(r[k] for k in self.keys), []).append(r)
+        return self.df._derive([
+            {**dict(zip(self.keys, key)), **{a.name: a.fn(rows) for a in aggs}}
+            for key, rows in groups.items()])
+
 
 class FakeSpark:
     def __init__(self, cat):
@@ -163,6 +179,11 @@ class _Expr:
 class _Agg(_Expr):
     """An aggregate: ``fn(rows) -> value``."""
 
+    def __truediv__(self, other):
+        # SQL semantics: x / 0 is NULL
+        return _Agg(lambda rows: self.fn(rows) / other.fn(rows)
+                    if other.fn(rows) else None)
+
 
 def _fake_env(monkeypatch, n_buckets=4):
     """Wire the fakes through the F.* and Observation uses of both the
@@ -194,8 +215,15 @@ def _fake_env(monkeypatch, n_buckets=4):
 
         @staticmethod
         def sum(e):
+            if isinstance(e, str):
+                e = FakeF.col(e)
             return _Agg(lambda rows: sum(v for v in map(e.fn, rows) if v is not None)
                         if rows else None)
+
+        @staticmethod
+        def round(e, scale):
+            return _Agg(lambda rows: None if e.fn(rows) is None
+                        else round(e.fn(rows), scale))
 
         @staticmethod
         def coalesce(*es):
@@ -320,3 +348,19 @@ def test_cross_bucket_stage_commits_one_row(monkeypatch):
                          cross_bucket=True)
     assert runs == [] and len(cat.tables["glue.lineage"]) == 1
     assert out.count() == 12
+
+
+def test_throughput_report_reads_the_lineage_table(monkeypatch):
+    """The per-stage report inherited from the parquet class reads the
+    namespace's lineage table (the parquet class reads files under a
+    ``root`` the Iceberg checkpoint does not have)."""
+    ice, cat, ckpt = _fake_env(monkeypatch)
+    monkeypatch.setattr(ckpt, "bucket_of", lambda df: df)
+    ckpt.run_stage("extract", _input_df(cat), lambda df: df)
+    ckpt.run_stage("dedup", FakeDF(cat, [{"url": "u%d" % i} for i in range(5)]),
+                   lambda df: df, cross_bucket=True)
+    report = {r["stage"]: r for r in ckpt.throughput_report().collect()}
+    assert set(report) == {"extract", "dedup"}
+    assert report["extract"]["docs"] == 12 and report["dedup"]["docs"] == 5
+    assert report["extract"]["n_failed"] == 0
+    assert report["extract"]["bytes"] == 0

@@ -145,28 +145,6 @@ def test_sniff_image_header_webp():
     assert sniff_image_header(_webp_vp8x(1024, 768)) == ("webp", 1024, 768)
 
 
-def test_probe_image_headers_spark(spark):
-    from deepseek_ocr_omnidocbench_spark.operators.multimodal import (
-        count_tiles,
-        probe_image_headers,
-    )
-
-    rows = [
-        ("a", "image", _png(1280, 960)),
-        ("b", "image", _webp_vp8x(640, 640)),
-        ("c", "image", b"not an image"),
-        ("d", "image", None),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, kind string, data binary")
-    out = {r["media_id"]: r for r in probe_image_headers(df).collect()}
-    assert out["a"]["img_format"] == "png" and out["a"]["width"] == 1280
-    cols, rows_ = count_tiles(1280, 960)
-    assert out["a"]["n_tiles"] == cols * rows_
-    assert out["b"]["img_format"] == "webp" and out["b"]["height"] == 640
-    assert out["c"]["img_format"] is None and out["c"]["n_tiles"] is None
-    assert out["d"]["width"] is None
-
-
 def test_sniff_image_header_never_raises():
     import random
 

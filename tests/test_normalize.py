@@ -1,4 +1,4 @@
-"""Golden tests for the normalization library (SURVEY §2.4 N1-N12).
+"""Golden tests for the normalization library (SURVEY §2.4 N1-N11).
 
 Expected strings encode the reference semantics (cited per function in
 functions/normalize.py); these freeze byte-level behavior — the
@@ -19,12 +19,6 @@ def test_clean_string_keeps_cjk_and_word():
     assert N.clean_string("数据 processing_123!") == "数据processing_123"
 
 
-def test_fullwidth_to_halfwidth():
-    assert N.fullwidth_to_halfwidth("ＡＢＣ１２３！") == "ABC123!"
-    assert N.fullwidth_to_halfwidth("　") == " "
-    assert N.fullwidth_to_halfwidth("plain") == "plain"
-
-
 def test_strip_images():
     assert N.strip_images("a ![alt](x.png) b") == "a  b"
     assert N.strip_images("![](u)") == ""
@@ -43,19 +37,6 @@ def test_replace_repeated_chars():
 def test_md_preclean_strips_html_body_tags():
     s = "<html><body>x</body></html>"
     assert N.md_preclean(s) == "x"
-
-
-def test_strip_grounding():
-    s = "<|ref|>title<|/ref|><|det|>[[1,2,3,4]]<|/det|>rest"
-    assert N.strip_grounding(s) == "rest"
-    assert N.strip_grounding("a\n\n\n\nb") == "a\n\nb"
-    assert N.strip_grounding("<center>x</center>") == "x"
-
-
-def test_clean_formula_drops_quad_annotations():
-    s = r"\[x = y \quad (1.2)\]"
-    assert N.clean_formula(s) == r"\[x = y\]"
-    assert N.clean_formula(r"\[a+b\]") == r"\[a+b\]"
 
 
 def test_normalized_formula():
@@ -112,18 +93,6 @@ def test_normalized_table_dispatch():
         pass
 
 
-def test_olmocr_normalize_text():
-    assert N.olmocr_normalize_text("a<br>b") == "a b"
-    assert N.olmocr_normalize_text("**bold** and *it*") == "bold and it"
-    assert N.olmocr_normalize_text("“q” — x") == '"q" - x'
-    assert N.olmocr_normalize_text("a   b\n c") == "a b c"
-
-
-def test_normalize_formula_ws():
-    assert N.normalize_formula_ws("x + y") == "x+y"
-    assert N.normalize_formula_ws("a  =  b") == "a=b"
-
-
 def test_md_escape():
     assert N.md_escape("a*b`c~d$e") == r"a\*b\`c\~d\$e"
 
@@ -141,26 +110,3 @@ def test_textblock2unicode_inline_math():
     assert "$" not in out
     plain = N.textblock2unicode("cost $5$ here")
     assert "$5$" in plain
-
-
-def test_spark_column_parity(spark):
-    """*_col builders must agree with the pure-Python forms."""
-    from pyspark.sql import functions as F
-
-    rows = [
-        ("Hello, world! “q” ＡＢ１ <br> **b** a\tb",),
-        ("<|ref|>x<|/ref|><|det|>[[1]]<|/det|>body\n\n\n\ntail<center>c</center>",),
-    ]
-    df = spark.createDataFrame(rows, ["s"])
-    out = df.select(
-        "s",
-        N.clean_string_col(F.col("s")).alias("clean"),
-        N.fullwidth_to_halfwidth_col(F.col("s")).alias("fw"),
-        N.strip_grounding_col(F.col("s")).alias("ground"),
-        N.olmocr_normalize_text_col(F.col("s")).alias("n8"),
-    ).collect()
-    for r in out:
-        assert r["clean"] == N.clean_string(r["s"])
-        assert r["fw"] == N.fullwidth_to_halfwidth(r["s"])
-        assert r["ground"] == N.strip_grounding(r["s"])
-        assert r["n8"] == N.olmocr_normalize_text(r["s"])

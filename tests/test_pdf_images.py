@@ -8,7 +8,6 @@ from deepseek_ocr_omnidocbench_spark.operators.pdf_extract import (
     _merge_placements,
     _transform,
     extract_pdf_markdown,
-    image_anchors,
     pdf_image_report,
 )
 from deepseek_ocr_omnidocbench_spark.sources.pages import _mini_jpeg, _mini_pdf
@@ -119,12 +118,6 @@ def test_merge_placements_transitive_chain():
     assert merged[0]["x1"] == 3.2
 
 
-def test_anchor_strings_reference_shape():
-    blob = _pdf_with_image(w=200, h=100, x=50, y=300)
-    anchors = [a for a in image_anchors(blob) if a]
-    assert anchors == ["[Image 50x300 to 250x400]"]
-
-
 def test_compressed_content_stream_placements():
     blob = _pdf_with_image(w=80, h=40, x=10, y=20, compress=True)
     (rec,) = [r for p in pdf_image_report(blob) for r in p]
@@ -139,7 +132,6 @@ def test_no_images_and_non_pdf():
     assert report and all(p == [] for p in report)
     assert pdf_image_report(b"<html></html>") == []
     assert pdf_image_report(None) is None
-    assert image_anchors(None) is None
 
 
 def test_mini_pdf_with_images_text_unchanged():

@@ -418,7 +418,6 @@ def test_normalizer_parity(ref_matchers):
     for s in strings:
         assert N.clean_string(s) == ref_pre.clean_string(s), s
         assert N.replace_repeated_chars(s) == ref_pre.replace_repeated_chars(s), s
-        assert N.fullwidth_to_halfwidth(s) == ref_pre.fullwidth_to_halfwidth(s), s
 
     fences = ["```markdown\nbody\n```", "```html\nx\n```", "plain\n```\ntail",
               "```latex\ny\n```\nz", "a\n```\nb\n```\n"]

@@ -119,21 +119,6 @@ def test_parse_sitemaps_optional_field_alignment(spark):
     assert r3.changefreq == "daily" and r3.lastmod is None
 
 
-def test_sitemap_index_children(spark):
-    from deepseek_ocr_omnidocbench_spark.operators.robots import (
-        sitemap_index_children,
-    )
-
-    xml = ("<sitemapindex>"
-           "<sitemap><loc>https://a.example/s1.xml</loc>"
-           "<lastmod>2024-01-01</lastmod></sitemap>"
-           "<sitemap><loc> https://a.example/s2.xml </loc></sitemap>"
-           "</sitemapindex>")
-    df = spark.createDataFrame([("a.example", xml)], "host string, xml string")
-    got = sorted(r.child_loc for r in sitemap_index_children(df).collect())
-    assert got == ["https://a.example/s1.xml", "https://a.example/s2.xml"]
-
-
 def test_politeness_schedule(spark):
     from deepseek_ocr_omnidocbench_spark.operators.robots import (
         politeness_schedule,

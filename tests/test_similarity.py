@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from deepseek_ocr_omnidocbench_spark.operators.similarity import (
     embedding_near_dups,
     knn_bruteforce,
-    knn_lsh,
     label_centroids,
 )
 
@@ -47,22 +46,6 @@ def test_knn_returns_k_rows_per_query(emb):
     out = knn_bruteforce(emb, emb.limit(4), k=3)
     counts = out.groupBy("query_id").count().collect()
     assert all(r["count"] == 3 for r in counts)
-
-
-def test_lsh_recall_against_bruteforce(emb):
-    queries = emb.where(F.col("vec_id") < 10)
-    exact = knn_bruteforce(emb, queries, k=5).collect()
-    approx = knn_lsh(emb, queries, dim=64, k=5, n_planes=2).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hit = total = 0
-    for r in approx:
-        total += 1
-        if r["neighbor_id"] in exact_sets.get(r["query_id"], set()):
-            hit += 1
-    assert total > 0
-    assert hit / total > 0.3  # loose: LSH is approximate by design
 
 
 def test_label_centroids(emb):
@@ -297,7 +280,6 @@ def test_semdedup_matches_pure_python_reference(spark):
 
 def test_quantize_embeddings(spark):
     from deepseek_ocr_omnidocbench_spark.operators.similarity import (
-        quantization_error,
         quantize_embeddings,
     )
 
@@ -310,9 +292,6 @@ def test_quantize_embeddings(spark):
     assert abs(q[1].scale - 1.0 / 127.0) < 1e-12
     assert q[2].qvec == [0, 0, 0] and q[2].scale == 0.0  # zero vector
     assert q[3].qvec == [127, -127, 64]         # clamp bounds hold
-    err = {r.vec_id: r for r in quantization_error(emb).collect()}
-    assert err[1].cos_q >= 0.999   # 3-dim roundtrip stays near-parallel
-    assert err[3].cos_q >= 0.999
 
 
 def test_embedding_outliers_planted(spark):

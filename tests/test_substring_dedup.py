@@ -1,12 +1,10 @@
 """ExactSubstr-style substring dedup: duplicated n-gram windows merge
-into maximal per-doc spans; span removal strips exactly those words."""
+into maximal per-doc spans."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from deepseek_ocr_omnidocbench_spark.operators.dedup import (
-    normalized_words, remove_duplicate_spans, substring_dedup_spans,
-)
+from deepseek_ocr_omnidocbench_spark.operators.dedup import substring_dedup_spans
 
 BOILER = "all rights reserved contact us for more information about terms"  # 10 words
 N = 5
@@ -56,23 +54,6 @@ def test_span_gram_counts(corpus):
     assert r[4] == 12
 
 
-def test_remove_spans(corpus):
-    spans = substring_dedup_spans(corpus, n=N)
-    out = remove_duplicate_spans(corpus, spans).orderBy("doc_id").collect()
-    by_id = {r["doc_id"]: r for r in out}
-    assert by_id[0]["clean_text"] == \
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    assert by_id[1]["clean_text"] == \
-        "one two three four five six seven eight nine ten"
-    assert by_id[0]["n_removed_words"] == 10
-    # untouched docs keep normalized words, zero removed
-    assert by_id[2]["n_removed_words"] == 0
-    assert by_id[3]["clean_text"] == "tiny doc"
-    # fully-duplicated doc is emptied
-    assert by_id[4]["clean_text"] == ""
-    assert by_id[4]["n_removed_words"] == 20
-
-
 def test_md5_key_matches_xxhash(corpus):
     a = substring_dedup_spans(corpus, n=N)
     b = substring_dedup_spans(corpus, n=N, key_fn=F.md5)
@@ -96,9 +77,6 @@ def test_empty_and_null(spark):
     df = spark.createDataFrame([(0, ""), (1, None)],
                                "doc_id int, text string")
     assert substring_dedup_spans(df, n=3).count() == 0
-    out = remove_duplicate_spans(
-        df, substring_dedup_spans(df, n=3)).collect()
-    assert all(r["n_removed_words"] == 0 for r in out)
 
 
 def test_giant_doc_routing_parity(spark, corpus=None):

@@ -169,8 +169,7 @@ def test_pipeline_decisions_match_gates_on_pdf_documents(spark):
     kernel's summed page counts, equal the Column gates over the
     assembled markdown of multi-page PDF documents (and of the rest)."""
     from deepseek_ocr_omnidocbench_spark.operators.assemble import assemble_documents
-    from deepseek_ocr_omnidocbench_spark.operators.filters import (
-        page_quality_keep, seo_spam_flag)
+    from deepseek_ocr_omnidocbench_spark.operators.filters import page_quality_keep
     from deepseek_ocr_omnidocbench_spark.plans.extract_pipeline import (
         run_pipeline_inline, stage_page_md)
 
@@ -189,5 +188,5 @@ def test_pipeline_decisions_match_gates_on_pdf_documents(spark):
     _decisions_match_gates(got)
     # the same documents survive the quality cut as under the text gates
     kept = assemble_documents(stage_page_md(pages)).where(
-        page_quality_keep(t, seo_spam_flag(t))).count()
+        page_quality_keep(t, TS.seo_spam_cols(t)["is_spam"])).count()
     assert kept == len(got)
