@@ -12,8 +12,8 @@ unmatched table cells back into the text pool (J7,
 end2end_dataset.py:287-302) -> quick/simple match with deadline
 fallback (J6) -> stream classification (text/formula/table/order) ->
 reading-order pairing (A6, end2end_dataset.py:125-143) -> per-row
-scores (metrics_report.score_record: table normalization, TEDS, METEOR,
-BLEU counts).
+scores (metrics_report.score_record: table normalization, edit counts,
+TEDS, METEOR, BLEU counts).
 
 This is the evaluation's only Python pass.  The only cross-page
 decision — latex-vs-html table-format arbitration by global count

@@ -3,9 +3,9 @@
 Python runs once per match row, inside the evaluation pass: ``score_record``
 (called by operators/eval_harness.match_elements) normalizes table rows
 and adds every per-row score that does not depend on the global table
-decision — TEDS, sentence METEOR and the BLEU sufficient statistics.
-Everything after the pass is native Spark: the table arbitration, the
-native ``levenshtein`` edit distance, and ONE two-level aggregate
+decision — the edit counts, TEDS, sentence METEOR and the BLEU
+sufficient statistics.  Everything after the pass is native Spark: the
+table arbitration, the edit ratio and ONE two-level aggregate
 (``report_frame``) that all five reports read.  Parity targets:
 
 * Edit_dist — `Levenshtein(pred, gt)/max(len)` per sample, three
@@ -41,13 +41,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.bleu import bleu_from_stats, bleu_stats
+from ..functions.editdist import levenshtein
 from ..functions.meteor import sentence_meteor
 from ..functions.normalize import normalized_table
 from .teds import teds_score
 
 TABLE_FORMATS = {"table_latex": "latex", "table_html": "html"}
 
-SCORE_FIELDS = [
+# edit_counts(...): what Spark's greatest(length, length) and
+# levenshtein give, as their types
+EDIT_FIELDS = [
+    T.StructField("upper_len", T.IntegerType()),
+    T.StructField("edit_num", T.IntegerType()),
+]
+SCORE_FIELDS = EDIT_FIELDS + [
     T.StructField("teds", T.DoubleType()),
     T.StructField("teds_struct", T.DoubleType()),
     T.StructField("meteor", T.DoubleType()),
@@ -66,24 +73,42 @@ def _eff_text(norm: Optional[str], raw: Optional[str]) -> str:
     return norm if norm else (raw or "")
 
 
+def edit_counts(rec: dict) -> tuple[str, str]:
+    """Set ``upper_len`` (the longer text's length) and ``edit_num`` (the
+    Levenshtein distance, in code points as Spark counts them) of one
+    match row over its norm-effective texts; return the two texts."""
+    gt = _eff_text(rec.get("norm_gt"), rec.get("gt"))
+    pred = _eff_text(rec.get("norm_pred"), rec.get("pred"))
+    rec["upper_len"] = max(len(gt), len(pred))
+    rec["edit_num"] = levenshtein(gt, pred)
+    return gt, pred
+
+
 def score_record(rec: dict) -> dict:
     """Add the per-row scores to one match row (in place) and return it.
 
     Table rows (``table_latex``/``table_html``) get their gt normalized as
     html and their prediction in the row's own stream format, then
     ``teds``/``teds_struct``; other rows get NULL TEDS.  Every row gets
-    sentence METEOR and ``bleu_stats`` over the norm-effective texts."""
+    the edit counts, sentence METEOR and ``bleu_stats`` over the
+    norm-effective texts."""
     fmt = TABLE_FORMATS.get(rec.get("element_class"))
     if fmt:
         rec["norm_gt"] = normalized_table(rec["gt"], "html") if rec.get("gt") else ""
         rec["norm_pred"] = normalized_table(rec["pred"], fmt) if rec.get("pred") else ""
-    gt = _eff_text(rec.get("norm_gt"), rec.get("gt"))
-    pred = _eff_text(rec.get("norm_pred"), rec.get("pred"))
+    gt, pred = edit_counts(rec)
     rec["teds"] = teds_score(pred, gt) if fmt else None
     rec["teds_struct"] = teds_score(pred, gt, structure_only=True) if fmt else None
     rec["meteor"] = sentence_meteor(gt, pred)
     rec["bleu_stats"] = bleu_stats(gt, pred)
     return rec
+
+
+def _eff(col: str, fallback: str):
+    """``_eff_text`` as a Column."""
+    c = F.col(col)
+    return F.when(c.isNotNull() & (F.length(c) > 0), c).otherwise(
+        F.coalesce(F.col(fallback), F.lit("")))
 
 
 def arbitrate_tables(matches: DataFrame) -> DataFrame:
@@ -105,10 +130,11 @@ def arbitrate_tables(matches: DataFrame) -> DataFrame:
         return (matches.where(cls.isNotNull() & (cls != "table_html"))
                 .withColumn("element_class", as_table))
     blank = cls == "table_latex"
+    gt_len = F.length(_eff("norm_gt", "gt"))
     blanked = {
         "pred": F.lit(""), "norm_pred": F.lit(""), "pred_category": F.lit(""),
-        "edit": F.lit(1.0), "teds": F.lit(0.0), "teds_struct": F.lit(0.0),
-        "meteor": F.lit(0.0),
+        "edit": F.lit(1.0), "upper_len": gt_len, "edit_num": gt_len,
+        "teds": F.lit(0.0), "teds_struct": F.lit(0.0), "meteor": F.lit(0.0),
         "bleu_stats": F.transform("bleu_stats", lambda x, i: F.when(
             i.isin(*_PRED_SLOTS), F.lit(0).cast("long")).otherwise(x)),
     }
@@ -117,35 +143,20 @@ def arbitrate_tables(matches: DataFrame) -> DataFrame:
         | {"element_class": as_table})
 
 
-def _eff(col: str, fallback: str):
-    """``_eff_text`` as a Column."""
-    c = F.col(col)
-    return F.when(c.isNotNull() & (F.length(c) > 0), c).otherwise(
-        F.coalesce(F.col(fallback), F.lit("")))
-
-
 def score_samples(matches: DataFrame, teds_partitions: int | None = None) -> DataFrame:
-    """Add the edit-distance columns upper_len, edit_num (native
-    levenshtein) and edit_dist.  The scores of ``score_record`` come with
-    rows of the evaluation pass; a frame without them (md2md) gets them
-    as NULL, so every scored frame has one schema.
+    """Add ``edit_dist`` = edit_num / upper_len (NULL when both texts are
+    empty).  The counts and scores come with the rows of the evaluation
+    pass; the score columns a frame lacks (md2md has no TEDS, METEOR or
+    BLEU) come as NULL, so every scored frame has one schema.
 
     ``teds_partitions`` is accepted and ignored: TEDS runs in the
     evaluation pass."""
-    df = (
-        matches.withColumn("_gt_eff", _eff("norm_gt", "gt"))
-        .withColumn("_pred_eff", _eff("norm_pred", "pred"))
-        .withColumn("upper_len", F.greatest(F.length("_gt_eff"), F.length("_pred_eff")))
-        .withColumn("edit_num", F.levenshtein("_gt_eff", "_pred_eff"))
-        .withColumn(
-            "edit_dist",
-            F.when(F.col("upper_len") > 0,
-                   F.col("edit_num") / F.col("upper_len")).otherwise(F.lit(None)),
-        )
-    )
-    missing = {f.name: F.lit(None).cast(f.dataType)
-               for f in SCORE_FIELDS if f.name not in df.columns}
-    return df.withColumns(missing).drop("_gt_eff", "_pred_eff")
+    df = matches.withColumn(
+        "edit_dist",
+        F.when(F.col("upper_len") > 0,
+               F.col("edit_num") / F.col("upper_len")).otherwise(F.lit(None)))
+    return df.withColumns({f.name: F.lit(None).cast(f.dataType)
+                           for f in SCORE_FIELDS if f.name not in df.columns})
 
 
 # ---------------------------------------------------------------------------

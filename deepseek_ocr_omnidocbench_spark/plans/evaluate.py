@@ -1,9 +1,9 @@
 """End-to-end evaluation plan (SURVEY §3.1 re-expressed as a DataFrame DAG).
 
 gt/pred scan -> ONE Python pass: cogroup on img_id, per page match and
-per row score (TEDS, METEOR, BLEU counts) -> cache -> table arbitration
-(stream counts observed on the action that fills the cache, then a
-filter/projection) -> native levenshtein -> one two-level report
+per row score (edit counts, TEDS, METEOR, BLEU counts) -> cache -> table
+arbitration (stream counts observed on the action that fills the cache,
+then a filter/projection) -> edit ratio -> one two-level report
 aggregate, collected once and split into the five reports in Python.
 A cold 50-page run is 4 Python tasks (one per core) and 9 Spark jobs.
 """

@@ -11,7 +11,8 @@ matching (OmniDocBench/dataset/md2md_dataset.py:15-140):
 
 Each page is independent (both documents arrive in one row), so the
 match runs in ``mapInPandas`` — no cogroup shuffle at all; the join of
-the two folders is a broadcast by image stem.
+the two folders is a broadcast by image stem.  The same pass counts
+each row's edit distance (``metrics_report.edit_counts``).
 """
 
 from __future__ import annotations
@@ -21,11 +22,17 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.eval_harness import MATCH_SCHEMA, _to_row, order_pair
 from ..operators.extract_spans import md_tex_filter
 from ..operators.matching import match_quick, match_simple
-from ..operators.metrics_report import edit_dist_report, score_samples
+from ..operators.metrics_report import (
+    EDIT_FIELDS,
+    edit_counts,
+    edit_dist_report,
+    score_samples,
+)
 from ..sources.md_folder import scan_md_folder
 
 
@@ -77,20 +84,27 @@ def match_md2md_page(gt_md: str, pred_md: str, img_id: str,
     return records
 
 
+# match_md2md's output: match rows with their edit counts
+MD2MD_SCHEMA = T.StructType(MATCH_SCHEMA.fields + EDIT_FIELDS)
+
+
 def match_md2md(pairs: DataFrame, method: str = "simple_match") -> DataFrame:
-    """pairs(img_id, gt_md, pred_md) -> match-record DataFrame."""
+    """pairs(img_id, gt_md, pred_md) -> match-record DataFrame with the
+    edit counts (MD2MD_SCHEMA)."""
 
     def _gen(batches: Iterable[pd.DataFrame]):
-        cols = [f.name for f in MATCH_SCHEMA.fields]
+        cols = MD2MD_SCHEMA.fieldNames()
         for pdf in batches:
             rows = []
             for img_id, gt_md, pred_md in zip(pdf["img_id"], pdf["gt_md"],
                                               pdf["pred_md"]):
                 for r in match_md2md_page(gt_md, pred_md, img_id, method):
-                    rows.append(_to_row(r))
+                    row = _to_row(r)
+                    edit_counts(row)
+                    rows.append(row)
             yield pd.DataFrame(rows, columns=cols)
 
-    return pairs.mapInPandas(_gen, MATCH_SCHEMA)
+    return pairs.mapInPandas(_gen, MD2MD_SCHEMA)
 
 
 def md2md_evaluate(spark: SparkSession, gt_folder: str, pred_folder: str,

@@ -8,8 +8,29 @@ shuffle partitions sized to cores (overridable per scale factor).
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = __package__ + ".worker_daemon"
+
+
+def _driver_memory() -> str:
+    """Half of physical memory, capped at 32g: the heap may grow to its
+    maximum, and beside it run the Python workers."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    return "%dm" % min(half >> 20, 32 << 10)
+
+
+def _workers_import_package() -> bool:
+    """Whether a Python worker started in this directory with this
+    environment can import the package: its parent is the working
+    directory (``python -m`` puts it on ``sys.path``), on ``PYTHONPATH``
+    or a site-packages directory."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [os.getcwd(), *site.getsitepackages(), site.getusersitepackages()]
+    dirs += [os.path.abspath(p) for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    return any(os.path.realpath(d) == os.path.realpath(parent) for d in dirs)
 
 
 def get_spark(
@@ -43,7 +64,7 @@ def get_spark(
         # mean fewer rows per batch is safer than the 10k default.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # extraction runs in the scan's own splits, so the split size sets
@@ -52,6 +73,10 @@ def get_spark(
         # split as bytes / cores
         .config("spark.sql.files.maxPartitionBytes", "32m")
     )
+    if _workers_import_package():
+        # each task's set-up re-reads pyspark.zip's directory once per
+        # cached zipimporter; this daemon drops the subpackage ones first
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -104,6 +104,13 @@ class IcebergStageCheckpoint(StageCheckpoint):
     def read_stage(self, stage: str) -> DataFrame:
         return self.spark.table(f"{self.namespace}.{stage}").drop("_bucket")
 
+    def committed_schemas(self, stage: str) -> set:
+        # the lineage table records no schema: a stage with committed
+        # buckets has the one schema of its table
+        if not self.committed_buckets(stage):
+            return set()
+        return {self.read_stage(stage).schema.json()}
+
     def lineage(self) -> DataFrame:
         # the parquet class reads lineage files under ``root``; here the
         # rows live in the namespace's lineage table

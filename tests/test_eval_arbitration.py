@@ -147,7 +147,8 @@ def test_losing_latex_rows_score_as_empty_predictions(spark):
     want = _scored_rows(spark, [dict(latex, pred="")]).first()
     assert len(blanked) == 2  # the latex row and the html row without a prediction
     for r in blanked:
-        for c in ("norm_pred", "teds", "teds_struct", "meteor", "bleu_stats"):
+        for c in ("norm_pred", "upper_len", "edit_num", "teds", "teds_struct", "meteor",
+                  "bleu_stats"):
             assert r[c] == want[c], c
     assert want["teds"] == 0.0 and want["meteor"] == 0.0
 

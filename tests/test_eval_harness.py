@@ -174,7 +174,8 @@ _PYTHON_NODE = re.compile(r"InPandas|InArrow|EvalPython")
 def test_evaluate_job_and_python_budget(spark):
     """evaluate on 8 fixture pages runs at most 10 Spark jobs, and every
     plan it executes holds exactly one Python evaluation node: the
-    cogroup pass of match_elements (the report reads its cached output)."""
+    cogroup pass of match_elements (the report reads its cached output).
+    No plan runs ``levenshtein``: the pass counts the edit distances."""
     import time
 
     from deepseek_ocr_omnidocbench_spark.plans.evaluate import evaluate, fixture_frames
@@ -205,3 +206,4 @@ def test_evaluate_job_and_python_budget(spark):
         nodes = store.planGraph(e.executionId()).allNodes()
         names = [nodes.apply(k).name() for k in range(nodes.size())]
         assert [n for n in names if _PYTHON_NODE.search(n)] == ["FlatMapCoGroupsInPandas"]
+        assert "levenshtein" not in e.physicalPlanDescription()

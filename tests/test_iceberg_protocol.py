@@ -364,3 +364,15 @@ def test_throughput_report_reads_the_lineage_table(monkeypatch):
     assert report["extract"]["docs"] == 12 and report["dedup"]["docs"] == 5
     assert report["extract"]["n_failed"] == 0
     assert report["extract"]["bytes"] == 0
+
+
+def test_committed_schemas_read_the_stage_table(monkeypatch):
+    """The parquet class reads schemas from lineage files under ``root``;
+    here a stage with committed buckets reports its table's schema (the
+    ``_bucket`` column dropped), and a stage without any reports none."""
+    ice, cat, ckpt = _fake_env(monkeypatch)
+    monkeypatch.setattr(ckpt, "bucket_of", lambda df: df)
+    assert ckpt.committed_schemas("extract") == set()
+    ckpt.run_stage("extract", _input_df(cat), lambda df: df)
+    assert ckpt.committed_schemas("extract") == {repr(["url"])}
+    assert ckpt.committed_schemas("dedup") == set()
